@@ -22,8 +22,11 @@ declarative plan -> single vectorized extraction stage -> sinks.
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
+import shutil
 import sys
+import tempfile
 import time
 
 
@@ -108,6 +111,27 @@ def parse_args(argv):
     return p.parse_args(argv)
 
 
+@contextlib.contextmanager
+def stage_scratch(spark, scratch, prefix):
+    """The stage-barrier scratch directory for one job.
+
+    A caller-given ``scratch`` (--curate-scratch; shared storage on a
+    cluster) is caller-owned and never deleted.  Without one, a local
+    master gets a fresh temp dir that this job owns and removes on exit,
+    even when the job raises (materialized stage copies would otherwise
+    leak under the temp dir); any other master gets ``None`` — no
+    barrier."""
+    if scratch is not None or not spark.sparkContext.master.startswith(
+            "local"):
+        yield scratch
+        return
+    own = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield own
+    finally:
+        shutil.rmtree(own, ignore_errors=True)
+
+
 def main(argv=None) -> int:
     args = parse_args(argv if argv is not None else sys.argv[1:])
 
@@ -142,17 +166,12 @@ def main(argv=None) -> int:
         else:
             pages = read_table(args.input)
         seeds = read_table(args.trust_seeds) if args.trust_seeds else None
-        # stage barrier (same ownership rules as curate mode): parquet
-        # scratch so the resolver/PSL lineage is cut between stages and
-        # executors can re-read it on a non-local master
-        scratch = args.curate_scratch
-        own_scratch = None
-        if scratch is None and spark.sparkContext.master.startswith("local"):
-            import tempfile
-            scratch = own_scratch = tempfile.mkdtemp(
-                prefix="spark_graft_webgraph_")
+        # stage barrier: parquet scratch so the resolver/PSL lineage is
+        # cut between stages and executors can re-read it on a non-local
+        # master
         t0 = time.perf_counter()
-        try:
+        with stage_scratch(spark, args.curate_scratch,
+                           "spark_graft_webgraph_") as scratch:
             ranks, counts = run_webgraph(
                 pages, iterations=args.pr_iterations,
                 redistribute_dangling=args.redistribute_dangling,
@@ -167,10 +186,6 @@ def main(argv=None) -> int:
             else:
                 ranks.write.mode("overwrite").parquet(args.output)
                 counts["hosts"] = spark.read.parquet(args.output).count()
-        finally:
-            if own_scratch is not None:
-                import shutil
-                shutil.rmtree(own_scratch, ignore_errors=True)
         counts["seconds"] = round(time.perf_counter() - t0, 3)
         print(json.dumps(counts))
         spark.stop()
@@ -195,13 +210,8 @@ def main(argv=None) -> int:
         # stage barrier: each cascade stage executes once per job (the
         # per-stage counts + final write would otherwise re-run the
         # verdict/LSH lineage up to 4x — see plans.curate module comment)
-        scratch = args.curate_scratch
-        own_scratch = None
-        if scratch is None and spark.sparkContext.master.startswith("local"):
-            import tempfile
-            scratch = own_scratch = tempfile.mkdtemp(
-                prefix="spark_graft_curate_")
-        try:
+        with stage_scratch(spark, args.curate_scratch,
+                           "spark_graft_curate_") as scratch:
             kept, counts = run_curation(
                 docs, bench=bench, mix_rates=rates,
                 default_rate=args.default_rate,
@@ -214,15 +224,6 @@ def main(argv=None) -> int:
                 kept.writeTo(args.output).createOrReplace()
             else:
                 kept.write.mode("overwrite").parquet(args.output)
-        finally:
-            if own_scratch is not None:
-                # the default temp scratch is ours to reclaim even when
-                # curation or the output write raises (up to 5
-                # materialized stage copies would otherwise leak under
-                # /tmp); a caller-provided --curate-scratch is
-                # caller-owned
-                import shutil
-                shutil.rmtree(own_scratch, ignore_errors=True)
         counts["seconds"] = round(time.perf_counter() - t0, 3)
         print(json.dumps(counts))
         spark.stop()

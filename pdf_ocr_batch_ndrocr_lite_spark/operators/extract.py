@@ -10,20 +10,26 @@ inside the stage, deterministic per row.
 
 Routing is by document kind: the PDF path replays the reference semantics
 over the JSON envelope; the HTML path applies the readability-style
-boilerplate stripper (north-star extension).
+boilerplate stripper (north-star extension).  Given an OCR engine, documents
+that route ``needs_ocr`` continue through it (`run_engine`) in the same row
+step, so route → engine → parse → serialize is one pass per document.
 """
 
 from __future__ import annotations
 
 import json
 import time
-from typing import Any, Dict, Iterator
+from typing import (TYPE_CHECKING, Any, Callable, Dict, Iterator, List,
+                    Optional, Sequence)
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import html_extract, image_meta, ocr_parse, pdf_scan, textops
+
+if TYPE_CHECKING:
+    from .ocr_engine import EngineFn
 
 # Output schema of the dispatcher stage.
 EXTRACT_SCHEMA = (
@@ -66,36 +72,44 @@ def has_text_layer(pages_meta: Any) -> bool:
     return False
 
 
+def _result(action: str, page_count: int = 0, parse_warnings: int = 0,
+            extracted_text: str = "", token_count: int = 0,
+            block_count: int = 0, low_coverage: int = 0) -> Dict[str, Any]:
+    """One document's action and its counters; counters not given are 0."""
+    return {"action": action, "extracted_text": extracted_text,
+            "page_count": page_count, "token_count": token_count,
+            "block_count": block_count, "parse_warnings": parse_warnings,
+            "low_coverage": low_coverage}
+
+
+def parse_and_serialize(ocr_outputs: List[Dict[str, Any]],
+                        page_count: int) -> Dict[str, Any]:
+    """OCR outputs → document text: tolerant parse+merge (app.py:1651-1823)
+    and line serialization (app.py:4017-4120).  A document with no text on
+    any page is the "OCR結果にテキストがありません" error branch
+    (app.py:2724-2728)."""
+    pages, stats = ocr_parse.parse_envelope(ocr_outputs, page_count)
+    doc_text = textops.serialize_document([
+        textops.serialize_page(pages[i].tokens, pages[i].text_blocks)
+        for i in range(page_count)
+    ])
+    action = (ACTION_EXTRACTED if any(p.has_any_text() for p in pages.values())
+              else ACTION_PARSE_FAILURE)
+    return _result(action, page_count, stats["parse_warnings"], doc_text,
+                   stats["token_count"], stats["block_count"],
+                   stats["low_coverage"])
+
+
 def extract_pdf_document(envelope: Dict[str, Any]) -> Dict[str, Any]:
     """Full reference-semantics extraction for one parsed-PDF envelope."""
     pages_meta = envelope.get("pages") or []
-    page_count = len(pages_meta)
     if envelope.get("encrypted"):
         # empty-password decrypt failure → hard error (app.py:1178-1189)
-        return {"action": ACTION_PARSE_FAILURE, "extracted_text": "",
-                "page_count": page_count, "token_count": 0, "block_count": 0,
-                "parse_warnings": 0, "low_coverage": 0}
+        return _result(ACTION_PARSE_FAILURE, len(pages_meta))
     if has_text_layer(pages_meta):
-        return {"action": ACTION_SKIP_HAS_TEXT, "extracted_text": "",
-                "page_count": page_count, "token_count": 0, "block_count": 0,
-                "parse_warnings": 0, "low_coverage": 0}
-    pages, stats = ocr_parse.parse_envelope(
-        envelope.get("ocr_outputs") or [], page_count)
-    page_texts = [
-        textops.serialize_page(pages[i].tokens, pages[i].text_blocks)
-        for i in range(page_count)
-    ]
-    doc_text = textops.serialize_document(page_texts)
-    if not any(p.has_any_text() for p in pages.values()):
-        # "OCR結果にテキストがありません" error branch (app.py:2724-2728)
-        action = ACTION_PARSE_FAILURE
-    else:
-        action = ACTION_EXTRACTED
-    return {"action": action, "extracted_text": doc_text,
-            "page_count": page_count, "token_count": stats["token_count"],
-            "block_count": stats["block_count"],
-            "parse_warnings": stats["parse_warnings"],
-            "low_coverage": stats["low_coverage"]}
+        return _result(ACTION_SKIP_HAS_TEXT, len(pages_meta))
+    return parse_and_serialize(envelope.get("ocr_outputs") or [],
+                               len(pages_meta))
 
 
 def extract_raw_pdf(payload: bytes) -> Dict[str, Any]:
@@ -114,17 +128,13 @@ def extract_raw_pdf(payload: bytes) -> Dict[str, Any]:
             payload, pages_to_check=TEXT_LAYER_CHECK_PAGES,
             min_chars=MIN_TEXT_LAYER_CHARS, min_text_ops=MIN_TEXT_SHOW_OPS)
     except ValueError:  # PdfParseError | EncryptedPdfError
-        return {"action": ACTION_PARSE_FAILURE, "extracted_text": "",
-                "page_count": 0, "token_count": 0, "block_count": 0,
-                "parse_warnings": 1, "low_coverage": 0}
+        return _result(ACTION_PARSE_FAILURE, parse_warnings=1)
     action = ACTION_SKIP_HAS_TEXT if has_text else ACTION_NEEDS_OCR
     # warnings > 0 on a needs_ocr row means "could not DECODE a stream" —
     # an LZW/JPX page may carry text we could not rule out; downstream can
     # triage these instead of burning OCR on every undecodable searchable
     # PDF (round-2 judge finding: wrong-direction routing was silent)
-    return {"action": action, "extracted_text": "",
-            "page_count": total_pages, "token_count": 0, "block_count": 0,
-            "parse_warnings": int(warnings), "low_coverage": 0}
+    return _result(action, total_pages, int(warnings))
 
 
 def extract_image(payload: bytes) -> Dict[str, Any]:
@@ -138,12 +148,8 @@ def extract_image(payload: bytes) -> Dict[str, Any]:
     try:
         image_meta.prepare_image(payload)
     except ValueError:
-        return {"action": ACTION_PARSE_FAILURE, "extracted_text": "",
-                "page_count": 0, "token_count": 0, "block_count": 0,
-                "parse_warnings": 1, "low_coverage": 0}
-    return {"action": ACTION_NEEDS_OCR, "extracted_text": "",
-            "page_count": 1, "token_count": 0, "block_count": 0,
-            "parse_warnings": 0, "low_coverage": 0}
+        return _result(ACTION_PARSE_FAILURE, parse_warnings=1)
+    return _result(ACTION_NEEDS_OCR, 1)
 
 
 def extract_html_document(payload: bytes) -> Dict[str, Any]:
@@ -151,14 +157,38 @@ def extract_html_document(payload: bytes) -> Dict[str, Any]:
     text = html_extract.extract_main_text(
         payload.decode("utf-8", errors="replace"))
     action = ACTION_EXTRACTED if text else ACTION_PARSE_FAILURE
-    return {"action": action, "extracted_text": text, "page_count": 1,
-            "token_count": 0, "block_count": 0, "parse_warnings": 0,
-            "low_coverage": 0}
+    return _result(action, 1, extracted_text=text)
 
 
-def extract_one(url: str, payload: bytes, lang: str) -> Dict[str, Any]:
+def run_engine(engine: "EngineFn", payload: bytes, name: str,
+               page_count: Any) -> Dict[str, Any]:
+    """Engine step: one document through the OCR engine, then
+    `parse_and_serialize` (app.py:1540-1611).  The engine raising is the
+    reference's nonzero-exit path (app.py:1635-1639) and an empty output
+    list its "no output files" path (app.py:1641-1644): both become
+    ``parse_failure`` with a warning, never a task failure."""
+    try:
+        # Arrow→pandas turns a bigint column with NULLs into float64 NaN,
+        # which is un-int()-able — a NULL page_count degrades to 1
+        pc = max(1, int(page_count))
+    except (TypeError, ValueError):
+        pc = 1
+    try:
+        outputs = engine(payload, name, pc)
+    except Exception:
+        outputs = []
+    if not outputs:
+        return _result(ACTION_PARSE_FAILURE, pc, parse_warnings=1)
+    return parse_and_serialize(outputs, pc)
+
+
+def extract_one(url: str, payload: bytes, lang: str,
+                engine: Optional["EngineFn"] = None) -> Dict[str, Any]:
     """Dispatch one document; never raises — failures become action rows
-    (app.py:2790-2859 per-file try/except)."""
+    (app.py:2790-2859 per-file try/except).  With ``engine``, a document
+    that routes ``needs_ocr`` continues through `run_engine`: the
+    reference's route → engine → parse → serialize loop for one document
+    (``doc_kind`` keeps the route it came from)."""
     t0 = time.perf_counter()
     kind = "html"
     try:
@@ -181,10 +211,10 @@ def extract_one(url: str, payload: bytes, lang: str) -> Dict[str, Any]:
                 out = extract_html_document(bytes(payload))
         else:
             out = extract_html_document(bytes(payload))
+        if engine is not None and out["action"] == ACTION_NEEDS_OCR:
+            out = run_engine(engine, bytes(payload), url, out["page_count"])
     except Exception:
-        out = {"action": ACTION_PARSE_FAILURE, "extracted_text": "",
-               "page_count": 0, "token_count": 0, "block_count": 0,
-               "parse_warnings": 1, "low_coverage": 0}
+        out = _result(ACTION_PARSE_FAILURE, parse_warnings=1)
     out.update({
         "url": url, "lang": lang, "doc_kind": kind,
         "bytes_in": len(payload or b""),
@@ -198,44 +228,49 @@ _OUT_COLS = ["url", "lang", "doc_kind", "action", "extracted_text",
              "low_coverage", "bytes_in", "seconds"]
 
 
-def _skip_name_row(url: str, lang: str, bytes_len: int) -> Dict[str, Any]:
-    return {"url": url, "lang": lang, "doc_kind": "unknown",
-            "action": ACTION_SKIP_NAME, "extracted_text": "",
-            "page_count": 0, "token_count": 0, "block_count": 0,
-            "parse_warnings": 0, "low_coverage": 0,
-            "bytes_in": int(bytes_len or 0), "seconds": 0.0}
+# a mapInPandas body
+BatchFn = Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]
 
 
-def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas body: one output row per input document row.
-
-    Rows pre-flagged ``skip_name`` (the Catalyst RLike predicate evaluated
-    them during the single input scan) pass through without touching the
-    payload — their ``html`` was already nulled before the shuffle.
+def map_rows(row_fn: Callable[..., Dict[str, Any]],
+             in_cols: Sequence[str]) -> BatchFn:
+    """The one ``mapInPandas`` body that builds ``EXTRACT_SCHEMA`` frames:
+    one output row ``row_fn(*values)`` per input row, the values taken
+    from ``in_cols`` in order.
 
     Columnar access (`.tolist()` once per batch, dict-of-lists output)
     rather than per-cell `.iat` — measurably cheaper at Arrow batch sizes.
     """
-    for pdf in batches:
-        n = len(pdf)
-        if n == 0:
-            continue
-        urls = pdf["url"].tolist()
-        htmls = pdf["html"].tolist()
-        langs = pdf["lang"].tolist()
-        if "skip_name" in pdf.columns:
-            skips = pdf["skip_name"].tolist()
-            blens = pdf["bytes_len"].tolist()
-        else:
-            skips = [False] * n
-            blens = [0] * n
-        out: Dict[str, list] = {c: [] for c in _OUT_COLS}
-        for i in range(n):
-            row = (_skip_name_row(urls[i], langs[i], blens[i]) if skips[i]
-                   else extract_one(urls[i], htmls[i], langs[i]))
-            for c in _OUT_COLS:
-                out[c].append(row[c])
-        yield pd.DataFrame(out, columns=_OUT_COLS)
+    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            out: Dict[str, list] = {c: [] for c in _OUT_COLS}
+            for values in zip(*(pdf[c].tolist() for c in in_cols)):
+                row = row_fn(*values)
+                for c in _OUT_COLS:
+                    out[c].append(row[c])
+            yield pd.DataFrame(out, columns=_OUT_COLS)
+    body.__name__ = row_fn.__name__     # the stage's name in query plans
+    return body
+
+
+def extract_batches(engine: Optional["EngineFn"] = None) -> BatchFn:
+    """Dispatcher body over `flag_pages` output: one `extract_one` row per
+    document.
+
+    Rows pre-flagged ``skip_name`` (the Catalyst RLike predicate evaluated
+    them during the single input scan) pass through without touching the
+    payload — their ``html`` was already nulled before the shuffle.
+    """
+    def extract_row(url, html, lang, skip_name, bytes_len) -> Dict[str, Any]:
+        if skip_name:
+            return dict(_result(ACTION_SKIP_NAME), url=url, lang=lang,
+                        doc_kind="unknown", bytes_in=int(bytes_len or 0),
+                        seconds=0.0)
+        return extract_one(url, html, lang, engine)
+    return map_rows(extract_row,
+                    ("url", "html", "lang", "skip_name", "bytes_len"))
 
 
 def salted_repartition(df: DataFrame, num_partitions: int = 0) -> DataFrame:
@@ -257,9 +292,12 @@ def salted_repartition(df: DataFrame, num_partitions: int = 0) -> DataFrame:
     return df.repartition("salt")
 
 
-def run_extraction(pages_df: DataFrame, num_partitions: int = 0) -> DataFrame:
+def run_extraction(pages_df: DataFrame, num_partitions: int = 0,
+                   engine: Optional["EngineFn"] = None) -> DataFrame:
     """Single-pass plan: one input scan, one salted exchange, one vectorized
-    extraction stage.
+    extraction stage.  With ``engine`` (operators/ocr_engine.EngineFn),
+    documents that route ``needs_ocr`` continue into it inside the same
+    stage — the plan shape does not change.
 
     The name-rule skip predicate (app.py:87, 1306-1313) is evaluated as a
     Catalyst RLike COLUMN during the scan rather than as a branch filter —
@@ -269,17 +307,16 @@ def run_extraction(pages_df: DataFrame, num_partitions: int = 0) -> DataFrame:
     move bytes we will not parse).
     """
     flagged = flag_pages(pages_df, num_partitions)
-    return flagged.mapInPandas(extract_batches, schema=EXTRACT_SCHEMA)
+    return flagged.mapInPandas(extract_batches(engine), schema=EXTRACT_SCHEMA)
 
 
 def flag_pages(pages_df: DataFrame, num_partitions: int = 0,
                salt: bool = True) -> DataFrame:
     """The shared pre-dispatch projection: name-rule skip flag, byte
     count for lineage, payload shed for skip rows, salted repartition —
-    the ONE definition `run_extraction`, `ocr_engine.extract_with_ocr`,
-    and `streaming.extract_stream` feed their python stage from (a
-    drifted copy would silently fork skip/shedding semantics between
-    the paths).  ``salt=False`` skips the repartition for inputs that
+    the ONE definition `run_extraction` and `streaming.extract_stream`
+    feed their python stage from (a drifted copy would silently fork
+    skip/shedding semantics between the paths).  ``salt=False`` skips the repartition for inputs that
     are already size-bounded (streaming micro-batches)."""
     flagged = pages_df.select(
         "url", "lang",

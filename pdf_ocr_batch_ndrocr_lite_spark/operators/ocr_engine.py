@@ -5,12 +5,15 @@ document (app.py:1540-1611 ``build_cmd``/``run_subprocess_with_polling``,
 launcher resolution app.py:2532-2637), collects the engine's output
 FILES from a scratch directory, and feeds them to the tolerant
 format-priority parser.  Here the engine is a plain Python callable
-injected into ONE vectorized ``mapInPandas`` stage — the envelope it
-returns is exactly the parser's input (a list of named/typed payloads,
-the in-memory twin of the reference's output directory listing), so
-route → engine → parse → serialize closes end-to-end in a single
-python stage with no per-document subprocess, no scratch filesystem,
-and no second shuffle.
+called from the dispatcher's vectorized ``mapInPandas`` stage
+(`extract.run_engine`) — the envelope it returns is exactly the parser's
+input (a list of named/typed payloads, the in-memory twin of the
+reference's output directory listing), so route → engine → parse →
+serialize closes end-to-end in a single python stage with no
+per-document subprocess, no scratch filesystem, and no second shuffle.
+`extract.run_extraction(..., engine=...)` runs the full loop;
+`run_ocr` runs only the engine step over rows already routed
+``needs_ocr``.
 
 Engine contract::
 
@@ -28,31 +31,19 @@ Engine contract::
   ``parse_failure``.
 
 Scale shape: the engine call is per-row Python INSIDE the Arrow batch
-(the only place per-row Python is allowed in this repo); a real engine
-binding (e.g. an ONNX session) should be constructed once per batch
-iterator, not per row — the ``engine_factory`` parameter exists for
-exactly that.
+(the only place per-row Python is allowed in this repo).
 """
 
 from __future__ import annotations
 
 import hashlib
+import json
 import time
-from typing import Any, Callable, Dict, Iterator, List, Optional
+from typing import Any, Callable, Dict, List, Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..functions import ocr_parse, textops
-from .extract import (
-    ACTION_EXTRACTED,
-    ACTION_PARSE_FAILURE,
-    EXTRACT_SCHEMA,
-    _OUT_COLS,
-    extract_one,
-    flag_pages,
-    salted_repartition,
-)
+from . import extract as ex
 
 EngineFn = Callable[[bytes, str, int], List[Dict[str, str]]]
 
@@ -86,7 +77,7 @@ def deterministic_fake_engine(payload: bytes, name: str,
         contents.append(line)
     return [
         {"name": f"{name}.json", "format": "json",
-         "payload": __import__("json").dumps(
+         "payload": json.dumps(
              {"contents": contents, "imginfo": {"img_name": name}})},
         {"name": f"{name}.txt", "format": "txt",
          "payload": "DECOY MUST NOT APPEAR"},
@@ -105,140 +96,29 @@ def text_only_fake_engine(payload: bytes, name: str,
     return [{"name": f"{name}.txt", "format": "txt", "payload": body}]
 
 
-def _ocr_one(url: str, payload: bytes, page_count: int, lang: str,
-             engine: EngineFn) -> Dict[str, Any]:
-    """One document through engine → parse → serialize; never raises."""
-    t0 = time.perf_counter()
-    try:
-        # Arrow→pandas turns a bigint column with NULLs into float64
-        # NaN, which is truthy and un-int()-able — a NULL page_count
-        # must degrade to 1, not abort the task
-        pc = max(1, int(page_count))
-    except (TypeError, ValueError):
-        pc = 1
-    base = {"url": url, "lang": lang, "doc_kind": "ocr",
-            "extracted_text": "", "page_count": pc, "token_count": 0,
-            "block_count": 0, "parse_warnings": 0, "low_coverage": 0,
-            "bytes_in": len(payload or b"")}
-    try:
-        outputs = engine(bytes(payload or b""), url, pc)
-    except Exception:
-        base.update({"action": ACTION_PARSE_FAILURE, "parse_warnings": 1,
-                     "seconds": time.perf_counter() - t0})
-        return base
-    if not outputs:
-        # engine "succeeded" but produced nothing (app.py:1641-1644)
-        base.update({"action": ACTION_PARSE_FAILURE, "parse_warnings": 1,
-                     "seconds": time.perf_counter() - t0})
-        return base
-    pages, stats = ocr_parse.parse_envelope(outputs, pc)
-    page_texts = [textops.serialize_page(pages[i].tokens,
-                                         pages[i].text_blocks)
-                  for i in range(pc)]
-    doc_text = textops.serialize_document(page_texts)
-    action = (ACTION_EXTRACTED
-              if any(p.has_any_text() for p in pages.values())
-              else ACTION_PARSE_FAILURE)
-    base.update({
-        "action": action, "extracted_text": doc_text,
-        "token_count": stats["token_count"],
-        "block_count": stats["block_count"],
-        "parse_warnings": stats["parse_warnings"],
-        "low_coverage": stats["low_coverage"],
-        "seconds": time.perf_counter() - t0,
-    })
-    return base
-
-
 def run_ocr(docs: DataFrame, engine: Optional[EngineFn] = None,
-            engine_factory: Optional[Callable[[], EngineFn]] = None,
-            url_col: str = "url", payload_col: str = "payload",
-            page_count_col: str = "page_count",
-            lang_col: Optional[str] = None,
             num_partitions: int = 0) -> DataFrame:
     """The engine seam as a standalone operator: rows already routed
-    ``needs_ocr`` (url, payload, page_count[, lang]) → EXTRACT_SCHEMA
-    action rows, one vectorized stage.
+    ``needs_ocr`` (url, payload, page_count) → EXTRACT_SCHEMA action
+    rows with ``doc_kind`` ``ocr`` and an empty ``lang``, one vectorized
+    stage.
 
-    ``engine_factory`` (built once per batch iterator, i.e. once per
-    task) is for engines with per-process setup cost — a model session,
-    a subprocess pool; plain ``engine`` is for stateless callables.
     Payloads are salted-HASH-repartitioned first (same giant-doc-tail
-    reasoning as the dispatcher, extract.py:241-257) — OCR cost scales
-    with payload size, so the tail must spread."""
-    if engine is None and engine_factory is None:
-        engine = deterministic_fake_engine
+    reasoning as the dispatcher, `extract.salted_repartition`) — OCR cost
+    scales with payload size, so the tail must spread."""
+    engine = engine or deterministic_fake_engine
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        eng = engine if engine is not None else engine_factory()
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            urls = pdf["url"].tolist()
-            payloads = pdf["payload"].tolist()
-            pcs = pdf["page_count"].tolist()
-            langs = (pdf["lang"].tolist() if "lang" in pdf.columns
-                     else [""] * len(pdf))
-            out: Dict[str, list] = {c: [] for c in _OUT_COLS}
-            for i in range(len(pdf)):
-                row = _ocr_one(urls[i], payloads[i], pcs[i], langs[i], eng)
-                for c in _OUT_COLS:
-                    out[c].append(row[c])
-            yield pd.DataFrame(out, columns=_OUT_COLS)
+    def ocr_row(url, payload, page_count) -> Dict[str, Any]:
+        t0 = time.perf_counter()
+        payload = bytes(payload or b"")
+        out = ex.run_engine(engine, payload, url, page_count)
+        out.update({"url": url, "lang": "", "doc_kind": "ocr",
+                    "bytes_in": len(payload),
+                    "seconds": time.perf_counter() - t0})
+        return out
 
-    import pyspark.sql.functions as F
-    cols = [F.col(url_col).alias("url"),
-            F.col(payload_col).alias("payload"),
-            F.col(page_count_col).alias("page_count")]
-    if lang_col is not None:
-        cols.append(F.col(lang_col).alias("lang"))
-    sel = docs.select(*cols)
-    sel = salted_repartition(sel, num_partitions).drop("salt")
-    return sel.mapInPandas(run, schema=EXTRACT_SCHEMA)
-
-
-def extract_with_ocr(pages_df: DataFrame,
-                     engine: Optional[EngineFn] = None,
-                     num_partitions: int = 0) -> DataFrame:
-    """The FULL closed loop in one python stage: the dispatcher routes
-    each document (extract.py magic-byte routing — text-layer PDFs
-    skip, images and textless PDFs route ``needs_ocr``), and rows that
-    come back ``needs_ocr`` continue straight into the engine within
-    the SAME Arrow batch — the reference's per-document
-    prepare → ocr → parse → build flow (app.py:2790-2859), minus the
-    subprocess and the scratch directory, with one input scan and one
-    exchange total (the plan-quality invariant the dispatcher already
-    keeps)."""
-    if engine is None:
-        engine = deterministic_fake_engine
-
-    from .extract import _skip_name_row
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            urls = pdf["url"].tolist()
-            htmls = pdf["html"].tolist()
-            langs = pdf["lang"].tolist()
-            skips = pdf["skip_name"].tolist()
-            blens = pdf["bytes_len"].tolist()
-            out: Dict[str, list] = {c: [] for c in _OUT_COLS}
-            for i in range(len(pdf)):
-                if skips[i]:
-                    row = _skip_name_row(urls[i], langs[i], blens[i])
-                else:
-                    row = extract_one(urls[i], htmls[i], langs[i])
-                    if row["action"] == "needs_ocr":
-                        ocr_row = _ocr_one(urls[i], htmls[i],
-                                           row["page_count"] or 1,
-                                           langs[i], engine)
-                        ocr_row["doc_kind"] = row["doc_kind"]
-                        ocr_row["seconds"] += row["seconds"]
-                        row = ocr_row
-                for c in _OUT_COLS:
-                    out[c].append(row[c])
-            yield pd.DataFrame(out, columns=_OUT_COLS)
-
-    flagged = flag_pages(pages_df, num_partitions)
-    return flagged.mapInPandas(run, schema=EXTRACT_SCHEMA)
+    sel = docs.select("url", "payload", "page_count")
+    sel = ex.salted_repartition(sel, num_partitions).drop("salt")
+    return sel.mapInPandas(
+        ex.map_rows(ocr_row, ("url", "payload", "page_count")),
+        schema=ex.EXTRACT_SCHEMA)

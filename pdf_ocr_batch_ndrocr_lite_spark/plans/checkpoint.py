@@ -15,9 +15,12 @@ of cluster size, and a restart can anti-join finished keys.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from typing import List
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import extract as ex
 from ..sources.storage import StorageAdapter
 
 DEFAULT_NUM_BUCKETS = 256
@@ -27,6 +30,28 @@ CHECKPOINT_COLS = [
     "skip_name", "skip_has_text", "needs_ocr", "extracted", "seconds",
     "status", "updated_at",
 ]
+
+
+# one counter column per action, in lineage-table order
+ACTION_COUNTERS = {
+    ex.ACTION_PARSE_FAILURE: "parse_failures",
+    ex.ACTION_SKIP_NAME: "skip_name",
+    ex.ACTION_SKIP_HAS_TEXT: "skip_has_text",
+    ex.ACTION_NEEDS_OCR: "needs_ocr",
+    ex.ACTION_EXTRACTED: "extracted",
+}
+
+
+def run_counters() -> List[Column]:
+    """Aggregates of the run counters over extraction results — docs,
+    pages, then one count per action: what `run_pipeline` returns, and
+    the lineage table's counter columns apart from bytes and seconds
+    (counter semantics: app.py:183-189, 2675-2678, 2862-2885)."""
+    return [F.count(F.lit(1)).alias("docs"),
+            F.sum("page_count").cast("long").alias("pages")] + [
+        F.sum(F.when(F.col("action") == action, 1).otherwise(0))
+        .cast("long").alias(name)
+        for action, name in ACTION_COUNTERS.items()]
 
 
 def with_partition_key(df: DataFrame, num_buckets: int = DEFAULT_NUM_BUCKETS
@@ -56,24 +81,15 @@ def pending_only(pages_df: DataFrame, spark: SparkSession,
 
 def lineage_from_results(results: DataFrame,
                          num_buckets: int = DEFAULT_NUM_BUCKETS) -> DataFrame:
-    """Per-partition-key conditional-aggregation rollup of run metrics
-    (counter semantics: app.py:183-189, 2675-2678, 2862-2885).
-    Partial (map-side) aggregation applies — one shuffle of tiny rows."""
+    """Per-partition-key conditional-aggregation rollup of the run
+    counters plus bytes and seconds.  Partial (map-side) aggregation
+    applies — one shuffle of tiny rows."""
     keyed = with_partition_key(results, num_buckets)
+    docs, pages, *actions = run_counters()
     return keyed.groupBy("partition_key").agg(
-        F.count(F.lit(1)).alias("docs"),
-        F.sum("page_count").cast("long").alias("pages"),
+        docs, pages,
         F.sum("bytes_in").cast("long").alias("bytes"),
-        F.sum(F.when(F.col("action") == "parse_failure", 1).otherwise(0))
-        .cast("long").alias("parse_failures"),
-        F.sum(F.when(F.col("action") == "skip_name", 1).otherwise(0))
-        .cast("long").alias("skip_name"),
-        F.sum(F.when(F.col("action") == "skip_has_text", 1).otherwise(0))
-        .cast("long").alias("skip_has_text"),
-        F.sum(F.when(F.col("action") == "needs_ocr", 1).otherwise(0))
-        .cast("long").alias("needs_ocr"),
-        F.sum(F.when(F.col("action") == "extracted", 1).otherwise(0))
-        .cast("long").alias("extracted"),
+        *actions,
         F.sum("seconds").alias("seconds"),
         F.lit("done").alias("status"),
         F.current_timestamp().alias("updated_at"),
@@ -114,11 +130,10 @@ def _code_version() -> str:
     a lineage reader can tell which code produced which run."""
     import hashlib
 
-    from ..operators import extract as _ex
     from . import pipeline as _pl
 
     h = hashlib.md5()
-    for mod in (_ex, _pl):
+    for mod in (ex, _pl):
         with open(mod.__file__, "rb") as fh:
             h.update(fh.read())
     return h.hexdigest()[:12]

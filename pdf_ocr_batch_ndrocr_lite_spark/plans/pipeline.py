@@ -118,14 +118,22 @@ def run_pipeline(
     duplicate rows — the restart recomputes the unfinished keys and each
     key's output REPLACES whatever the interrupted run left behind.
 
+    A checkpoint needs an output: lineage is committed only after the
+    sink write, so ``checkpoint_path`` without ``output_path`` raises
+    ``ValueError`` before anything is written.
+
     ``ocr_engine``: an engine callable (operators/ocr_engine.EngineFn).
     When given, documents the dispatcher routes ``needs_ocr`` continue
     straight into the engine inside the same vectorized stage
-    (operators/ocr_engine.extract_with_ocr), closing the reference's
+    (``run_extraction(engine=...)``), closing the reference's
     route → engine → parse → serialize loop (app.py:2790-2859) with no
     extra scan or shuffle; the plan shape and every counter/lineage/
     sink path are otherwise identical.
     """
+    if checkpoint_path and not output_path:
+        raise ValueError(
+            "checkpoint_path needs output_path: progress is recorded only "
+            "once the extractions sink is written")
     storage = storage or StorageAdapter()
 
     if checkpoint_path:
@@ -140,31 +148,12 @@ def run_pipeline(
     else:
         todo = ck.with_partition_key(pages_df, num_buckets)
 
-    if ocr_engine is not None:
-        from ..operators.ocr_engine import extract_with_ocr
-        results = extract_with_ocr(todo, engine=ocr_engine,
-                                   num_partitions=num_partitions)
-    else:
-        results = ex.run_extraction(todo, num_partitions=num_partitions)
+    results = ex.run_extraction(todo, num_partitions=num_partitions,
+                                engine=ocr_engine)
 
     def _totals(df: DataFrame) -> Dict[str, int]:
-        row = df.groupBy().agg(
-            F.count(F.lit(1)).alias("docs"),
-            F.sum("page_count").alias("pages"),
-            F.sum(F.when(F.col("action") == ex.ACTION_EXTRACTED, 1)
-                  .otherwise(0)).alias("extracted"),
-            F.sum(F.when(F.col("action") == ex.ACTION_PARSE_FAILURE, 1)
-                  .otherwise(0)).alias("parse_failures"),
-            F.sum(F.when(F.col("action") == ex.ACTION_SKIP_HAS_TEXT, 1)
-                  .otherwise(0)).alias("skip_has_text"),
-            F.sum(F.when(F.col("action") == ex.ACTION_SKIP_NAME, 1)
-                  .otherwise(0)).alias("skip_name"),
-            F.sum(F.when(F.col("action") == ex.ACTION_NEEDS_OCR, 1)
-                  .otherwise(0)).alias("needs_ocr"),
-        ).collect()[0]
-        return {k: int(row[k] or 0) for k in
-                ["docs", "pages", "extracted", "parse_failures",
-                 "skip_has_text", "skip_name", "needs_ocr"]}
+        row = df.groupBy().agg(*ck.run_counters()).collect()[0]
+        return {k: int(v or 0) for k, v in row.asDict().items()}
 
     if not output_path:
         # no sink: single aggregation pass, caller only wants counters

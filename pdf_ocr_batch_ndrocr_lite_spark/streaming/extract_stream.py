@@ -51,7 +51,7 @@ def extract_stream(pages: DataFrame) -> DataFrame:
     dispatcher (same plan shape as batch `run_extraction`, minus the salted
     shuffle — micro-batches are already size-bounded by the trigger)."""
     flagged = ex.flag_pages(pages, salt=False)
-    return flagged.mapInPandas(ex.extract_batches, schema=ex.EXTRACT_SCHEMA)
+    return flagged.mapInPandas(ex.extract_batches(), schema=ex.EXTRACT_SCHEMA)
 
 
 def make_batch_sink(output_path: str, lineage_path: Optional[str] = None):

@@ -32,3 +32,45 @@ def test_jobs_cli_bad_args():
     )
     assert proc.returncode != 0
     assert "required" in proc.stderr.lower() or "error" in proc.stderr.lower()
+
+
+def _stub_session(master):
+    from types import SimpleNamespace
+    return SimpleNamespace(sparkContext=SimpleNamespace(master=master))
+
+
+def test_stage_scratch_owns_only_its_own_temp_dir(tmp_path):
+    """One scratch-ownership rule for --curate and --webgraph: on a local
+    master the job makes a temp dir and removes it even when the body
+    raises; a caller's --curate-scratch is never deleted; a non-local
+    master without one gets no barrier."""
+    import os
+
+    import pytest
+
+    from pdf_ocr_batch_ndrocr_lite_spark.jobs import stage_scratch
+
+    local = _stub_session("local[2]")
+    made = []
+    with pytest.raises(RuntimeError):
+        with stage_scratch(local, None, "spark_graft_test_") as scratch:
+            made.append(scratch)
+            assert os.path.isdir(scratch)
+            assert os.path.basename(scratch).startswith("spark_graft_test_")
+            raise RuntimeError("job failed")
+    assert made and not os.path.exists(made[0])
+
+    given = tmp_path / "caller_scratch"
+    given.mkdir()
+    (given / "stage0").write_text("kept")
+    for master in ("local[2]", "yarn"):
+        with pytest.raises(RuntimeError):
+            with stage_scratch(_stub_session(master), str(given),
+                               "spark_graft_test_") as scratch:
+                assert scratch == str(given)
+                raise RuntimeError("job failed")
+        assert (given / "stage0").read_text() == "kept"
+
+    with stage_scratch(_stub_session("yarn"), None,
+                       "spark_graft_test_") as scratch:
+        assert scratch is None

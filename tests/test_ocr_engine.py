@@ -63,26 +63,6 @@ def test_run_ocr_failure_modes_never_raise(spark):
     assert got["ok"]["action"] == E.ACTION_EXTRACTED
 
 
-def test_run_ocr_engine_factory_built_once_per_task(spark):
-    """engine_factory is the per-task setup seam (model session etc.):
-    results must match the plain-engine path exactly."""
-
-    def factory():
-        state = {"calls": 0}     # fresh per task, exercised not asserted
-
-        def engine(payload, name, pc):
-            state["calls"] += 1
-            return oe.deterministic_fake_engine(payload, name, pc)
-        return engine
-
-    rows = [(f"d{i}", f"p{i}".encode(), 2) for i in range(20)]
-    a = {r["url"]: r["extracted_text"] for r in
-         oe.run_ocr(_docs(spark, rows), engine_factory=factory).collect()}
-    b = {r["url"]: r["extracted_text"] for r in
-         oe.run_ocr(_docs(spark, rows)).collect()}
-    assert a == b
-
-
 def test_extract_with_ocr_closes_needs_ocr_rows(spark):
     """Full closed loop over the synthetic corpus: every row the plain
     dispatcher routes needs_ocr (scanned-image PDFs, images) comes back
@@ -90,7 +70,8 @@ def test_extract_with_ocr_closes_needs_ocr_rows(spark):
     byte-identical to the plain dispatcher's output."""
     pages = corpus_df(spark, N_DOCS, seed=SEED, partitions=8)
     plain = {r["url"]: r for r in E.run_extraction(pages).collect()}
-    closed = {r["url"]: r for r in oe.extract_with_ocr(pages).collect()}
+    closed = {r["url"]: r for r in E.run_extraction(
+        pages, engine=oe.deterministic_fake_engine).collect()}
     assert set(plain) == set(closed)
     n_ocr = 0
     for url, p in plain.items():
@@ -115,7 +96,8 @@ def test_extract_with_ocr_single_python_stage(spark, tmp_path):
     corpus_df(spark, 100, seed=SEED, partitions=2) \
         .write.parquet(str(tmp_path / "pages"))
     pages = spark.read.parquet(str(tmp_path / "pages"))
-    plan = oe.extract_with_ocr(pages, num_partitions=4) \
+    plan = E.run_extraction(pages, num_partitions=4,
+                            engine=oe.deterministic_fake_engine) \
         ._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInPandas") == 1, plan
     assert plan.count("Exchange ") == 1, plan

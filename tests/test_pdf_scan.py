@@ -864,6 +864,38 @@ def test_aes_cipher_matches_published_vectors():
     assert aes.pkcs7_unpad(aes.cbc_decrypt(key256, iv, enc)) == data
 
 
+def test_aes_cbc_decrypt_matches_block_reference():
+    """Differential oracle for the word-level ``cbc_decrypt``: a plain
+    block-by-block CBC chain over the inverse-round ``_decrypt_block``
+    must give the same plaintext for random 16- and 32-byte keys (the
+    AESV2/AESV3 sizes; a 24-byte key is rejected), random IVs and 1-8
+    blocks."""
+    import random
+
+    from pdf_ocr_batch_ndrocr_lite_spark.functions import aes
+
+    def reference(key, iv, data):
+        w, nr = aes._expand_key(key)
+        out, prev = b"", iv
+        for i in range(0, len(data), 16):
+            block = data[i:i + 16]
+            out += bytes(a ^ b for a, b in
+                         zip(aes._decrypt_block(w, nr, block), prev))
+            prev = block
+        return out
+
+    rng = random.Random(20240917)
+    for trial in range(60):
+        key = rng.randbytes((16, 32)[trial % 2])
+        iv = rng.randbytes(16)
+        data = rng.randbytes(16 * rng.randint(1, 8))
+        assert aes.cbc_decrypt(key, iv, data) == reference(key, iv, data), \
+            (key.hex(), iv.hex(), data.hex())
+    for decrypt in (aes.cbc_decrypt, reference):
+        with pytest.raises(ValueError, match="16 or 32"):
+            decrypt(rng.randbytes(24), rng.randbytes(16), rng.randbytes(16))
+
+
 @pytest.mark.parametrize("kind,expect_v,expect_r", [
     ("aesv2", b"/V 4", b"/R 4"),
     ("aesv3", b"/V 5", b"/R 6"),

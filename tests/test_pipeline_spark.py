@@ -84,9 +84,12 @@ def test_pipeline_with_checkpoint_resume(spark, tmp_path):
     n_first = first.count()
     assert n_first == totals["extracted"] > 0
 
-    # checkpoint covers every bucket that had documents
+    # checkpoint covers every bucket that had documents, and every run
+    # counter equals the sum of its lineage column
     ckpt_df = spark.read.parquet(ckpt)
-    assert ckpt_df.agg(F.sum("docs")).collect()[0][0] == 120
+    lineage = ckpt_df.agg(*(F.sum(k).alias(k) for k in totals)).collect()[0]
+    assert lineage["docs"] == 120
+    assert {k: lineage[k] for k in totals} == totals
 
     # re-run: everything checkpointed → no new output rows (idempotency)
     totals2 = run_pipeline(spark, df, output_path=out, checkpoint_path=ckpt,
@@ -208,3 +211,19 @@ def test_run_meta_written_and_continuity_enforced(spark, tmp_path):
                      storage=storage, num_buckets=32)
     # nothing extra was appended by the failed attempt
     assert spark.read.parquet(ck.meta_path(ckpt)).count() == 2
+
+
+def test_checkpoint_without_output_rejected_before_any_write(spark, tmp_path):
+    """Lineage is committed only after the sink write, so a checkpoint
+    with no output would never record progress: every rerun would redo
+    every document and append another run_meta row.  run_pipeline must
+    refuse up front, writing nothing."""
+    import os
+
+    ckpt = str(tmp_path / "checkpoint")
+    df = corpus_df(spark, 20, seed=SEED, partitions=2)
+    with pytest.raises(ValueError, match="output_path"):
+        run_pipeline(spark, df, checkpoint_path=ckpt,
+                     storage=StorageAdapter(), num_buckets=8)
+    assert not os.path.exists(ck.meta_path(ckpt))
+    assert not os.path.exists(ckpt)

@@ -1,6 +1,6 @@
-"""Searchable-PDF sink (S6/S7): the emitted PDFs are real, their invisible
-text layer is byte-identical to the pipeline's extracted text, and embedded
-JPEGs pass through untouched."""
+"""Searchable-PDF kernels (S6/S7, the build path q45 exercises): the
+emitted PDFs are real, their invisible text layer is byte-identical to the
+pipeline's extracted text, and embedded JPEGs pass through untouched."""
 
 from __future__ import annotations
 
@@ -13,7 +13,6 @@ from pdf_ocr_batch_ndrocr_lite_spark.functions import (
     pdf_scan,
     textops,
 )
-from pdf_ocr_batch_ndrocr_lite_spark.operators import sink_pdf
 from pdf_ocr_batch_ndrocr_lite_spark.sources.corpus import make_row
 
 
@@ -107,37 +106,6 @@ def test_vertical_page_rotated_ops():
     # rotated columns serialize exactly like the pipeline's vertical path
     expected = textops.serialize_page(toks, [])
     assert "\n".join(o["text"] for o in ops) == expected
-
-
-def test_sink_operator_roundtrip(spark):
-    import pandas as pd
-    rows = [{"url": u, "html": raw} for u, _, raw in _envelope_docs(120)]
-    df = spark.createDataFrame(pd.DataFrame(rows),
-                               "url string, html binary")
-    got = {r["url"]: r for r in sink_pdf.searchable_pdf_sink(df).collect()}
-    assert len(got) == len(rows)
-    for u, env, _raw in _envelope_docs(120)[:10]:
-        r = got[u]
-        assert r["page_count"] == len(env["pages"])
-        streams = pdf_scan.page_content_streams(bytes(r["pdf"]))
-        assert len(streams) == r["page_count"]
-        assert sum(pdf_scan.count_text_show_ops(s)
-                   for s in streams) == r["n_text_ops"]
-        assert r["n_bytes"] == len(bytes(r["pdf"]))
-
-
-def test_sink_skips_unparseable_and_encrypted(spark):
-    import pandas as pd
-    rows = [
-        {"url": "u/html", "html": b"<html><body>x</body></html>"},
-        {"url": "u/enc", "html": json.dumps(
-            {"kind": "pdf", "encrypted": True, "pages": [],
-             "ocr_outputs": []}).encode()},
-        {"url": "u/junk", "html": b"{not json"},
-    ]
-    df = spark.createDataFrame(pd.DataFrame(rows),
-                               "url string, html binary")
-    assert sink_pdf.searchable_pdf_sink(df).count() == 0
 
 
 def test_jpeg_passthrough_in_sink_output():
