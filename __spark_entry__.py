@@ -45,6 +45,7 @@ from pdf_ocr_batch_ndrocr_lite_spark.operators import (
     textstats as ts,
 )
 from pdf_ocr_batch_ndrocr_lite_spark.operators import extract as ex
+from pdf_ocr_batch_ndrocr_lite_spark.operators.barrier import materialize
 
 
 def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -1331,9 +1332,9 @@ def _host_graph_edges(spark, sf_dir):
     in BASELINE.md r8)."""
     from pdf_ocr_batch_ndrocr_lite_spark.operators import linkgraph as lg
 
-    links = lg.resolve_links(_linkres_pages(spark, sf_dir)) \
-        .localCheckpoint(eager=False)
-    return lg.host_edges(links).localCheckpoint(eager=False)
+    links = materialize(lg.resolve_links(_linkres_pages(spark, sf_dir)),
+                        "links")
+    return materialize(lg.host_edges(links), "edges")
 
 
 def _q92_host_trustrank(spark, sf_dir):
@@ -1364,8 +1365,8 @@ def _q93_host_rank_signal(spark, sf_dir):
     edges = _host_graph_edges(spark, sf_dir)
     ranks = lg.pagerank(edges, iterations=2, src_col="src_host",
                         dst_col="dst_host", key_type=None)
-    rtab = ranks.select(F.col("id").alias("host"), "rank") \
-        .localCheckpoint(eager=False)
+    rtab = materialize(ranks.select(F.col("id").alias("host"), "rank"),
+                       "ranks")
     docs = _read(spark, sf_dir, "documents").filter(F.col("doc_id") < 240)
     d = F.col("doc_id")
     n = d % 12

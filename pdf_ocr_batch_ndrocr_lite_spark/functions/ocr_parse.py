@@ -586,10 +586,6 @@ def _merge_text_payload(result: Dict[int, PageData], payload: str, name: str,
 # -------------------- top-level document parse (app.py:1651-1736) ------------
 
 
-class ParseStats(dict):
-    """Plain-dict stats bag so it crosses Arrow cheaply."""
-
-
 def parse_envelope(ocr_outputs: Sequence[Dict[str, Any]], page_count: int
                    ) -> Tuple[Dict[int, PageData], Dict[str, int]]:
     """Format-priority parse+merge of a document's OCR outputs.

@@ -22,11 +22,8 @@ declarative plan -> single vectorized extraction stage -> sinks.
 from __future__ import annotations
 
 import argparse
-import contextlib
 import json
-import shutil
 import sys
-import tempfile
 import time
 
 
@@ -104,37 +101,17 @@ def parse_args(argv):
                    help="parquet/Iceberg table of trusted hosts -> "
                         "TrustRank instead of PageRank (webgraph mode)")
     p.add_argument("--curate-scratch", default=None,
-                   help="stage-barrier scratch path for curate mode "
-                        "(shared storage on a cluster); default: a "
-                        "temp dir under local masters, no barrier "
-                        "otherwise")
+                   help="stage-barrier scratch path for --curate and "
+                        "--webgraph; required on a non-local master "
+                        "(shared storage: HDFS/S3); default under a "
+                        "local master: a temp dir the job removes")
     return p.parse_args(argv)
-
-
-@contextlib.contextmanager
-def stage_scratch(spark, scratch, prefix):
-    """The stage-barrier scratch directory for one job.
-
-    A caller-given ``scratch`` (--curate-scratch; shared storage on a
-    cluster) is caller-owned and never deleted.  Without one, a local
-    master gets a fresh temp dir that this job owns and removes on exit,
-    even when the job raises (materialized stage copies would otherwise
-    leak under the temp dir); any other master gets ``None`` — no
-    barrier."""
-    if scratch is not None or not spark.sparkContext.master.startswith(
-            "local"):
-        yield scratch
-        return
-    own = tempfile.mkdtemp(prefix=prefix)
-    try:
-        yield own
-    finally:
-        shutil.rmtree(own, ignore_errors=True)
 
 
 def main(argv=None) -> int:
     args = parse_args(argv if argv is not None else sys.argv[1:])
 
+    from .operators.barrier import stage_scratch
     from .plans.pipeline import build_session, run_pipeline
     from .sources.corpus import corpus_df
     from .sources.storage import StorageAdapter
@@ -161,17 +138,18 @@ def main(argv=None) -> int:
 
     if args.webgraph:
         from .plans.webgraph import run_webgraph
-        if args.synthetic_docs:
-            pages = corpus_df(spark, args.synthetic_docs, seed=args.seed)
-        else:
-            pages = read_table(args.input)
-        seeds = read_table(args.trust_seeds) if args.trust_seeds else None
         # stage barrier: parquet scratch so the resolver/PSL lineage is
-        # cut between stages and executors can re-read it on a non-local
-        # master
-        t0 = time.perf_counter()
+        # cut between stages; entered before the inputs are read, so a
+        # cluster run without --curate-scratch fails before its first job
         with stage_scratch(spark, args.curate_scratch,
                            "spark_graft_webgraph_") as scratch:
+            if args.synthetic_docs:
+                pages = corpus_df(spark, args.synthetic_docs, seed=args.seed)
+            else:
+                pages = read_table(args.input)
+            seeds = (read_table(args.trust_seeds) if args.trust_seeds
+                     else None)
+            t0 = time.perf_counter()
             ranks, counts = run_webgraph(
                 pages, iterations=args.pr_iterations,
                 redistribute_dangling=args.redistribute_dangling,
@@ -195,23 +173,25 @@ def main(argv=None) -> int:
         from pyspark.sql import functions as F
 
         from .plans.curate import run_curation
-        if args.synthetic_docs:
-            # documents-shaped synthetic input for smoke runs: derive a
-            # stable doc_id from the url (any deterministic id works —
-            # first-wins dedup just needs a total order)
-            docs = corpus_df(spark, args.synthetic_docs, seed=args.seed) \
-                .select(F.abs(F.xxhash64("url")).alias("doc_id"),
-                        "text", "lang")
-        else:
-            docs = read_table(args.input)
-        bench = read_table(args.bench_input) if args.bench_input else None
-        rates = json.loads(args.mix_rates) if args.mix_rates else None
-        t0 = time.perf_counter()
         # stage barrier: each cascade stage executes once per job (the
         # per-stage counts + final write would otherwise re-run the
         # verdict/LSH lineage up to 4x — see plans.curate module comment)
         with stage_scratch(spark, args.curate_scratch,
                            "spark_graft_curate_") as scratch:
+            if args.synthetic_docs:
+                # documents-shaped synthetic input for smoke runs: derive
+                # a stable doc_id from the url (any deterministic id
+                # works — first-wins dedup just needs a total order)
+                docs = corpus_df(spark, args.synthetic_docs,
+                                 seed=args.seed) \
+                    .select(F.abs(F.xxhash64("url")).alias("doc_id"),
+                            "text", "lang")
+            else:
+                docs = read_table(args.input)
+            bench = (read_table(args.bench_input) if args.bench_input
+                     else None)
+            rates = json.loads(args.mix_rates) if args.mix_rates else None
+            t0 = time.perf_counter()
             kept, counts = run_curation(
                 docs, bench=bench, mix_rates=rates,
                 default_rate=args.default_rate,
@@ -229,12 +209,8 @@ def main(argv=None) -> int:
         spark.stop()
         return 0
 
-    if args.synthetic_docs:
-        pages = corpus_df(spark, args.synthetic_docs, seed=args.seed)
-    elif args.iceberg:
-        pages = spark.read.table(args.input)
-    else:
-        pages = spark.read.parquet(args.input)
+    pages = (corpus_df(spark, args.synthetic_docs, seed=args.seed)
+             if args.synthetic_docs else read_table(args.input))
 
     engine = None
     if args.ocr_engine:

@@ -7,10 +7,15 @@ oracle parity).  Scale notes per operator below.
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .barrier import delete, materialize, stage_scratch
 
 # ---------------------------------------------------------------------------
 # Exact dedup: hash-groupBy.  One shuffle on the digest; partial aggregation
@@ -118,7 +123,7 @@ def salted_self_join(df: DataFrame, key_cols: list, id_col: str,
     # so the pmod cell assignment and cell explode stay visible in the
     # optimized plan (plan-guard test); the materialized frame is the
     # same volume the join shuffles anyway.
-    df = df.localCheckpoint(eager=False)
+    df = materialize(df, "salted_join_input")
     hot = (df.groupBy(*key_cols)
            .agg(F.count(F.lit(1)).alias("_bn"))
            .filter(F.col("_bn") > bucket_cap)
@@ -281,9 +286,9 @@ def minhash_dedup(docs: DataFrame, id_col: str = "doc_id",
     # bucket + salted-join subtree.  Candidates are id pairs bounded by
     # LSH candidate volume (the same frame the streaming sink persists),
     # so executor-local materialization is cheap at any scale.
-    candidates = minhash_lsh_candidates(docs, id_col, text_col,
-                                        num_hashes, bands, k) \
-        .localCheckpoint(eager=False)
+    candidates = materialize(
+        minhash_lsh_candidates(docs, id_col, text_col, num_hashes, bands,
+                               k), "candidates")
     cand_ids = (candidates.select(F.col("a_id").alias(id_col))
                 .union(candidates.select(F.col("b_id").alias(id_col)))
                 .distinct())
@@ -383,12 +388,12 @@ def incremental_minhash_dedup(new: DataFrame, corpus: DataFrame,
     # lineage cut, same reason as minhash_dedup's candidates: `cand` is
     # referenced three times below (both semi-joins + norm), each of
     # which would re-execute the two-sided bucket join subtree
-    cand = (salted_two_sided_join(nb, cb, ["band", "key"], id_col,
-                                  bucket_cap, max_salts)
-            .select(F.col(f"a.{id_col}").alias("new_id"),
-                    F.col(f"b.{id_col}").alias("old_id"))
-            .distinct()
-            .localCheckpoint(eager=False))
+    cand = materialize(
+        salted_two_sided_join(nb, cb, ["band", "key"], id_col,
+                              bucket_cap, max_salts)
+        .select(F.col(f"a.{id_col}").alias("new_id"),
+                F.col(f"b.{id_col}").alias("old_id"))
+        .distinct(), "candidates")
     cand_new = new.join(cand.select(F.col("new_id").alias(id_col)),
                         id_col, "left_semi")
     cand_old = corpus.join(cand.select(F.col("old_id").alias(id_col)),
@@ -480,121 +485,108 @@ def connected_components(pairs: DataFrame, a_col: str = "a_id",
     RuntimeError if not converged within `max_iter` rounds (graph
     diameter pathologically large) rather than returning wrong labels.
 
-    `scratch_dir`: durable scratch path for the per-round iteration
-    barrier (see module comment).  Default: a driver-local temp dir —
-    correct ONLY for local mode, so a non-local master with no
-    `scratch_dir` raises up front (executors cannot read the driver's
-    filesystem; the failure would otherwise surface as missing-file
-    errors mid-loop).  Intermediate rounds are deleted as the loop
-    advances through the Hadoop FileSystem API (so HDFS/S3A scratch is
-    actually reclaimed — shutil would silently no-op there).  The FINAL
-    labels parquet stays on disk because the returned DataFrame reads it
-    lazily: the caller owns the scratch_dir lifecycle and may delete it
-    once done with the result (or after persisting it elsewhere)."""
-    import tempfile
-
-    spark = pairs.sparkSession
-    master = spark.sparkContext.master or ""
-    if scratch_dir is None and not master.startswith("local"):
-        raise ValueError(
-            "connected_components: the default scratch dir is driver-local "
-            f"and unreadable by executors under master={master!r} — pass "
-            "scratch_dir=<shared storage path (HDFS/S3)>")
-    root = scratch_dir or tempfile.mkdtemp(prefix="spark_graft_cc_")
-
-    def _fs_delete(path: str) -> None:
-        # Hadoop FileSystem delete: correct for local paths AND shared
-        # scratch (hdfs://, s3a://), where shutil.rmtree silently no-ops
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        fs.delete(hpath, True)
-
+    `scratch_dir`: durable scratch path for the per-round barriers (see
+    module comment), under the `barrier.stage_scratch` rule: without one
+    a local master gets a temp dir this call owns, and any other master
+    raises ValueError before the first round.  Finished rounds are
+    deleted as the loop advances (`barrier.delete`: HDFS/S3A scratch is
+    reclaimed too).  The FINAL labels stay on disk because the result
+    reads them lazily: a caller's scratch_dir is the caller's to delete;
+    an owned temp dir is removed at process exit, or before the
+    non-convergence RuntimeError."""
     from pyspark.sql import Observation
 
-    # symmetric closure in ONE pass: a union of `half` with its swap
-    # references the caller's pair pipeline twice (q59's whole jaccard
-    # verify executed two times into the barrier) — explode both
-    # orientations from each row instead
-    a, b = (F.col(a_col).cast("bigint").alias("v"),
-            F.col(b_col).cast("bigint").alias("w"))
-    (pairs.select(F.explode(F.array(
-        F.struct(a, b),
-        F.struct(F.col(b_col).cast("bigint").alias("v"),
-                 F.col(a_col).cast("bigint").alias("w")))).alias("_e"))
-     .select(F.col("_e.v").alias("src"), F.col("_e.w").alias("dst"))
-     .distinct()
-     .write.mode("overwrite").parquet(f"{root}/edges"))
-    edges = spark.read.parquet(f"{root}/edges")
-    labels = (edges.select(F.col("src").alias("id")).distinct()
-              .withColumn("label", F.col("id")))
+    spark = pairs.sparkSession
+    with contextlib.ExitStack() as owned:
+        root = owned.enter_context(
+            stage_scratch(spark, scratch_dir, "spark_graft_cc_"))
+        # symmetric closure in ONE pass: a union of `half` with its swap
+        # references the caller's pair pipeline twice (q59's whole jaccard
+        # verify executed two times into the barrier) — explode both
+        # orientations from each row instead
+        a, b = (F.col(a_col).cast("bigint").alias("v"),
+                F.col(b_col).cast("bigint").alias("w"))
+        edges = materialize(
+            pairs.select(F.explode(F.array(
+                F.struct(a, b),
+                F.struct(F.col(b_col).cast("bigint").alias("v"),
+                         F.col(a_col).cast("bigint").alias("w")))).alias("_e"))
+            .select(F.col("_e.v").alias("src"), F.col("_e.w").alias("dst"))
+            .distinct(), "edges", root)
+        labels = (edges.select(F.col("src").alias("id")).distinct()
+                  .withColumn("label", F.col("id")))
 
-    # Round structure (r9 rewrite, measured A/B in OPTIMIZATION_r09.md):
-    #
-    #   m   = min(label, neighbor labels)   -- ONE union + combining
-    #         groupBy(id).min instead of the previous groupBy + two
-    #         left joins (two fewer exchanges per round)
-    #   m  := m(m(x)) three times            -- pointer jump on the
-    #         FRESH map: label^8 per barrier round via exponential
-    #         composition (each self-join doubles the dereference
-    #         depth).  Jumping the post-hop map instead of the stale
-    #         pre-round labels cut the q59 jaccard graph 14 -> 10
-    #         rounds and the 200k-chain fixed graph 5 -> 3.
-    #   convergence: per-node labels are monotone non-increasing (the
-    #         self leg is in the candidate union), so the map is a
-    #         fixpoint iff sum(label) is unchanged between rounds —
-    #         read via observe() ON THE BARRIER WRITE itself
-    #         (DECIMAL(38,0): exact for any id range), replacing the
-    #         separate changed-count job per round.  The old-label
-    #         join-back that count needed is gone with it.
-    #
-    # A SECOND nbr hop per round (two-hop neighbor min) was A/B'd in
-    # round 7 and again in round 9 and rejected both times: it cuts
-    # rounds on hop-bound graphs but re-runs the full-edge aggregation
-    # per extra hop, a real-volume loss on chain graphs (numbers in
-    # BASELINE.md r7 / OPTIMIZATION_r09.md).  All per-round plan copies
-    # read the same post-barrier parquet relation, so planning cost
-    # stays constant per round (no iterative lineage growth).
-    prev_sum = None
-    for rnd in range(max_iter):
-        # Adaptive hop count: a graph still unconverged after 3 rounds
-        # is hop-bound (min-label diffusion through successive basins —
-        # the near-dup blob shape), where a SECOND edge hop per barrier
-        # round halves the remaining rounds (q59 graph: 10 -> 7
-        # measured).  Jump-bound graphs (chains) converge within 3
-        # rounds and never pay the extra full-edge join.  Any hop mix
-        # converges to the same min-reachable labels.
-        m = labels
-        for _ in range(1 if rnd < 3 else 2):
-            nbr = (edges.join(m.select(F.col("id").alias("src"), "label"),
-                              "src")
-                   .select(F.col("dst").alias("id"),
-                           F.col("label").alias("_c")))
-            m = (m.select("id", F.col("label").alias("_c"))
-                 .unionByName(nbr)
-                 .groupBy("id").agg(F.min("_c").alias("label")))
-        for _ in range(3):
-            # every label value is a real node id (min over reachable
-            # ids) and the map covers every node, so the join is total
-            m = (m.alias("x")
-                 .join(m.select(F.col("id").alias("_yid"),
-                                F.col("label").alias("_ylabel")),
-                       F.col("x.label") == F.col("_yid"))
-                 .select(F.col("x.id").alias("id"),
-                         F.col("_ylabel").alias("label")))
-        obs = Observation()
-        (m.observe(obs, F.count(F.lit(1)).alias("n"),
-                   F.sum(F.col("label").cast("decimal(38,0)")).alias("s"))
-         .write.mode("overwrite").parquet(f"{root}/labels_{rnd}"))
-        metrics = obs.get
-        labels = spark.read.parquet(f"{root}/labels_{rnd}")
-        if rnd > 0:
-            _fs_delete(f"{root}/labels_{rnd - 1}")
-        if metrics["n"] == 0 or (prev_sum is not None
-                                 and metrics["s"] == prev_sum):
-            _fs_delete(f"{root}/edges")
-            return labels.select("id", F.col("label").alias("component"))
-        prev_sum = metrics["s"]
+        # Round structure (r9 rewrite, measured A/B in OPTIMIZATION_r09.md):
+        #
+        #   m   = min(label, neighbor labels)   -- ONE union + combining
+        #         groupBy(id).min instead of the previous groupBy + two
+        #         left joins (two fewer exchanges per round)
+        #   m  := m(m(x)) three times            -- pointer jump on the
+        #         FRESH map: label^8 per barrier round via exponential
+        #         composition (each self-join doubles the dereference
+        #         depth).  Jumping the post-hop map instead of the stale
+        #         pre-round labels cut the q59 jaccard graph 14 -> 10
+        #         rounds and the 200k-chain fixed graph 5 -> 3.
+        #   convergence: per-node labels are monotone non-increasing (the
+        #         self leg is in the candidate union), so the map is a
+        #         fixpoint iff sum(label) is unchanged between rounds —
+        #         read via observe() ON THE BARRIER WRITE itself
+        #         (DECIMAL(38,0): exact for any id range), replacing the
+        #         separate changed-count job per round.  The old-label
+        #         join-back that count needed is gone with it.
+        #
+        # A SECOND nbr hop per round (two-hop neighbor min) was A/B'd in
+        # round 7 and again in round 9 and rejected both times: it cuts
+        # rounds on hop-bound graphs but re-runs the full-edge aggregation
+        # per extra hop, a real-volume loss on chain graphs (numbers in
+        # BASELINE.md r7 / OPTIMIZATION_r09.md).  All per-round plan copies
+        # read the same post-barrier parquet relation, so planning cost
+        # stays constant per round (no iterative lineage growth).
+        prev_sum = None
+        for rnd in range(max_iter):
+            # Adaptive hop count: a graph still unconverged after 3 rounds
+            # is hop-bound (min-label diffusion through successive basins —
+            # the near-dup blob shape), where a SECOND edge hop per barrier
+            # round halves the remaining rounds (q59 graph: 10 -> 7
+            # measured).  Jump-bound graphs (chains) converge within 3
+            # rounds and never pay the extra full-edge join.  Any hop mix
+            # converges to the same min-reachable labels.
+            m = labels
+            for _ in range(1 if rnd < 3 else 2):
+                nbr = (edges.join(m.select(F.col("id").alias("src"), "label"),
+                                  "src")
+                       .select(F.col("dst").alias("id"),
+                               F.col("label").alias("_c")))
+                m = (m.select("id", F.col("label").alias("_c"))
+                     .unionByName(nbr)
+                     .groupBy("id").agg(F.min("_c").alias("label")))
+            for _ in range(3):
+                # every label value is a real node id (min over reachable
+                # ids) and the map covers every node, so the join is total
+                m = (m.alias("x")
+                     .join(m.select(F.col("id").alias("_yid"),
+                                    F.col("label").alias("_ylabel")),
+                           F.col("x.label") == F.col("_yid"))
+                     .select(F.col("x.id").alias("id"),
+                             F.col("_ylabel").alias("label")))
+            obs = Observation()
+            labels = materialize(
+                m.observe(obs, F.count(F.lit(1)).alias("n"),
+                          F.sum(F.col("label").cast("decimal(38,0)"))
+                          .alias("s")),
+                f"labels_{rnd}", root)
+            metrics = obs.get
+            if rnd > 0:
+                delete(spark, f"{root}/labels_{rnd - 1}")
+            if metrics["n"] == 0 or (prev_sum is not None
+                                     and metrics["s"] == prev_sum):
+                delete(spark, f"{root}/edges")
+                # the result reads `root` lazily: an owned dir outlives
+                # this call and is removed at process exit
+                atexit.register(owned.pop_all().close)
+                return labels.select("id",
+                                     F.col("label").alias("component"))
+            prev_sum = metrics["s"]
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds")
 
@@ -799,7 +791,7 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
     # three references that would each re-run the explode + per-doc
     # dedup (+ DF-cap semi-join) subtree.  The materialized stream is
     # the same (id, shingle) volume the joins shuffle anyway
-    sh = sh.localCheckpoint(eager=False)
+    sh = materialize(sh, "shingles")
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.alias("a")
     b = sh.alias("b")

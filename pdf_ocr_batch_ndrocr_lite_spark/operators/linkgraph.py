@@ -33,7 +33,7 @@ Scale design
   fixed point directly on the host strings; `with_host_rank` joins the
   rank table back onto documents (the keep-list / weighting signal a
   curation cascade consumes).  ALWAYS materialize between
-  resolve_links → host_edges → pagerank (localCheckpoint or parquet):
+  resolve_links → host_edges → pagerank (`barrier.materialize`):
   the resolver + double PSL cascade exceeds the 64KB codegen method
   budget and would inline into every pagerank round (BASELINE.md r8).
   `plans.webgraph.run_webgraph` is the composed job; `jobs.py
@@ -44,6 +44,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .barrier import materialize
 
 _HREF_RE = r'href="(https?://[^"]+)"'
 
@@ -378,7 +380,6 @@ def pagerank(edges: DataFrame, num_nodes: int | None = None,
     if not (0 < damping_num < damping_den):
         raise ValueError("pagerank: need 0 < damping_num < damping_den")
 
-    spark = edges.sparkSession
     def _key(c):
         # key_type=None runs the fixed point over the column's own type
         # (e.g. registrable-domain strings from `host_edges`): the
@@ -391,25 +392,10 @@ def pagerank(edges: DataFrame, num_nodes: int | None = None,
              .unionByName(e.select(F.col("dst").alias("id")))
              .distinct())
 
-    def _barrier(df: DataFrame, name: str) -> DataFrame:
-        if scratch_dir is None:
-            return df
-        df.write.mode("overwrite").parquet(f"{scratch_dir}/{name}")
-        return spark.read.parquet(f"{scratch_dir}/{name}")
-
-    def _static(df: DataFrame, name: str) -> DataFrame:
-        """Materialize a loop-invariant relation.  Every round's plan
-        references nodes/cedges, and without a cut the caller's whole
-        edge-derivation subtree (explode/distinct/PSL cascades) inlines
-        into — and re-executes inside — each reference: the fixed-graph
-        bench pick spent over half its time re-deriving the edge list
-        (measured r9, OPTIMIZATION_r09.md).  With scratch_dir the cut is
-        the durable parquet barrier; otherwise a lazy localCheckpoint
-        (executor-local, memory+disk — the same device the q90/q71
-        composition seams use)."""
-        if scratch_dir is not None:
-            return _barrier(df, name)
-        return df.localCheckpoint(eager=False)
+    # Loop-invariant relations (nodes, cedges, dang_src) are cut once:
+    # every round references them, and uncut, the caller's whole
+    # edge-derivation subtree re-executes inside each reference (over
+    # half the fixed-graph bench pick's time, OPTIMIZATION_r09.md).
 
     if seeds is not None:
         scol = F.col(seeds.columns[0])
@@ -428,16 +414,16 @@ def pagerank(edges: DataFrame, num_nodes: int | None = None,
         # one flag column computed once; the teleport set is a curated
         # trust list (small), but the join strategy is left to the
         # optimizer rather than forcing a broadcast of an unbounded frame
-        nodes = _static(
+        nodes = materialize(
             nodes.join(seed_ids.withColumn("_t", F.lit(True)), "id",
                        "left")
             .select("id", F.coalesce(F.col("_t"), F.lit(False))
                     .alias("_teleports")),
-            "nodes")
+            "nodes", scratch_dir)
         n_tel = num_seeds
     else:
-        nodes = _static(nodes.withColumn("_teleports", F.lit(True)),
-                        "nodes")
+        nodes = materialize(nodes.withColumn("_teleports", F.lit(True)),
+                            "nodes", scratch_dir)
         if num_nodes is None:
             num_nodes = nodes.count()
         if num_nodes < 1:
@@ -448,7 +434,7 @@ def pagerank(edges: DataFrame, num_nodes: int | None = None,
         n_tel = num_nodes
 
     outdeg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
-    cedges = _static(e.join(outdeg, "src"), "cedges")
+    cedges = materialize(e.join(outdeg, "src"), "cedges", scratch_dir)
     base_val = ((scale * (damping_den - damping_num)) // damping_den) \
         // n_tel
     base = F.when(F.col("_teleports"), F.lit(base_val)).otherwise(F.lit(0))
@@ -460,8 +446,8 @@ def pagerank(edges: DataFrame, num_nodes: int | None = None,
     if redistribute_dangling:
         # node-bounded (distinct srcs); referenced once per round by the
         # dangling sum — cut it like the other loop-invariant relations
-        dang_src = _static(outdeg.select(F.col("src").alias("id")),
-                           "dang_src")
+        dang_src = materialize(outdeg.select(F.col("src").alias("id")),
+                               "dang_src", scratch_dir)
     for rnd in range(iterations):
         contrib = (cedges.join(ranks.withColumnRenamed("id", "src"),
                                "src")
@@ -479,11 +465,11 @@ def pagerank(edges: DataFrame, num_nodes: int | None = None,
                            f"then _D div {n_tel} else 0 end)")
         else:
             shipped_sql = "coalesce(_m, 0)"
-        ranks = _barrier(
-            joined.select(
-                "id",
-                (base
-                 + F.expr(f"({damping_num} * ({shipped_sql})) "
-                          f"div {damping_den}")).alias("rank")),
-            f"ranks_{rnd}")
+        ranks = joined.select(
+            "id",
+            (base
+             + F.expr(f"({damping_num} * ({shipped_sql})) "
+                      f"div {damping_den}")).alias("rank"))
+        if scratch_dir is not None:
+            ranks = materialize(ranks, f"ranks_{rnd}", scratch_dir)
     return ranks

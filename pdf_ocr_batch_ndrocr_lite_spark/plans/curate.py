@@ -26,7 +26,7 @@ count is an action, and the final write is another — without a barrier,
 stage N's count re-executes stages 1..N and the write re-executes the
 whole cascade again, so the verdict projection and the LSH candidate
 stages run up to 4× per job.  Passing `scratch_dir` materializes every
-stage boundary through the same parquet round-trip barrier
+stage boundary with `barrier.materialize`, the same parquet round-trip
 `connected_components` uses for its iteration loop: each stage's lineage
 executes exactly once, the stage counts read the materialized output, and
 the final frame is a plain parquet scan.  Pass shared storage (HDFS/S3)
@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from ..operators import curation as cu
 from ..operators import dedup as dd
 from ..operators import mixing as mx
+from ..operators.barrier import materialize
 
 
 def run_curation(docs: DataFrame,
@@ -81,24 +82,16 @@ def run_curation(docs: DataFrame,
     pass through the pre-pass untouched (rebuilt text left-joins back
     onto the corpus), so they still receive an explicit verdict instead
     of silently vanishing before the first stage."""
-    spark = docs.sparkSession
-
-    def _barrier(df: DataFrame, name: str) -> DataFrame:
-        if scratch_dir is None:
-            return df
-        path = f"{scratch_dir}/{name}"
-        df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
-
     counts = {"input": docs.count()}
 
     if boilerplate_max_df is not None:
-        rewritten = _barrier(
-            dd.remove_boilerplate_lines(
-                docs, id_col=id_col, text_col=text_col,
-                max_doc_freq=boilerplate_max_df,
-                min_chars=boilerplate_min_chars),
-            "stage0_boilerplate")
+        rewritten = dd.remove_boilerplate_lines(
+            docs, id_col=id_col, text_col=text_col,
+            max_doc_freq=boilerplate_max_df,
+            min_chars=boilerplate_min_chars)
+        if scratch_dir is not None:
+            rewritten = materialize(rewritten, "stage0_boilerplate",
+                                    scratch_dir)
         # left join + coalesce: docs with NULL text produce no line rows
         # in the rebuild — they must survive the pre-pass (text unchanged)
         # rather than being inner-joined out of the corpus
@@ -114,38 +107,36 @@ def run_curation(docs: DataFrame,
         docs, id_col=id_col, text_col=text_col,
         min_quality=min_quality, max_top_gram_frac=max_top_gram_frac,
         require_lang=require_lang)
-    kept = _barrier(
-        docs.join(verdict.filter(F.col("keep")).select(id_col),
-                  id_col, "left_semi"),
-        "stage1_verdict")
-    counts["after_verdict"] = kept.count()
-
+    # (barrier name, counts key, stage) in cascade order
+    stages = [("stage1_verdict", "after_verdict",
+               lambda d: d.join(verdict.filter(F.col("keep"))
+                                .select(id_col), id_col, "left_semi"))]
     if near_dup:
         cc_scratch = (f"{scratch_dir}/stage2_cc"
                       if scratch_dir is not None else None)
-        kept = _barrier(
-            dd.minhash_dedup(
-                kept, id_col=id_col, text_col=text_col,
-                jaccard_threshold=jaccard_threshold, max_df=max_df,
-                transitive=transitive_dedup, scratch_dir=cc_scratch),
-            "stage2_near_dup")
-        counts["after_near_dup"] = kept.count()
-
+        stages.append(("stage2_near_dup", "after_near_dup",
+                       lambda d: dd.minhash_dedup(
+                           d, id_col=id_col, text_col=text_col,
+                           jaccard_threshold=jaccard_threshold,
+                           max_df=max_df, transitive=transitive_dedup,
+                           scratch_dir=cc_scratch)))
     if bench is not None:
-        kept = _barrier(
-            mx.benchmark_decontaminate(
-                kept, bench, id_col=id_col, text_col=text_col,
-                min_overlap=min_overlap),
-            "stage3_decontam")
-        counts["after_decontam"] = kept.count()
-
+        stages.append(("stage3_decontam", "after_decontam",
+                       lambda d: mx.benchmark_decontaminate(
+                           d, bench, id_col=id_col, text_col=text_col,
+                           min_overlap=min_overlap)))
     if mix_rates is not None:
-        kept = _barrier(
-            mx.stratified_sample(
-                kept, mix_rates, stratum_col=stratum_col, id_col=id_col,
-                default_rate=default_rate),
-            "stage4_mixing")
-        counts["after_mixing"] = kept.count()
+        stages.append(("stage4_mixing", "after_mixing",
+                       lambda d: mx.stratified_sample(
+                           d, mix_rates, stratum_col=stratum_col,
+                           id_col=id_col, default_rate=default_rate)))
+
+    kept = docs
+    for name, key, stage in stages:
+        kept = stage(kept)
+        if scratch_dir is not None:
+            kept = materialize(kept, name, scratch_dir)
+        counts[key] = kept.count()
 
     counts["kept"] = list(counts.values())[-1]
     return kept, counts

@@ -7,10 +7,8 @@ Barrier discipline (BASELINE.md r8): the RFC-3986 resolver plus the
 DOUBLE full-PSL cascade exceeds the 64KB whole-stage-codegen method
 budget, and pagerank would additionally inline that tree into
 nodes/outdeg/cedges and every rank round — so each stage materializes
-before the next consumes it.  ``scratch_dir`` uses parquet (required on
-a real cluster: executors must be able to re-read it); on local masters
-the caller may omit it and executor-local ``localCheckpoint`` is used
-instead.
+before the next consumes it (``barrier.materialize``: durable parquet
+under ``scratch_dir``, required on a real cluster; else executor-local).
 
 Scale shape: every stage is partition-parallel (projection / combining
 agg / keyed join); the only driver-side state is pagerank's scalar node
@@ -29,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators import linkgraph as lg
+from ..operators.barrier import materialize
 
 
 def run_webgraph(pages: DataFrame, html_col: str = "html",
@@ -48,22 +47,17 @@ def run_webgraph(pages: DataFrame, html_col: str = "html",
     spark = pages.sparkSession
     counts: dict = {}
 
-    def _barrier(df: DataFrame, name: str) -> DataFrame:
-        if scratch_dir is None:
-            return df.localCheckpoint(eager=False)
-        df.write.mode("overwrite").parquet(f"{scratch_dir}/{name}")
-        return spark.read.parquet(f"{scratch_dir}/{name}")
-
     html = F.col(html_col)
     if isinstance(pages.schema[html_col].dataType, T.BinaryType):
         html = html.cast("string")
     src = pages.select(F.col(url_col).alias("url"),
                        html.alias("html"))
 
-    links = _barrier(lg.resolve_links(src), "links")
+    links = materialize(lg.resolve_links(src), "links", scratch_dir)
     counts["links"] = links.count()
-    edges = _barrier(
-        lg.host_edges(links, psl=psl, drop_self=drop_self), "edges")
+    edges = materialize(
+        lg.host_edges(links, psl=psl, drop_self=drop_self), "edges",
+        scratch_dir)
     counts["host_edges"] = edges.count()
     if counts["host_edges"] == 0:
         # a corpus with no (inter-host) anchors has no graph to rank —

@@ -449,12 +449,6 @@ def make_row(seed: int, index: int) -> Dict[str, Any]:
     }
 
 
-def corpus_pandas(n_docs: int, seed: int = 42, start: int = 0) -> pd.DataFrame:
-    """Local generation for unit tests and golden computation."""
-    rows = [make_row(seed, i) for i in range(start, start + n_docs)]
-    return pd.DataFrame(rows, columns=["url", "warc_ts", "html", "text", "lang"])
-
-
 def corpus_df(spark, n_docs: int, seed: int = 42, partitions: int = 0):
     """Distributed generation: spark.range → mapInPandas.
 

@@ -42,6 +42,7 @@ from pyspark.sql import types as T
 from pyspark.sql.utils import AnalysisException
 
 from ..operators import dedup as dd
+from ..operators.barrier import materialize
 
 
 def _is_error_class(e: AnalysisException, name: str) -> bool:
@@ -126,7 +127,7 @@ def dedup_batch_against_corpus(batch_df: DataFrame, corpus: DataFrame,
         # iterative self-join planning note in BASELINE.md).  A
         # micro-batch is size-bounded by the trigger, so executor-local
         # materialization is cheap.
-        new = new.localCheckpoint(eager=False)
+        new = materialize(new, "within_batch")
     return dd.incremental_minhash_dedup(
         new, corpus, id_col, text_col,
         corpus_buckets=corpus_buckets,

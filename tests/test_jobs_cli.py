@@ -43,12 +43,13 @@ def test_stage_scratch_owns_only_its_own_temp_dir(tmp_path):
     """One scratch-ownership rule for --curate and --webgraph: on a local
     master the job makes a temp dir and removes it even when the body
     raises; a caller's --curate-scratch is never deleted; a non-local
-    master without one gets no barrier."""
+    master without one is refused before the job runs."""
     import os
 
     import pytest
 
-    from pdf_ocr_batch_ndrocr_lite_spark.jobs import stage_scratch
+    from pdf_ocr_batch_ndrocr_lite_spark.operators.barrier import \
+        stage_scratch
 
     local = _stub_session("local[2]")
     made = []
@@ -71,6 +72,7 @@ def test_stage_scratch_owns_only_its_own_temp_dir(tmp_path):
                 raise RuntimeError("job failed")
         assert (given / "stage0").read_text() == "kept"
 
-    with stage_scratch(_stub_session("yarn"), None,
-                       "spark_graft_test_") as scratch:
-        assert scratch is None
+    with pytest.raises(ValueError):
+        with stage_scratch(_stub_session("yarn"), None,
+                           "spark_graft_test_"):
+            pass
