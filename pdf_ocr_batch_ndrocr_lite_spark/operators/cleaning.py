@@ -26,34 +26,32 @@ _IPV4_RE = r"\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\b"
 _PHONE_RE = r"\(?[0-9]{3}\)?[-.\s][0-9]{3}[-.\s][0-9]{4}"
 
 
-def clean_text_col(text_col: str = "text"):
+def clean_text_col():
     """Cleaned text as a column expression: control characters stripped,
     space/tab runs collapsed to one space, 3+ newline runs collapsed to
     a paragraph break, ends trimmed."""
-    c = F.regexp_replace(F.col(text_col), _CTRL_RE, "")
+    c = F.regexp_replace(F.col("text"), _CTRL_RE, "")
     c = F.regexp_replace(c, r"[ \t]+", " ")
     c = F.regexp_replace(c, r"\n{3,}", "\n\n")
     return F.trim(c)
 
 
-def clean_text(docs: DataFrame, id_col: str = "doc_id",
-               text_col: str = "text") -> DataFrame:
+def clean_text(docs: DataFrame) -> DataFrame:
     """(id, text, n_chars_removed): hygiene pass + how much it removed
     (the count is the corpus-health metric a pipeline monitors)."""
-    cleaned = clean_text_col(text_col)
+    cleaned = clean_text_col()
     return docs.select(
-        F.col(id_col), cleaned.alias("text"),
-        (F.length(F.col(text_col)) - F.length(cleaned))
+        F.col("doc_id"), cleaned.alias("text"),
+        (F.length(F.col("text")) - F.length(cleaned))
         .cast("bigint").alias("n_chars_removed"))
 
 
-def pii_scrub(docs: DataFrame, id_col: str = "doc_id",
-              text_col: str = "text") -> DataFrame:
+def pii_scrub(docs: DataFrame) -> DataFrame:
     """(id, text, n_emails, n_ips, n_phones): emails / IPv4 addresses /
     US-style phone numbers replaced with typed placeholder tokens, plus
     per-doc match counts.  The counts are computed on the ORIGINAL text
     in the same projection (no second pass, no shuffle)."""
-    t = F.col(text_col)
+    t = F.col("text")
     scrubbed = F.regexp_replace(t, _EMAIL_RE, "<EMAIL>")
     scrubbed = F.regexp_replace(scrubbed, _IPV4_RE, "<IP>")
     scrubbed = F.regexp_replace(scrubbed, _PHONE_RE, "<PHONE>")
@@ -61,7 +59,7 @@ def pii_scrub(docs: DataFrame, id_col: str = "doc_id",
         return F.size(F.regexp_extract_all(t, F.lit(pat), F.lit(0))) \
             .cast("bigint")
     return docs.select(
-        F.col(id_col), scrubbed.alias("text"),
+        F.col("doc_id"), scrubbed.alias("text"),
         _n(_EMAIL_RE).alias("n_emails"),
         _n(_IPV4_RE).alias("n_ips"),
         _n(_PHONE_RE).alias("n_phones"))

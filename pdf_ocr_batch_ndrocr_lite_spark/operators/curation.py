@@ -218,8 +218,8 @@ def with_registrable_domain(df: DataFrame, url_col: str = "url",
               *[f"_psl_l{k}" for k in range(1, _MAX_PS + 2)])
 
 
-def per_domain_cap(docs: DataFrame, url_col: str = "url", cap: int = 3,
-                   order_col: str = "url", psl: bool = False) -> DataFrame:
+def per_domain_cap(docs: DataFrame, cap: int = 3, order_col: str = "url",
+                   psl: bool = False) -> DataFrame:
     """Keep at most `cap` documents per domain (deterministic order).
 
     ``psl=True`` caps per REGISTRABLE domain (PSL-aware eTLD+1, full
@@ -242,10 +242,9 @@ def per_domain_cap(docs: DataFrame, url_col: str = "url", cap: int = 3,
     order key for fully deterministic output (the oracle queries use
     doc_id)."""
     if psl:
-        with_dom = with_registrable_domain(docs, url_col, "domain")
+        with_dom = with_registrable_domain(docs)
     else:
-        with_dom = docs.withColumn(
-            "domain", extract_domain(F.col(url_col)))
+        with_dom = docs.withColumn("domain", extract_domain(F.col("url")))
     w_local = Window.partitionBy("_pid", "domain").orderBy(order_col)
     w = Window.partitionBy("domain").orderBy(order_col)
     return (
@@ -272,17 +271,13 @@ def per_domain_cap(docs: DataFrame, url_col: str = "url", cap: int = 3,
 # ---------------------------------------------------------------------------
 
 
-def curation_verdict(docs: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text",
-                     min_quality: float = 0.45,
-                     max_top_gram_frac: float = 0.10,
-                     k: int = 2,
+def curation_verdict(docs: DataFrame, min_quality: float = 0.45,
                      require_lang: bool = True) -> DataFrame:
     """(id, keep, reason) per document.  Reason priority mirrors pipeline
     order: 'exact_dup' (not the first-seen copy of its text digest) >
     'lang' (language ID failed) > 'quality' (composite score below
-    threshold) > 'repetition' (most-frequent k-gram share above
-    threshold) > 'kept'.
+    threshold) > 'repetition' (most-frequent word-bigram share above
+    0.10) > 'kept'.
 
     ``require_lang=False`` disables the lang kill (corpora curated
     without language filtering — e.g. code or multilingual crawls the
@@ -293,14 +288,14 @@ def curation_verdict(docs: DataFrame, id_col: str = "doc_id",
     # expressions are never CSE'd (SPARK-35410), and the fraction
     # references it twice (run fold + size)
     staged = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         # sentinel for NULL texts (md5 output is hex, '' unreachable):
         # the winner agg below joins back on the digest, and an equality
         # join on a NULL key would drop NULL-text rows from the verdict
-        F.coalesce(F.md5(F.col(text_col)), F.lit("")).alias("_md5"),
-        ts.lang_pred_col(text_col).alias("lang_pred"),
-        ts.quality_col(text_col).alias("quality"),
-        ts.sorted_grams_col(text_col, k).alias("_g"),
+        F.coalesce(F.md5(F.col("text")), F.lit("")).alias("_md5"),
+        ts.lang_pred_col().alias("lang_pred"),
+        ts.quality_col().alias("quality"),
+        ts.sorted_grams_col("text", 2).alias("_g"),
     )
     # coalesce: a doc with no grams (NULL text → NULL fraction) must fall
     # through to 'kept' DETERMINISTICALLY, not via three-valued-logic
@@ -308,7 +303,7 @@ def curation_verdict(docs: DataFrame, id_col: str = "doc_id",
     # coalesce makes the intent explicit and keeps the SQL oracle's
     # LEFT JOIN + COALESCE formulation bitwise-aligned)
     sig = staged.select(
-        F.col(id_col), F.col("_md5"), F.col("lang_pred"), F.col("quality"),
+        F.col("doc_id"), F.col("_md5"), F.col("lang_pred"), F.col("quality"),
         F.coalesce(ts.top_gram_frac_col(F.col("_g")), F.lit(0.0))
         .alias("top_gram_frac"),
     )
@@ -317,30 +312,26 @@ def curation_verdict(docs: DataFrame, id_col: str = "doc_id",
     # would land in one un-splittable window partition; the hottest
     # digests are exactly the mass duplicates this gate exists to kill).
     # The agg is map-side combinable and the join-back is
-    # AQE-skew-splittable — same shape as dedup.exact_dedup/line_dedup.
-    winners = sig.groupBy("_md5").agg(F.min(F.col(id_col)).alias("_wid"))
+    # AQE-skew-splittable — same shape as dedup.line_dedup.
+    winners = sig.groupBy("_md5").agg(F.min(F.col("doc_id")).alias("_wid"))
     v = sig.join(winners, "_md5")
     lang_fails = (F.col("lang_pred") == "unknown") if require_lang \
         else F.lit(False)
     reason = (
-        F.when(F.col(id_col) != F.col("_wid"), F.lit("exact_dup"))
+        F.when(F.col("doc_id") != F.col("_wid"), F.lit("exact_dup"))
         .when(lang_fails, F.lit("lang"))
         .when(F.col("quality") < F.lit(float(min_quality)), F.lit("quality"))
-        .when(F.col("top_gram_frac") > F.lit(float(max_top_gram_frac)),
-              F.lit("repetition"))
+        .when(F.col("top_gram_frac") > F.lit(0.10), F.lit("repetition"))
         .otherwise(F.lit("kept"))
     )
     return v.select(
-        F.col(id_col),
+        F.col("doc_id"),
         (reason == F.lit("kept")).alias("keep"),
         reason.alias("reason"),
     )
 
 
-def quality_percentile_cut(docs: DataFrame, id_col: str = "doc_id",
-                           text_col: str = "text",
-                           stratum_col: str = "lang",
-                           q: float = 0.1) -> DataFrame:
+def quality_percentile_cut(docs: DataFrame, q: float = 0.1) -> DataFrame:
     """Per-stratum dynamic quality thresholding (the CCNet move: calibrate
     the cut per language instead of one global constant — a fixed 0.45
     that is right for English over-kills a stratum whose scores run low).
@@ -355,31 +346,29 @@ def quality_percentile_cut(docs: DataFrame, id_col: str = "doc_id",
     from . import textstats as ts
     from . import quantiles as qt
 
-    scored = docs.select(F.col(id_col), F.col(stratum_col),
-                         ts.quality_col(text_col).alias("quality"))
-    cut = (qt.exact_quantiles(scored, stratum_col, "quality", [q], id_col)
-           .select(F.col(stratum_col), F.col("value").alias("_cut")))
-    return (scored.join(F.broadcast(cut), stratum_col)
+    scored = docs.select(F.col("doc_id"), F.col("lang"),
+                         ts.quality_col().alias("quality"))
+    cut = (qt.exact_quantiles(scored, "lang", "quality", [q], "doc_id")
+           .select(F.col("lang"), F.col("value").alias("_cut")))
+    return (scored.join(F.broadcast(cut), "lang")
             .filter(F.col("quality") >= F.col("_cut"))
-            .select(id_col, stratum_col, "quality"))
+            .select("doc_id", "lang", "quality"))
 
 
-def url_dedup(docs: DataFrame, url_col: str = "url",
-              id_col: str = "doc_id") -> DataFrame:
+def url_dedup(docs: DataFrame) -> DataFrame:
     """One document per CANONICAL url, first-wins by lowest id — the
     first dedup stage of every crawl pipeline: recrawls, tracking-param
     variants, fragment links, and trailing-slash twins collapse before
     any content hashing runs (canonicalization is pure projection, the
     dedup key never ships the text).
 
-    Window-row_number over the canonical key, same shape as
-    dedup.exact_dedup: at lake scale the canonical-url key space is
-    high-cardinality and near-uniform (a url maps to a handful of
-    recrawls), so the window shuffle has no hot-key hazard — unlike
-    line-level dedup, where a combining agg was required because one
-    boilerplate line can cover a large corpus fraction.  Adds
+    Window-row_number over the canonical key: at lake scale the
+    canonical-url key space is high-cardinality and near-uniform (a url
+    maps to a handful of recrawls), so the window shuffle has no hot-key
+    hazard — unlike line-level dedup, where a combining agg was required
+    because one boilerplate line can cover a large corpus fraction.  Adds
     ``canon_url`` to the output."""
-    canon = canonicalize_url(F.col(url_col))
+    canon = canonicalize_url(F.col("url"))
     keyed = docs.withColumn("canon_url", canon)
     # NULL urls are NOT duplicates of one another: partitionBy groups
     # NULL keys together, which would silently collapse every NULL-url
@@ -393,10 +382,10 @@ def url_dedup(docs: DataFrame, url_col: str = "url",
     # contract is only "each NULL-keyed row is its own partition").
     key = F.coalesce(
         F.col("canon_url"),
-        F.concat(F.lit("\x00:"), F.col(id_col).cast("string")),
+        F.concat(F.lit("\x00:"), F.col("doc_id").cast("string")),
         F.concat(F.lit("\x00#"),
                  F.monotonically_increasing_id().cast("string")))
-    w = Window.partitionBy(key).orderBy(F.col(id_col))
+    w = Window.partitionBy(key).orderBy(F.col("doc_id"))
     return (keyed.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .drop("_rn"))
@@ -405,66 +394,41 @@ def url_dedup(docs: DataFrame, url_col: str = "url",
 #: rel=canonical declaration, BOTH attribute orders (href may precede
 #: rel); double-quoted href, rel value in any quoting.  Absolute
 #: http(s) targets only — a relative canonical needs base resolution
-#: (linkgraph.resolve_links machinery), out of scope here, documented.
+#: (linkgraph.resolve_links machinery), out of scope here.
 _CANONICAL_REL_FIRST = (r'<link\s[^>]*rel\s*=\s*["\']?canonical["\']?'
                         r'[^>]*href\s*=\s*"(https?://[^"]*)"')
 _CANONICAL_HREF_FIRST = (r'<link\s[^>]*href\s*=\s*"(https?://[^"]*)"'
                          r'[^>]*rel\s*=\s*["\']?canonical["\']?')
 
 
-def canonical_link(pages: DataFrame, html_col: str = "html",
-                   url_col: str = "url") -> DataFrame:
-    """(url, canonical): the page's declared ``rel=canonical`` target —
-    the crawl-dedup signal CDX/WARC pipelines collapse recrawls and
-    mirror urls by before any content hashing.  NULL when the page
-    declares none (absence is data).  First declaration wins; both
-    attribute orders match; absolute http(s) targets only (relative
-    canonicals are rare and need base resolution — callers that want
-    them resolve via linkgraph.resolve_links).  Pure projection, zero
-    shuffle; the two regex extracts are staged in ONE projection and
-    the when() reads the staged columns (no-CSE discipline)."""
-    staged = pages.select(
-        F.col(url_col).alias("url"),
-        F.regexp_extract(F.col(html_col), _CANONICAL_REL_FIRST, 1)
-        .alias("_c1"),
-        F.regexp_extract(F.col(html_col), _CANONICAL_HREF_FIRST, 1)
-        .alias("_c2"))
-    canonical = F.when(F.col("_c1") != "", F.col("_c1")) \
-        .when(F.col("_c2") != "", F.col("_c2")) \
-        .otherwise(F.lit(None).cast("string"))
-    return staged.select("url", canonical.alias("canonical"))
-
-
-def canonical_dedup(pages: DataFrame, html_col: str = "html",
-                    url_col: str = "url",
-                    id_col: str = "doc_id") -> DataFrame:
+def canonical_dedup(pages: DataFrame) -> DataFrame:
     """One page per CANONICAL IDENTITY, first-wins by lowest id: the
     identity is the page's declared rel=canonical target when present,
     else its own canonicalized url — so a mirror farm declaring one
     canonical collapses to a single survivor even when every mirror url
     canonicalizes differently.  Winner is the combining min-agg +
-    semi-join (dedup.exact_dedup shape): a viral page canonicalized by
-    millions of mirrors is exactly the hot key a window would sort in
-    one task.  Adds ``canon_key`` to the output."""
-    # the canonical extraction is staged INLINE on the pages frame (a
-    # canonical_link + join-back on url would scan the corpus twice —
-    # the shape this round's review removed from ivf_topk)
+    semi-join (the `curation_verdict` winner shape): a viral page
+    canonicalized by millions of mirrors is exactly the hot key a window
+    would sort in one task.  Adds ``canon_key`` to the output."""
+    # the canonical extraction is staged INLINE on the pages frame: a
+    # separate (url, canonical) frame joined back on url would scan the
+    # corpus twice
     staged = pages.select(
         *[F.col(c) for c in pages.columns],
-        F.regexp_extract(F.col(html_col), _CANONICAL_REL_FIRST, 1)
+        F.regexp_extract(F.col("html"), _CANONICAL_REL_FIRST, 1)
         .alias("_c1"),
-        F.regexp_extract(F.col(html_col), _CANONICAL_HREF_FIRST, 1)
+        F.regexp_extract(F.col("html"), _CANONICAL_HREF_FIRST, 1)
         .alias("_c2"))
     key = F.coalesce(
         F.when(F.col("_c1") != "", F.col("_c1"))
         .when(F.col("_c2") != "", F.col("_c2")),
-        canonicalize_url(F.col(url_col)),
-        F.concat(F.lit("\x00:"), F.col(id_col).cast("string")),
+        canonicalize_url(F.col("url")),
+        F.concat(F.lit("\x00:"), F.col("doc_id").cast("string")),
         F.concat(F.lit("\x00#"),
                  F.monotonically_increasing_id().cast("string")))
     keyed = staged.withColumn("canon_key", key).drop("_c1", "_c2")
     winners = keyed.groupBy("canon_key").agg(
-        F.min(F.col(id_col)).alias("_wid"))
+        F.min(F.col("doc_id")).alias("_wid"))
     k, w = keyed.alias("k"), winners.alias("w")
     # null-SAFE id equality: a NULL-id row owns a unique sentinel key
     # whose min(id) aggregates to NULL — plain equality would evaluate
@@ -474,4 +438,4 @@ def canonical_dedup(pages: DataFrame, html_col: str = "html",
     # semantics we want.)
     return k.join(
         w, (F.col("k.canon_key") == F.col("w.canon_key"))
-        & (F.col(f"k.{id_col}").eqNullSafe(F.col("w._wid"))), "leftsemi")
+        & (F.col("k.doc_id").eqNullSafe(F.col("w._wid"))), "leftsemi")

@@ -10,9 +10,7 @@ from __future__ import annotations
 import atexit
 import contextlib
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .barrier import delete, materialize, stage_scratch
@@ -24,46 +22,15 @@ from .barrier import delete, materialize, stage_scratch
 # ---------------------------------------------------------------------------
 
 
-def exact_duplicates(docs: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
+def exact_duplicates(docs: DataFrame) -> DataFrame:
     """Groups of byte-identical documents: (text_md5, dup_count, keep_id)."""
     return (
-        docs.select(F.col(id_col), F.md5(F.col(text_col)).alias("text_md5"))
+        docs.select(F.col("doc_id"), F.md5(F.col("text")).alias("text_md5"))
         .groupBy("text_md5")
         .agg(F.count(F.lit(1)).alias("dup_count"),
-             F.min(id_col).alias("keep_id"))
+             F.min("doc_id").alias("keep_id"))
         .filter(F.col("dup_count") > 1)
     )
-
-
-def exact_dedup(docs: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
-    """First-wins exact dedup: keep the lowest id per digest (the reference's
-    first-occurrence-wins dedup semantics, app.py:1705-1725, lifted to
-    corpus scale).
-
-    Winner selection is a combining ``groupBy(digest).agg(min(id))`` +
-    digest-keyed semi-join back — NOT a row_number window.  A window
-    puts every copy of a duplicated text in ONE partition, window
-    partitions are never AQE-split, and the hottest digests are exactly
-    what dedup exists to find (empty extractions, template pages —
-    millions of copies at crawl scale), so one task would sort them
-    all.  The agg winner is map-side combinable (one candidate row per
-    digest reaches the shuffle per input partition) and the join-back
-    is AQE-skew-splittable; `line_dedup` uses the same shape for the
-    same reason.  NULL texts stay duplicates of EACH OTHER (matching
-    the window formulation this replaced) via an out-of-alphabet
-    sentinel digest — md5 output is hex, so '' is unreachable.
-    Assumes ids are unique and non-null (the corpus contract
-    everywhere else in this module)."""
-    digest = F.coalesce(F.md5(F.col(text_col)), F.lit(""))
-    keyed = docs.withColumn("_h", digest)
-    winners = keyed.groupBy("_h").agg(F.min(F.col(id_col)).alias("_wid"))
-    k, w = keyed.alias("k"), winners.alias("w")
-    return (k.join(w, (F.col("k._h") == F.col("w._h"))
-                   & (F.col(f"k.{id_col}") == F.col("w._wid")),
-                   "leftsemi")
-            .drop("_h"))
 
 
 # ---------------------------------------------------------------------------
@@ -197,28 +164,27 @@ def salted_two_sided_join(a: DataFrame, b: DataFrame, key_cols: list,
 # ---------------------------------------------------------------------------
 
 
-def minhash_signatures(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text", num_hashes: int = 8,
+def minhash_signatures(docs: DataFrame, num_hashes: int = 8,
                        k: int = 3) -> DataFrame:
-    """(id, h0..h{n-1}) min-hash signature columns."""
+    """(doc_id, h0..h{n-1}) min-hash signature columns."""
     sh = docs.select(
-        F.col(id_col),
-        F.explode(shingles_col(text_col, k)).alias("shingle"),
-    ).dropDuplicates([id_col, "shingle"])
+        F.col("doc_id"),
+        F.explode(shingles_col("text", k)).alias("shingle"),
+    ).dropDuplicates(["doc_id", "shingle"])
     aggs = [
         F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("shingle"))))
         .alias(f"h{i}")
         for i in range(num_hashes)
     ]
-    return sh.groupBy(id_col).agg(*aggs)
+    return sh.groupBy("doc_id").agg(*aggs)
 
 
-def _band_buckets(docs: DataFrame, id_col: str, text_col: str,
-                  num_hashes: int, bands: int, k: int) -> DataFrame:
-    """(id, band, key): one row per (doc, band) with the band's
+def _band_buckets(docs: DataFrame, num_hashes: int, bands: int,
+                  k: int) -> DataFrame:
+    """(doc_id, band, key): one row per (doc, band) with the band's
     concatenated signature slice as the bucket key."""
     rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(docs, id_col, text_col, num_hashes, k)
+    sigs = minhash_signatures(docs, num_hashes, k)
     band_cols = [
         F.struct(
             F.lit(b).alias("band"),
@@ -228,14 +194,13 @@ def _band_buckets(docs: DataFrame, id_col: str, text_col: str,
         for b in range(bands)
     ]
     return sigs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(F.array(*band_cols)).alias("bk"),
-    ).select(id_col, F.col("bk.band").alias("band"),
+    ).select("doc_id", F.col("bk.band").alias("band"),
              F.col("bk.key").alias("key"))
 
 
-def minhash_lsh_candidates(docs: DataFrame, id_col: str = "doc_id",
-                           text_col: str = "text", num_hashes: int = 8,
+def minhash_lsh_candidates(docs: DataFrame, num_hashes: int = 8,
                            bands: int = 4, k: int = 3,
                            bucket_cap: int = 1024,
                            max_salts: int = 64) -> DataFrame:
@@ -246,18 +211,17 @@ def minhash_lsh_candidates(docs: DataFrame, id_col: str = "doc_id",
     signature — 100k docs in one bucket = 10^10 pairs in one task without
     the guard) is salt-split into bounded cells.  Results are invariant to
     the cap (the trailing ``distinct`` already dedups across bands)."""
-    buckets = _band_buckets(docs, id_col, text_col, num_hashes, bands, k)
+    buckets = _band_buckets(docs, num_hashes, bands, k)
     return (
-        salted_self_join(buckets, ["band", "key"], id_col,
+        salted_self_join(buckets, ["band", "key"], "doc_id",
                          bucket_cap, max_salts)
-        .select(F.col(f"a.{id_col}").alias("a_id"),
-                F.col(f"b.{id_col}").alias("b_id"))
+        .select(F.col("a.doc_id").alias("a_id"),
+                F.col("b.doc_id").alias("b_id"))
         .distinct()
     )
 
 
-def minhash_dedup(docs: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text", num_hashes: int = 8,
+def minhash_dedup(docs: DataFrame, num_hashes: int = 8,
                   bands: int = 4, k: int = 3,
                   jaccard_threshold: float = 0.8,
                   max_df: int | None = None,
@@ -287,24 +251,24 @@ def minhash_dedup(docs: DataFrame, id_col: str = "doc_id",
     # LSH candidate volume (the same frame the streaming sink persists),
     # so executor-local materialization is cheap at any scale.
     candidates = materialize(
-        minhash_lsh_candidates(docs, id_col, text_col, num_hashes, bands,
-                               k), "candidates")
-    cand_ids = (candidates.select(F.col("a_id").alias(id_col))
-                .union(candidates.select(F.col("b_id").alias(id_col)))
+        minhash_lsh_candidates(docs, num_hashes, bands, k), "candidates")
+    cand_ids = (candidates.select(F.col("a_id").alias("doc_id"))
+                .union(candidates.select(F.col("b_id").alias("doc_id")))
                 .distinct())
-    cand_docs = docs.join(cand_ids, id_col, "left_semi")
+    cand_docs = docs.join(cand_ids, "doc_id", "left_semi")
     # verify ONLY candidate pairs (classic LSH): jaccard computed over the
     # candidate-doc subset, then semi-joined back to the candidate pairs
-    verified = ngram_jaccard_pairs(cand_docs, id_col, text_col, k,
-                                   jaccard_threshold, max_df=max_df) \
+    verified = ngram_jaccard_pairs(cand_docs, k=k,
+                                   threshold=jaccard_threshold,
+                                   max_df=max_df) \
         .join(candidates, ["a_id", "b_id"], "left_semi")
     if transitive:
-        ranked = docs.withColumn("_cdo", F.length(F.col(text_col)))
+        ranked = docs.withColumn("_cdo", F.length(F.col("text")))
         return cluster_dedup_keep_best(
-            ranked, verified.select("a_id", "b_id"), id_col=id_col,
-            order_col="_cdo", scratch_dir=scratch_dir).drop("_cdo")
-    losers = verified.select(F.col("b_id").alias(id_col)).distinct()
-    return docs.join(losers, id_col, "left_anti")
+            ranked, verified.select("a_id", "b_id"), order_col="_cdo",
+            scratch_dir=scratch_dir).drop("_cdo")
+    losers = verified.select(F.col("b_id").alias("doc_id")).distinct()
+    return docs.join(losers, "doc_id", "left_anti")
 
 
 # ---------------------------------------------------------------------------
@@ -312,42 +276,25 @@ def minhash_dedup(docs: DataFrame, id_col: str = "doc_id",
 # corpus.  The defining scale property: the candidate join is strictly
 # NEW × CORPUS — the corpus is never self-joined (it was deduped when it
 # was ingested), so each snapshot pays O(|new| + matched corpus buckets),
-# not O(|corpus|²).  Exact: one anti-join on the text digest (the corpus
-# side is projected to digests before the exchange).  Near-dup: band
-# buckets for both sides, new×corpus bucket join (two-sided salt guard),
-# Jaccard verify over the candidate-doc subset only.
+# not O(|corpus|²).  Band buckets for both sides, new×corpus bucket join
+# (two-sided salt guard), Jaccard verify over the candidate-doc subset
+# only.
 # ---------------------------------------------------------------------------
 
 
-def incremental_exact_dedup(new: DataFrame, corpus: DataFrame,
-                            id_col: str = "doc_id",
-                            text_col: str = "text") -> DataFrame:
-    """Rows of `new` whose exact text does not already exist in `corpus`
-    (plus first-wins dedup WITHIN the batch — a batch can carry its own
-    repeats)."""
-    seen = corpus.select(F.md5(F.col(text_col)).alias("_h")).distinct()
-    deduped = exact_dedup(new, id_col, text_col)
-    return (deduped.withColumn("_h", F.md5(F.col(text_col)))
-            .join(seen, "_h", "left_anti")
-            .drop("_h"))
-
-
-def band_buckets(docs: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text", num_hashes: int = 8,
+def band_buckets(docs: DataFrame, num_hashes: int = 8,
                  bands: int = 4, k: int = 3) -> DataFrame:
-    """Public (id, band, key) LSH bucket index for a document frame —
+    """Public (doc_id, band, key) LSH bucket index for a document frame —
     the PERSISTABLE half of the minhash pipeline.  A continuous-ingest
     corpus stores this index incrementally (each admitted batch appends
     its survivors' buckets) so later batches join against stored keys
     instead of re-hashing the whole corpus per micro-batch — the
     signature recompute was measured to dominate streaming-dedup cost
     and GROW with corpus size (see streaming/dedup_stream.py)."""
-    return _band_buckets(docs, id_col, text_col, num_hashes, bands, k)
+    return _band_buckets(docs, num_hashes, bands, k)
 
 
 def incremental_minhash_dedup(new: DataFrame, corpus: DataFrame,
-                              id_col: str = "doc_id",
-                              text_col: str = "text",
                               num_hashes: int = 8, bands: int = 4,
                               k: int = 3,
                               jaccard_threshold: float = 0.8,
@@ -381,46 +328,44 @@ def incremental_minhash_dedup(new: DataFrame, corpus: DataFrame,
     full-corpus signature recompute (measured to dominate and grow
     linearly with corpus size).  Only candidate docs' TEXT is ever read
     from the corpus either way (the Jaccard verify's semi-join)."""
-    nb = _band_buckets(new, id_col, text_col, num_hashes, bands, k)
+    nb = _band_buckets(new, num_hashes, bands, k)
     cb = (corpus_buckets if corpus_buckets is not None
-          else _band_buckets(corpus, id_col, text_col, num_hashes,
-                             bands, k))
+          else _band_buckets(corpus, num_hashes, bands, k))
     # lineage cut, same reason as minhash_dedup's candidates: `cand` is
     # referenced three times below (both semi-joins + norm), each of
     # which would re-execute the two-sided bucket join subtree
     cand = materialize(
-        salted_two_sided_join(nb, cb, ["band", "key"], id_col,
+        salted_two_sided_join(nb, cb, ["band", "key"], "doc_id",
                               bucket_cap, max_salts)
-        .select(F.col(f"a.{id_col}").alias("new_id"),
-                F.col(f"b.{id_col}").alias("old_id"))
+        .select(F.col("a.doc_id").alias("new_id"),
+                F.col("b.doc_id").alias("old_id"))
         .distinct(), "candidates")
-    cand_new = new.join(cand.select(F.col("new_id").alias(id_col)),
-                        id_col, "left_semi")
-    cand_old = corpus.join(cand.select(F.col("old_id").alias(id_col)),
-                           id_col, "left_semi")
+    cand_new = new.join(cand.select(F.col("new_id").alias("doc_id")),
+                        "doc_id", "left_semi")
+    cand_old = corpus.join(cand.select(F.col("old_id").alias("doc_id")),
+                           "doc_id", "left_semi")
     # side-tagged verify ids: "C:" < "N:" lexically, so every new×corpus
     # pair lands in the a < b orientation with a = corpus, b = new
     cdocs = cand_new.select(
-        F.concat(F.lit("N:"), F.col(id_col).cast("string")).alias("_sid"),
-        F.col(text_col)).unionByName(cand_old.select(
-            F.concat(F.lit("C:"), F.col(id_col).cast("string"))
-            .alias("_sid"), F.col(text_col)))
+        F.concat(F.lit("N:"), F.col("doc_id").cast("string")).alias("_sid"),
+        F.col("text")).unionByName(cand_old.select(
+            F.concat(F.lit("C:"), F.col("doc_id").cast("string"))
+            .alias("_sid"), F.col("text")))
     norm = cand.select(
         F.concat(F.lit("C:"), F.col("old_id").cast("string")).alias("a_id"),
         F.concat(F.lit("N:"), F.col("new_id").cast("string")).alias("b_id"),
     ).distinct()
-    verified = ngram_jaccard_pairs(cdocs, "_sid", text_col, k,
+    verified = ngram_jaccard_pairs(cdocs, "_sid", k,
                                    jaccard_threshold, max_df=max_df) \
         .join(norm, ["a_id", "b_id"], "left_semi")
     losers = verified.select(
         F.expr("substring(b_id, 3)").alias("_lid")).distinct()
-    keyed = new.withColumn("_kid", F.col(id_col).cast("string"))
+    keyed = new.withColumn("_kid", F.col("doc_id").cast("string"))
     return (keyed.join(losers, keyed["_kid"] == losers["_lid"],
                        "left_anti").drop("_kid"))
 
 
-def shingle_document_frequency(docs: DataFrame, id_col: str = "doc_id",
-                               text_col: str = "text", k: int = 3,
+def shingle_document_frequency(docs: DataFrame, k: int = 3,
                                min_df: int = 2) -> DataFrame:
     """(shingle, df): how many DISTINCT documents each k-shingle appears
     in.  This is the corpus profile that calibrates the similarity-join
@@ -432,8 +377,7 @@ def shingle_document_frequency(docs: DataFrame, id_col: str = "doc_id",
     one explode + one combining groupBy; `min_df` prunes the singleton
     long tail before it is ever shuffled to the driver/sink."""
     sh = docs.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(shingles_col(text_col, k)))
+        F.explode(F.array_distinct(shingles_col("text", k)))
         .alias("shingle"))
     return (sh.groupBy("shingle")
             .agg(F.count(F.lit(1)).alias("df"))
@@ -477,13 +421,13 @@ def shingle_document_frequency(docs: DataFrame, id_col: str = "doc_id",
 # ---------------------------------------------------------------------------
 
 
-def connected_components(pairs: DataFrame, a_col: str = "a_id",
-                         b_col: str = "b_id", max_iter: int = 50,
+def connected_components(pairs: DataFrame, max_iter: int = 50,
                          scratch_dir: str | None = None) -> DataFrame:
-    """(id, component) for every node in `pairs`; component = the minimum
-    id reachable in the undirected pair graph.  Deterministic.  Raises
-    RuntimeError if not converged within `max_iter` rounds (graph
-    diameter pathologically large) rather than returning wrong labels.
+    """(id, component) for every node in the (a_id, b_id) `pairs`;
+    component = the minimum id reachable in the undirected pair graph.
+    Deterministic.  Raises RuntimeError if not converged within
+    `max_iter` rounds (graph diameter pathologically large) rather than
+    returning wrong labels.
 
     `scratch_dir`: durable scratch path for the per-round barriers (see
     module comment), under the `barrier.stage_scratch` rule: without one
@@ -504,13 +448,11 @@ def connected_components(pairs: DataFrame, a_col: str = "a_id",
         # references the caller's pair pipeline twice (q59's whole jaccard
         # verify executed two times into the barrier) — explode both
         # orientations from each row instead
-        a, b = (F.col(a_col).cast("bigint").alias("v"),
-                F.col(b_col).cast("bigint").alias("w"))
+        a, b = F.col("a_id").cast("bigint"), F.col("b_id").cast("bigint")
         edges = materialize(
             pairs.select(F.explode(F.array(
-                F.struct(a, b),
-                F.struct(F.col(b_col).cast("bigint").alias("v"),
-                         F.col(a_col).cast("bigint").alias("w")))).alias("_e"))
+                F.struct(a.alias("v"), b.alias("w")),
+                F.struct(b.alias("v"), a.alias("w")))).alias("_e"))
             .select(F.col("_e.v").alias("src"), F.col("_e.w").alias("dst"))
             .distinct(), "edges", root)
         labels = (edges.select(F.col("src").alias("id")).distinct()
@@ -592,7 +534,6 @@ def connected_components(pairs: DataFrame, a_col: str = "a_id",
 
 
 def cluster_dedup_keep_best(docs: DataFrame, pairs: DataFrame,
-                            id_col: str = "doc_id",
                             order_col: str = "n_chars",
                             scratch_dir: str | None = None) -> DataFrame:
     """One survivor per near-dup cluster: within each connected component
@@ -601,15 +542,15 @@ def cluster_dedup_keep_best(docs: DataFrame, pairs: DataFrame,
     untouched.  Returns the surviving rows of `docs`."""
     comp = connected_components(pairs, max_iter=50,
                                 scratch_dir=scratch_dir)
-    members = docs.join(comp.withColumnRenamed("id", id_col), id_col)
+    members = docs.join(comp.withColumnRenamed("id", "doc_id"), "doc_id")
     winners = (members.groupBy("component")
                .agg(F.min(F.struct(
                    (-F.col(order_col)).alias("o"),
-                   F.col(id_col).alias("i"))).alias("_w"))
-               .select(F.col("_w.i").alias(id_col)))
-    losers = (members.select(id_col)
-              .join(winners, id_col, "left_anti"))
-    return docs.join(losers, id_col, "left_anti")
+                   F.col("doc_id").alias("i"))).alias("_w"))
+               .select(F.col("_w.i").alias("doc_id")))
+    losers = (members.select("doc_id")
+              .join(winners, "doc_id", "left_anti"))
+    return docs.join(losers, "doc_id", "left_anti")
 
 
 # ---------------------------------------------------------------------------
@@ -631,24 +572,24 @@ def cluster_dedup_keep_best(docs: DataFrame, pairs: DataFrame,
 # ---------------------------------------------------------------------------
 
 
-def _doc_lines(docs: DataFrame, id_col: str, text_col: str, sep: str):
-    """(id, pos, line) — one row per line; NULL-text docs yield no rows
-    (posexplode of a NULL array), matching the SQL-oracle UNNEST."""
+def _doc_lines(docs: DataFrame):
+    """(doc_id, pos, line) — one row per line; NULL-text docs yield no
+    rows (posexplode of a NULL array), matching the SQL-oracle UNNEST."""
     return docs.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), sep)).alias("pos", "line"))
+        F.col("doc_id"),
+        F.posexplode(F.split(F.col("text"), "\n")).alias("pos", "line"))
 
 
-def _rebuild_docs(flagged: DataFrame, id_col: str, sep: str) -> DataFrame:
+def _rebuild_docs(flagged: DataFrame) -> DataFrame:
     """Reassemble (id, pos, line, _keep) into (id, text, kept_lines,
     dropped_lines).  collect_list skips the NULLs that `when` leaves for
     dropped lines, so one aggregation carries both the rebuild and the
     counts; array_sort on struct(pos, line) restores document order."""
     kept_struct = F.when(F.col("_keep"), F.struct("pos", "line"))
-    return flagged.groupBy(id_col).agg(
+    return flagged.groupBy("doc_id").agg(
         F.array_join(
             F.transform(F.array_sort(F.collect_list(kept_struct)),
-                        lambda s: s["line"]), sep).alias("text"),
+                        lambda s: s["line"]), "\n").alias("text"),
         F.sum(F.when(F.col("_keep"), 1).otherwise(0))
         .cast("bigint").alias("kept_lines"),
         F.sum(F.when(F.col("_keep"), 0).otherwise(1))
@@ -656,77 +597,62 @@ def _rebuild_docs(flagged: DataFrame, id_col: str, sep: str) -> DataFrame:
     )
 
 
-def line_dedup(docs: DataFrame, id_col: str = "doc_id",
-               text_col: str = "text", min_chars: int = 1,
-               sep: str = "\n") -> DataFrame:
-    """First-wins corpus-wide line dedup: every eligible line (length ≥
-    `min_chars`) keeps only its first occurrence in (id, pos) order;
-    later copies are dropped and documents rebuilt.  Returns
-    (id, text, kept_lines, dropped_lines).
-
-    `sep` is used both as the split regex and the rejoin string — plain
-    single-char separators only (a regex metachar separator would split
-    correctly but rejoin literally)."""
-    lines = _doc_lines(docs, id_col, text_col, sep)
+def line_dedup(docs: DataFrame, min_chars: int = 1) -> DataFrame:
+    """First-wins corpus-wide line dedup: every eligible newline-split
+    line (length ≥ `min_chars`) keeps only its first occurrence in
+    (doc_id, pos) order; later copies are dropped and documents rebuilt.
+    Returns (doc_id, text, kept_lines, dropped_lines)."""
+    lines = _doc_lines(docs)
     elig = F.length("line") >= min_chars
     keyed = lines.filter(elig).withColumn("_h", F.md5("line"))
     winners = keyed.groupBy("_h").agg(
-        F.min(F.struct(F.col(id_col), F.col("pos"))).alias("_w"))
+        F.min(F.struct(F.col("doc_id"), F.col("pos"))).alias("_w"))
     flagged = (keyed.join(winners, "_h")
                .withColumn("_keep",
-                           F.struct(F.col(id_col), F.col("pos"))
+                           F.struct(F.col("doc_id"), F.col("pos"))
                            == F.col("_w"))
-               .select(id_col, "pos", "line", "_keep")
+               .select("doc_id", "pos", "line", "_keep")
                .unionByName(lines.filter(~elig).select(
-                   id_col, "pos", "line", F.lit(True).alias("_keep"))))
-    return _rebuild_docs(flagged, id_col, sep)
+                   "doc_id", "pos", "line", F.lit(True).alias("_keep"))))
+    return _rebuild_docs(flagged)
 
 
-def line_doc_frequency(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text", min_chars: int = 1,
-                       min_df: int = 2, sep: str = "\n") -> DataFrame:
+def line_doc_frequency(docs: DataFrame, min_chars: int = 1,
+                       min_df: int = 2) -> DataFrame:
     """(line, df): how many DISTINCT documents contain each eligible
     line — the corpus profile that calibrates `remove_boilerplate_lines`.
     Per-doc dedup is row-local (array_distinct before the explode), same
     shape as `shingle_document_frequency`."""
     per_doc = docs.select(
-        F.explode(F.array_distinct(F.split(F.col(text_col), sep)))
+        F.explode(F.array_distinct(F.split(F.col("text"), "\n")))
         .alias("line")).filter(F.length("line") >= min_chars)
     return (per_doc.groupBy("line")
             .agg(F.count(F.lit(1)).alias("df"))
             .filter(F.col("df") >= min_df))
 
 
-def remove_boilerplate_lines(docs: DataFrame, id_col: str = "doc_id",
-                             text_col: str = "text",
-                             max_doc_freq: int = 3, min_chars: int = 1,
-                             sep: str = "\n",
-                             force_broadcast: bool = False) -> DataFrame:
+def remove_boilerplate_lines(docs: DataFrame, max_doc_freq: int = 3,
+                             min_chars: int = 1) -> DataFrame:
     """Drop ALL occurrences of eligible lines present in more than
     `max_doc_freq` distinct documents (nav menus, cookie banners, footer
     chrome — the lines `line_dedup` would keep once but a training corpus
-    wants gone entirely).  Returns (id, text, kept_lines, dropped_lines).
+    wants gone entirely).  Returns (doc_id, text, kept_lines,
+    dropped_lines).
 
     Join strategy: the hot-line set is df > max_doc_freq — with a low
     threshold on a web corpus that is a large fraction of ALL repeated
     lines (dates, "Home", cookie banners), easily billions of strings at
-    crawl scale, so it is NOT unconditionally broadcast.  The default
-    leaves the strategy to the optimizer: with AQE on, the join becomes a
-    broadcast join exactly when the hot set's runtime size is small, and
-    degrades to a shuffle join (the only correct plan for an unbounded
-    set) otherwise.  ``force_broadcast=True`` re-adds the hint for
-    callers that KNOW the set is bounded (high threshold, profiled
-    corpus); results are identical either way."""
-    hot = line_doc_frequency(docs, id_col, text_col, min_chars,
-                             max_doc_freq + 1, sep).select("line")
-    hot = hot.withColumn("_hot", F.lit(True))
-    if force_broadcast:
-        hot = F.broadcast(hot)
-    lines = _doc_lines(docs, id_col, text_col, sep)
+    crawl scale, so it is NOT broadcast.  The strategy is left to the
+    optimizer: with AQE on, the join becomes a broadcast join exactly
+    when the hot set's runtime size is small, and degrades to a shuffle
+    join (the only correct plan for an unbounded set) otherwise."""
+    hot = line_doc_frequency(docs, min_chars, max_doc_freq + 1) \
+        .select("line").withColumn("_hot", F.lit(True))
+    lines = _doc_lines(docs)
     flagged = (lines.join(hot, "line", "left")
                .withColumn("_keep", F.col("_hot").isNull())
-               .select(id_col, "pos", "line", "_keep"))
-    return _rebuild_docs(flagged, id_col, sep)
+               .select("doc_id", "pos", "line", "_keep"))
+    return _rebuild_docs(flagged)
 
 
 # ---------------------------------------------------------------------------
@@ -759,8 +685,7 @@ def salted_groupby_counts(df: DataFrame, key_col: str, value_col: str,
 # ---------------------------------------------------------------------------
 
 
-def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text", k: int = 3,
+def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id", k: int = 3,
                         threshold: float = 0.8,
                         max_df: int | None = None) -> DataFrame:
     """All pairs with shingle-set Jaccard ≥ threshold.
@@ -779,7 +704,7 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
     runs with it on.
     """
     sh = docs.select(
-        F.col(id_col), F.explode(shingles_col(text_col, k)).alias("shingle")
+        F.col(id_col), F.explode(shingles_col("text", k)).alias("shingle")
     ).dropDuplicates([id_col, "shingle"])
     if max_df is not None:
         keep = (sh.groupBy("shingle")
@@ -837,15 +762,14 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
 # ---------------------------------------------------------------------------
 
 
-def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-            bits: int = 60) -> DataFrame:
-    """(id, simhash bigint).  Majority vote per bit over word hashes."""
+def simhash(docs: DataFrame, bits: int = 60) -> DataFrame:
+    """(doc_id, simhash bigint).  Majority vote per bit over word hashes."""
     if not 1 <= bits <= 60:
         raise ValueError(
             f"bits must be in [1, 60] (md5-derived word hash is 60 bits "
             f"wide; higher positions would always be zero): got {bits}")
     words = docs.select(
-        F.col(id_col), F.explode(_words(text_col)).alias("word")
+        F.col("doc_id"), F.explode(_words("text")).alias("word")
     ).withColumn(
         "wh",
         F.conv(F.substring(F.md5("word"), 1, 15), 16, 10).cast("bigint"))
@@ -857,21 +781,19 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
         ).alias(f"s{b}")
         for b in range(bits)
     ]
-    bitsums = words.groupBy(id_col).agg(*vote_sums)
+    bitsums = words.groupBy("doc_id").agg(*vote_sums)
     fingerprint = None
     for b in range(bits):
         term = F.when(F.col(f"s{b}") > 0,
                       F.lit(1 << b).cast("bigint")) \
             .otherwise(F.lit(0).cast("bigint"))
         fingerprint = term if fingerprint is None else fingerprint + term
-    return bitsums.select(F.col(id_col), fingerprint.alias("simhash"))
+    return bitsums.select(F.col("doc_id"), fingerprint.alias("simhash"))
 
 
-def simhash_near_dup_pairs(docs: DataFrame, id_col: str = "doc_id",
-                           text_col: str = "text", bits: int = 60,
+def simhash_near_dup_pairs(docs: DataFrame, bits: int = 60,
                            bands: int = 4, max_hamming: int = 3,
-                           bucket_cap: int = 1024,
-                           max_salts: int = 64) -> DataFrame:
+                           bucket_cap: int = 1024) -> DataFrame:
     """(a_id, b_id, hamming): document pairs whose simhash fingerprints
     differ in at most ``max_hamming`` bits — the web-scale near-dup
     detector of Manku/Jain/Das Sarma, "Detecting Near-Duplicates for
@@ -901,22 +823,22 @@ def simhash_near_dup_pairs(docs: DataFrame, id_col: str = "doc_id",
                          f"bands ({bands})")
     width = bits // bands
     mask = (1 << width) - 1
-    sh = simhash(docs, id_col, text_col, bits)
+    sh = simhash(docs, bits)
     slices = sh.select(
-        F.col(id_col), F.col("simhash"),
+        F.col("doc_id"), F.col("simhash"),
         F.explode(F.array(*[
             F.struct(
                 F.lit(b).alias("band"),
                 F.shiftright(F.col("simhash"), b * width)
                 .bitwiseAND(F.lit(mask)).alias("key"))
             for b in range(bands)])).alias("bk"),
-    ).select(id_col, "simhash", F.col("bk.band").alias("band"),
+    ).select("doc_id", "simhash", F.col("bk.band").alias("band"),
              F.col("bk.key").alias("key"))
-    joined = salted_self_join(slices, ["band", "key"], id_col,
-                              bucket_cap, max_salts)
+    joined = salted_self_join(slices, ["band", "key"], "doc_id",
+                              bucket_cap, 64)
     pairs = joined.select(
-        F.col(f"a.{id_col}").alias("a_id"),
-        F.col(f"b.{id_col}").alias("b_id"),
+        F.col("a.doc_id").alias("a_id"),
+        F.col("b.doc_id").alias("b_id"),
         F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
         .alias("hamming"),
     ).filter(F.col("hamming") <= max_hamming)
@@ -930,21 +852,14 @@ def simhash_near_dup_pairs(docs: DataFrame, id_col: str = "doc_id",
 # Search", TPAMI 2011.  Vector math via
 # F.aggregate/zip_with — JVM-side, no Python.
 #
-# Kernel choice: the DEFAULT left-fold aggregate gives a FIXED IEEE
-# summation order, so cosine values are bit-identical to the SQL oracle
-# and threshold comparisons cannot flip on borderline pairs — it is what
-# the q29 oracle gate runs.  It is also the measured winner on CPU
-# executors: a 100k × dim-768 cosine scan ran 12.4 s (JVM fold) vs
-# 18.4 s (Arrow/numpy) on local[32] — Arrow IPC of the vectors to Python
-# costs more than the fold saves (see similarity.py kernel note).
-# kernel="blas" computes the per-pair cosine in a vectorized Arrow
-# pandas_udf (numpy einsum over the batch) for deployments where the
-# vectors cross into Python anyway; its reduction order is unspecified:
-# scores agree to ~1e-12 relative, so a pair sitting EXACTLY on the
-# threshold could flip — gated by the tolerance-based verifier test
-# (test_scale_guards.py), never by the exact-hash oracle.  The JOIN
-# SHAPE (bucketed, salt-split) is the scale decision and is
-# kernel-independent: both kernels see identical candidate pairs.
+# Kernel: the left-fold aggregate gives a FIXED IEEE summation order, so
+# cosine values are bit-identical to the SQL oracle and threshold
+# comparisons cannot flip on borderline pairs — it is what the q29 oracle
+# gate runs.  It is also the measured winner on CPU executors: a 100k ×
+# dim-768 cosine scan ran 12.4 s (JVM fold) vs 18.4 s (Arrow/numpy) on
+# local[32] — Arrow IPC of the vectors to Python costs more than the fold
+# saves (see the similarity.py kernel note).  The JOIN SHAPE (bucketed,
+# salt-split) is the scale decision.
 # ---------------------------------------------------------------------------
 
 
@@ -952,89 +867,31 @@ from .vecmath import dot as _dot, norm as _norm  # noqa: E402 — shared
 # exact fold kernels (one definition: the fold order is oracle contract)
 
 
-def _blas_pair_cosine_udf():
-    """Arrow-batched numpy cosine over (vec_a, vec_b) column pairs.
-
-    Failure semantics MATCH the exact left-fold kernel exactly: a pair
-    degrades to NULL cosine iff either side is NULL or the two sides'
-    lengths differ FROM EACH OTHER (zip_with pads the shorter side with
-    NULLs → NULL fold) — never because some OTHER row in the same Arrow
-    batch happens to have a different dimension (an earlier version
-    inferred "the" dim as the per-batch max, so results depended on how
-    rows split into batches).  Zero-norm pairs are NULL on both kernels
-    (NaN would PASS a >= threshold filter — Spark orders NaN above
-    every number)."""
-    @F.pandas_udf("double")
-    def _udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        if len(a) == 0:
-            return pd.Series([], dtype="float64")
-        bad = [va is None or vb is None or len(va) != len(vb)
-               for va, vb in zip(a, b)]
-        good_dims = {len(va) for va, m in zip(a, bad) if not m}
-        if not any(bad) and len(good_dims) == 1:
-            ma = np.stack(a.to_numpy()).astype(np.float64)
-            mb = np.stack(b.to_numpy()).astype(np.float64)
-            num = np.einsum("ij,ij->i", ma, mb)
-            den = (np.sqrt(np.einsum("ij,ij->i", ma, ma))
-                   * np.sqrt(np.einsum("ij,ij->i", mb, mb)))
-            out = num / np.where(den > 0, den, 1.0)
-            res = pd.array(out, dtype="Float64")
-            res[den <= 0] = pd.NA
-            return pd.Series(res, dtype="Float64")
-        # mixed-dimension / NULL-bearing batch (rare path): score each
-        # valid pair at its OWN dimension, row-wise
-        vals = []
-        for va, vb, m in zip(a, b, bad):
-            if m:
-                vals.append(pd.NA)
-                continue
-            xa = np.asarray(va, dtype=np.float64)
-            xb = np.asarray(vb, dtype=np.float64)
-            den = float(np.sqrt(xa @ xa) * np.sqrt(xb @ xb))
-            vals.append(float(xa @ xb) / den if den > 0 else pd.NA)
-        return pd.Series(pd.array(vals, dtype="Float64"))
-
-    return _udf
-
-
-def embedding_near_dup_pairs(emb: DataFrame, id_col: str = "vec_id",
-                             vec_col: str = "embedding",
-                             bucket_col: str = "label",
-                             threshold: float = 0.95,
-                             bucket_cap: int = 1024,
-                             max_salts: int = 64,
-                             kernel: str = "exact") -> DataFrame:
-    """Cosine-similar pairs within coarse buckets (IVF-style: only same-bucket
-    pairs compared — the 100 TB path replaces `bucket_col` with a learned
-    coarse quantizer; the join shape is identical).
+def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.95,
+                             bucket_cap: int = 1024) -> DataFrame:
+    """Cosine-similar (vec_id) pairs within coarse `label` buckets
+    (IVF-style: only same-bucket pairs compared — the 100 TB path
+    replaces the label with a learned coarse quantizer; the join shape
+    is identical).
 
     Hot-bucket guard: the same-bucket self-join goes through the shared
     :func:`salted_self_join` (see its header comment for the salt-split
     mechanics and the exactly-once pair argument) — results are identical
     for any cap; buckets at or under the cap take s = 1, the plain
-    self-join.
-
-    `kernel`: "exact" (default, oracle-bit-identical left fold) or
-    "blas" (Arrow/numpy batch kernel — see the kernel note above)."""
+    self-join."""
     base = emb.select(
-        F.col(id_col), F.col(bucket_col).alias("_bk"),
-        F.col(vec_col).alias("_v"), _norm(F.col(vec_col)).alias("_n"),
+        F.col("vec_id"), F.col("label").alias("_bk"),
+        F.col("embedding").alias("_v"), _norm(F.col("embedding")).alias("_n"),
     )
-    if kernel not in ("exact", "blas"):
-        raise ValueError(f"unknown kernel {kernel!r} (exact|blas)")
-    joined = salted_self_join(base, ["_bk"], id_col, bucket_cap, max_salts)
-    if kernel == "blas":
-        cos = _blas_pair_cosine_udf()(F.col("a._v"), F.col("b._v"))
-    else:
-        # zero-norm guard: cosine is undefined for a zero vector — NULL
-        # (dropped by the threshold filter) instead of an ANSI
-        # DIVIDE_BY_ZERO that would abort the whole job
-        den = F.col("a._n") * F.col("b._n")
-        cos = F.when(den > 0,
-                     _dot(F.col("a._v"), F.col("b._v")) / den)
+    joined = salted_self_join(base, ["_bk"], "vec_id", bucket_cap, 64)
+    # zero-norm guard: cosine is undefined for a zero vector — NULL
+    # (dropped by the threshold filter) instead of an ANSI
+    # DIVIDE_BY_ZERO that would abort the whole job
+    den = F.col("a._n") * F.col("b._n")
+    cos = F.when(den > 0, _dot(F.col("a._v"), F.col("b._v")) / den)
     return (
         joined.withColumn("cosine", cos)
         .filter(F.col("cosine") >= threshold)
-        .select(F.col(f"a.{id_col}").alias("a_id"),
-                F.col(f"b.{id_col}").alias("b_id"), "cosine")
+        .select(F.col("a.vec_id").alias("a_id"),
+                F.col("b.vec_id").alias("b_id"), "cosine")
     )

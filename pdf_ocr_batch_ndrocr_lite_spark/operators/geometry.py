@@ -39,23 +39,20 @@ def _fallback_zero_null(col: Column, fallback: Column) -> Column:
     return F.when(col.isNull() | (col == 0.0), fallback).otherwise(col)
 
 
-def page_geometry(pages: DataFrame, render_dpi_col: str = "render_dpi",
-                  width_px_col: str = "width_px",
-                  height_px_col: str = "height_px",
-                  rotation_col: str = "rotation_deg",
-                  media_w_col: str = "media_width_pt",
-                  crop_w_col: str = "crop_width_pt") -> DataFrame:
+def page_geometry(pages: DataFrame) -> DataFrame:
     """Project raw per-page render metadata to the reference's normalized
     geometry columns.  Pure whole-stage-codegen arithmetic — at 100 TB this
     rides the scan for free."""
     ndpi = F.greatest(F.lit(MIN_RENDER_DPI),
-                      F.col(render_dpi_col).cast("int"))
-    width_pt = F.col(width_px_col) * F.lit(72.0) / ndpi
-    height_pt = F.col(height_px_col) * F.lit(72.0) / ndpi
-    rotation = F.pmod(F.coalesce(F.col(rotation_col).cast("int"), F.lit(0)),
+                      F.col("render_dpi").cast("int"))
+    width_pt = F.col("width_px") * F.lit(72.0) / ndpi
+    height_pt = F.col("height_px") * F.lit(72.0) / ndpi
+    rotation = F.pmod(F.coalesce(F.col("rotation_deg").cast("int"), F.lit(0)),
                       F.lit(360))
-    media_w = _fallback_zero_null(F.col(media_w_col).cast("double"), width_pt)
-    crop_w = _fallback_zero_null(F.col(crop_w_col).cast("double"), media_w)
+    media_w = _fallback_zero_null(F.col("media_width_pt").cast("double"),
+                                  width_pt)
+    crop_w = _fallback_zero_null(F.col("crop_width_pt").cast("double"),
+                                 media_w)
     return pages.withColumns({
         "norm_dpi": ndpi,
         "width_pt": width_pt,

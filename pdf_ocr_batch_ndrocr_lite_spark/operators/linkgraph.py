@@ -50,19 +50,16 @@ from .barrier import materialize
 _HREF_RE = r'href="(https?://[^"]+)"'
 
 
-def extract_outlinks(pages: DataFrame, html_col: str = "html",
-                     url_col: str = "url") -> DataFrame:
-    """(url, target) per absolute http(s) anchor in `html_col`.
+def extract_outlinks(pages: DataFrame) -> DataFrame:
+    """(url, target) per absolute http(s) anchor in the page `html`.
 
     One JVM-side regexp_extract_all + explode — no Python, no shuffle.
     Relative links are out of scope (resolving them needs a base-url
     join the caller can add); duplicate anchors on a page are kept so
     in-degree counts weight repeated links, mirroring the raw graph.
     """
-    links = F.expr(
-        f"regexp_extract_all({html_col}, '{_HREF_RE}', 1)")
-    return (pages.select(F.col(url_col).alias("url"),
-                         F.explode(links).alias("target")))
+    links = F.expr(f"regexp_extract_all(html, '{_HREF_RE}', 1)")
+    return pages.select(F.col("url"), F.explode(links).alias("target"))
 
 
 #: attribute boundary before href (([^>]*\s)?) so data-href can never
@@ -70,8 +67,7 @@ def extract_outlinks(pages: DataFrame, html_col: str = "html",
 _ANCHOR_RE = r'<a\s([^>]*\s)?href="(https?://[^"]+)"[^>]*>([^<]*)<'
 
 
-def extract_anchors(pages: DataFrame, html_col: str = "html",
-                    url_col: str = "url") -> DataFrame:
+def extract_anchors(pages: DataFrame) -> DataFrame:
     """(url, target, anchor) per absolute http(s) anchor WITH its link
     text — the anchor-text corpus (what the web calls the target page):
     a classic relevance/title signal for crawl ranking and document
@@ -90,11 +86,10 @@ def extract_anchors(pages: DataFrame, html_col: str = "html",
     (BASELINE.md r8).  Zero Python, no shuffle.  Anchors whose text
     contains markup (nested tags) truncate at the first '<' by
     construction of the capture."""
-    matches = F.regexp_extract_all(F.col(html_col), F.lit(_ANCHOR_RE), 0)
+    matches = F.regexp_extract_all(F.col("html"), F.lit(_ANCHOR_RE), 0)
     # stage the HOF array in its own projection (HOFs are never CSE'd),
     # then split groups per matched element and explode the pairs
-    staged = pages.select(F.col(url_col).alias("url"),
-                          matches.alias("_m"))
+    staged = pages.select(F.col("url"), matches.alias("_m"))
     pairs = F.transform(
         F.col("_m"),
         lambda m: F.struct(
@@ -148,8 +143,7 @@ def _dot_segment_fold(path_col):
         ).otherwise(F.concat(acc, F.array(s))))
 
 
-def resolve_links(pages: DataFrame, html_col: str = "html",
-                  url_col: str = "url") -> DataFrame:
+def resolve_links(pages: DataFrame) -> DataFrame:
     """(url, target): every ``<a href>`` — absolute, protocol-relative,
     root-relative, or path-relative — resolved to an absolute URL
     against the page's base (an absolute ``<base href>`` wins over the
@@ -166,8 +160,7 @@ def resolve_links(pages: DataFrame, html_col: str = "html",
     Zero Python, zero shuffle — four narrow fused projections (HOF and
     multiply-referenced subtrees are staged per the no-CSE discipline).
     """
-    rawvals = F.regexp_extract_all(F.col(html_col),
-                                   F.lit(_A_HREF_ANY_RE), 2)
+    rawvals = F.regexp_extract_all(F.col("html"), F.lit(_A_HREF_ANY_RE), 2)
     # strip the quoting style per element (group 2 keeps the quotes so
     # one extract covers all three alternatives)
     hrefs = F.transform(
@@ -179,8 +172,8 @@ def resolve_links(pages: DataFrame, html_col: str = "html",
     # inside when() branches — CASE branches share no subexpression
     # elimination, and this regex scans the full payload)
     a0 = pages.select(
-        F.col(url_col).alias("url"), hrefs.alias("_hs"),
-        F.regexp_extract(F.col(html_col), _BASE_HREF_ANY_RE, 2)
+        F.col("url"), hrefs.alias("_hs"),
+        F.regexp_extract(F.col("html"), _BASE_HREF_ANY_RE, 2)
         .alias("_braw"))
     braw = F.col("_braw")
     bval = F.when(F.substring(braw, 1, 1).isin('"', "'"),
@@ -244,26 +237,18 @@ def resolve_links(pages: DataFrame, html_col: str = "html",
             .filter(F.col("target").isNotNull()))
 
 
-def host_edges(links: DataFrame, src_url_col: str = "url",
-               dst_url_col: str = "target", psl: bool = True,
-               drop_self: bool = True) -> DataFrame:
-    """(src_host, dst_host, n): the page-level edge list aggregated to
-    host granularity — registrable domain (full-PSL eTLD+1) by default,
-    matching the granularity Common-Crawl publishes its webgraph ranks
-    at; ``psl=False`` keeps the raw hostname.  ``drop_self`` removes
+def host_edges(links: DataFrame, drop_self: bool = True) -> DataFrame:
+    """(src_host, dst_host, n): the (url, target) page-level edge list
+    aggregated to host granularity — registrable domain (full-PSL
+    eTLD+1), matching the granularity Common-Crawl publishes its webgraph
+    ranks at.  ``drop_self`` removes
     intra-host edges (the navigation chrome that would otherwise
     dominate every host's in-degree).  One shuffle (the groupBy); the
     domain derivation is the zero-shuffle PSL projection cascade."""
     from . import curation as cu
 
-    if psl:
-        e = cu.with_registrable_domain(links, src_url_col, "src_host")
-        e = cu.with_registrable_domain(e, dst_url_col, "dst_host")
-    else:
-        e = links.withColumn(
-            "src_host", cu.extract_domain(F.col(src_url_col)))
-        e = e.withColumn(
-            "dst_host", cu.extract_domain(F.col(dst_url_col)))
+    e = cu.with_registrable_domain(links, "url", "src_host")
+    e = cu.with_registrable_domain(e, "target", "dst_host")
     e = e.filter((F.col("src_host") != "") & (F.col("dst_host") != ""))
     if drop_self:
         e = e.filter(F.col("src_host") != F.col("dst_host"))
@@ -271,11 +256,9 @@ def host_edges(links: DataFrame, src_url_col: str = "url",
             .agg(F.count(F.lit(1)).alias("n")))
 
 
-def with_host_rank(docs: DataFrame, ranks: DataFrame,
-                   url_col: str = "url", host_col: str = "host",
-                   rank_col: str = "rank", out_col: str = "host_rank",
-                   psl: bool = True) -> DataFrame:
-    """Attach the webgraph rank of each document's registrable domain —
+def with_host_rank(docs: DataFrame, ranks: DataFrame) -> DataFrame:
+    """Attach the (host, rank) webgraph rank of each document url's
+    registrable domain as ``host_rank`` —
     the source-quality signal a curation cascade filters/weights by
     (CCNet/RefinedWeb keep-lists are exactly this join).  Documents on
     unranked hosts get NULL (absence is data: isolated hosts rank
@@ -288,36 +271,25 @@ def with_host_rank(docs: DataFrame, ranks: DataFrame,
     picks broadcast exactly when the runtime size allows."""
     from . import curation as cu
 
-    if out_col in ("host", "_wh_host"):
-        # out_col="host" would produce TWO 'host' columns after the
-        # join-key rename — ambiguous downstream, refuse up front
-        raise ValueError(
-            f"with_host_rank: out_col {out_col!r} collides with the "
-            "fixed 'host' output / internal join key — pick another")
     clash = [c for c in docs.columns
-             if c in ("host", "_wh_host", out_col)]
+             if c in ("host", "_wh_host", "host_rank")]
     if clash:
         # the join key and outputs use fixed names; silently overwriting
         # an input column would corrupt the caller's frame — refuse
         raise ValueError(
             f"with_host_rank: input columns collide with outputs: "
             f"{clash} — rename them first")
-    if psl:
-        keyed = cu.with_registrable_domain(docs, url_col, "_wh_host")
-    else:
-        keyed = docs.withColumn("_wh_host",
-                                cu.extract_domain(F.col(url_col)))
-    r = ranks.select(F.col(host_col).alias("_wh_host"),
-                     F.col(rank_col).alias(out_col))
+    keyed = cu.with_registrable_domain(docs, "url", "_wh_host")
+    r = ranks.select(F.col("host").alias("_wh_host"),
+                     F.col("rank").alias("host_rank"))
     return keyed.join(r, "_wh_host", "left") \
         .withColumnRenamed("_wh_host", "host")
 
 
-def inlink_counts(links: DataFrame,
-                  target_col: str = "target") -> DataFrame:
+def inlink_counts(links: DataFrame) -> DataFrame:
     """In-degree per target url: one partial-agg groupBy (map-side
     combine), the cheapest quality prior a crawl ranker has."""
-    return (links.groupBy(F.col(target_col).alias("target"))
+    return (links.groupBy("target")
             .agg(F.count("*").alias("inlinks")))
 
 

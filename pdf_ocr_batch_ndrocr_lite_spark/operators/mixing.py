@@ -26,9 +26,8 @@ from .dedup import shingles_col
 # ---------------------------------------------------------------------------
 
 
-def contamination_hits(docs: DataFrame, bench: DataFrame,
-                       id_col: str = "doc_id", text_col: str = "text",
-                       k: int = 3, min_overlap: int = 2) -> DataFrame:
+def contamination_hits(docs: DataFrame, bench: DataFrame, k: int = 3,
+                       min_overlap: int = 2) -> DataFrame:
     """(id, matched_shingles) for documents sharing at least
     ``min_overlap`` DISTINCT k-word shingles with any benchmark document.
 
@@ -36,25 +35,23 @@ def contamination_hits(docs: DataFrame, bench: DataFrame,
     explode — same shape as `shingle_document_frequency`); the benchmark
     shingle set is distinct-ed once and broadcast."""
     bsh = (bench.select(
-        F.explode(F.array_distinct(shingles_col(text_col, k)))
+        F.explode(F.array_distinct(shingles_col("text", k)))
         .alias("shingle")).distinct())
     dsh = docs.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(shingles_col(text_col, k)))
+        F.col("doc_id"),
+        F.explode(F.array_distinct(shingles_col("text", k)))
         .alias("shingle"))
     return (dsh.join(F.broadcast(bsh), "shingle", "left_semi")
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("matched_shingles"))
             .filter(F.col("matched_shingles") >= min_overlap))
 
 
-def benchmark_decontaminate(docs: DataFrame, bench: DataFrame,
-                            id_col: str = "doc_id",
-                            text_col: str = "text", k: int = 3,
+def benchmark_decontaminate(docs: DataFrame, bench: DataFrame, k: int = 3,
                             min_overlap: int = 2) -> DataFrame:
     """Corpus minus contaminated documents (anti-join on the hit frame)."""
-    hits = contamination_hits(docs, bench, id_col, text_col, k, min_overlap)
-    return docs.join(hits, id_col, "left_anti")
+    hits = contamination_hits(docs, bench, k, min_overlap)
+    return docs.join(hits, "doc_id", "left_anti")
 
 
 # ---------------------------------------------------------------------------
@@ -90,15 +87,13 @@ def benchmark_decontaminate(docs: DataFrame, bench: DataFrame,
 # ---------------------------------------------------------------------------
 
 
-def bench_shingle_index(bench: DataFrame, bench_id_col: str = "doc_id",
-                        bench_text_col: str = "text", k: int = 5,
+def bench_shingle_index(bench: DataFrame, k: int = 5,
                         max_bench_df: int | None = None) -> DataFrame:
     """Distinct (bench_id, shingle) index for a benchmark suite, with
-    the ubiquity cap applied — the PERSISTABLE half of fuzzy
-    decontamination (store it once per eval-suite version)."""
+    the ubiquity cap applied."""
     bsh = bench.select(
-        F.col(bench_id_col).alias("bench_id"),
-        F.explode(F.array_distinct(shingles_col(bench_text_col, k)))
+        F.col("doc_id").alias("bench_id"),
+        F.explode(F.array_distinct(shingles_col("text", k)))
         .alias("shingle")).distinct()
     if max_bench_df is not None:
         keep = (bsh.groupBy("shingle")
@@ -110,56 +105,28 @@ def bench_shingle_index(bench: DataFrame, bench_id_col: str = "doc_id",
 
 
 def fuzzy_contamination_pairs(docs: DataFrame, bench: DataFrame,
-                              id_col: str = "doc_id",
-                              text_col: str = "text",
-                              bench_id_col: str = "doc_id",
-                              bench_text_col: str = "text",
                               k: int = 5,
                               containment_threshold: float = 0.5,
-                              max_bench_df: int | None = None,
-                              bench_shingles: DataFrame | None = None
+                              max_bench_df: int | None = None
                               ) -> DataFrame:
     """(doc_id, bench_id, containment) for corpus docs containing at
     least ``containment_threshold`` of some benchmark item's k-gram
-    shingles.
-
-    ``bench_shingles``: a pre-built distinct (bench_id, shingle) frame
-    (the output of :func:`bench_shingle_index`) so a pipeline
-    decontaminating every snapshot against a fixed eval suite shingles
-    the suite once, not per run.  The containment division is a single
-    IEEE op (oracle contract)."""
-    bsh = (bench_shingles if bench_shingles is not None
-           else bench_shingle_index(bench, bench_id_col, bench_text_col,
-                                    k, max_bench_df))
+    shingles.  The containment division is a single IEEE op (oracle
+    contract)."""
+    bsh = bench_shingle_index(bench, k, max_bench_df)
     dsh = docs.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(shingles_col(text_col, k)))
+        F.col("doc_id"),
+        F.explode(F.array_distinct(shingles_col("text", k)))
         .alias("shingle"))
     bsizes = bsh.groupBy("bench_id").agg(F.count(F.lit(1)).alias("_bn"))
     inter = (dsh.join(F.broadcast(bsh), "shingle")
-             .groupBy(id_col, "bench_id")
+             .groupBy("doc_id", "bench_id")
              .agg(F.count(F.lit(1)).alias("_c")))
     return (inter.join(F.broadcast(bsizes), "bench_id")
-            .select(F.col(id_col), F.col("bench_id"),
+            .select(F.col("doc_id"), F.col("bench_id"),
                     (F.col("_c").cast("double") / F.col("_bn"))
                     .alias("containment"))
             .filter(F.col("containment") >= containment_threshold))
-
-
-def fuzzy_decontaminate(docs: DataFrame, bench: DataFrame,
-                        id_col: str = "doc_id", text_col: str = "text",
-                        bench_id_col: str = "doc_id",
-                        bench_text_col: str = "text", k: int = 5,
-                        containment_threshold: float = 0.5,
-                        max_bench_df: int | None = None,
-                        bench_shingles: DataFrame | None = None
-                        ) -> DataFrame:
-    """Corpus minus fuzzy-contaminated documents (anti-join on the
-    verified pair frame)."""
-    pairs = fuzzy_contamination_pairs(
-        docs, bench, id_col, text_col, bench_id_col, bench_text_col,
-        k, containment_threshold, max_bench_df, bench_shingles)
-    return docs.join(pairs.select(id_col).distinct(), id_col, "left_anti")
 
 
 # ---------------------------------------------------------------------------
@@ -181,8 +148,7 @@ def fuzzy_decontaminate(docs: DataFrame, bench: DataFrame,
 
 
 def pack_sequences(docs: DataFrame, capacity: int,
-                   shard_col: str = "lang", id_col: str = "doc_id",
-                   text_col: str = "text",
+                   shard_col: str = "lang",
                    shard_buckets: int | None = 64) -> DataFrame:
     """(id, shard, n_tokens, bin_id, bin_offset): each document starts at
     the running-token offset of its shard's concat stream; ``bin_id`` is
@@ -202,24 +168,24 @@ def pack_sequences(docs: DataFrame, capacity: int,
     shard semantics must pin ``shard_buckets=None`` explicitly."""
     if capacity <= 0:
         raise ValueError(f"capacity must be positive: got {capacity}")
-    tokens = F.size(F.filter(F.split(F.col(text_col), r"\s+"),
+    tokens = F.size(F.filter(F.split(F.col("text"), r"\s+"),
                              lambda w: w != "")).cast("bigint")
     if shard_buckets is None:
         shard = F.col(shard_col).cast("string")
     else:
         from .sketches import _hash60  # the ONE engine-portable hash
-        bucket = F.pmod(_hash60(F.col(id_col)), F.lit(shard_buckets))
+        bucket = F.pmod(_hash60(F.col("doc_id")), F.lit(shard_buckets))
         shard = F.concat(F.col(shard_col).cast("string"), F.lit("#"),
                          bucket.cast("string"))
-    toked = docs.select(F.col(id_col), shard.alias("shard"),
+    toked = docs.select(F.col("doc_id"), shard.alias("shard"),
                         tokens.alias("n_tokens"))
     cum_before = F.coalesce(
         F.sum("n_tokens").over(
-            Window.partitionBy("shard").orderBy(id_col)
+            Window.partitionBy("shard").orderBy("doc_id")
             .rowsBetween(Window.unboundedPreceding, -1)),
         F.lit(0).cast("bigint"))
     return toked.select(
-        F.col(id_col), F.col("shard"), F.col("n_tokens"),
+        F.col("doc_id"), F.col("shard"), F.col("n_tokens"),
         F.floor(cum_before / F.lit(capacity)).alias("bin_id"),
         F.pmod(cum_before, F.lit(capacity)).alias("bin_offset"),
     )
@@ -237,13 +203,13 @@ _MIX_BUCKETS = 10_000
 
 
 def stratified_sample(docs: DataFrame, rates: dict,
-                      stratum_col: str = "lang", id_col: str = "doc_id",
+                      stratum_col: str = "lang",
                       default_rate: float = 0.0) -> DataFrame:
     """Keep ``rates[stratum]`` of each stratum (permille-exact), chosen by
     md5(id) bucket — engine-portable (the DuckDB oracle reproduces the
     exact member set, not just the rate)."""
     bucket = F.pmod(
-        F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 15),
+        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15),
                16, 10).cast("bigint"),
         F.lit(_MIX_BUCKETS))
     threshold = F.lit(int(default_rate * _MIX_BUCKETS))
@@ -254,8 +220,7 @@ def stratified_sample(docs: DataFrame, rates: dict,
     return docs.filter(bucket < threshold)
 
 
-def temperature_rates(docs: DataFrame, stratum_col: str = "lang",
-                      alpha: float = 0.5,
+def temperature_rates(docs: DataFrame, alpha: float = 0.5,
                       target_frac: float = 0.5) -> dict:
     """Per-stratum keep rates for temperature-resampled mixing — the
     multilingual alpha-sampling of XLM-R/mT5: a stratum with corpus
@@ -277,10 +242,10 @@ def temperature_rates(docs: DataFrame, stratum_col: str = "lang",
     :func:`temperature_sample`)."""
     import math
 
-    counts = {r[stratum_col]: r["n"] for r in
-              docs.groupBy(stratum_col)
+    counts = {r["lang"]: r["n"] for r in
+              docs.groupBy("lang")
               .agg(F.count(F.lit(1)).alias("n")).collect()
-              if r[stratum_col] is not None}
+              if r["lang"] is not None}
     total = sum(counts.values())
     if not total:
         return {}
@@ -299,21 +264,17 @@ def temperature_rates(docs: DataFrame, stratum_col: str = "lang",
     return rates
 
 
-def temperature_sample(docs: DataFrame, stratum_col: str = "lang",
-                       id_col: str = "doc_id", alpha: float = 0.5,
+def temperature_sample(docs: DataFrame, alpha: float = 0.5,
                        target_frac: float = 0.5) -> DataFrame:
     """Temperature-resampled corpus: compute the alpha-sampling rates
     from this corpus's own stratum counts, then draw the deterministic
     md5-bucket sample.  Two jobs total: the count agg + the zero-shuffle
     filter scan."""
-    rates = temperature_rates(docs, stratum_col, alpha, target_frac)
-    return stratified_sample(docs, rates, stratum_col, id_col,
-                             default_rate=0.0)
+    rates = temperature_rates(docs, alpha, target_frac)
+    return stratified_sample(docs, rates, default_rate=0.0)
 
 
 def stratified_exact_k(docs: DataFrame, k: int,
-                       stratum_col: str = "lang",
-                       id_col: str = "doc_id",
                        salt_partitions: int = 32,
                        candidate_factor: int = 8) -> DataFrame:
     """Exactly min(k, |stratum|) documents per stratum, chosen by
@@ -356,44 +317,44 @@ def stratified_exact_k(docs: DataFrame, k: int,
     # NULL-stratum row from the sample (groupBy already treats NULL as a
     # key; the joins must agree)
     hashed = docs.select(
-        F.col(stratum_col), F.col(id_col),
-        _hash60(F.col(id_col)).alias("_h"))
-    thr = (hashed.groupBy(stratum_col)
+        F.col("lang"), F.col("doc_id"),
+        _hash60(F.col("doc_id")).alias("_h"))
+    thr = (hashed.groupBy("lang")
            .agg(F.count(F.lit(1)).alias("_n"))
            .select(
-               F.col(stratum_col).alias("_ts"), "_n",
+               F.col("lang").alias("_ts"), "_n",
                F.when(F.col("_n") <= F.lit(m),
                       F.lit(int(_HASH_SPACE)).cast("bigint"))
                .otherwise((F.lit(float(m)) / F.col("_n")
                            * F.lit(_HASH_SPACE)).cast("bigint"))
                .alias("_t")))
     surv = (hashed.join(F.broadcast(thr),
-                        F.col(stratum_col).eqNullSafe(F.col("_ts")))
+                        F.col("lang").eqNullSafe(F.col("_ts")))
             .filter(F.col("_h") < F.col("_t"))
-            .groupBy(stratum_col).agg(F.count(F.lit(1)).alias("_sn")))
+            .groupBy("lang").agg(F.count(F.lit(1)).alias("_sn")))
     under = (thr.join(surv,
-                      F.col("_ts").eqNullSafe(F.col(stratum_col)), "left")
+                      F.col("_ts").eqNullSafe(F.col("lang")), "left")
              .filter(F.coalesce(F.col("_sn"), F.lit(0))
                      < F.least(F.lit(k).cast("bigint"), F.col("_n")))
              .select(F.col("_ts").alias("_us"),
                      F.lit(True).alias("_all")))
     cand = (hashed.join(F.broadcast(thr),
-                        F.col(stratum_col).eqNullSafe(F.col("_ts")))
+                        F.col("lang").eqNullSafe(F.col("_ts")))
             .join(F.broadcast(under),
-                  F.col(stratum_col).eqNullSafe(F.col("_us")), "left")
+                  F.col("lang").eqNullSafe(F.col("_us")), "left")
             .filter((F.col("_h") < F.col("_t"))
                     | F.col("_all").isNotNull())
-            .select(stratum_col, id_col, "_h"))
+            .select("lang", "doc_id", "_h"))
     salt = F.pmod(F.col("_h"), F.lit(salt_partitions)).alias("_salt")
-    partial = cand.groupBy(stratum_col, salt).agg(
+    partial = cand.groupBy("lang", salt).agg(
         F.slice(F.sort_array(F.collect_list(
-            F.struct(F.col("_h"), F.col(id_col)))), 1, k).alias("_cell"))
-    merged = partial.groupBy(stratum_col).agg(
+            F.struct(F.col("_h"), F.col("doc_id")))), 1, k).alias("_cell"))
+    merged = partial.groupBy("lang").agg(
         F.slice(F.sort_array(F.flatten(F.collect_list("_cell"))), 1, k)
         .alias("_top"))
-    return (merged.select(F.col(stratum_col),
+    return (merged.select(F.col("lang"),
                           F.explode("_top").alias("_s"))
-            .select(stratum_col, F.col(f"_s.{id_col}").alias(id_col)))
+            .select("lang", F.col("_s.doc_id").alias("doc_id")))
 
 
 # ---------------------------------------------------------------------------
@@ -407,8 +368,7 @@ def stratified_exact_k(docs: DataFrame, k: int,
 
 
 def chunk_documents(docs: DataFrame, chunk_tokens: int = 512,
-                    overlap_tokens: int = 0, id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
+                    overlap_tokens: int = 0) -> DataFrame:
     """(id, chunk_id, chunk_text, n_tokens): consecutive token windows of
     `chunk_tokens` words at stride `chunk_tokens - overlap_tokens`; the
     final window may be shorter (it keeps the tail, never pads).  Docs
@@ -425,8 +385,8 @@ def chunk_documents(docs: DataFrame, chunk_tokens: int = 512,
             f"overlap_tokens must be in [0, chunk_tokens): {overlap_tokens}")
     stride = chunk_tokens - overlap_tokens
     staged = docs.select(
-        F.col(id_col),
-        F.filter(F.split(F.coalesce(F.col(text_col), F.lit("")), r"\s+"),
+        F.col("doc_id"),
+        F.filter(F.split(F.coalesce(F.col("text"), F.lit("")), r"\s+"),
                  lambda w: w != "").alias("_ws"))
     n = F.size("_ws")
     # ceil((n - chunk) / stride) + 1 via integer floor-div; 1 when n <= chunk
@@ -440,15 +400,15 @@ def chunk_documents(docs: DataFrame, chunk_tokens: int = 512,
             F.slice(F.col("_ws"), (i * stride + 1).cast("int"),
                     chunk_tokens).alias("w")))
     return (staged.filter(n > 0)
-            .select(F.col(id_col), F.posexplode(windows)
+            .select(F.col("doc_id"), F.posexplode(windows)
                     .alias("chunk_id", "_c"))
-            .select(F.col(id_col), F.col("chunk_id").cast("int"),
+            .select(F.col("doc_id"), F.col("chunk_id").cast("int"),
                     F.array_join(F.col("_c.w"), " ").alias("chunk_text"),
                     F.size(F.col("_c.w")).cast("bigint").alias("n_tokens")))
 
 
-def training_shards(docs: DataFrame, n_shards: int, seed: str = "0",
-                    id_col: str = "doc_id") -> DataFrame:
+def training_shards(docs: DataFrame, n_shards: int,
+                    seed: str = "0") -> DataFrame:
     """(id, shard, pos): deterministic seeded training order — the final
     pre-training step that shuffles the curated corpus and splits it
     into shard files.  shard = hash(seed:id) mod n_shards (size-balanced
@@ -468,55 +428,46 @@ def training_shards(docs: DataFrame, n_shards: int, seed: str = "0",
     from .sketches import _hash60  # the ONE engine-portable hash
 
     h = _hash60(F.concat(F.lit(f"{seed}:"),
-                         F.col(id_col).cast("string")))
-    keyed = docs.select(F.col(id_col), h.alias("_h"),
+                         F.col("doc_id").cast("string")))
+    keyed = docs.select(F.col("doc_id"), h.alias("_h"),
                         F.pmod(h, F.lit(n_shards)).cast("int")
                         .alias("shard"))
-    w = Window.partitionBy("shard").orderBy("_h", id_col)
+    w = Window.partitionBy("shard").orderBy("_h", "doc_id")
     return (keyed.withColumn("pos", F.row_number().over(w) - 1)
-            .select(id_col, "shard", "pos"))
+            .select("doc_id", "shard", "pos"))
 
 
 # ---------------------------------------------------------------------------
 # Span-level decontamination (the GPT-3 appendix-C "remove a window around
 # the collision" shape): instead of DROPPING a lightly-contaminated
-# document, locate the leaked word ranges and strip them, keeping the
-# rest.  A 5,000-word page quoting one benchmark item loses ~200 words,
-# not the whole page — at corpus scale that is real yield.
+# document, locate the leaked word ranges.  A 5,000-word page quoting one
+# benchmark item leaks ~200 words, not the whole page — at corpus scale
+# cutting the span instead of the page is real yield.
 #
 # Mechanics (all JVM-side): positional shingles (posexplode) collide
 # against the capped bench shingle set; colliding shingle p covers words
 # [p, p+k-1] (± `pad` context words); covered indices merge into maximal
 # spans by gaps-and-islands (widx − row_number constant within an
-# island); stripping rebuilds the text from the word array minus covered
-# indices.  The per-doc covered set rides an array through one join —
-# bounded by leak size, not document size.
+# island).
 # ---------------------------------------------------------------------------
 
 
-def _covered_word_indices(docs: DataFrame, bench: DataFrame,
-                          id_col: str, text_col: str,
-                          bench_id_col: str, bench_text_col: str,
-                          k: int, pad: int,
-                          max_bench_df: int | None,
-                          bench_shingles: DataFrame | None) -> DataFrame:
-    """(id, widx): the distinct 0-based word indices covered by
-    benchmark-colliding shingles ± pad, clamped — the shared core of
-    `contaminated_spans` (which merges them into islands for reporting)
-    and `strip_contamination` (which aggregates them per doc directly,
-    skipping the island window + span groupBy + re-explode round trip)."""
+def contaminated_spans(docs: DataFrame, bench: DataFrame, k: int = 5,
+                       pad: int = 0,
+                       max_bench_df: int | None = None) -> DataFrame:
+    """(doc_id, span_start, span_end, span_words): maximal 0-based word
+    ranges (inclusive) covered by benchmark-colliding k-gram shingles,
+    each expanded by ``pad`` context words and clamped to the document."""
     from .dedup import _words
 
-    bsh = (bench_shingles if bench_shingles is not None
-           else bench_shingle_index(bench, bench_id_col, bench_text_col,
-                                    k, max_bench_df)).select("shingle") \
-        .distinct()
-    n_words = F.size(_words(text_col))
+    bsh = bench_shingle_index(bench, k, max_bench_df) \
+        .select("shingle").distinct()
+    n_words = F.size(_words("text"))
     # positional shingles: pos p covers words [p, p+k-1]; the shingle
     # array is staged in its own projection before the posexplode
-    psh = (docs.select(F.col(id_col), n_words.alias("_nw"),
-                       shingles_col(text_col, k).alias("_sh"))
-           .select(F.col(id_col), F.col("_nw"),
+    psh = (docs.select(F.col("doc_id"), n_words.alias("_nw"),
+                       shingles_col("text", k).alias("_sh"))
+           .select(F.col("doc_id"), F.col("_nw"),
                    F.posexplode("_sh").alias("_p", "shingle")))
     hits = psh.join(F.broadcast(bsh), "shingle", "left_semi")
     # clamp-then-guard: on a zero-word document (whitespace-only text
@@ -526,70 +477,16 @@ def _covered_word_indices(docs: DataFrame, bench: DataFrame,
     # there, so an empty clamped range must drop the row entirely
     _start = F.greatest(F.col("_p") - pad, F.lit(0))
     _end = F.least(F.col("_p") + k - 1 + pad, F.col("_nw") - 1)
-    return (hits.filter(_start <= _end)
-            .select(F.col(id_col),
-                    F.explode(F.sequence(_start, _end)).alias("widx"))
-            .distinct())
-
-
-def contaminated_spans(docs: DataFrame, bench: DataFrame,
-                       id_col: str = "doc_id", text_col: str = "text",
-                       bench_id_col: str = "doc_id",
-                       bench_text_col: str = "text", k: int = 5,
-                       pad: int = 0,
-                       max_bench_df: int | None = None,
-                       bench_shingles: DataFrame | None = None
-                       ) -> DataFrame:
-    """(doc_id, span_start, span_end, span_words): maximal 0-based word
-    ranges (inclusive) covered by benchmark-colliding k-gram shingles,
-    each expanded by ``pad`` context words and clamped to the document."""
-    covered = _covered_word_indices(docs, bench, id_col, text_col,
-                                    bench_id_col, bench_text_col, k, pad,
-                                    max_bench_df, bench_shingles)
-    w = Window.partitionBy(id_col).orderBy("widx")
+    covered = (hits.filter(_start <= _end)
+               .select(F.col("doc_id"),
+                       F.explode(F.sequence(_start, _end)).alias("widx"))
+               .distinct())
+    w = Window.partitionBy("doc_id").orderBy("widx")
     grouped = covered.withColumn(
         "_grp", F.col("widx") - F.row_number().over(w))
-    return (grouped.groupBy(id_col, "_grp")
+    return (grouped.groupBy("doc_id", "_grp")
             .agg(F.min("widx").alias("span_start"),
                  F.max("widx").alias("span_end"))
-            .select(F.col(id_col), "span_start", "span_end",
+            .select(F.col("doc_id"), "span_start", "span_end",
                     (F.col("span_end") - F.col("span_start") + 1)
                     .alias("span_words")))
-
-
-def strip_contamination(docs: DataFrame, bench: DataFrame,
-                        id_col: str = "doc_id", text_col: str = "text",
-                        bench_id_col: str = "doc_id",
-                        bench_text_col: str = "text", k: int = 5,
-                        pad: int = 0,
-                        max_bench_df: int | None = None,
-                        bench_shingles: DataFrame | None = None
-                        ) -> DataFrame:
-    """``docs`` with leaked word ranges removed from ``text_col`` (plus
-    ``n_stripped_words``).  Output text is whitespace-normalized (a
-    single space between surviving words) — stripping operates on the
-    word sequence, the same tokenization every shingle op here uses.
-    Clean documents pass through with their text UNCHANGED apart from
-    that normalization only when touched: docs with no collision keep
-    their original text byte-for-byte (left join, coalesce)."""
-    from .dedup import _words
-
-    covered = (_covered_word_indices(docs, bench, id_col, text_col,
-                                     bench_id_col, bench_text_col, k, pad,
-                                     max_bench_df, bench_shingles)
-               .groupBy(id_col)
-               .agg(F.array_sort(F.collect_set("widx")).alias("_cov")))
-    joined = docs.join(covered, id_col, "left")
-    words = _words(text_col)
-    kept = F.filter(
-        F.transform(words, lambda wd, i: F.struct(wd.alias("w"),
-                                                  i.alias("i"))),
-        lambda s: ~F.array_contains(F.col("_cov"), s["i"]))
-    stripped = F.array_join(F.transform(kept, lambda s: s["w"]), " ")
-    out_text = F.when(F.col("_cov").isNull(), F.col(text_col)) \
-        .otherwise(stripped)
-    n_stripped = F.coalesce(F.size("_cov"), F.lit(0))
-    others = [c for c in docs.columns if c not in (id_col, text_col)]
-    return joined.select(
-        F.col(id_col), *others, out_text.alias(text_col),
-        n_stripped.alias("n_stripped_words"))

@@ -7,7 +7,7 @@ bytes via the stdlib parsers in functions/image_meta.py (the full
 reference whitelist — jpeg/png/bmp/tiff/webp — with Pillow-parity
 density semantics), so an image column carries its true dimensions with
 no codec at all.  Only PIXEL-level work remains stubbed: the feature
-vector and audio/video frame decode derive from deterministic md5 fakes
+vector and audio/video frame count derive from deterministic md5 fakes
 because the pixel codecs (Pillow/ffmpeg) are not in this container
 (marked DECODE STUB below).  Swapping the stub for a codec-backed
 decode changes no Spark plumbing.
@@ -36,19 +36,18 @@ FEATURE_SCHEMA = (
 )
 
 
-def attach_media(docs: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
+def attach_media(docs: DataFrame) -> DataFrame:
     """Derive a media table from a text corpus for plumbing tests: payload =
     utf-8 bytes of the text (deterministic fake media), typed metadata
     columns as a real ingest would carry."""
     return docs.select(
-        F.col(id_col).cast("bigint").alias("media_id"),
+        F.col("doc_id").cast("bigint").alias("media_id"),
         F.element_at(F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-                     (F.col(id_col) % 3 + 1).cast("int")).alias("kind"),
-        F.encode(F.col(text_col), "utf-8").alias("payload"),
+                     (F.col("doc_id") % 3 + 1).cast("int")).alias("kind"),
+        F.encode(F.col("text"), "utf-8").alias("payload"),
         F.lit(640).alias("width"),
         F.lit(480).alias("height"),
-        (F.length(F.col(text_col)) * 10).cast("int").alias("duration_ms"),
+        (F.length(F.col("text")) * 10).cast("int").alias("duration_ms"),
     )
 
 
@@ -81,7 +80,7 @@ def _image_header_meta(raw: bytes, kind: str):
             float(meta["dpi_x"]))
 
 
-def demo_encoder(payload: bytes, kind: str, dim: int = 8):
+def demo_encoder(payload: bytes, kind: str):
     """Deterministic NON-default encoder proving the `media_features`
     seam end-to-end (q91): kind-salted md5, features are dyadic
     rationals (byte/256*2-1 — exactly representable in float32 AND
@@ -90,7 +89,7 @@ def demo_encoder(payload: bytes, kind: str, dim: int = 8):
     audio tower through the same signature."""
     digest = hashlib.md5(
         (payload or b"") + (kind or "").encode("utf-8")).digest()
-    feats = [(digest[2 * i] / 256.0) * 2.0 - 1.0 for i in range(dim)]
+    feats = [(digest[2 * i] / 256.0) * 2.0 - 1.0 for i in range(8)]
     n_frames = 1 if kind == "image" else 1 + digest[1] % 9
     return feats, n_frames
 
@@ -140,54 +139,6 @@ def media_features(media: DataFrame, encoder=None) -> DataFrame:
 
     return media.select("media_id", "kind", "payload") \
         .mapInPandas(run, schema=FEATURE_SCHEMA)
-
-
-FRAME_SCHEMA = ("media_id bigint, frame_index int, ts_ms int, "
-                "width int, height int, frame binary")
-
-
-def sample_frames(media: DataFrame, every_ms: int = 1000,
-                  target_w: int = 224, target_h: int = 224) -> DataFrame:
-    """Frame sampling + resize plumbing: one output row per sampled frame
-    (UDTF-shaped fan-out, like the PDF page explode).
-
-    DECODE STUB — a real implementation decodes `payload` with a video
-    codec and resizes each frame; the fake derives deterministic frame
-    bytes from (payload sha1, index) so the Spark-side shape — fan-out
-    cardinality, Arrow batch sizes, schema — is fully exercised.  Frame
-    fan-out multiplies row counts ~10-100x, so this stage deliberately
-    runs AFTER any filtering and its output should never be cached whole.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = []
-            for mid, kind, payload, duration in zip(
-                    pdf["media_id"], pdf["kind"], pdf["payload"],
-                    pdf["duration_ms"]):
-                raw = bytes(payload or b"")
-                digest = hashlib.md5(raw).digest()
-                if kind == "image":
-                    n_frames = 1
-                else:
-                    n_frames = max(1, int(duration or 0) // every_ms)
-                n_frames = min(n_frames, 64)  # page-count-style budget
-                for i in range(n_frames):
-                    fake = hashlib.md5(digest + i.to_bytes(4, "big")).digest()
-                    out.append({
-                        "media_id": mid, "frame_index": i,
-                        "ts_ms": i * every_ms,
-                        "width": target_w, "height": target_h,
-                        "frame": fake,  # stand-in for resized RGB bytes
-                    })
-            yield pd.DataFrame(out, columns=["media_id", "frame_index",
-                                             "ts_ms", "width", "height",
-                                             "frame"])
-
-    return media.select("media_id", "kind", "payload", "duration_ms") \
-        .mapInPandas(run, schema=FRAME_SCHEMA)
 
 
 def media_summary(media: DataFrame) -> DataFrame:

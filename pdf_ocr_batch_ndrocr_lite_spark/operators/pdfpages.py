@@ -25,8 +25,7 @@ PAGE_STATS_SCHEMA = ("url string, page_index int, n_text_ops int, "
                      "n_chars int, text_layer string")
 
 
-def pdf_page_stats(pages: DataFrame, url_col: str = "url",
-                   payload_col: str = "html") -> DataFrame:
+def pdf_page_stats(pages: DataFrame) -> DataFrame:
     """Explode raw-PDF documents to per-page rows: the text-layer signals
     (op count, stripped chars) plus the extracted text layer itself
     (show-string bytes in stream order — the no-OCR-needed fast path for
@@ -38,7 +37,7 @@ def pdf_page_stats(pages: DataFrame, url_col: str = "url",
             if len(pdf) == 0:
                 continue
             out: dict = {c: [] for c in cols}
-            for url, payload in zip(pdf[url_col], pdf[payload_col]):
+            for url, payload in zip(pdf["url"], pdf["html"]):
                 try:
                     scans = pdf_scan.page_scans(bytes(payload or b""))
                 except ValueError:
@@ -55,5 +54,5 @@ def pdf_page_stats(pages: DataFrame, url_col: str = "url",
                                                     scan.fonts))
             yield pd.DataFrame(out, columns=cols)
 
-    return pages.select(url_col, payload_col) \
+    return pages.select("url", "html") \
         .mapInPandas(run, schema=PAGE_STATS_SCHEMA)

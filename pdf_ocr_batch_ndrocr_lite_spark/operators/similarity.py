@@ -10,53 +10,19 @@ from __future__ import annotations
 
 from typing import List, Sequence
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-# NOTE on the vector kernels: the left-fold F.aggregate/zip_with form is
-# the DEFAULT because (a) the DuckDB oracle can replicate the exact IEEE
-# addition sequence (bitwise-reproducible scores) — it is what every
-# oracle-gated query runs — and (b) it is NOT the bottleneck: measured
-# on a 100k × dim-768 cosine scan, local[32], the codegen'd JVM fold ran
-# 12.4 s vs 18.4 s for the Arrow/numpy path (best-of-2) — the Arrow IPC
-# of ~600 MB of vectors to Python costs more than the fold saves.
-# kernel="blas" (a vectorized pandas_udf over numpy) exists for
-# deployments where the vectors already cross into Python (a model-
-# scoring stage downstream) or GPU-adjacent workers; its reduction order
-# is UNSPECIFIED: scores agree to ~1e-12 relative (float64 inputs), so
-# borderline threshold/rank decisions can differ — gated by the
-# tolerance-based verifier tests (test_similarity.py), never by the
-# exact-hash oracle.  The plan shape (map stage, no shuffle) is
-# identical for both kernels, so none of the scale properties change.
+# NOTE on the vector kernel: cosine is the left-fold F.aggregate/zip_with
+# form because (a) the DuckDB oracle can replicate the exact IEEE addition
+# sequence (bitwise-reproducible scores) and (b) it is NOT the bottleneck:
+# measured on a 100k × dim-768 cosine scan, local[32], the codegen'd JVM
+# fold ran 12.4 s vs 18.4 s for an Arrow/numpy pandas_udf (best-of-2) —
+# the Arrow IPC of ~600 MB of vectors to Python costs more than the fold
+# saves.
 from .vecmath import dot as _dot, norm as _norm  # noqa: E402 — shared
 # exact fold kernels (one definition: the fold order is oracle contract)
-
-
-def _blas_query_cosine_udf(query: Sequence[float]):
-    """Arrow-batched numpy cosine against a constant query vector."""
-    q = np.asarray([float(v) for v in query], dtype=np.float64)
-    qn = float(np.sqrt((q * q).sum()))
-    if qn == 0.0:
-        raise ValueError("query vector has zero norm: cosine undefined")
-
-    @F.pandas_udf("double")
-    def _udf(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype="float64")
-        m = np.stack(v.to_numpy()).astype(np.float64)
-        den = np.sqrt((m * m).sum(axis=1)) * qn
-        # zero-norm row → NULL, never NaN (Spark sorts NaN above every
-        # number — a NaN cosine would win a top-k); matches the exact
-        # kernel's when(norm > 0) guard
-        out = (m @ q) / np.where(den > 0, den, 1.0)
-        res = pd.array(out, dtype="Float64")
-        res[den <= 0] = pd.NA
-        return pd.Series(res, dtype="Float64")
-
-    return _udf
 
 
 def _exact_query_cosine(vec_col, query):
@@ -70,55 +36,42 @@ def _exact_query_cosine(vec_col, query):
     return F.when(n > 0, _dot(vec_col, q) / (n * F.lit(qn)))
 
 
-def cosine_to_query(emb: DataFrame, query: Sequence[float],
-                    id_col: str = "vec_id", vec_col: str = "embedding",
-                    kernel: str = "exact") -> DataFrame:
-    """(id, cosine) of every row against a constant query vector.
+def cosine_to_query(emb: DataFrame, query: Sequence[float]) -> DataFrame:
+    """(vec_id, cosine) of every row against a constant query vector.
 
-    The query broadcasts as a literal array (exact kernel) or inside the
-    Arrow UDF closure (blas kernel) — a pure map stage either way, no
-    shuffle, scan-bound at any scale.  See the kernel note above for the
-    exact-vs-blas contract."""
-    if kernel not in ("exact", "blas"):
-        raise ValueError(f"unknown kernel {kernel!r} (exact|blas)")
-    if kernel == "blas":
-        return emb.select(
-            F.col(id_col),
-            _blas_query_cosine_udf(query)(F.col(vec_col)).alias("cosine"))
+    The query broadcasts as a literal array — a pure map stage, no
+    shuffle, scan-bound at any scale."""
     return emb.select(
-        F.col(id_col),
-        _exact_query_cosine(F.col(vec_col), query).alias("cosine"),
+        F.col("vec_id"),
+        _exact_query_cosine(F.col("embedding"), query).alias("cosine"),
     )
 
 
-def brute_force_topk(emb: DataFrame, query: Sequence[float], k: int = 10,
-                     id_col: str = "vec_id", vec_col: str = "embedding",
-                     kernel: str = "exact") -> DataFrame:
+def brute_force_topk(emb: DataFrame, query: Sequence[float],
+                     k: int = 10) -> DataFrame:
     """Global top-k by cosine: map stage + TakeOrdered (no full sort —
     Spark's sort-limit physical operator keeps k rows per partition)."""
-    scored = cosine_to_query(emb, query, id_col, vec_col, kernel=kernel)
-    return scored.orderBy(F.col("cosine").desc(), F.col(id_col)).limit(k)
+    scored = cosine_to_query(emb, query)
+    return scored.orderBy(F.col("cosine").desc(), F.col("vec_id")).limit(k)
 
 
 def topk_per_bucket(emb: DataFrame, query: Sequence[float], k: int = 3,
-                    bucket_col: str = "label", id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> DataFrame:
+                    bucket_col: str = "label") -> DataFrame:
     """Top-k within each coarse bucket (IVF cell / LSH bucket / shard):
     window rank over bucket — the distributed ANN building block."""
-    scored = cosine_to_query(emb, query, id_col, vec_col) \
-        .join(emb.select(id_col, bucket_col), id_col)
+    scored = cosine_to_query(emb, query) \
+        .join(emb.select("vec_id", bucket_col), "vec_id")
     w = Window.partitionBy(bucket_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col))
+        F.col("cosine").desc(), F.col("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(bucket_col, id_col, "cosine", "rank")
+        .select(bucket_col, "vec_id", "cosine", "rank")
     )
 
 
-def random_hyperplane_buckets(emb: DataFrame, planes: List[Sequence[float]],
-                              id_col: str = "vec_id",
-                              vec_col: str = "embedding") -> DataFrame:
+def random_hyperplane_buckets(emb: DataFrame,
+                              planes: List[Sequence[float]]) -> DataFrame:
     """Sign-LSH bucket id per row (random-hyperplane rounding, Charikar
     STOC 2002): bit b = (v · plane_b) > 0.
 
@@ -128,25 +81,10 @@ def random_hyperplane_buckets(emb: DataFrame, planes: List[Sequence[float]],
     bucket = F.lit(0).cast("bigint")
     for b, plane in enumerate(planes):
         p = F.array(*[F.lit(float(v)) for v in plane])
-        bit = F.when(_dot(F.col(vec_col), p) > 0,
+        bit = F.when(_dot(F.col("embedding"), p) > 0,
                      F.lit(1).cast("bigint")).otherwise(F.lit(0).cast("bigint"))
         bucket = bucket + F.shiftleft(bit, b)
-    return emb.select(F.col(id_col), bucket.alias("bucket"))
-
-
-def lsh_topk(emb: DataFrame, query: Sequence[float],
-             planes: List[Sequence[float]], k: int = 10,
-             id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """ANN top-k: score only rows in the query's hyperplane bucket."""
-    q_bucket = 0
-    for b, plane in enumerate(planes):
-        dot = sum(float(x) * float(y) for x, y in zip(query, plane))
-        if dot > 0:
-            q_bucket |= 1 << b
-    buckets = random_hyperplane_buckets(emb, planes, id_col, vec_col)
-    candidates = emb.join(
-        buckets.filter(F.col("bucket") == q_bucket).select(id_col), id_col)
-    return brute_force_topk(candidates, query, k, id_col, vec_col)
+    return emb.select(F.col("vec_id"), bucket.alias("bucket"))
 
 
 # ---------------------------------------------------------------------------
@@ -202,8 +140,7 @@ def _packed_codebook(cents: DataFrame) -> DataFrame:
                                     F.col("cvec")))).alias("_cents"))
 
 
-def _ivf_assign_broadcast(emb: DataFrame, cents: DataFrame,
-                          id_col: str, vec_col: str) -> DataFrame:
+def _ivf_assign_broadcast(emb: DataFrame, cents: DataFrame) -> DataFrame:
     """Scale path: nearest-cell assignment against a BROADCAST codebook.
 
     The k×dim centroid payload rides a broadcast relation (one row of
@@ -221,23 +158,22 @@ def _ivf_assign_broadcast(emb: DataFrame, cents: DataFrame,
     ragged (wrong-dim) vector yields NULL distances on BOTH paths —
     the final when() nulls the cell instead of letting NULLS-FIRST
     struct ordering elect a bogus winner."""
-    joined = emb.select(F.col(id_col), F.col(vec_col)) \
+    joined = emb.select(F.col("vec_id"), F.col("embedding")) \
         .join(F.broadcast(_packed_codebook(cents)))
     best = F.array_min(F.transform(
         F.col("_cents"),
         lambda c: F.struct(
-            _sq_dist_col(F.col(vec_col), c["cvec"]).alias("dist"),
+            _sq_dist_col(F.col("embedding"), c["cvec"]).alias("dist"),
             c["cell"].alias("cell"))))
     # stage `best` in its own projection: it is referenced twice (dist
     # guard + cell pick) and HOF expressions are never CSE'd
-    staged = joined.select(F.col(id_col), best.alias("_best"))
+    staged = joined.select(F.col("vec_id"), best.alias("_best"))
     cell = F.when(F.col("_best")["dist"].isNotNull(),
                   F.col("_best")["cell"]).cast("int")
-    return staged.select(F.col(id_col), cell.alias("cell"))
+    return staged.select(F.col("vec_id"), cell.alias("cell"))
 
 
-def ivf_assign(emb: DataFrame, centroids, id_col: str = "vec_id",
-               vec_col: str = "embedding",
+def ivf_assign(emb: DataFrame, centroids,
                broadcast_threshold: int = BROADCAST_K_THRESHOLD
                ) -> DataFrame:
     """(id, cell): nearest-centroid cell per row, first-minimum tie-break.
@@ -250,17 +186,16 @@ def ivf_assign(emb: DataFrame, centroids, id_col: str = "vec_id",
     the plan O(1) in k.  Both paths produce bit-identical assignments
     (same fold arithmetic, same tie rule)."""
     if isinstance(centroids, DataFrame):
-        return _ivf_assign_broadcast(emb, centroids, id_col, vec_col)
+        return _ivf_assign_broadcast(emb, centroids)
     if len(centroids) >= broadcast_threshold:
         cents = centroids_df(emb.sparkSession, centroids)
-        return _ivf_assign_broadcast(emb, cents, id_col, vec_col)
-    dists = F.array(*[_sq_dist(F.col(vec_col), c) for c in centroids])
+        return _ivf_assign_broadcast(emb, cents)
+    dists = F.array(*[_sq_dist(F.col("embedding"), c) for c in centroids])
     cell = (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-    return emb.select(F.col(id_col), cell.alias("cell"))
+    return emb.select(F.col("vec_id"), cell.alias("cell"))
 
 
 def kmeans_fit(emb: DataFrame, k: int = 3, iters: int = 2,
-               id_col: str = "vec_id", vec_col: str = "embedding",
                broadcast_threshold: int = BROADCAST_K_THRESHOLD
                ) -> List[List[float]]:
     """Train the IVF coarse quantizer: Lloyd's k-means over the
@@ -294,12 +229,12 @@ def kmeans_fit(emb: DataFrame, k: int = 3, iters: int = 2,
     """
     if k <= 0 or iters < 0:
         raise ValueError(f"k must be positive, iters >= 0: {k=}, {iters=}")
-    seed_rows = emb.select(F.col(id_col), F.col(vec_col)) \
-        .filter(F.col(vec_col).isNotNull()) \
-        .orderBy(id_col).limit(k).collect()
+    seed_rows = emb.select(F.col("vec_id"), F.col("embedding")) \
+        .filter(F.col("embedding").isNotNull()) \
+        .orderBy("vec_id").limit(k).collect()
     if len(seed_rows) < k:
         raise ValueError(f"need at least k={k} vectors, got {len(seed_rows)}")
-    centroids = [[float(v) for v in r[vec_col]] for r in seed_rows]
+    centroids = [[float(v) for v in r["embedding"]] for r in seed_rows]
     dim = len(centroids[0])
     for _ in range(iters):
         if k >= broadcast_threshold:
@@ -309,7 +244,7 @@ def kmeans_fit(emb: DataFrame, k: int = 3, iters: int = 2,
             # bit-identical to the literal path (see
             # `_ivf_assign_broadcast`; property- and oracle-tested)
             cents = centroids_df(emb.sparkSession, centroids)
-            joined = emb.select(F.col(vec_col).alias("_v")) \
+            joined = emb.select(F.col("embedding").alias("_v")) \
                 .join(F.broadcast(_packed_codebook(cents)))
             best = F.array_min(F.transform(
                 F.col("_cents"),
@@ -320,11 +255,11 @@ def kmeans_fit(emb: DataFrame, k: int = 3, iters: int = 2,
             cell = F.when(F.col("_best")["dist"].isNotNull(),
                           F.col("_best")["cell"]).cast("int")
         else:
-            dists = F.array(*[_sq_dist(F.col(vec_col), c)
+            dists = F.array(*[_sq_dist(F.col("embedding"), c)
                               for c in centroids])
             # stage the distance array: it is referenced twice (min +
             # position) and HOF expressions are never CSE'd (SPARK-35410)
-            staged = emb.select(F.col(vec_col).alias("_v"),
+            staged = emb.select(F.col("embedding").alias("_v"),
                                 dists.alias("_d"))
             cell = (F.array_position(F.col("_d"),
                                      F.array_min(F.col("_d")))
@@ -368,10 +303,7 @@ def query_probe_cells(query: Sequence[float],
     return order[:max(1, nprobe)]
 
 
-def _cells_with_payload(emb: DataFrame, centroids, id_col: str,
-                        vec_col: str,
-                        broadcast_threshold: int = BROADCAST_K_THRESHOLD
-                        ) -> DataFrame:
+def _cells_with_payload(emb: DataFrame, centroids) -> DataFrame:
     """(id, vec, cell) in ONE scan of ``emb`` — nearest-cell assignment
     carrying the vector payload through the projection (the `knn_join`
     corpus-side formulation), so callers never re-join a separate
@@ -380,42 +312,38 @@ def _cells_with_payload(emb: DataFrame, centroids, id_col: str,
     identical to `ivf_assign` (bit-identical assignments on both
     paths); rows with NULL/ragged vectors get a NULL cell."""
     if isinstance(centroids, DataFrame) \
-            or len(centroids) >= broadcast_threshold:
+            or len(centroids) >= BROADCAST_K_THRESHOLD:
         cents = centroids if isinstance(centroids, DataFrame) \
             else centroids_df(emb.sparkSession, centroids)
-        joined = emb.select(F.col(id_col), F.col(vec_col)) \
+        joined = emb.select(F.col("vec_id"), F.col("embedding")) \
             .join(F.broadcast(_packed_codebook(cents)))
         best = F.array_min(F.transform(
             F.col("_cents"),
             lambda c: F.struct(
-                _sq_dist_col(F.col(vec_col), c["cvec"]).alias("dist"),
+                _sq_dist_col(F.col("embedding"), c["cvec"]).alias("dist"),
                 c["cell"].alias("cell"))))
         # stage the HOF min in its own projection (never CSE'd,
         # referenced twice: NULL guard + cell pick)
-        staged = joined.select(F.col(id_col), F.col(vec_col),
+        staged = joined.select(F.col("vec_id"), F.col("embedding"),
                                best.alias("_best"))
         cell = F.when(F.col("_best")["dist"].isNotNull(),
                       F.col("_best")["cell"]).cast("int")
-        return staged.select(F.col(id_col), F.col(vec_col),
+        return staged.select(F.col("vec_id"), F.col("embedding"),
                              cell.alias("cell"))
-    dists = F.array(*[_sq_dist(F.col(vec_col), c) for c in centroids])
-    staged = emb.select(F.col(id_col), F.col(vec_col), dists.alias("_d"))
+    dists = F.array(*[_sq_dist(F.col("embedding"), c) for c in centroids])
+    staged = emb.select(F.col("vec_id"), F.col("embedding"),
+                        dists.alias("_d"))
     cell = (F.array_position(F.col("_d"), F.array_min(F.col("_d"))) - 1) \
         .cast("int")
-    return staged.select(F.col(id_col), F.col(vec_col),
+    return staged.select(F.col("vec_id"), F.col("embedding"),
                          cell.alias("cell"))
 
 
 def ivf_topk(emb: DataFrame, query: Sequence[float],
-             centroids, k: int = 10, nprobe: int = 2,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             kernel: str = "exact") -> DataFrame:
+             centroids, k: int = 10, nprobe: int = 2) -> DataFrame:
     """ANN top-k: brute-force cosine restricted to the query's nprobe
-    nearest IVF cells.  (id, cell, cosine), best first.  `kernel` picks
-    the candidate-scoring arithmetic (see module kernel note); cell
-    ASSIGNMENT always stays on the exact left-fold path — a flipped
-    assignment would change which rows are scanned, not just a low bit
-    of a score.  ``centroids`` may be a driver list or a (cell, cvec)
+    nearest IVF cells.  (vec_id, cell, cosine), best first.
+    ``centroids`` may be a driver list or a (cell, cvec)
     DataFrame (lake-scale codebook) — with a DataFrame, probe selection
     runs as a tiny k-row job (query enters as O(dim) literals) instead
     of collecting the codebook to the driver."""
@@ -432,20 +360,15 @@ def ivf_topk(emb: DataFrame, query: Sequence[float],
     # of the embedding relation) — re-joining a separate (id, cell)
     # frame back on the id would scan the corpus twice plus an id-keyed
     # exchange, the shape knn_join's corpus side explicitly avoids
-    candidates = _cells_with_payload(emb, centroids, id_col, vec_col) \
+    candidates = _cells_with_payload(emb, centroids) \
         .filter(F.col("cell").isin([int(p) for p in probes]))
     # score in place on the candidate frame — joining a separate scored
     # frame back would re-evaluate the centroid-argmin lineage twice
-    if kernel not in ("exact", "blas"):
-        raise ValueError(f"unknown kernel {kernel!r} (exact|blas)")
-    if kernel == "blas":
-        cos = _blas_query_cosine_udf(query)(F.col(vec_col))
-    else:
-        cos = _exact_query_cosine(F.col(vec_col), query)
-    scored = candidates.select(F.col(id_col), F.col("cell"),
+    cos = _exact_query_cosine(F.col("embedding"), query)
+    scored = candidates.select(F.col("vec_id"), F.col("cell"),
                                cos.alias("cosine"))
-    return scored.orderBy(F.col("cosine").desc(), F.col(id_col)) \
-        .select(id_col, "cell", "cosine").limit(k)
+    return scored.orderBy(F.col("cosine").desc(), F.col("vec_id")) \
+        .select("vec_id", "cell", "cosine").limit(k)
 
 
 # ---------------------------------------------------------------------------
@@ -471,11 +394,10 @@ def ivf_topk(emb: DataFrame, query: Sequence[float],
 
 
 def query_probe_cells_df(queries: DataFrame, cents: DataFrame,
-                         id_col: str = "query_id",
                          vec_col: str = "embedding",
                          nprobe: int = 2,
                          keep_cols: tuple = ()) -> DataFrame:
-    """(id, *keep_cols, cell): each query row's ``nprobe`` nearest
+    """(query_id, *keep_cols, cell): each query row's ``nprobe`` nearest
     centroid cells — the per-ROW twin of `query_probe_cells`, via the
     one-row broadcast codebook.  array_sort on (dist, cell) structs
     reproduces the (dist asc, cell asc) probe ordering exactly.  Queries
@@ -487,7 +409,7 @@ def query_probe_cells_df(queries: DataFrame, cents: DataFrame,
     query payload/norm in the SAME scan instead of re-reading the query
     table and joining the probe frame back on the id (the double-scan
     shape the corpus side of `knn_join` explicitly avoids)."""
-    base = list(dict.fromkeys([id_col, *keep_cols, vec_col]))
+    base = list(dict.fromkeys(["query_id", *keep_cols, vec_col]))
     joined = queries.select(*[F.col(c) for c in base]) \
         .join(F.broadcast(_packed_codebook(cents)))
     scored = F.transform(
@@ -496,7 +418,7 @@ def query_probe_cells_df(queries: DataFrame, cents: DataFrame,
             _sq_dist_col(F.col(vec_col), c["cvec"]).alias("dist"),
             c["cell"].alias("cell")))
     probes = F.slice(F.array_sort(scored), 1, max(1, int(nprobe)))
-    out = [id_col, *keep_cols]
+    out = ["query_id", *keep_cols]
     # stage the HOF result: referenced once here but explode must not
     # re-evaluate k folds per output row (HOFs are never CSE'd)
     staged = joined.select(*[F.col(c) for c in out], probes.alias("_p"))
@@ -509,9 +431,6 @@ def query_probe_cells_df(queries: DataFrame, cents: DataFrame,
 
 def knn_join(queries: DataFrame, corpus: DataFrame, centroids,
              k: int = 10, nprobe: int = 2,
-             query_id_col: str = "query_id",
-             corpus_id_col: str = "vec_id",
-             vec_col: str = "embedding",
              bucket_cap: int = 100_000,
              max_salts: int = 64) -> DataFrame:
     """(query_id, corpus_id, cosine, rank): the ``k`` highest-cosine
@@ -531,19 +450,19 @@ def knn_join(queries: DataFrame, corpus: DataFrame, centroids,
     # corpus side: broadcast-codebook cell assignment WITH the payload
     # (re-joining a separate (id, cell) frame would scan the corpus
     # twice) + the norm once per row
-    cjoined = corpus.select(F.col(corpus_id_col), F.col(vec_col)) \
+    cjoined = corpus.select(F.col("vec_id"), F.col("embedding")) \
         .join(F.broadcast(_packed_codebook(cents)))
     cbest = F.array_min(F.transform(
         F.col("_cents"),
         lambda c: F.struct(
-            _sq_dist_col(F.col(vec_col), c["cvec"]).alias("dist"),
+            _sq_dist_col(F.col("embedding"), c["cvec"]).alias("dist"),
             c["cell"].alias("cell"))))
-    cstaged = cjoined.select(F.col(corpus_id_col),
-                             F.col(vec_col).alias("_cv"),
+    cstaged = cjoined.select(F.col("vec_id"),
+                             F.col("embedding").alias("_cv"),
                              cbest.alias("_best"))
     cside = (cstaged
              .filter(F.col("_best")["dist"].isNotNull())
-             .select(F.col(corpus_id_col),
+             .select(F.col("vec_id"),
                      F.col("_cv"),
                      _norm(F.col("_cv")).alias("_cn"),
                      F.col("_best")["cell"].cast("int").alias("cell")))
@@ -551,24 +470,24 @@ def knn_join(queries: DataFrame, corpus: DataFrame, centroids,
     # query side: payload + norm carried THROUGH the probe projection
     # (one scan, no probe-frame re-join on the id — r7 review finding)
     qside = query_probe_cells_df(
-        queries.select(F.col(query_id_col),
-                       F.col(vec_col).alias("_qv"),
-                       _norm(F.col(vec_col)).alias("_qn")),
-        cents, query_id_col, "_qv", nprobe, keep_cols=("_qv", "_qn"))
+        queries.select(F.col("query_id"),
+                       F.col("embedding").alias("_qv"),
+                       _norm(F.col("embedding")).alias("_qn")),
+        cents, "_qv", nprobe, keep_cols=("_qv", "_qn"))
 
     # a corpus row owns exactly ONE cell and a query's probe cells are
     # distinct, so each (query, corpus) pair can match at most once —
     # no post-join distinct needed
-    joined = salted_two_sided_join(qside, cside, ["cell"], corpus_id_col,
+    joined = salted_two_sided_join(qside, cside, ["cell"], "vec_id",
                                    bucket_cap, max_salts)
     den = F.col("b._cn") * F.col("a._qn")
     cos = F.when(den > 0, _dot(F.col("a._qv"), F.col("b._cv")) / den)
     scored = (joined.select(
-        F.col(f"a.{query_id_col}").alias(query_id_col),
-        F.col(f"b.{corpus_id_col}").alias(corpus_id_col),
+        F.col("a.query_id").alias("query_id"),
+        F.col("b.vec_id").alias("vec_id"),
         cos.alias("cosine"))
         .filter(F.col("cosine").isNotNull()))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(corpus_id_col))
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("vec_id"))
     return (scored.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= int(k)))

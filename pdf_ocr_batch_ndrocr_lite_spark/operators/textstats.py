@@ -25,21 +25,20 @@ def _sql_pat(pat: str) -> str:
     return pat.replace("\\", "\\\\")
 
 
-def _marker_count(text_col, words):
+def _marker_count(words):
     pat = _sql_pat(r"\b(" + "|".join(words) + r")\b")
     # size(regexp_extract_all(...)) — supported by Spark and DuckDB alike;
     # explicit group 0 (Spark defaults to 1, DuckDB to 0).
-    return F.size(F.expr(
-        f"regexp_extract_all(lower({text_col}), '{pat}', 0)"))
+    return F.size(F.expr(f"regexp_extract_all(lower(text), '{pat}', 0)"))
 
 
-def lang_pred_col(text_col: str = "text"):
+def lang_pred_col():
     """Language-ID prediction as a pure COLUMN expression (composable into
     a fused signal projection — see `curation.curation_verdict`)."""
     cjk_hits = F.size(F.expr(
-        f"regexp_extract_all({text_col}, "
-        f"'[\\\\x{{3040}}-\\\\x{{30FF}}\\\\x{{4E00}}-\\\\x{{9FFF}}]', 0)"))
-    counts = {lang: _marker_count(text_col, words)
+        "regexp_extract_all(text, "
+        "'[\\\\x{3040}-\\\\x{30FF}\\\\x{4E00}-\\\\x{9FFF}]', 0)"))
+    counts = {lang: _marker_count(words)
               for lang, words in _LANG_MARKERS.items()}
     best = F.lit("unknown")
     best_n = F.lit(0)
@@ -47,25 +46,23 @@ def lang_pred_col(text_col: str = "text"):
         n = counts[lang]
         best = F.when(n >= best_n, F.lit(lang)).otherwise(best)
         best_n = F.greatest(n, best_n)
-    return F.when(cjk_hits * 4 >= F.length(F.col(text_col)), F.lit("cjk")) \
+    return F.when(cjk_hits * 4 >= F.length(F.col("text")), F.lit("cjk")) \
         .otherwise(F.when(best_n > 0, best).otherwise(F.lit("unknown")))
 
 
-def lang_id(docs: DataFrame, text_col: str = "text",
-            id_col: str = "doc_id") -> DataFrame:
+def lang_id(docs: DataFrame) -> DataFrame:
     """Heuristic language ID: CJK script ratio first, else the marker-word
     class with the highest hit count (ties resolve by fixed order en>de>es;
     no hits → 'unknown')."""
-    return docs.select(F.col(id_col),
-                       lang_pred_col(text_col).alias("lang_pred"))
+    return docs.select(F.col("doc_id"), lang_pred_col().alias("lang_pred"))
 
 
-def quality_col(text_col: str = "text"):
+def quality_col():
     """Composite quality score as a pure COLUMN expression."""
-    t = F.col(text_col)
+    t = F.col("text")
     n_chars = F.length(t)
     n_words = F.size(F.filter(F.split(t, r"\s+"), lambda w: w != ""))
-    n_stop = _marker_count(text_col, _LANG_MARKERS["en"])
+    n_stop = _marker_count(_LANG_MARKERS["en"])
     stop_ratio = F.when(n_words > 0, n_stop / n_words).otherwise(F.lit(0.0))
     mean_word_len = F.when(n_words > 0, n_chars / n_words).otherwise(F.lit(0.0))
     return (
@@ -76,21 +73,19 @@ def quality_col(text_col: str = "text"):
     )
 
 
-def quality_score(docs: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id") -> DataFrame:
+def quality_score(docs: DataFrame) -> DataFrame:
     """Length / punctuation / stopword-ratio quality features + composite
     score in [0,1].  Pure column arithmetic."""
-    t = F.col(text_col)
+    t = F.col("text")
     n_chars = F.length(t)
     n_words = F.size(F.filter(F.split(t, r"\s+"), lambda w: w != ""))
-    n_punct = F.size(F.expr(
-        f"regexp_extract_all({text_col}, '[.,;:!?]', 0)"))
-    n_stop = _marker_count(text_col, _LANG_MARKERS["en"])
+    n_punct = F.size(F.expr("regexp_extract_all(text, '[.,;:!?]', 0)"))
+    n_stop = _marker_count(_LANG_MARKERS["en"])
     punct_ratio = F.when(n_chars > 0, n_punct / n_chars).otherwise(F.lit(0.0))
     stop_ratio = F.when(n_words > 0, n_stop / n_words).otherwise(F.lit(0.0))
-    score = quality_col(text_col)
+    score = quality_col()
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_chars.alias("n_chars_obs"),
         n_words.alias("n_words"),
         punct_ratio.alias("punct_ratio"),
@@ -102,17 +97,15 @@ def quality_score(docs: DataFrame, text_col: str = "text",
     )
 
 
-def token_counts(docs: DataFrame, text_col: str = "text",
-                 id_col: str = "doc_id") -> DataFrame:
+def token_counts(docs: DataFrame) -> DataFrame:
     """Whitespace token count plus a BPE-ish subword count (runs of letters,
     digits, or single non-space symbols — an upper-bound proxy for tokenizer
     load, computable engine-side at full scan speed)."""
-    t = F.col(text_col)
+    t = F.col("text")
     ws = F.size(F.filter(F.split(t, r"\s+"), lambda w: w != ""))
     bpe = F.size(F.expr(
-        f"regexp_extract_all({text_col}, "
-        f"'[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\\\s]', 0)"))
-    return docs.select(F.col(id_col), ws.alias("ws_tokens"),
+        "regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\\\s]', 0)"))
+    return docs.select(F.col("doc_id"), ws.alias("ws_tokens"),
                        bpe.alias("bpe_tokens"))
 
 
@@ -122,9 +115,7 @@ ROLLING_BASE = 31
 ROLLING_INIT = 7
 
 
-def rolling_hash(docs: DataFrame, text_col: str = "text",
-                 id_col: str = "doc_id", prefix_chars: int = 256
-                 ) -> DataFrame:
+def rolling_hash(docs: DataFrame, prefix_chars: int = 256) -> DataFrame:
     """Polynomial rolling-hash document fingerprint over the first
     `prefix_chars` characters: h = fold((acc*31 + codepoint) % M, init=7).
 
@@ -136,43 +127,35 @@ def rolling_hash(docs: DataFrame, text_col: str = "text",
     text per row and keeps 256 — same result at ~1/1000th the allocation
     on book-length documents (the oracle's ``substring(text, 1, 256)`` is
     the same cut)."""
-    chars = F.split(F.substring(F.col(text_col), 1, prefix_chars), "")
+    chars = F.split(F.substring(F.col("text"), 1, prefix_chars), "")
     cps = F.transform(chars, lambda c: F.ascii(c).cast("bigint"))
     h = F.aggregate(
         cps, F.lit(ROLLING_INIT).cast("bigint"),
         lambda acc, c: (acc * ROLLING_BASE + c) % F.lit(ROLLING_MOD))
-    return docs.select(F.col(id_col), h.alias("rhash"))
+    return docs.select(F.col("doc_id"), h.alias("rhash"))
 
 
-def fingerprint(docs: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id", window: int = 5,
-                hasher: str = "md5") -> DataFrame:
+def fingerprint(docs: DataFrame, window: int = 5) -> DataFrame:
     """Winnowing-style document fingerprint (Schleimer/Wilkerson/Aiken,
     "Winnowing: Local Algorithms for Document Fingerprinting", SIGMOD
     2003 — min-hash-of-shingles variant): the minimum hash over all
     `window`-word shingles — stable under content reordering at the margins
     and usable as a near-dup blocking key.
 
-    hasher="md5" (default) is the engine-portable form with an exact DuckDB
-    oracle twin; hasher="xxhash64" is the production fast path (~2x cheaper
-    per shingle, Spark-only).  Either way the cost is dominated by shingle
-    STRING CONSTRUCTION, not hashing — the scale lever is scan parallelism
+    The md5 hash is the engine-portable form with an exact DuckDB oracle
+    twin.  The cost is dominated by shingle STRING CONSTRUCTION, not
+    hashing — the scale lever is scan parallelism
     (at 100 TB the parquet scan has thousands of splits; a single-rowgroup
     local fixture must be repartitioned to see the same parallelism, see
     q20 in __spark_entry__)."""
-    words = F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
+    words = F.filter(F.split(F.col("text"), r"\s+"), lambda w: w != "")
     n = F.size(words)
     idx = F.sequence(F.lit(0), F.greatest(n - F.lit(window), F.lit(0)))
     sh = F.when(n < window, F.array(F.array_join(words, " "))).otherwise(
         F.transform(idx,
                     lambda i: F.array_join(F.slice(words, i + 1, window), " ")))
-    if hasher == "md5":
-        fp = F.array_min(F.transform(sh, lambda s: F.md5(s)))
-    elif hasher == "xxhash64":
-        fp = F.array_min(F.transform(sh, lambda s: F.xxhash64(s)))
-    else:
-        raise ValueError(f"unknown hasher: {hasher!r}")
-    return docs.select(F.col(id_col), fp.alias("fingerprint"))
+    fp = F.array_min(F.transform(sh, lambda s: F.md5(s)))
+    return docs.select(F.col("doc_id"), fp.alias("fingerprint"))
 
 
 # ---------------------------------------------------------------------------
@@ -238,12 +221,12 @@ def repetition_stats(docs: DataFrame, id_col: str = "doc_id",
     top_gram_frac  = count(most frequent k-gram) / count(all k-grams)
     dup_gram_frac  = (n_grams - distinct_grams) / n_grams
 
-    Docs with no grams yield no row — mirroring `duplicate_line_stats`'s
-    n_lines > 0 contract, so the fractions are never NULL downstream (the
-    curation cascade thresholds on them).  The guard is expressed as the
-    EQUIVALENT cheap predicate ``text IS NOT NULL`` applied BEFORE the
-    gram projection: non-null text always yields ≥ 1 gram (a short text
-    collapses to one joined shingle), and a post-projection
+    Docs with no grams yield no row, so the fractions are never NULL
+    downstream (the curation cascade thresholds on them).  The guard is
+    expressed as the EQUIVALENT cheap predicate ``text IS NOT NULL``
+    applied BEFORE the gram projection: non-null text always yields ≥ 1
+    gram (a short text collapses to one joined shingle), and a
+    post-projection
     ``n_grams > 0`` filter would be predicate-pushed through the staged
     select, re-evaluating the whole HOF gram chain per row (lambdas are
     never CSE'd, SPARK-35410 — measured 4x on the q49 bench).
@@ -262,66 +245,6 @@ def repetition_stats(docs: DataFrame, id_col: str = "doc_id",
         .alias("top_gram_frac"),
         ((F.col("n_grams") - F.col("distinct_grams"))
          / F.col("n_grams").cast("double")).alias("dup_gram_frac"),
-    )
-
-
-def duplicate_line_stats(docs: DataFrame, id_col: str = "doc_id",
-                         text_col: str = "text") -> DataFrame:
-    """Line-level Gopher duplicates for newline-structured texts: fraction
-    of lines that are repeats of an earlier-seen line, and the fraction of
-    CHARACTERS those repeats carry (boilerplate footers repeat verbatim).
-
-    Row-local like `repetition_stats`: duplicate occurrences are the
-    equal-adjacent runs of the SORTED line array — zero shuffle (the
-    values never leave their row).  Docs with no non-blank lines yield no
-    row, matching the previous groupBy formulation; the guard is the
-    EQUIVALENT cheap pre-filter ``text rlike '[^ \\n]'`` (a line is
-    non-blank iff it has a char that is neither space nor newline) —
-    a post-projection ``n_lines > 0`` filter would be predicate-pushed
-    through the staged select and re-evaluate the whole split/sort chain
-    per row (lambdas are never CSE'd, SPARK-35410).  The line array and
-    the dup fold are STAGED in their own projections for the same
-    reason."""
-    staged = docs.filter(F.col(text_col).rlike("[^ \n]")).select(
-        F.col(id_col),
-        F.array_sort(
-            F.filter(F.split(F.col(text_col), r"\n"),
-                     lambda ln: F.trim(ln) != "")).alias("_lines"))
-    lines = F.col("_lines")
-    # fold state: (prev line, duplicate-occurrence count, duplicate chars)
-    dup = F.aggregate(
-        lines,
-        F.struct(F.lit(None).cast("string").alias("prev"),
-                 F.lit(0).cast("bigint").alias("dl"),
-                 F.lit(0).cast("bigint").alias("dc")),
-        lambda acc, ln: F.struct(
-            ln.alias("prev"),
-            F.when(ln == acc["prev"], acc["dl"] + 1)
-            .otherwise(acc["dl"]).alias("dl"),
-            F.when(ln == acc["prev"], acc["dc"] + F.length(ln))
-            .otherwise(acc["dc"]).alias("dc"),
-        ),
-    )
-    n_chars = F.aggregate(lines, F.lit(0).cast("bigint"),
-                          lambda acc, ln: acc + F.length(ln))
-    folded = staged.select(
-        F.col(id_col),
-        F.size(lines).cast("bigint").alias("n_lines"),
-        dup.alias("_d"),
-        n_chars.alias("n_chars_all"),
-    )
-    return folded.select(
-        F.col(id_col),
-        F.col("n_lines"),
-        F.col("_d")["dl"].alias("dup_lines"),
-        F.col("n_chars_all"),
-        F.col("_d")["dc"].alias("dup_chars"),
-    ).select(
-        F.col(id_col), "n_lines", "dup_lines",
-        (F.col("dup_lines") / F.col("n_lines").cast("double"))
-        .alias("dup_line_frac"),
-        (F.col("dup_chars") / F.col("n_chars_all").cast("double"))
-        .alias("dup_line_char_frac"),
     )
 
 
@@ -344,7 +267,6 @@ def duplicate_line_stats(docs: DataFrame, id_col: str = "doc_id",
 
 
 def hashed_bow_logit(docs: DataFrame, weights_tenths, bias_tenths: int = 0,
-                     id_col: str = "doc_id", text_col: str = "text",
                      threshold_tenths: int = 0) -> DataFrame:
     """(id, logit_tenths, keep): logit_tenths = bias + Σ over words of
     weights[md5hash60(word) % D] (all integer tenths, exact BIGINT math);
@@ -372,8 +294,8 @@ def hashed_bow_logit(docs: DataFrame, weights_tenths, bias_tenths: int = 0,
     # vanishing from any filter(keep) and diverging from the oracle's
     # COALESCE)
     staged = docs.select(
-        F.col(id_col),
-        F.filter(F.split(F.coalesce(F.col(text_col), F.lit("")), r"\s+"),
+        F.col("doc_id"),
+        F.filter(F.split(F.coalesce(F.col("text"), F.lit("")), r"\s+"),
                  lambda w: w != "").alias("_ws"),
         w_lit.alias("_w"))
     bucket = lambda w: F.pmod(_hash60(w), F.lit(D))  # noqa: E731
@@ -385,15 +307,13 @@ def hashed_bow_logit(docs: DataFrame, weights_tenths, bias_tenths: int = 0,
                                                     .cast("int"))),
                  F.lit(0).cast("bigint"), lambda acc, v: acc + v))
     return staged.select(
-        F.col(id_col),
+        F.col("doc_id"),
         logit.alias("logit_tenths"),
     ).withColumn("keep", F.col("logit_tenths")
                  > F.lit(int(threshold_tenths)).cast("bigint"))
 
 
-def top_k_words(docs: DataFrame, k: int = 100,
-                id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
+def top_k_words(docs: DataFrame, k: int = 100) -> DataFrame:
     """(word, count, doc_freq): the corpus's k most frequent whitespace
     words with total occurrence count and document frequency — the
     vocabulary profile tokenizer training (BPE corpus prep), stopword
@@ -409,11 +329,11 @@ def top_k_words(docs: DataFrame, k: int = 100,
     if k <= 0:
         raise ValueError(f"k must be positive: got {k}")
     words = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(F.filter(
-            F.split(F.coalesce(F.col(text_col), F.lit("")), r"\s+"),
+            F.split(F.coalesce(F.col("text"), F.lit("")), r"\s+"),
             lambda w: w != "")).alias("word"))
     counts = words.groupBy("word").agg(
         F.count(F.lit(1)).alias("count"),
-        F.countDistinct(F.col(id_col)).alias("doc_freq"))
+        F.countDistinct(F.col("doc_id")).alias("doc_freq"))
     return counts.orderBy(F.col("count").desc(), F.col("word")).limit(k)

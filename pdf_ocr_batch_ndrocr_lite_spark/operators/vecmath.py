@@ -4,9 +4,9 @@ the similarity operators and the embedding near-dup join).
 One definition on purpose: the fold ORDER is part of the oracle contract
 (a left fold in index order — DuckDB's list_aggregate reduces the same
 way), so a drifted copy would be an invisible correctness hazard.
-Measured on this box: this JVM HOF fold beats an Arrow/numpy pandas_udf
-for CPU cosine scans (vector IPC outweighs the BLAS savings — see the
-kernel='blas' notes in similarity.py)."""
+Measured: this JVM HOF fold beats an Arrow/numpy pandas_udf for CPU
+cosine scans (vector IPC outweighs the BLAS savings — see the kernel
+note in similarity.py)."""
 
 from __future__ import annotations
 

@@ -48,13 +48,8 @@ from ..operators.barrier import materialize
 
 
 def run_curation(docs: DataFrame,
-                 id_col: str = "doc_id",
-                 text_col: str = "text",
-                 stratum_col: str = "lang",
                  boilerplate_max_df: Optional[int] = None,
-                 boilerplate_min_chars: int = 10,
                  min_quality: float = 0.45,
-                 max_top_gram_frac: float = 0.10,
                  require_lang: bool = True,
                  near_dup: bool = True,
                  jaccard_threshold: float = 0.8,
@@ -74,62 +69,55 @@ def run_curation(docs: DataFrame,
     counts-don't-matter runs.
 
     ``boilerplate_max_df`` enables the CCNet-style LINE-level pre-pass:
-    lines present in more than that many documents are stripped from
-    EVERY document before any doc-level signal is computed — chrome that
-    would otherwise pollute the quality/repetition scores and the
-    near-dup shingles (two boilerplate-heavy pages look like near-dups
-    of each other even when their prose differs).  NULL-text documents
-    pass through the pre-pass untouched (rebuilt text left-joins back
-    onto the corpus), so they still receive an explicit verdict instead
-    of silently vanishing before the first stage."""
+    lines of 10+ chars present in more than that many documents are
+    stripped from EVERY document before any doc-level signal is
+    computed — chrome that would otherwise pollute the quality/repetition
+    scores and the near-dup shingles (two boilerplate-heavy pages look
+    like near-dups of each other even when their prose differs).
+    NULL-text documents pass through the pre-pass untouched (rebuilt text
+    left-joins back onto the corpus), so they still receive an explicit
+    verdict instead of silently vanishing before the first stage."""
     counts = {"input": docs.count()}
 
     if boilerplate_max_df is not None:
         rewritten = dd.remove_boilerplate_lines(
-            docs, id_col=id_col, text_col=text_col,
-            max_doc_freq=boilerplate_max_df,
-            min_chars=boilerplate_min_chars)
+            docs, max_doc_freq=boilerplate_max_df, min_chars=10)
         if scratch_dir is not None:
             rewritten = materialize(rewritten, "stage0_boilerplate",
                                     scratch_dir)
         # left join + coalesce: docs with NULL text produce no line rows
         # in the rebuild — they must survive the pre-pass (text unchanged)
         # rather than being inner-joined out of the corpus
-        repl = rewritten.select(id_col, F.col("text").alias("_rw_text"))
-        docs = (docs.join(repl, id_col, "left")
-                .withColumn(text_col, F.coalesce(F.col("_rw_text"),
-                                                 F.col(text_col)))
+        repl = rewritten.select("doc_id", F.col("text").alias("_rw_text"))
+        docs = (docs.join(repl, "doc_id", "left")
+                .withColumn("text", F.coalesce(F.col("_rw_text"),
+                                               F.col("text")))
                 .drop("_rw_text"))
         counts["boiler_lines_dropped"] = int(
             rewritten.agg(F.sum("dropped_lines")).collect()[0][0] or 0)
 
-    verdict = cu.curation_verdict(
-        docs, id_col=id_col, text_col=text_col,
-        min_quality=min_quality, max_top_gram_frac=max_top_gram_frac,
-        require_lang=require_lang)
+    verdict = cu.curation_verdict(docs, min_quality=min_quality,
+                                  require_lang=require_lang)
     # (barrier name, counts key, stage) in cascade order
     stages = [("stage1_verdict", "after_verdict",
                lambda d: d.join(verdict.filter(F.col("keep"))
-                                .select(id_col), id_col, "left_semi"))]
+                                .select("doc_id"), "doc_id", "left_semi"))]
     if near_dup:
         cc_scratch = (f"{scratch_dir}/stage2_cc"
                       if scratch_dir is not None else None)
         stages.append(("stage2_near_dup", "after_near_dup",
                        lambda d: dd.minhash_dedup(
-                           d, id_col=id_col, text_col=text_col,
-                           jaccard_threshold=jaccard_threshold,
+                           d, jaccard_threshold=jaccard_threshold,
                            max_df=max_df, transitive=transitive_dedup,
                            scratch_dir=cc_scratch)))
     if bench is not None:
         stages.append(("stage3_decontam", "after_decontam",
                        lambda d: mx.benchmark_decontaminate(
-                           d, bench, id_col=id_col, text_col=text_col,
-                           min_overlap=min_overlap)))
+                           d, bench, min_overlap=min_overlap)))
     if mix_rates is not None:
         stages.append(("stage4_mixing", "after_mixing",
                        lambda d: mx.stratified_sample(
-                           d, mix_rates, stratum_col=stratum_col,
-                           id_col=id_col, default_rate=default_rate)))
+                           d, mix_rates, default_rate=default_rate)))
 
     kept = docs
     for name, key, stage in stages:

@@ -30,10 +30,9 @@ from ..operators import linkgraph as lg
 from ..operators.barrier import materialize
 
 
-def run_webgraph(pages: DataFrame, html_col: str = "html",
-                 url_col: str = "url", iterations: int = 3,
+def run_webgraph(pages: DataFrame, iterations: int = 3,
                  redistribute_dangling: bool = False,
-                 drop_self: bool = True, psl: bool = True,
+                 drop_self: bool = True,
                  scratch_dir: Optional[str] = None,
                  seeds: Optional[DataFrame] = None):
     """(ranks, counts): host-level rank table (host, rank) over the
@@ -42,22 +41,19 @@ def run_webgraph(pages: DataFrame, html_col: str = "html",
     ``pages``: the standard pages table (html may be binary — decoded
     as UTF-8 here, matching the corpus schema).  ``seeds``: optional
     one-column frame of trusted HOSTS (registrable domains) → TrustRank.
-    ``psl=False`` ranks raw hostnames instead of registrable domains.
     """
     spark = pages.sparkSession
     counts: dict = {}
 
-    html = F.col(html_col)
-    if isinstance(pages.schema[html_col].dataType, T.BinaryType):
+    html = F.col("html")
+    if isinstance(pages.schema["html"].dataType, T.BinaryType):
         html = html.cast("string")
-    src = pages.select(F.col(url_col).alias("url"),
-                       html.alias("html"))
+    src = pages.select(F.col("url"), html.alias("html"))
 
     links = materialize(lg.resolve_links(src), "links", scratch_dir)
     counts["links"] = links.count()
     edges = materialize(
-        lg.host_edges(links, psl=psl, drop_self=drop_self), "edges",
-        scratch_dir)
+        lg.host_edges(links, drop_self=drop_self), "edges", scratch_dir)
     counts["host_edges"] = edges.count()
     if counts["host_edges"] == 0:
         # a corpus with no (inter-host) anchors has no graph to rank —

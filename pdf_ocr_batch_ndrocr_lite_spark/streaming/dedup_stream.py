@@ -34,8 +34,6 @@ this is the training-data extension's continuous-ingest shape.
 
 from __future__ import annotations
 
-from typing import Optional
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -70,68 +68,47 @@ DOCS_SCHEMA = "doc_id bigint, url string, text string, lang string"
 
 
 def read_docs_stream(spark: SparkSession, input_path: str,
-                     schema: str = DOCS_SCHEMA,
                      max_files_per_trigger: int = 8) -> DataFrame:
     """File-source stream over a growing directory of document parquet."""
     return (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(DOCS_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(input_path)
     )
 
 
 def dedup_batch_against_corpus(batch_df: DataFrame, corpus: DataFrame,
-                               id_col: str = "doc_id",
-                               text_col: str = "text",
-                               within_batch: bool = True,
-                               corpus_buckets: DataFrame | None = None,
-                               **dedup_kwargs) -> DataFrame:
+                               num_hashes: int = 8, bands: int = 4,
+                               k: int = 3, jaccard_threshold: float = 0.8,
+                               max_df: int | None = None,
+                               corpus_buckets: DataFrame | None = None
+                               ) -> DataFrame:
     """One micro-batch's survivors: within-batch near-dup pass first
     (a crawl batch carries its own repeats; lower id wins, matching
     `minhash_dedup`), then the strictly new×corpus incremental check.
     Exposed as a plain-DataFrame function so the batch-equivalence test
-    and the foreachBatch sink share one code path.
+    and the foreachBatch sink share one code path.  Both stages run with
+    the same LSH and verify settings.
 
     ``corpus_buckets``: the stored (id, band, key) LSH index of the
     corpus — pass it in a loop, or every batch re-hashes the whole
     corpus (see `incremental_minhash_dedup`)."""
-    import inspect
-
-    def _accepted(fn, kw):
-        sig = inspect.signature(fn).parameters
-        return {k: v for k, v in kw.items()
-                if k in sig and k != "corpus_buckets"}
-
-    # every kwarg must be consumed by at least one of the two operators:
-    # a typo'd tuning knob (jacard_threshold=...) silently running the
-    # stream with defaults would admit/drop the wrong documents with no
-    # signal
-    known = (set(inspect.signature(dd.minhash_dedup).parameters)
-             | set(inspect.signature(
-                 dd.incremental_minhash_dedup).parameters))
-    unknown = set(dedup_kwargs) - known
-    if unknown:
-        raise TypeError(
-            f"unknown dedup option(s): {sorted(unknown)} — accepted: "
-            f"{sorted(known - {'new', 'corpus', 'docs', 'id_col', 'text_col'})}")
-
-    new = batch_df
-    if within_batch:
-        new = dd.minhash_dedup(new, id_col, text_col,
-                               **_accepted(dd.minhash_dedup, dedup_kwargs))
-        # cut the lineage between the two dedup stages: the incremental
-        # join references `new` several times (band buckets, candidate
-        # semi-join, final anti-join), and each reference would inline
-        # the whole within-batch dedup subtree — bounded here, but the
-        # Catalyst planning cost of the composed tree is real (see the
-        # iterative self-join planning note in BASELINE.md).  A
-        # micro-batch is size-bounded by the trigger, so executor-local
-        # materialization is cheap.
-        new = materialize(new, "within_batch")
+    new = dd.minhash_dedup(batch_df, num_hashes=num_hashes, bands=bands,
+                           k=k, jaccard_threshold=jaccard_threshold,
+                           max_df=max_df)
+    # cut the lineage between the two dedup stages: the incremental
+    # join references `new` several times (band buckets, candidate
+    # semi-join, final anti-join), and each reference would inline
+    # the whole within-batch dedup subtree — bounded here, but the
+    # Catalyst planning cost of the composed tree is real (see the
+    # iterative self-join planning note in BASELINE.md).  A
+    # micro-batch is size-bounded by the trigger, so executor-local
+    # materialization is cheap.
+    new = materialize(new, "within_batch")
     return dd.incremental_minhash_dedup(
-        new, corpus, id_col, text_col,
-        corpus_buckets=corpus_buckets,
-        **_accepted(dd.incremental_minhash_dedup, dedup_kwargs))
+        new, corpus, num_hashes=num_hashes, bands=bands, k=k,
+        jaccard_threshold=jaccard_threshold, max_df=max_df,
+        corpus_buckets=corpus_buckets)
 
 
 def buckets_path_for(corpus_path: str) -> str:
@@ -140,12 +117,9 @@ def buckets_path_for(corpus_path: str) -> str:
     return corpus_path.rstrip("/") + "_buckets"
 
 
-def make_incremental_dedup_sink(corpus_path: str,
-                                id_col: str = "doc_id",
-                                text_col: str = "text",
-                                within_batch: bool = True,
-                                output_partitions: int = 4,
-                                **dedup_kwargs):
+def make_incremental_dedup_sink(corpus_path: str, num_hashes: int = 8,
+                                bands: int = 4, k: int = 3,
+                                jaccard_threshold: float = 0.8):
     """foreachBatch sink: admit each micro-batch's non-duplicate
     documents into the batch_id-partitioned corpus parquet (replay-safe,
     see module docstring).
@@ -159,9 +133,10 @@ def make_incremental_dedup_sink(corpus_path: str,
     O(|batch| + matched buckets)).  A pre-existing corpus without an
     index (pre-upgrade layout) is backfilled once, preserving each
     row's admitting batch_id so replay exclusion stays correct."""
-    bucket_kw = {k: dedup_kwargs[k]
-                 for k in ("num_hashes", "bands", "k")
-                 if k in dedup_kwargs}
+
+    def buckets(docs: DataFrame) -> DataFrame:
+        return dd.band_buckets(docs, num_hashes=num_hashes, bands=bands,
+                               k=k)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -183,9 +158,8 @@ def make_incremental_dedup_sink(corpus_path: str,
             list(batch_df.schema.fields)
             + [T.StructField("batch_id", T.LongType())])
         idx_schema = T.StructType(
-            list(dd.band_buckets(
-                spark.createDataFrame([], batch_df.schema),
-                id_col, text_col, **bucket_kw).schema.fields)
+            list(buckets(spark.createDataFrame([], batch_df.schema))
+                 .schema.fields)
             + [T.StructField("batch_id", T.LongType())])
 
         def _read(path, empty_schema):
@@ -222,8 +196,8 @@ def make_incremental_dedup_sink(corpus_path: str,
                 # upgrade path: corpus predates the index — backfill it
                 # ONCE with each row's admitting batch_id carried
                 # through, then proceed against the stored index
-                (dd.band_buckets(corpus_b, id_col, text_col, **bucket_kw)
-                 .join(corpus_b.select(id_col, "batch_id"), id_col)
+                (buckets(corpus_b)
+                 .join(corpus_b.select("doc_id", "batch_id"), "doc_id")
                  .write.mode("overwrite")
                  .partitionBy("batch_id").parquet(idx_path))
                 index = (_read(idx_path, idx_schema)
@@ -232,9 +206,8 @@ def make_incremental_dedup_sink(corpus_path: str,
             else:
                 index = None
         survivors = dedup_batch_against_corpus(
-            batch_df, corpus, id_col, text_col,
-            within_batch=within_batch, corpus_buckets=index,
-            **dedup_kwargs)
+            batch_df, corpus, num_hashes=num_hashes, bands=bands, k=k,
+            jaccard_threshold=jaccard_threshold, corpus_buckets=index)
         # coalesce: a micro-batch's survivors are trigger-bounded and
         # SMALL — writing the session's full shuffle-partition count of
         # part files per batch makes every later batch re-list and
@@ -243,7 +216,7 @@ def make_incremental_dedup_sink(corpus_path: str,
         # wall-clock GREW with batch count from file-count overhead
         # alone; at crawl scale it is also the millions-of-tiny-files
         # anti-pattern)
-        (survivors.coalesce(output_partitions)
+        (survivors.coalesce(4)
          .withColumn("batch_id", F.lit(batch_id))
          .write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")
@@ -253,8 +226,8 @@ def make_incremental_dedup_sink(corpus_path: str,
         admitted = (_read(corpus_path, corpus_schema)
                     .filter(F.col("batch_id") == F.lit(batch_id))
                     .drop("batch_id"))
-        (dd.band_buckets(admitted, id_col, text_col, **bucket_kw)
-         .coalesce(output_partitions)
+        (buckets(admitted)
+         .coalesce(4)
          .withColumn("batch_id", F.lit(batch_id))
          .write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")
@@ -268,13 +241,12 @@ def start_incremental_dedup_stream(
     input_path: str,
     corpus_path: str,
     stream_checkpoint: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     trigger_once: bool = False,
     max_files_per_trigger: int = 8,
-    schema: str = DOCS_SCHEMA,
-    within_batch: bool = True,
-    **dedup_kwargs,
+    num_hashes: int = 8,
+    bands: int = 4,
+    k: int = 3,
+    jaccard_threshold: float = 0.8,
 ):
     """Wire source → incremental-dedup sink and start the query.
 
@@ -282,11 +254,10 @@ def start_incremental_dedup_stream(
     run: admit everything new, then stop — the idiomatic 'resume' for
     continuous-crawl ingest.  Returns the StreamingQuery.
     """
-    docs = read_docs_stream(spark, input_path, schema,
-                            max_files_per_trigger)
+    docs = read_docs_stream(spark, input_path, max_files_per_trigger)
     sink = make_incremental_dedup_sink(
-        corpus_path, id_col, text_col, within_batch=within_batch,
-        **dedup_kwargs)
+        corpus_path, num_hashes=num_hashes, bands=bands, k=k,
+        jaccard_threshold=jaccard_threshold)
     writer = (
         docs.writeStream
         .foreachBatch(sink)

@@ -421,9 +421,6 @@ def test_fuzzy_contamination_catches_embedded_benchmark(spark):
     assert pairs[(1, 100)] == 1.0      # embedded leak: full containment
     assert pairs[(3, 100)] == 1.0      # verbatim copy
     assert not any(d == 2 for d, _ in pairs)
-    kept = sorted(r["doc_id"] for r in mx.fuzzy_decontaminate(
-        docs, bench, k=3, containment_threshold=0.5).collect())
-    assert kept == [2]
 
 
 def test_fuzzy_contamination_partial_quote_threshold(spark):
@@ -462,21 +459,6 @@ def test_fuzzy_contamination_bench_df_cap(spark):
     assert len(uncapped) == 5           # without the cap it fans out
 
 
-def test_fuzzy_contamination_prebuilt_bench_index(spark):
-    """A persisted bench shingle index must reproduce the from-scratch
-    result (the shingle-the-suite-once path)."""
-    docs, bench = _fuzzy_frames(spark)
-    idx = mx.bench_shingle_index(bench, "doc_id", "text", k=3)
-    a = sorted((r["doc_id"], r["bench_id"], r["containment"]) for r in
-               mx.fuzzy_contamination_pairs(
-                   docs, bench, k=3, containment_threshold=0.5).collect())
-    b = sorted((r["doc_id"], r["bench_id"], r["containment"]) for r in
-               mx.fuzzy_contamination_pairs(
-                   docs, bench, k=3, containment_threshold=0.5,
-                   bench_shingles=idx).collect())
-    assert a == b and a
-
-
 def _span_frames(spark):
     bench_text = "alpha bravo charlie delta echo foxtrot"
     docs = spark.createDataFrame([
@@ -506,20 +488,6 @@ def test_contaminated_spans_islands_and_clamp(spark):
     assert (1, 1, 10) in padded
 
 
-def test_strip_contamination_keeps_clean_text_verbatim(spark):
-    docs, bench = _span_frames(spark)
-    out = {r["doc_id"]: r for r in
-           mx.strip_contamination(docs, bench, k=3).collect()}
-    assert out[1]["text"] == "w0 w1 w2 w9 w10 w11"
-    assert out[1]["n_stripped_words"] == 6
-    # untouched doc: text byte-identical, zero stripped
-    assert out[2]["text"] == "clean page nothing shared here at all"
-    assert out[2]["n_stripped_words"] == 0
-    # fully-leaked doc empties (a later min-length filter drops it)
-    assert out[3]["text"] == "" and out[3]["n_stripped_words"] == 6
-    assert out[4]["text"] == "x0 x4 x5 x6 x7 x8 x12"
-
-
 def test_contaminated_spans_zero_word_doc_yields_no_span(spark):
     """A whitespace-only document (_nw=0, one degenerate '' shingle)
     colliding with a whitespace-only bench item must produce NO span —
@@ -536,7 +504,3 @@ def test_contaminated_spans_zero_word_doc_yields_no_span(spark):
             (r["span_start"], r["span_end"]))
     assert 1 not in by_doc                      # no bogus span
     assert by_doc[2] == [(0, 2)]                # real leak still found
-    stripped = {r["doc_id"]: r["n_stripped_words"]
-                for r in mx.strip_contamination(
-                    docs, bench, k=2, pad=1).collect()}
-    assert stripped[1] == 0

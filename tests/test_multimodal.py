@@ -36,23 +36,6 @@ def test_media_features_deterministic(spark):
     assert a == b
 
 
-def test_sample_frames_fanout(spark):
-    media = _media(spark, 60)
-    frames = mm.sample_frames(media, every_ms=1000)
-    agg = frames.groupBy("media_id").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.max("frame_index").alias("max_idx")).collect()
-    by_id = {r["media_id"]: r for r in agg}
-    kinds = {r["media_id"]: (r["kind"], r["duration_ms"])
-             for r in media.collect()}
-    for mid, (kind, dur) in kinds.items():
-        expected = 1 if kind == "image" else min(max(1, dur // 1000), 64)
-        assert by_id[mid]["n"] == expected, (mid, kind, dur)
-        assert by_id[mid]["max_idx"] == expected - 1
-    # frame payloads are distinct per (media, index)
-    assert frames.select("frame").distinct().count() == frames.count()
-
-
 def test_summary_matches_inputs(spark):
     media = _media(spark)
     s = {r["kind"]: r for r in mm.media_summary(media).collect()}

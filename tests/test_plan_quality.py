@@ -215,20 +215,6 @@ def test_curation_verdict_no_digest_window(spark):
     assert "BroadcastNestedLoopJoin" not in phys
 
 
-def test_exact_dedup_no_digest_window(spark):
-    """dedup.exact_dedup: same no-window guarantee (the hot-key shape
-    the line_dedup header documents), winner = combining agg +
-    AQE-splittable semi-join back."""
-    from pdf_ocr_batch_ndrocr_lite_spark.operators import dedup as dd
-    docs = spark.createDataFrame([(1, "x"), (2, "x"), (3, "y")],
-                                 "doc_id int, text string")
-    out = dd.exact_dedup(docs)
-    phys = out._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in phys
-    assert "partial_min" in phys
-    assert "LeftSemi" in phys
-
-
 def test_registrable_domain_staged_no_shuffle_no_duplication(spark):
     """The PSL cascade must stay a pure projection chain: zero
     exchanges, and every last-k concat subtree computed exactly ONCE

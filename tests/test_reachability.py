@@ -73,3 +73,157 @@ def test_every_package_module_is_reached_from_a_product_path():
         "package modules no product path imports (wire them into jobs.py, "
         f"__spark_entry__.py or a streaming sink, or delete them): "
         f"{unreached}")
+
+
+# ---------------------------------------------------------------------------
+# The operator surface: every public function in operators/, plans/ and
+# streaming/ is reached by a product caller, and every defaulted keyword
+# parameter on it is set by one.  A product caller is the CLI job, the
+# query surface, the bench, the perfbench harness, or the package's own
+# operator/plan/stream code; tests do not count.  Calls match by function
+# name (``f(...)`` or ``mod.f(...)``); a parameter counts as set when a
+# call passes it by keyword, by position, or through ``**NAME`` where NAME
+# is a module-level dict literal.
+# ---------------------------------------------------------------------------
+
+SURFACE = [REPO / PKG / d for d in ("operators", "plans", "streaming")]
+PRODUCT_CALLERS = sorted(
+    [REPO / PKG / "jobs.py", REPO / "__spark_entry__.py", REPO / "bench.py"]
+    + [p for d in SURFACE + [REPO / "perfbench"] for p in d.glob("*.py")])
+# the streaming sinks' entry points: started by a deployment, not called
+ROOT_FUNCTIONS = {"start_extraction_stream", "start_incremental_dedup_stream"}
+# Unset knobs that stay.  Each is either a knob a test sets to drive a
+# guard or a hand-computed case at small size, or a deployment setting.
+KNOB_ALLOWLIST = {
+    # salt-split guards (hot-bucket caps, salt fan-out), driven at small size
+    "dedup.minhash_lsh_candidates.bucket_cap",
+    "dedup.minhash_lsh_candidates.max_salts",
+    "dedup.incremental_minhash_dedup.bucket_cap",
+    "dedup.incremental_minhash_dedup.max_salts",
+    "dedup.simhash_near_dup_pairs.bucket_cap",
+    "dedup.embedding_near_dup_pairs.bucket_cap",
+    "similarity.knn_join.bucket_cap",
+    "similarity.knn_join.max_salts",
+    "mixing.stratified_exact_k.salt_partitions",
+    "mixing.stratified_exact_k.candidate_factor",
+    "sketches.kmv_distinct.salt_partitions",
+    # the centroid-transport switch, driven below k=16 by the path tests
+    "similarity.ivf_assign.broadcast_threshold",
+    "similarity.kmeans_fit.broadcast_threshold",
+    # LSH / verify settings of hand-computed dedup and decontam cases
+    "mixing.benchmark_decontaminate.k",
+    "curate.run_curation.jaccard_threshold",
+    "curate.run_curation.max_df",
+    "curate.run_curation.min_overlap",
+    "dedup_stream.start_incremental_dedup_stream.num_hashes",
+    "dedup_stream.start_incremental_dedup_stream.bands",
+    "dedup_stream.start_incremental_dedup_stream.k",
+    "dedup_stream.start_incremental_dedup_stream.jaccard_threshold",
+    # fixed-point PageRank arithmetic of the hand-computed rank cases
+    "linkgraph.pagerank.damping_num",
+    "linkgraph.pagerank.damping_den",
+    "linkgraph.pagerank.scale",
+    # deployment settings
+    "pipeline.build_session.driver_memory",
+    "extract_stream.start_extraction_stream.lineage_path",
+    "extract_stream.start_extraction_stream.trigger_once",
+    "extract_stream.start_extraction_stream.max_files_per_trigger",
+    "dedup_stream.start_incremental_dedup_stream.trigger_once",
+    "dedup_stream.start_incremental_dedup_stream.max_files_per_trigger",
+}
+
+
+def _surface_functions() -> dict:
+    """{name: (qualified "module.function", FunctionDef)} for every public
+    top-level function of the surface modules."""
+    found = {}
+    for d in SURFACE:
+        for path in sorted(d.glob("*.py")):
+            for node in ast.parse(path.read_text(), str(path)).body:
+                if (isinstance(node, ast.FunctionDef)
+                        and not node.name.startswith("_")):
+                    assert node.name not in found, (
+                        f"{node.name} is defined twice; calls match by name")
+                    found[node.name] = (f"{path.stem}.{node.name}", node)
+    return found
+
+
+def _product_usage(names) -> tuple:
+    """(every name a product caller references, {function name: [(Call,
+    keys it passes through ``**NAME``), ...]}) over every product
+    caller."""
+    refs, calls = set(), {}
+    for path in PRODUCT_CALLERS:
+        tree = ast.parse(path.read_text(), str(path))
+        dicts = {t.id: [k.value for k in node.value.keys
+                        if isinstance(k, ast.Constant)]
+                 for node in tree.body if isinstance(node, ast.Assign)
+                 and isinstance(node.value, ast.Dict)
+                 for t in node.targets if isinstance(t, ast.Name)}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                refs.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                refs.add(node.attr)
+            elif isinstance(node, ast.ImportFrom):
+                refs.update(alias.name for alias in node.names)
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = getattr(f, "id", None) or getattr(f, "attr", None)
+            if name in names:
+                splat = [k for kw in node.keywords if kw.arg is None
+                         and isinstance(kw.value, ast.Name)
+                         for k in dicts.get(kw.value.id, [])]
+                calls.setdefault(name, []).append((node, splat))
+    return refs, calls
+
+
+def _defaulted_params(fn: ast.FunctionDef) -> list:
+    """[(param, positional index or None)] of the parameters that carry a
+    default."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    out = [(p.arg, pos.index(p)) for p in pos[len(pos) - len(a.defaults):]]
+    return out + [(p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                  if d is not None]
+
+
+def _is_set(param: str, index, calls) -> bool:
+    for call, splat in calls:
+        if param in splat or any(kw.arg == param for kw in call.keywords):
+            return True
+        if index is not None and len(call.args) > index and not any(
+                isinstance(a, ast.Starred) for a in call.args[:index + 1]):
+            return True
+    return False
+
+
+def test_every_public_operator_is_reached_from_a_product_caller():
+    funcs = _surface_functions()
+    refs, _ = _product_usage(funcs)
+    unreached = sorted(qual for name, (qual, _) in funcs.items()
+                       if name not in refs and name not in ROOT_FUNCTIONS)
+    assert not unreached, (
+        "public functions in operators/, plans/ and streaming/ that no "
+        "product caller (jobs.py, __spark_entry__.py, bench.py, "
+        f"perfbench/, the package itself) references: {unreached}")
+
+
+def test_every_keyword_parameter_is_set_by_a_product_caller():
+    funcs = _surface_functions()
+    _, calls = _product_usage(funcs)
+    params, unset = set(), []
+    for name, (qual, fn) in funcs.items():
+        for param, index in _defaulted_params(fn):
+            key = f"{qual}.{param}"
+            params.add(key)
+            if (key not in KNOB_ALLOWLIST
+                    and not _is_set(param, index, calls.get(name, []))):
+                unset.append(key)
+    assert not unset, (
+        f"{len(unset)} of {len(params)} defaulted keyword parameters are "
+        "set by no product call and are not on KNOB_ALLOWLIST (fix the "
+        f"value and delete the parameter): {sorted(unset)}")
+    stale = sorted(KNOB_ALLOWLIST - params)
+    assert not stale, f"allowlisted parameters that no longer exist: {stale}"

@@ -271,72 +271,34 @@ def test_embedding_near_dup_cap_invariant(spark):
     assert split == plain
 
 
-def test_embedding_near_dup_blas_kernel_tolerance_verified(spark):
-    """kernel='blas' (Arrow/numpy einsum per candidate pair) vs the exact
-    left fold: identical pair SET (these double-precision vectors leave
-    margins that dwarf reduction-order noise), cosines within 1e-12, and
-    the default kernel stays 'exact' (the q29 oracle's bit-identical
-    path).  The join shape — bucketed + salt-split — is shared, so the
-    blas path inherits every hot-bucket guarantee."""
-    emb = _skewed_embeddings(spark)
-    exact = {(r["a_id"], r["b_id"]): r["cosine"]
-             for r in dd.embedding_near_dup_pairs(
-                 emb, threshold=0.999999).collect()}
-    blas = {(r["a_id"], r["b_id"]): r["cosine"]
-            for r in dd.embedding_near_dup_pairs(
-                emb, threshold=0.999999, kernel="blas").collect()}
-    assert set(exact) == set(blas)
-    for k, v in exact.items():
-        assert abs(v - blas[k]) < 1e-12
-    # and under the salt split too (cap forces s > 1 on the hot bucket)
-    blas_split = {(r["a_id"], r["b_id"]) for r in dd.embedding_near_dup_pairs(
-        emb, threshold=0.999999, bucket_cap=8, kernel="blas").collect()}
-    assert blas_split == set(exact)
-
-
 def test_embedding_near_dup_zero_norm_vector_excluded_not_fatal(spark):
     """A zero-norm embedding (dead row, zeroed-out record) has undefined
-    cosine: both kernels must EXCLUDE its pairs — the exact kernel would
-    otherwise abort the whole job with an ANSI DIVIDE_BY_ZERO, and a
-    NaN from the blas kernel would PASS a >= threshold filter (Spark
-    orders NaN above every number).  Verified regression."""
+    cosine: its pairs must be EXCLUDED — the fold would otherwise abort
+    the whole job with an ANSI DIVIDE_BY_ZERO.  Verified regression."""
     emb = spark.createDataFrame(
         [(0, "b", [1.0, 2.0, 3.0]),
          (1, "b", [1.0, 2.0, 3.0]),      # exact dup of 0 → pair survives
          (2, "b", [0.0, 0.0, 0.0])],     # zero norm → no pairs, no crash
         "vec_id int, label string, embedding array<double>")
-    for kern in ("exact", "blas"):
-        pairs = {(r["a_id"], r["b_id"])
-                 for r in dd.embedding_near_dup_pairs(
-                     emb, threshold=0.9, kernel=kern).collect()}
-        assert pairs == {(0, 1)}, kern
+    pairs = {(r["a_id"], r["b_id"])
+             for r in dd.embedding_near_dup_pairs(
+                 emb, threshold=0.9).collect()}
+    assert pairs == {(0, 1)}
 
 
-def test_embedding_near_dup_blas_null_and_ragged_rows_degrade(spark):
-    """kernel='blas' must share the exact kernel's failure semantics on
-    NULL / wrong-length embeddings: the row's pairs degrade to NULL
-    cosine (dropped by the threshold filter), never an np.stack abort
-    inside the executor."""
+def test_embedding_near_dup_null_and_ragged_rows_degrade(spark):
+    """NULL / wrong-length embeddings: the row's pairs degrade to NULL
+    cosine (dropped by the threshold filter), never an executor abort."""
     emb = spark.createDataFrame(
         [(0, "b", [1.0, 2.0, 3.0]),
          (1, "b", [1.0, 2.0, 3.0]),      # exact dup of 0 → pair survives
          (2, "b", None),                  # NULL embedding
          (3, "b", [1.0, 2.0])],          # ragged (wrong dim)
         "vec_id int, label string, embedding array<double>")
-    for kern in ("exact", "blas"):
-        pairs = {(r["a_id"], r["b_id"])
-                 for r in dd.embedding_near_dup_pairs(
-                     emb, threshold=0.9, kernel=kern).collect()}
-        assert pairs == {(0, 1)}, kern
-
-
-def test_embedding_near_dup_rejects_unknown_kernel(spark):
-    import pytest
-    emb = spark.createDataFrame([(0, "b", [1.0])],
-                                "vec_id int, label string, "
-                                "embedding array<double>")
-    with pytest.raises(ValueError, match="kernel"):
-        dd.embedding_near_dup_pairs(emb, kernel="BLAS")
+    pairs = {(r["a_id"], r["b_id"])
+             for r in dd.embedding_near_dup_pairs(
+                 emb, threshold=0.9).collect()}
+    assert pairs == {(0, 1)}
 
 
 def test_embedding_hot_bucket_split_bounds_cell_size(spark):
@@ -500,28 +462,18 @@ def test_remove_boilerplate_drops_all_occurrences(spark):
     assert (out[2]["kept_lines"], out[2]["dropped_lines"]) == (4, 0)
 
 
-def test_remove_boilerplate_broadcast_is_opt_in(spark):
+def test_remove_boilerplate_plan_has_no_broadcast_hint(spark):
     """The hot-line set is UNBOUNDED at crawl scale (every line with
     df > max_doc_freq — billions of strings on a web corpus with the
     default threshold), so the operator must not force a broadcast: the
-    default plan carries no broadcast hint (AQE picks broadcast at
-    runtime only when the set is actually small); force_broadcast=True
-    re-adds the hint; results are identical either way."""
+    plan carries no broadcast hint (AQE picks broadcast at runtime only
+    when the set is actually small)."""
     df = _line_corpus(spark)
-    default_plan = dd.remove_boilerplate_lines(
+    plan = dd.remove_boilerplate_lines(
         df, max_doc_freq=2, min_chars=5)._jdf \
         .queryExecution().analyzed().toString()
-    assert "UnresolvedHint" not in default_plan
-    assert "ResolvedHint" not in default_plan
-    forced_plan = dd.remove_boilerplate_lines(
-        df, max_doc_freq=2, min_chars=5, force_broadcast=True)._jdf \
-        .queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in forced_plan
-    a = sorted(map(tuple, dd.remove_boilerplate_lines(
-        df, max_doc_freq=2, min_chars=5).collect()))
-    b = sorted(map(tuple, dd.remove_boilerplate_lines(
-        df, max_doc_freq=2, min_chars=5, force_broadcast=True).collect()))
-    assert a == b
+    assert "UnresolvedHint" not in plan
+    assert "ResolvedHint" not in plan
 
 
 def test_remove_boilerplate_high_df_corpus_no_forced_broadcast(spark):
@@ -640,47 +592,6 @@ def test_minhash_dedup_transitive_mode(spark):
 # ---------------------------------------------------------------------------
 # Incremental (snapshot) dedup: new batch vs existing corpus (q62)
 # ---------------------------------------------------------------------------
-
-
-def test_exact_dedup_hot_digest_and_null_text(spark):
-    """Hot-key probe: 200k copies of ONE text (the empty-extraction /
-    template-page shape the operator exists to kill) plus uniques plus
-    NULL texts.  The combining winner agg + semi-join keeps semantics
-    identical to the window formulation it replaced — lowest id wins,
-    NULL texts are duplicates of each other — while no single task has
-    to sort the hot digest (the plan gate is in test_plan_quality)."""
-    n_hot = 200_000
-    hot = spark.range(n_hot).select(
-        F.col("id").alias("doc_id"),
-        F.lit("boilerplate page").alias("text"))
-    uniq = spark.range(n_hot, n_hot + 500).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("u"), F.col("id")).alias("text"))
-    nulls = spark.range(n_hot + 500, n_hot + 503).select(
-        F.col("id").alias("doc_id"),
-        F.lit(None).cast("string").alias("text"))
-    out = dd.exact_dedup(hot.unionAll(uniq).unionAll(nulls))
-    assert out.count() == 1 + 500 + 1
-    kept_hot = out.filter(F.col("text") == "boilerplate page").collect()
-    assert [r["doc_id"] for r in kept_hot] == [0]
-    kept_null = out.filter(F.col("text").isNull()).collect()
-    assert [r["doc_id"] for r in kept_null] == [n_hot + 500]
-
-
-def test_incremental_exact_dedup(spark):
-    """Batch repeats collapse first-wins; anything already in the corpus
-    dies; fresh text survives."""
-    corpus = spark.createDataFrame(
-        [(1, "seen before text")], "doc_id int, text string")
-    new = spark.createDataFrame(
-        [(10, "seen before text"),     # corpus dup → dropped
-         (11, "fresh new content"),    # survives
-         (12, "fresh new content"),    # within-batch dup of 11 → dropped
-         (13, "another fresh one")],
-        "doc_id int, text string")
-    kept = sorted(r["doc_id"] for r in dd.incremental_exact_dedup(
-        new, corpus).collect())
-    assert kept == [11, 13]
 
 
 def test_incremental_minhash_only_corpus_matches_drop(spark):
@@ -852,20 +763,18 @@ def test_remove_boilerplate_matches_python_reference_randomized(spark):
     assert got == expect
 
 
-def test_embedding_near_dup_blas_mixed_dims_score_at_own_length(spark):
-    """Review regression: a pair of mutually equal-length vectors must
-    score identically on both kernels even when OTHER rows in the same
-    Arrow batch carry a different dimension — per-batch max-dim
-    inference made results depend on batch boundaries."""
+def test_embedding_near_dup_mixed_dims_score_at_own_length(spark):
+    """A pair of mutually equal-length vectors scores at its own length
+    even when OTHER rows in the same bucket carry a different
+    dimension."""
     emb = spark.createDataFrame(
         [(0, "b", [1.0, 2.0]), (1, "b", [1.0, 2.0]),     # dim-2 dup pair
          (2, "b", [3.0, 4.0, 5.0]), (3, "b", [3.0, 4.0, 5.0])],  # dim-3
         "vec_id int, label string, embedding array<double>")
-    for kern in ("exact", "blas"):
-        pairs = {(r["a_id"], r["b_id"])
-                 for r in dd.embedding_near_dup_pairs(
-                     emb, threshold=0.99, kernel=kern).collect()}
-        assert pairs == {(0, 1), (2, 3)}, kern
+    pairs = {(r["a_id"], r["b_id"])
+             for r in dd.embedding_near_dup_pairs(
+                 emb, threshold=0.99).collect()}
+    assert pairs == {(0, 1), (2, 3)}
 
 
 # ---------------------------------------------------------------------------

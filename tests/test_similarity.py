@@ -69,22 +69,8 @@ def test_hyperplane_buckets_deterministic_and_partitioning(spark):
     assert len(set(b1.values())) > 1  # actually partitions the space
 
 
-def test_lsh_topk_subset_of_bucket_and_finds_query(spark):
-    q = _query(spark)
-    planes = _planes(64, 3)
-    got = sim.lsh_topk(_emb(spark), q, planes, k=5).collect()
-    assert got, "query bucket must not be empty (contains vec 0 itself)"
-    assert got[0]["vec_id"] == 0
-    # every hit lives in the query's bucket
-    buckets = {r["vec_id"]: r["bucket"]
-               for r in sim.random_hyperplane_buckets(
-                   _emb(spark), planes).collect()}
-    qb = buckets[0]
-    assert all(buckets[r["vec_id"]] == qb for r in got)
-
-
 # ---------------------------------------------------------------------------
-# Gopher repetition rules (textstats.repetition_stats / duplicate_line_stats)
+# Gopher repetition rules (textstats.repetition_stats)
 # ---------------------------------------------------------------------------
 
 
@@ -103,21 +89,6 @@ def test_repetition_stats_hand_computed(spark):
     assert got[1]["dup_gram_frac"] == 3 / 5   # (5-2)/5
     assert got[2]["n_grams"] == 3 and got[2]["dup_gram_frac"] == 0.0
     assert got[3]["n_grams"] == 1 and got[3]["top_gram_frac"] == 1.0
-
-
-def test_duplicate_line_stats_boilerplate_footer(spark):
-    from pdf_ocr_batch_ndrocr_lite_spark.operators import textstats as ts
-    text = "intro\nfooter line\nbody text here\nfooter line\nfooter line"
-    docs = spark.createDataFrame([(1, text), (2, "only\nunique\nlines")],
-                                 "doc_id int, text string")
-    got = {r["doc_id"]: r for r in ts.duplicate_line_stats(docs).collect()}
-    # 5 lines, 'footer line' x3 -> 2 duplicate occurrences
-    assert got[1]["n_lines"] == 5 and got[1]["dup_lines"] == 2
-    assert got[1]["dup_line_frac"] == 2 / 5
-    # char fraction: 2 * len('footer line') / total chars of all lines
-    total = len("intro") + 3 * len("footer line") + len("body text here")
-    assert got[1]["dup_line_char_frac"] == (2 * len("footer line")) / total
-    assert got[2]["dup_lines"] == 0 and got[2]["dup_line_frac"] == 0.0
 
 
 def test_curation_verdict_every_branch(spark):
@@ -354,53 +325,12 @@ def test_url_dedup_null_url_and_null_id_rows_pass_through(spark):
     assert sum(1 for r in out if r["url"] is None) == 4
 
 
-# --- BLAS kernel (tolerance-verified fast path) ---------------------------
-
-
-def test_blas_query_kernel_matches_exact_within_tolerance(spark):
-    """kernel='blas' (Arrow/numpy batch) vs the exact left fold: same
-    ids, same ORDER (margins in this corpus dwarf the ~1e-12 reduction-
-    order noise), cosines within 1e-9.  The default kernel must stay
-    'exact' — it is what the q15/q16/q51 oracle hashes gate."""
-    q = _query(spark)
-    exact = sim.brute_force_topk(_emb(spark), q, k=20).collect()
-    blas = sim.brute_force_topk(_emb(spark), q, k=20,
-                                kernel="blas").collect()
-    assert [r["vec_id"] for r in exact] == [r["vec_id"] for r in blas]
-    for a, b in zip(exact, blas):
-        # embeddings are stored float32: the exact kernel multiplies at
-        # float32 before the double fold, the blas kernel upcasts first —
-        # agreement is bounded by storage precision, not reduction order
-        assert abs(a["cosine"] - b["cosine"]) < 5e-6
-    # the blas plan runs the scoring in an Arrow python stage; the exact
-    # plan must stay fully JVM-side
-    blas_plan = sim.cosine_to_query(_emb(spark), q, kernel="blas") \
+def test_cosine_to_query_plan_stays_jvm_side(spark):
+    """Query scoring is the JVM left fold (what the q15/q16/q51 oracles
+    gate): no Python stage in the plan."""
+    plan = sim.cosine_to_query(_emb(spark), _query(spark)) \
         ._jdf.queryExecution().executedPlan().toString()
-    exact_plan = sim.cosine_to_query(_emb(spark), q) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in blas_plan
-    assert "Python" not in exact_plan
-
-
-def test_blas_ivf_kernel_matches_exact_and_keeps_exact_assignment(spark):
-    """ivf_topk(kernel='blas'): scores through numpy, but the cell
-    ASSIGNMENT stays on the exact left fold (a flipped assignment would
-    change which rows are scanned); results match the exact kernel."""
-    rows, cents = [], [[10.0, 0, 0, 0], [0, 10.0, 0, 0], [0, 0, 10.0, 0]]
-    import random as _r
-    rng = _r.Random(3)
-    for i in range(90):
-        c = cents[i % 3]
-        rows.append((i, [v + rng.gauss(0, 0.1) for v in c]))
-    emb = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
-    q = [9.0, 0.5, 0.0, 0.0]
-    exact = sim.ivf_topk(emb, q, cents, k=7, nprobe=2).collect()
-    blas = sim.ivf_topk(emb, q, cents, k=7, nprobe=2,
-                        kernel="blas").collect()
-    assert [(r["vec_id"], r["cell"]) for r in exact] == \
-        [(r["vec_id"], r["cell"]) for r in blas]
-    for a, b in zip(exact, blas):
-        assert abs(a["cosine"] - b["cosine"]) < 1e-9
+    assert "Python" not in plan
 
 
 # --- hashed bag-of-words classifier scoring --------------------------------
@@ -707,7 +637,7 @@ def test_url_dedup_null_urls_pass_through(spark):
     assert got == [0, 2, 3, 4]
 
 
-def test_canonical_link_and_dedup(spark):
+def test_canonical_dedup_declared_canonical_and_fallback(spark):
     """rel=canonical extraction: both attribute orders, any rel quoting,
     stylesheet decoys never match, relative canonicals drop; dedup
     collapses mirrors by declared canonical (distinct urls!) and falls
@@ -724,15 +654,13 @@ def test_canonical_link_and_dedup(spark):
          '<link rel="canonical" href="/relative">'),  # relative: drops
     ]
     pages = spark.createDataFrame(rows, "doc_id int, url string, html string")
-    got = {r["url"]: r["canonical"]
-           for r in cu.canonical_link(pages).collect()}
-    assert got == {"https://m1.org/a": "https://c.org/x",
-                   "https://m2.org/b": "https://c.org/x",
-                   "https://m3.org/c": None,
-                   "https://m4.org/d": None}
     out = cu.canonical_dedup(pages)
-    kept = sorted(r["doc_id"] for r in out.collect())
-    assert kept == [1, 3, 4]  # 2 collapses into 1 via the shared canonical
+    got = {r["doc_id"]: r["canon_key"] for r in out.collect()}
+    # 2 collapses into 1 via the shared canonical; the decoy and the
+    # relative canonical fall back to the page's own canonical url
+    assert got == {1: "https://c.org/x",
+                   3: "https://m3.org/c",
+                   4: "https://m4.org/d"}
     phys = out._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in phys
     assert "partial_min" in phys

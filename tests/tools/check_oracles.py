@@ -4,6 +4,10 @@ names, Arrow-level value types, and order-insensitive values.
 
     python tests/tools/check_oracles.py [query_name ...]
 
+A name is a full query name or a unique ``qNN`` prefix of one (``q24``
+selects ``q24_...``); an unknown or ambiguous name exits non-zero before
+any query runs.
+
 The round-1 lesson: DuckDB ``SUM(INTEGER)`` returns HUGEINT
 (arrow decimal128(38,0)) while Spark returns BIGINT (int64).  Comparing
 ``str(value)`` erases that difference but the driver's value-hash does not —
@@ -74,6 +78,28 @@ def table_to_multiset(tbl):
     rows = sorted(
         tuple(norm_value(c[i]) for c in cols) for i in range(tbl.num_rows))
     return names, fams, rows
+
+
+def resolve_names(args, names) -> list:
+    """Full query names for the command-line ``args``: an exact name, or
+    a prefix that selects exactly one name up to its ``_`` boundary
+    (``q24`` → ``q24_...``, never ``q240_...``).  Raises ValueError naming
+    every argument that matches no query or more than one."""
+    resolved, errors = [], []
+    for arg in args:
+        if arg in names:
+            resolved.append(arg)
+            continue
+        hits = sorted(n for n in names if n.startswith(arg + "_"))
+        if len(hits) == 1:
+            resolved.append(hits[0])
+        elif hits:
+            errors.append(f"{arg!r} is ambiguous: {hits}")
+        else:
+            errors.append(f"{arg!r} matches no query")
+    if errors:
+        raise ValueError("; ".join(errors))
+    return resolved
 
 
 def main(only=None, json_out=None):
@@ -174,4 +200,9 @@ if __name__ == "__main__":
             sys.exit("usage: check_oracles.py [names...] [--json PATH]")
         json_out = args[i + 1]
         args = args[:i] + args[i + 2:]
-    main(set(args) or None, json_out=json_out)
+    import __spark_entry__ as entrymod
+    try:
+        only = resolve_names(args, set(entrymod.queries()))
+    except ValueError as e:
+        sys.exit(f"check_oracles.py: {e}")
+    main(set(only) or None, json_out=json_out)
