@@ -45,9 +45,12 @@ def parse_args(argv):
     p.add_argument("--master", default=None,
                    help="override master (default: from spark-submit)")
     p.add_argument("--num-buckets", type=int, default=256,
-                   help="checkpoint partition-key buckets")
+                   help="url-hash buckets: the checkpoint partition keys and "
+                   "the sink partitions; each bucket is written by one "
+                   "task while it is at least --num-partitions")
     p.add_argument("--num-partitions", type=int, default=0,
-                   help="extraction-stage partitions (0 = shuffle default)")
+                   help="extraction tasks, placed by url bucket "
+                   "(0 = spark.sql.shuffle.partitions)")
     p.add_argument("--seed", type=int, default=42)
     p.add_argument("--ocr-engine", default=None,
                    choices=["fake", "fake-text"],

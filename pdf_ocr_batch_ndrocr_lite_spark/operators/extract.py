@@ -23,7 +23,7 @@ from typing import (TYPE_CHECKING, Any, Callable, Dict, Iterator, List,
                     Optional, Sequence)
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import html_extract, image_meta, ocr_parse, pdf_scan, textops
@@ -38,6 +38,10 @@ EXTRACT_SCHEMA = (
     "block_count int, parse_warnings int, low_coverage int, "
     "bytes_in bigint, seconds double"
 )
+
+# Buckets of the url hash (`url_bucket`): the checkpoint's partition_key
+# universe and the keyed sink's partitions.
+DEFAULT_NUM_BUCKETS = 256
 
 # Text-layer thresholds (app.py:98-100).
 MIN_TEXT_LAYER_CHARS = 10
@@ -273,31 +277,54 @@ def extract_batches(engine: Optional["EngineFn"] = None) -> BatchFn:
                     ("url", "html", "lang", "skip_name", "bytes_len"))
 
 
-def salted_repartition(df: DataFrame, num_partitions: int = 0) -> DataFrame:
-    """HASH-repartition on a per-url salt so the 1% giant-doc tail spreads
+def url_bucket(n: int) -> Column:
+    """The one url hash: ``pmod(xxhash64(url), n)`` as an int.  The
+    checkpoint's ``partition_key``, the lineage rollup, the keyed sink and
+    the extraction exchange all key on it; xxhash64 is JVM-side, no UDF."""
+    return F.pmod(F.xxhash64(F.col("url")), F.lit(n)).cast("int")
+
+
+def salted_repartition(df: DataFrame, num_partitions: int = 0,
+                       num_buckets: int = DEFAULT_NUM_BUCKETS) -> DataFrame:
+    """Place rows by their sink bucket so each ``url_bucket(num_buckets)``
+    bucket is written by one task, and the giant-doc tail still spreads
     uniformly across tasks.
+
+    ``num_partitions`` = n tasks (0 = ``spark.sql.shuffle.partitions``).
+    The salt is ``url_bucket(num_buckets * k)`` with k = ceil(n /
+    num_buckets); salt mod num_buckets is the bucket, and the exchange
+    sends salt s to task s mod n (``repartitionById``, no hash).  So:
+      n <= num_buckets: k = 1, the salt IS the bucket and every bucket
+        lands in exactly one task (num_buckets / n each when n divides it);
+      n > num_buckets: every task still gets work, and a bucket spreads
+        over at most k tasks (one salt per task when n = k * num_buckets).
+    The keyed sink writes one file per (task, bucket) pair, so this is
+    one file per bucket while n <= num_buckets.
 
     Deliberately NOT repartitionByRange: range partitioning balances ROW
     counts, so the few hundred giant docs land contiguously in one or
     two partitions — measured 5x slower end-to-end (27s vs 5.4s at sf0.1)
-    because one task inherits ~50% of total work.  Uniform hash placement
-    bounds the expected giants-per-task at (n_giants / n_partitions); with
+    because one task inherits ~50% of total work.  Buckets are url hashes,
+    not size ranges, so placement by bucket is still a uniform spread:
+    expected giants per task ≈ n_giants / n_partitions, and with
     partitions ≈ 4x cores the straggler tail is a single giant doc.  (A
     size-bucketed range scheme was prototyped and removed for the same
     reason: any strategy that CO-LOCATES the large-payload tail loses to
     uniform hash spread.)"""
-    df = df.withColumn("salt", F.pmod(F.xxhash64(F.col("url")), F.lit(8192)))
-    if num_partitions > 0:
-        return df.repartition(num_partitions, "salt")
-    return df.repartition("salt")
+    n = num_partitions or int(
+        df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    k = -(-n // num_buckets)
+    return df.repartitionById(n, url_bucket(num_buckets * k))
 
 
 def run_extraction(pages_df: DataFrame, num_partitions: int = 0,
-                   engine: Optional["EngineFn"] = None) -> DataFrame:
-    """Single-pass plan: one input scan, one salted exchange, one vectorized
-    extraction stage.  With ``engine`` (operators/ocr_engine.EngineFn),
-    documents that route ``needs_ocr`` continue into it inside the same
-    stage — the plan shape does not change.
+                   engine: Optional["EngineFn"] = None,
+                   num_buckets: int = DEFAULT_NUM_BUCKETS) -> DataFrame:
+    """Single-pass plan: one input scan, one exchange keyed on the sink
+    bucket (`salted_repartition`), one vectorized extraction stage.  With
+    ``engine`` (operators/ocr_engine.EngineFn), documents that route
+    ``needs_ocr`` continue into it inside the same stage — the plan shape
+    does not change.
 
     The name-rule skip predicate (app.py:87, 1306-1313) is evaluated as a
     Catalyst RLike COLUMN during the scan rather than as a branch filter —
@@ -306,18 +333,20 @@ def run_extraction(pages_df: DataFrame, num_partitions: int = 0,
     for lineage but shed their payload before the shuffle (no reason to
     move bytes we will not parse).
     """
-    flagged = flag_pages(pages_df, num_partitions)
+    flagged = flag_pages(pages_df, num_partitions, num_buckets)
     return flagged.mapInPandas(extract_batches(engine), schema=EXTRACT_SCHEMA)
 
 
 def flag_pages(pages_df: DataFrame, num_partitions: int = 0,
+               num_buckets: int = DEFAULT_NUM_BUCKETS,
                salt: bool = True) -> DataFrame:
     """The shared pre-dispatch projection: name-rule skip flag, byte
-    count for lineage, payload shed for skip rows, salted repartition —
+    count for lineage, payload shed for skip rows, bucket exchange —
     the ONE definition `run_extraction` and `streaming.extract_stream`
     feed their python stage from (a drifted copy would silently fork
-    skip/shedding semantics between the paths).  ``salt=False`` skips the repartition for inputs that
-    are already size-bounded (streaming micro-batches)."""
+    skip/shedding semantics between the paths).  ``salt=False`` skips the
+    exchange for inputs that are already size-bounded (streaming
+    micro-batches)."""
     flagged = pages_df.select(
         "url", "lang",
         F.col("url").rlike(GENERATED_NAME_PATTERN).alias("skip_name"),
@@ -327,4 +356,4 @@ def flag_pages(pages_df: DataFrame, num_partitions: int = 0,
     )
     if not salt:
         return flagged
-    return salted_repartition(flagged, num_partitions).drop("salt")
+    return salted_repartition(flagged, num_partitions, num_buckets)

@@ -103,9 +103,10 @@ def run_ocr(docs: DataFrame, engine: Optional[EngineFn] = None,
     rows with ``doc_kind`` ``ocr`` and an empty ``lang``, one vectorized
     stage.
 
-    Payloads are salted-HASH-repartitioned first (same giant-doc-tail
-    reasoning as the dispatcher, `extract.salted_repartition`) — OCR cost
-    scales with payload size, so the tail must spread."""
+    Payloads go through the dispatcher's exchange first
+    (`extract.salted_repartition`: placed by url bucket, a uniform hash
+    spread) — OCR cost scales with payload size, so the tail must
+    spread."""
     engine = engine or deterministic_fake_engine
 
     def ocr_row(url, payload, page_count) -> Dict[str, Any]:
@@ -118,7 +119,7 @@ def run_ocr(docs: DataFrame, engine: Optional[EngineFn] = None,
         return out
 
     sel = docs.select("url", "payload", "page_count")
-    sel = ex.salted_repartition(sel, num_partitions).drop("salt")
+    sel = ex.salted_repartition(sel, num_partitions)
     return sel.mapInPandas(
         ex.map_rows(ocr_row, ("url", "payload", "page_count")),
         schema=ex.EXTRACT_SCHEMA)

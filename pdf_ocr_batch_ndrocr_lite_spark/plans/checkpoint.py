@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from ..operators import extract as ex
 from ..sources.storage import StorageAdapter
 
-DEFAULT_NUM_BUCKETS = 256
+DEFAULT_NUM_BUCKETS = ex.DEFAULT_NUM_BUCKETS
 
 CHECKPOINT_COLS = [
     "partition_key", "docs", "pages", "bytes", "parse_failures",
@@ -56,11 +56,9 @@ def run_counters() -> List[Column]:
 
 def with_partition_key(df: DataFrame, num_buckets: int = DEFAULT_NUM_BUCKETS
                        ) -> DataFrame:
-    """Deterministic url-hash bucket; xxhash64 is JVM-side, no UDF."""
-    return df.withColumn(
-        "partition_key",
-        F.pmod(F.xxhash64(F.col("url")), F.lit(num_buckets)).cast("int"),
-    )
+    """Deterministic url-hash bucket (`extract.url_bucket`), the key the
+    extraction exchange places rows by."""
+    return df.withColumn("partition_key", ex.url_bucket(num_buckets))
 
 
 def pending_only(pages_df: DataFrame, spark: SparkSession,

@@ -5,9 +5,11 @@ Logical plan (all declarative until the single vectorized UDF stage):
     read pages table
       → anti-join finished checkpoint partitions   (resume, broadcast)
       → name-rule RLike filter                     (Catalyst predicate)
-      → salted HASH repartition                    (skew defusal; range
-                                                    co-locates the giant-doc
-                                                    tail — measured 5x worse)
+      → exchange by url bucket                     (one task per sink
+                                                    bucket; a url hash still
+                                                    spreads the giant-doc
+                                                    tail — range co-locates
+                                                    it, measured 5x worse)
       → ONE mapInPandas extraction stage           (Arrow, no per-row Python)
       → overwrite-by-partition-key extractions sink (idempotent replay)
       → per-partition-key lineage rollup → MERGE   (idempotent metrics)
@@ -149,7 +151,7 @@ def run_pipeline(
         todo = ck.with_partition_key(pages_df, num_buckets)
 
     results = ex.run_extraction(todo, num_partitions=num_partitions,
-                                engine=ocr_engine)
+                                engine=ocr_engine, num_buckets=num_buckets)
 
     def _totals(df: DataFrame) -> Dict[str, int]:
         row = df.groupBy().agg(*ck.run_counters()).collect()[0]
@@ -166,7 +168,9 @@ def run_pipeline(
     results = results.persist()
     try:
         # keyed idempotent sink: partition by the same stable url-hash bucket
-        # the checkpoint uses, so a replayed key overwrites its own partition
+        # the checkpoint uses, so a replayed key overwrites its own partition;
+        # the exchange placed each bucket in one task, so one file per bucket
+        # (while num_partitions <= num_buckets)
         storage.overwrite_partitions(
             ck.with_partition_key(
                 results.filter(F.col("action") == ex.ACTION_EXTRACTED),

@@ -147,6 +147,72 @@ def test_partial_resume_no_duplicates(spark, tmp_path):
     assert final.count() == final.select("url").distinct().count()
 
 
+def _files_per_bucket(out: str) -> dict:
+    """{partition_key directory: number of part files in it}."""
+    import os
+    return {d: sum(f.startswith("part-") for f in os.listdir(f"{out}/{d}"))
+            for d in os.listdir(out) if d.startswith("partition_key=")}
+
+
+def _lineage_counters(spark, ckpt: str) -> dict:
+    """{partition_key: counter columns} of the lineage table, without the
+    run-dependent seconds and updated_at."""
+    keep = [c for c in ck.CHECKPOINT_COLS
+            if c not in ("partition_key", "seconds", "updated_at")]
+    return {r["partition_key"]: tuple(r[c] for c in keep)
+            for r in spark.read.parquet(ckpt).collect()}
+
+
+def test_sink_writes_one_file_per_bucket_across_resume(spark, tmp_path):
+    """The exchange places rows by the sink's own url bucket, so every
+    ``partition_key`` directory is written by exactly one task: one part
+    file per bucket.  A resume that reruns the pending buckets replaces
+    their files with one file each, and ends with the clean run's rows
+    and lineage counters."""
+    import shutil
+    out = str(tmp_path / "extractions")
+    ckpt = str(tmp_path / "checkpoint")
+    storage = StorageAdapter()
+    df = corpus_df(spark, 120, seed=SEED, partitions=4)
+
+    def run():
+        return run_pipeline(spark, df, output_path=out, checkpoint_path=ckpt,
+                            storage=storage, num_buckets=16,
+                            num_partitions=4)
+
+    clean = run()
+    files = _files_per_bucket(out)
+    assert len(files) > 8 and set(files.values()) == {1}, files
+    rows = sorted(spark.read.parquet(out).collect())
+    lineage = _lineage_counters(spark, ckpt)
+
+    # the crash: the sink committed every bucket, the lineage only half
+    done = [r for r in spark.read.parquet(ckpt).collect()
+            if r["partition_key"] < 8]
+    schema = spark.read.parquet(ckpt).schema
+    shutil.rmtree(ckpt)
+    spark.createDataFrame(done, schema).write.parquet(ckpt)
+
+    resumed = run()
+    assert 0 < resumed["docs"] < clean["docs"]
+    assert _files_per_bucket(out) == files
+    assert sorted(spark.read.parquet(out).collect()) == rows
+    assert _lineage_counters(spark, ckpt) == lineage
+
+
+def test_sink_bucket_spreads_over_at_most_k_tasks(spark, tmp_path):
+    """More tasks than buckets (n = 16 > B = 4): the salt refines to
+    ``url_bucket(B * k)``, k = ceil(n / B) = 4, so every task gets work
+    and no bucket is written by more than k tasks."""
+    out = str(tmp_path / "extractions")
+    df = corpus_df(spark, 120, seed=SEED, partitions=4)
+    totals = run_pipeline(spark, df, output_path=out, num_buckets=4,
+                          num_partitions=16)
+    files = _files_per_bucket(out)
+    assert len(files) == 4 and max(files.values()) <= 4, files
+    assert spark.read.parquet(out).count() == totals["extracted"]
+
+
 def test_image_rows_in_corpus(results):
     kinds = {r["doc_kind"] for r in results.values()}
     assert "image" in kinds

@@ -4,6 +4,8 @@ regression fails loudly here instead of silently costing 100x at 100 TB."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -74,6 +76,39 @@ def test_extraction_single_python_stage(spark, tmp_path):
     assert plan.count("MapInPandas") == 1, plan
     assert plan.count("Exchange ") == 1, plan
     assert plan.count("Scan parquet") == 1, plan
+
+
+def _placements(df, buckets: int) -> set:
+    """{(url_bucket(buckets), spark_partition_id())} over ``df``."""
+    return {(r["b"], r["p"]) for r in df.select(
+        ex.url_bucket(buckets).alias("b"),
+        F.spark_partition_id().alias("p")).distinct().collect()}
+
+
+def test_extraction_places_each_sink_bucket_in_one_task(spark):
+    """n = 4 tasks <= B = 16 buckets: the exchange sends bucket b to task
+    b mod n, so every bucket has exactly one task and every task holds
+    B / n = 4 buckets — the keyed sink writes one file per bucket."""
+    pages = corpus_df(spark, 200, seed=42, partitions=2)
+    res = ex.run_extraction(pages, num_partitions=4, num_buckets=16)
+    placed = _placements(res, 16)
+    assert Counter(b for b, _ in placed) == {b: 1 for b in range(16)}
+    assert Counter(p for _, p in placed) == {p: 4 for p in range(4)}
+
+
+def test_exchange_refines_salt_when_tasks_outnumber_buckets(spark):
+    """n > B: the salt is url_bucket(B * k), k = ceil(n / B).  Every task
+    gets work, each bucket spreads over at most k tasks, and at n = k * B
+    every task holds one salt value."""
+    pages = corpus_df(spark, 300, seed=42, partitions=2)
+    for n, k in ((16, 4), (6, 2)):
+        res = ex.salted_repartition(pages.select("url"), n, num_buckets=4)
+        tasks_per_bucket = Counter(b for b, _ in _placements(res, 4))
+        assert max(tasks_per_bucket.values()) <= k, (n, tasks_per_bucket)
+        salts_per_task = Counter(p for _, p in _placements(res, 4 * k))
+        assert set(salts_per_task) == set(range(n)), (n, salts_per_task)
+        if n == 4 * k:
+            assert set(salts_per_task.values()) == {1}, salts_per_task
 
 
 def test_name_rule_filter_is_catalyst_predicate(spark):
@@ -383,3 +418,41 @@ def test_pagerank_round_no_cartesian_no_explode(spark):
     assert "CartesianProduct" not in phys
     assert "BroadcastNestedLoopJoin" not in phys
     assert "Generate" not in phys
+
+
+def test_connected_components_round_reuses_hop_exchanges(spark, monkeypatch):
+    """One connected-components round references its hop subtree up to 8
+    times (three pointer-jump self-joins of the hop map).  It stays cheap
+    only while AQE reuses those exchanges: pin the exchanges that are
+    NOT ``ReusedExchange`` in each round's final adaptive plan, so a loss
+    of reuse fails here instead of as a q59/q60/q61 slowdown."""
+    import re
+
+    from pdf_ocr_batch_ndrocr_lite_spark.operators import dedup as dd
+    node = re.compile(
+        r"^[\s:|+-]*(ReusedExchange|BroadcastExchange|Exchange) ", re.M)
+    counts = {}
+    real = dd.materialize
+
+    def counting(df, name, scratch=None):
+        out = real(df, name, scratch)
+        if name.startswith("labels_"):
+            df.collect()  # finalize the adaptive plan while inputs exist
+            final = _plan(df).split("== Initial Plan ==")[0]
+            counts[name] = Counter(m.group(1) for m in node.finditer(final))
+        return out
+
+    monkeypatch.setattr(dd, "materialize", counting)
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (10, 11),
+         (20, 21), (21, 22), (20, 22)], "a_id bigint, b_id bigint")
+    got = {r["id"]: r["component"]
+           for r in dd.connected_components(pairs).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 6: 1,
+                   10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
+    assert counts == {
+        "labels_0": {"Exchange": 4, "BroadcastExchange": 6,
+                     "ReusedExchange": 8},
+        "labels_1": {"Exchange": 2, "BroadcastExchange": 6,
+                     "ReusedExchange": 7},
+    }, counts
