@@ -114,6 +114,9 @@ def parse_args(argv):
 def main(argv=None) -> int:
     args = parse_args(argv if argv is not None else sys.argv[1:])
 
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
     from .operators.barrier import stage_scratch
     from .plans.pipeline import build_session, run_pipeline
     from .sources.corpus import corpus_df
@@ -158,27 +161,26 @@ def main(argv=None) -> int:
                 redistribute_dangling=args.redistribute_dangling,
                 drop_self=not args.keep_self_links,
                 scratch_dir=scratch, seeds=seeds)
-            # count what was WRITTEN (re-read the sink) — counting the
-            # symbolic ranks frame would re-run every unbarriered rank
-            # round a second time
+            # count what is WRITTEN: an observation on the output write
+            # (counting the symbolic ranks frame would re-run every
+            # unbarriered rank round a second time)
+            hosts = Observation()
+            ranks = ranks.observe(hosts, F.count(F.lit(1)).alias("rows"))
             if args.iceberg:
                 ranks.writeTo(args.output).createOrReplace()
-                counts["hosts"] = spark.read.table(args.output).count()
             else:
                 ranks.write.mode("overwrite").parquet(args.output)
-                counts["hosts"] = spark.read.parquet(args.output).count()
+            counts["hosts"] = hosts.get["rows"]
         counts["seconds"] = round(time.perf_counter() - t0, 3)
         print(json.dumps(counts))
         spark.stop()
         return 0
 
     if args.curate:
-        from pyspark.sql import functions as F
-
         from .plans.curate import run_curation
         # stage barrier: each cascade stage executes once per job (the
-        # per-stage counts + final write would otherwise re-run the
-        # verdict/LSH lineage up to 4x — see plans.curate module comment)
+        # final write would otherwise re-run the verdict/LSH lineage —
+        # see plans.curate module comment)
         with stage_scratch(spark, args.curate_scratch,
                            "spark_graft_curate_") as scratch:
             if args.synthetic_docs:

@@ -39,6 +39,11 @@ EXTRACT_SCHEMA = (
     "bytes_in bigint, seconds double"
 )
 
+# The columns of an extracted row that the extractions sinks keep (the
+# batch sink adds its partition_key, the stream sink its batch_id).
+SINK_COLS = ["url", "lang", "doc_kind", "extracted_text", "page_count",
+             "token_count", "block_count"]
+
 # Buckets of the url hash (`url_bucket`): the checkpoint's partition_key
 # universe and the keyed sink's partitions.
 DEFAULT_NUM_BUCKETS = 256
@@ -333,27 +338,23 @@ def run_extraction(pages_df: DataFrame, num_partitions: int = 0,
     for lineage but shed their payload before the shuffle (no reason to
     move bytes we will not parse).
     """
-    flagged = flag_pages(pages_df, num_partitions, num_buckets)
+    flagged = salted_repartition(flag_pages(pages_df), num_partitions,
+                                 num_buckets)
     return flagged.mapInPandas(extract_batches(engine), schema=EXTRACT_SCHEMA)
 
 
-def flag_pages(pages_df: DataFrame, num_partitions: int = 0,
-               num_buckets: int = DEFAULT_NUM_BUCKETS,
-               salt: bool = True) -> DataFrame:
+def flag_pages(pages_df: DataFrame) -> DataFrame:
     """The shared pre-dispatch projection: name-rule skip flag, byte
-    count for lineage, payload shed for skip rows, bucket exchange —
-    the ONE definition `run_extraction` and `streaming.extract_stream`
-    feed their python stage from (a drifted copy would silently fork
-    skip/shedding semantics between the paths).  ``salt=False`` skips the
-    exchange for inputs that are already size-bounded (streaming
-    micro-batches)."""
-    flagged = pages_df.select(
+    count for lineage, payload shed for skip rows — the ONE definition
+    `run_extraction` and `streaming.extract_stream` feed their python
+    stage from (a drifted copy would silently fork skip/shedding
+    semantics between the paths).  The bucket exchange is the caller's:
+    `run_extraction` adds it, streaming micro-batches are already
+    size-bounded."""
+    return pages_df.select(
         "url", "lang",
         F.col("url").rlike(GENERATED_NAME_PATTERN).alias("skip_name"),
         F.length(F.col("html")).cast("bigint").alias("bytes_len"),
         F.when(F.col("url").rlike(GENERATED_NAME_PATTERN),
                F.lit(b"")).otherwise(F.col("html")).alias("html"),
     )
-    if not salt:
-        return flagged
-    return salted_repartition(flagged, num_partitions, num_buckets)

@@ -21,24 +21,22 @@ exchange → LSH exchanges over digests → broadcast semi-join → map-side
 sample — document text is never shuffled after the verdict stage
 restricts to survivors.
 
-EXECUTE-ONCE CONTRACT (`scratch_dir`): each enabled stage's per-stage
-count is an action, and the final write is another — without a barrier,
-stage N's count re-executes stages 1..N and the write re-executes the
-whole cascade again, so the verdict projection and the LSH candidate
-stages run up to 4× per job.  Passing `scratch_dir` materializes every
-stage boundary with `barrier.materialize`, the same parquet round-trip
-`connected_components` uses for its iteration loop: each stage's lineage
-executes exactly once, the stage counts read the materialized output, and
-the final frame is a plain parquet scan.  Pass shared storage (HDFS/S3)
-on a real cluster — the default None keeps the zero-copy lazy plan for
-callers that run one action and never look at counts-heavy lineage.
+EXECUTE-ONCE CONTRACT (`scratch_dir`): every stage boundary is a
+`barrier.materialize` parquet write under ``scratch_dir``, the same round
+trip `connected_components` uses for its iteration loop, so each stage's
+lineage executes exactly once and the final frame is a plain parquet scan
+— without the barriers the final write would re-execute the whole cascade.
+Each stage count (and the boilerplate pre-pass's dropped-line sum) is an
+observation on the frame that stage's barrier writes, so counting costs no
+job of its own; only the input count is a separate action.  Pass shared
+storage (HDFS/S3) on a real cluster.
 """
 
 from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..operators import curation as cu
@@ -47,7 +45,7 @@ from ..operators import mixing as mx
 from ..operators.barrier import materialize
 
 
-def run_curation(docs: DataFrame,
+def run_curation(docs: DataFrame, scratch_dir: str,
                  boilerplate_max_df: Optional[int] = None,
                  min_quality: float = 0.45,
                  require_lang: bool = True,
@@ -58,15 +56,12 @@ def run_curation(docs: DataFrame,
                  bench: Optional[DataFrame] = None,
                  min_overlap: int = 2,
                  mix_rates: Optional[dict] = None,
-                 default_rate: float = 1.0,
-                 scratch_dir: Optional[str] = None):
+                 default_rate: float = 1.0):
     """Returns (kept DataFrame, counts dict).
 
-    With ``scratch_dir`` set (see module comment) every stage executes
-    exactly once and the per-stage counts are metadata-cheap parquet
-    counts; without it each stage-boundary count() re-executes the
-    upstream lineage — acceptable only for small corpora or
-    counts-don't-matter runs.
+    Every stage executes exactly once, through its barrier under
+    ``scratch_dir`` (see module comment), and its count is observed on
+    that barrier's write.
 
     ``boilerplate_max_df`` enables the CCNet-style LINE-level pre-pass:
     lines of 10+ chars present in more than that many documents are
@@ -80,11 +75,12 @@ def run_curation(docs: DataFrame,
     counts = {"input": docs.count()}
 
     if boilerplate_max_df is not None:
-        rewritten = dd.remove_boilerplate_lines(
-            docs, max_doc_freq=boilerplate_max_df, min_chars=10)
-        if scratch_dir is not None:
-            rewritten = materialize(rewritten, "stage0_boilerplate",
-                                    scratch_dir)
+        dropped = Observation()
+        rewritten = materialize(
+            dd.remove_boilerplate_lines(
+                docs, max_doc_freq=boilerplate_max_df, min_chars=10)
+            .observe(dropped, F.sum("dropped_lines").alias("lines")),
+            "stage0_boilerplate", scratch_dir)
         # left join + coalesce: docs with NULL text produce no line rows
         # in the rebuild — they must survive the pre-pass (text unchanged)
         # rather than being inner-joined out of the corpus
@@ -93,8 +89,7 @@ def run_curation(docs: DataFrame,
                 .withColumn("text", F.coalesce(F.col("_rw_text"),
                                                F.col("text")))
                 .drop("_rw_text"))
-        counts["boiler_lines_dropped"] = int(
-            rewritten.agg(F.sum("dropped_lines")).collect()[0][0] or 0)
+        counts["boiler_lines_dropped"] = int(dropped.get["lines"] or 0)
 
     verdict = cu.curation_verdict(docs, min_quality=min_quality,
                                   require_lang=require_lang)
@@ -103,13 +98,11 @@ def run_curation(docs: DataFrame,
                lambda d: d.join(verdict.filter(F.col("keep"))
                                 .select("doc_id"), "doc_id", "left_semi"))]
     if near_dup:
-        cc_scratch = (f"{scratch_dir}/stage2_cc"
-                      if scratch_dir is not None else None)
         stages.append(("stage2_near_dup", "after_near_dup",
                        lambda d: dd.minhash_dedup(
                            d, jaccard_threshold=jaccard_threshold,
                            max_df=max_df, transitive=transitive_dedup,
-                           scratch_dir=cc_scratch)))
+                           scratch_dir=f"{scratch_dir}/stage2_cc")))
     if bench is not None:
         stages.append(("stage3_decontam", "after_decontam",
                        lambda d: mx.benchmark_decontaminate(
@@ -121,10 +114,11 @@ def run_curation(docs: DataFrame,
 
     kept = docs
     for name, key, stage in stages:
-        kept = stage(kept)
-        if scratch_dir is not None:
-            kept = materialize(kept, name, scratch_dir)
-        counts[key] = kept.count()
+        rows = Observation()
+        kept = materialize(
+            stage(kept).observe(rows, F.count(F.lit(1)).alias("rows")),
+            name, scratch_dir)
+        counts[key] = rows.get["rows"]
 
     counts["kept"] = list(counts.values())[-1]
     return kept, counts

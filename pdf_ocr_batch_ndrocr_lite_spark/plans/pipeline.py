@@ -11,7 +11,8 @@ Logical plan (all declarative until the single vectorized UDF stage):
                                                     tail — range co-locates
                                                     it, measured 5x worse)
       → ONE mapInPandas extraction stage           (Arrow, no per-row Python)
-      → overwrite-by-partition-key extractions sink (idempotent replay)
+      → overwrite-by-partition-key extractions sink (idempotent replay;
+                                                    observes the run counters)
       → per-partition-key lineage rollup → MERGE   (idempotent metrics)
 
 Replaces the reference's sequential per-file loop + CSV log
@@ -23,7 +24,7 @@ from __future__ import annotations
 import os
 from typing import Dict, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import extract as ex
@@ -104,14 +105,15 @@ def build_session(app_name: str = "pdf-extract", master: str = "local[*]",
 def run_pipeline(
     spark: SparkSession,
     pages_df: DataFrame,
-    output_path: Optional[str] = None,
+    output_path: str,
     checkpoint_path: Optional[str] = None,
     storage: Optional[StorageAdapter] = None,
     num_buckets: int = ck.DEFAULT_NUM_BUCKETS,
     num_partitions: int = 0,
     ocr_engine=None,
 ) -> Dict[str, int]:
-    """Run the extraction job; returns run-level counters.
+    """Run the extraction job into the ``output_path`` sink; returns the
+    run counters, observed on the sink write.
 
     With ``checkpoint_path`` set the run is resumable AND replay-safe:
     finished partition keys are skipped on restart (broadcast anti-join),
@@ -119,10 +121,6 @@ def run_pipeline(
     in the window between the output commit and the lineage commit cannot
     duplicate rows — the restart recomputes the unfinished keys and each
     key's output REPLACES whatever the interrupted run left behind.
-
-    A checkpoint needs an output: lineage is committed only after the
-    sink write, so ``checkpoint_path`` without ``output_path`` raises
-    ``ValueError`` before anything is written.
 
     ``ocr_engine``: an engine callable (operators/ocr_engine.EngineFn).
     When given, documents the dispatcher routes ``needs_ocr`` continue
@@ -132,10 +130,6 @@ def run_pipeline(
     extra scan or shuffle; the plan shape and every counter/lineage/
     sink path are otherwise identical.
     """
-    if checkpoint_path and not output_path:
-        raise ValueError(
-            "checkpoint_path needs output_path: progress is recorded only "
-            "once the extractions sink is written")
     storage = storage or StorageAdapter()
 
     if checkpoint_path:
@@ -148,40 +142,40 @@ def run_pipeline(
         todo = ck.pending_only(pages_df, spark, checkpoint_path, storage,
                                num_buckets)
     else:
-        todo = ck.with_partition_key(pages_df, num_buckets)
+        todo = pages_df
 
     results = ex.run_extraction(todo, num_partitions=num_partitions,
                                 engine=ocr_engine, num_buckets=num_buckets)
 
-    def _totals(df: DataFrame) -> Dict[str, int]:
-        row = df.groupBy().agg(*ck.run_counters()).collect()[0]
-        return {k: int(v or 0) for k, v in row.asDict().items()}
-
-    if not output_path:
-        # no sink: single aggregation pass, caller only wants counters
-        return _totals(results)
-
     # The extraction stage is the expensive part — run it exactly once.
-    # persist() before fan-out to sink/lineage/totals; the append below is the
-    # first action and materializes every partition into the cache, so later
-    # consumers never re-read the (possibly since-rewritten) checkpoint files.
+    # persist() before fan-out to the sink and the lineage; the sink write
+    # below is the first action and materializes every partition into the
+    # cache, so the lineage rollup never re-reads the (possibly since-
+    # rewritten) checkpoint files.
     results = results.persist()
     try:
+        # Counters ride a write that already happens.  An observation sits
+        # on the frame the NEXT write executes, with no exchange between
+        # the two: it then runs in the write's result stage, which counts
+        # each partition once even when tasks are retried (in a shuffle-map
+        # stage a retried task can count twice); and `obs.get` blocks until
+        # that write runs, so never observe a frame nothing writes.  The
+        # observation precedes the filter so the counters see every row.
+        obs = Observation()
         # keyed idempotent sink: partition by the same stable url-hash bucket
         # the checkpoint uses, so a replayed key overwrites its own partition;
         # the exchange placed each bucket in one task, so one file per bucket
         # (while num_partitions <= num_buckets)
         storage.overwrite_partitions(
             ck.with_partition_key(
-                results.filter(F.col("action") == ex.ACTION_EXTRACTED),
+                results.observe(obs, *ck.run_counters())
+                .filter(F.col("action") == ex.ACTION_EXTRACTED),
                 num_buckets)
-            .select("partition_key", "url", "lang", "doc_kind",
-                    "extracted_text", "page_count", "token_count",
-                    "block_count"),
+            .select("partition_key", *ex.SINK_COLS),
             output_path,
             ["partition_key"],
         )
-        totals = _totals(results)
+        totals = {k: int(v or 0) for k, v in obs.get.items()}
         if checkpoint_path:
             lineage = ck.lineage_from_results(results, num_buckets)
             ck.commit_lineage(spark, checkpoint_path, lineage, storage)

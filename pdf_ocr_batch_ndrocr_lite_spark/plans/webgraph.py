@@ -8,7 +8,9 @@ DOUBLE full-PSL cascade exceeds the 64KB whole-stage-codegen method
 budget, and pagerank would additionally inline that tree into
 nodes/outdeg/cedges and every rank round — so each stage materializes
 before the next consumes it (``barrier.materialize``: durable parquet
-under ``scratch_dir``, required on a real cluster; else executor-local).
+under ``scratch_dir``, shared storage on a real cluster).  The ``links``
+and ``host_edges`` counts are observations on those two barrier writes,
+not jobs of their own.
 
 Scale shape: every stage is partition-parallel (projection / combining
 agg / keyed join); the only driver-side state is pagerank's scalar node
@@ -22,7 +24,7 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -30,31 +32,33 @@ from ..operators import linkgraph as lg
 from ..operators.barrier import materialize
 
 
-def run_webgraph(pages: DataFrame, iterations: int = 3,
+def run_webgraph(pages: DataFrame, scratch_dir: str, iterations: int = 3,
                  redistribute_dangling: bool = False,
                  drop_self: bool = True,
-                 scratch_dir: Optional[str] = None,
                  seeds: Optional[DataFrame] = None):
     """(ranks, counts): host-level rank table (host, rank) over the
-    pages table's anchor graph, plus per-stage row counts.
+    pages table's anchor graph, plus per-stage row counts, each observed
+    on the write of that stage's barrier under ``scratch_dir``.
 
     ``pages``: the standard pages table (html may be binary — decoded
     as UTF-8 here, matching the corpus schema).  ``seeds``: optional
     one-column frame of trusted HOSTS (registrable domains) → TrustRank.
     """
     spark = pages.sparkSession
-    counts: dict = {}
-
     html = F.col("html")
     if isinstance(pages.schema["html"].dataType, T.BinaryType):
         html = html.cast("string")
     src = pages.select(F.col("url"), html.alias("html"))
 
-    links = materialize(lg.resolve_links(src), "links", scratch_dir)
-    counts["links"] = links.count()
+    n_links, n_edges = Observation(), Observation()
+    rows = F.count(F.lit(1)).alias("rows")
+    links = materialize(lg.resolve_links(src).observe(n_links, rows),
+                        "links", scratch_dir)
     edges = materialize(
-        lg.host_edges(links, drop_self=drop_self), "edges", scratch_dir)
-    counts["host_edges"] = edges.count()
+        lg.host_edges(links, drop_self=drop_self).observe(n_edges, rows),
+        "edges", scratch_dir)
+    counts = {"links": n_links.get["rows"],
+              "host_edges": n_edges.get["rows"]}
     if counts["host_edges"] == 0:
         # a corpus with no (inter-host) anchors has no graph to rank —
         # an empty typed result beats pagerank's empty-node error for a
@@ -65,5 +69,5 @@ def run_webgraph(pages: DataFrame, iterations: int = 3,
         edges, iterations=iterations, src_col="src_host",
         dst_col="dst_host", key_type=None, seeds=seeds,
         redistribute_dangling=redistribute_dangling,
-        scratch_dir=(f"{scratch_dir}/pr" if scratch_dir else None))
+        scratch_dir=f"{scratch_dir}/pr")
     return ranks.select(F.col("id").alias("host"), "rank"), counts

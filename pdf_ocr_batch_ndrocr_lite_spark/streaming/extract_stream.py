@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..operators import extract as ex
 from ..plans import checkpoint as ck
+from ..sources.storage import StorageAdapter
 
 PAGES_SCHEMA = ("url string, warc_ts timestamp, html binary, "
                 "text string, lang string")
@@ -50,8 +51,8 @@ def extract_stream(pages: DataFrame) -> DataFrame:
     """Streaming extraction: single-pass name-rule routing + the batch
     dispatcher (same plan shape as batch `run_extraction`, minus the salted
     shuffle — micro-batches are already size-bounded by the trigger)."""
-    flagged = ex.flag_pages(pages, salt=False)
-    return flagged.mapInPandas(ex.extract_batches(), schema=ex.EXTRACT_SCHEMA)
+    return ex.flag_pages(pages).mapInPandas(ex.extract_batches(),
+                                            schema=ex.EXTRACT_SCHEMA)
 
 
 def make_batch_sink(output_path: str, lineage_path: Optional[str] = None):
@@ -59,23 +60,21 @@ def make_batch_sink(output_path: str, lineage_path: Optional[str] = None):
     dynamic overwrite means a micro-batch replayed after a failure REPLACES
     its previous (possibly partial) output — effective exactly-once for
     both the extractions sink and the lineage rollup."""
+    storage = StorageAdapter()
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         out = batch_df.persist()
         try:
-            (out.filter(F.col("action") == ex.ACTION_EXTRACTED)
-             .select("url", "lang", "doc_kind", "extracted_text",
-                     "page_count", "token_count", "block_count")
-             .withColumn("batch_id", F.lit(batch_id))
-             .write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("batch_id").parquet(output_path))
+            storage.overwrite_partitions(
+                out.filter(F.col("action") == ex.ACTION_EXTRACTED)
+                .select(*ex.SINK_COLS)
+                .withColumn("batch_id", F.lit(batch_id)),
+                output_path, ["batch_id"])
             if lineage_path:
-                (ck.lineage_from_results(out)
-                 .withColumn("batch_id", F.lit(batch_id))
-                 .write.mode("overwrite")
-                 .option("partitionOverwriteMode", "dynamic")
-                 .partitionBy("batch_id").parquet(lineage_path))
+                storage.overwrite_partitions(
+                    ck.lineage_from_results(out)
+                    .withColumn("batch_id", F.lit(batch_id)),
+                    lineage_path, ["batch_id"])
         finally:
             out.unpersist()
 

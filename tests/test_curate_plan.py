@@ -27,9 +27,10 @@ def _corpus(spark):
     return spark.createDataFrame(rows, "doc_id int, lang string, text string")
 
 
-def test_run_curation_cascade_counts(spark):
+def test_run_curation_cascade_counts(spark, tmp_path):
     docs = _corpus(spark)
-    kept, counts = run_curation(docs, jaccard_threshold=0.5, max_df=None)
+    kept, counts = run_curation(docs, scratch_dir=str(tmp_path / "scr"),
+                                jaccard_threshold=0.5, max_df=None)
     ids = sorted(r["doc_id"] for r in kept.collect())
     # 1 exact-dup and 3 lang-unknown die in the verdict; 2 and 4 are
     # near-dups of 0 (higher ids lose); 0 and 5 survive
@@ -40,10 +41,11 @@ def test_run_curation_cascade_counts(spark):
     assert counts["kept"] == 2
 
 
-def test_run_curation_decontam_and_mixing(spark):
+def test_run_curation_decontam_and_mixing(spark, tmp_path):
     docs = _corpus(spark)
     bench = docs.filter(F.col("doc_id") == 5)  # "eval set" = doc 5's text
-    kept, counts = run_curation(docs, jaccard_threshold=0.5, max_df=None,
+    kept, counts = run_curation(docs, scratch_dir=str(tmp_path / "scr"),
+                                jaccard_threshold=0.5, max_df=None,
                                 bench=bench, min_overlap=2,
                                 mix_rates={"en": 1.0}, default_rate=0.0)
     ids = sorted(r["doc_id"] for r in kept.collect())
@@ -76,30 +78,25 @@ def test_curate_cli_smoke(tmp_path):
 
 
 def test_run_curation_stage_barrier_executes_stages_once(spark, tmp_path):
-    """With scratch_dir, every stage boundary is a parquet barrier: the
-    returned frame's plan is a bare scan of the LAST stage's parquet —
-    no verdict projection, no LSH joins, no window — so the final write
-    and any later action re-execute NOTHING upstream; stage counts and
-    the kept set are identical to the barrier-less run."""
+    """Every stage boundary is a parquet barrier: the returned frame's
+    plan is a bare scan of the LAST stage's parquet — no verdict
+    projection, no LSH joins, no window — so the final write and any
+    later action re-execute NOTHING upstream."""
     docs = _corpus(spark)
-    kept_b, counts_b = run_curation(docs, jaccard_threshold=0.5,
-                                    max_df=None,
-                                    scratch_dir=str(tmp_path / "scr"))
-    plan = kept_b._jdf.queryExecution().executedPlan().toString()
+    kept, _ = run_curation(docs, scratch_dir=str(tmp_path / "scr"),
+                           jaccard_threshold=0.5, max_df=None)
+    plan = kept._jdf.queryExecution().executedPlan().toString()
     assert "FileScan parquet" in plan         # reads the materialized stage
     for node in ("Join", "Window", "Aggregate", "Exchange"):
         assert node not in plan, f"barriered plan re-executes a {node}"
     # stage outputs are materialized once per stage under the scratch dir
     names = {p.name for p in (tmp_path / "scr").iterdir()}
     assert names == {"stage1_verdict", "stage2_near_dup"}
-    kept_p, counts_p = run_curation(docs, jaccard_threshold=0.5,
-                                    max_df=None)
-    assert sorted(r["doc_id"] for r in kept_b.collect()) == \
-        sorted(r["doc_id"] for r in kept_p.collect()) == [0, 5]
-    assert counts_b == counts_p
+    assert sorted(r["doc_id"] for r in kept.collect()) == [0, 5]
 
 
-def test_run_curation_boilerplate_null_text_survives_to_verdict(spark):
+def test_run_curation_boilerplate_null_text_survives_to_verdict(spark,
+                                                                 tmp_path):
     """A NULL-text doc yields no line rows in the pre-pass rebuild; the
     left-join+coalesce must carry it through to the verdict stage (where
     it gets an explicit drop) instead of silently vanishing from the
@@ -110,7 +107,8 @@ def test_run_curation_boilerplate_null_text_survives_to_verdict(spark):
     rows = [(i, "en", nav + "\n" + good + f" variant {i}") for i in range(4)]
     rows.append((8, "en", None))              # NULL text
     docs = spark.createDataFrame(rows, "doc_id int, lang string, text string")
-    kept, counts = run_curation(docs, boilerplate_max_df=2, near_dup=False)
+    kept, counts = run_curation(docs, scratch_dir=str(tmp_path / "scr"),
+                                boilerplate_max_df=2, near_dup=False)
     assert counts["input"] == 5
     # the NULL doc reached the verdict (and was dropped THERE, by the
     # quality gate) — after_verdict counts only the 4 real docs
@@ -118,7 +116,7 @@ def test_run_curation_boilerplate_null_text_survives_to_verdict(spark):
     assert sorted(r["doc_id"] for r in kept.collect()) == [0, 1, 2, 3]
 
 
-def test_run_curation_boilerplate_prepass(spark):
+def test_run_curation_boilerplate_prepass(spark, tmp_path):
     """The line-level pre-pass strips corpus-wide chrome BEFORE doc-level
     signals: the shared navigation line appears in 4 docs (> max_df 2) and
     must be gone from every survivor's text; stage counts record the
@@ -129,8 +127,48 @@ def test_run_curation_boilerplate_prepass(spark):
     rows = [(i, "en", nav + "\n" + good + f" variant {i}") for i in range(4)]
     rows.append((9, "en", good + " standalone"))
     docs = spark.createDataFrame(rows, "doc_id int, lang string, text string")
-    kept, counts = run_curation(docs, boilerplate_max_df=2,
-                                near_dup=False)
+    kept, counts = run_curation(docs, scratch_dir=str(tmp_path / "scr"),
+                                boilerplate_max_df=2, near_dup=False)
     assert counts["boiler_lines_dropped"] == 4
     for r in kept.collect():
         assert nav not in r["text"]
+
+
+def _full_cascade(spark, scratch):
+    """Every stage on: boilerplate pre-pass, verdict, near-dup, decontam
+    (doc 5 is the benchmark) and mixing."""
+    docs = _corpus(spark)
+    return run_curation(docs, scratch_dir=scratch, boilerplate_max_df=2,
+                        jaccard_threshold=0.5, max_df=None,
+                        bench=docs.filter(F.col("doc_id") == 5),
+                        mix_rates={"en": 1.0}, default_rate=0.0)
+
+
+def test_run_curation_job_budget(spark, tmp_path, spark_jobs):
+    """Each stage count, and the boilerplate pre-pass's dropped-line sum,
+    is an observation on that stage's barrier write, not a job of its
+    own.  With all four stages and the pre-pass on, a run takes at most
+    43 Spark jobs; with a count per stage and a collect for the pre-pass
+    (2 jobs each) it took 52-53 (AQE broadcast timing moves one job)."""
+    (kept, counts), jobs = spark_jobs(
+        lambda: _full_cascade(spark, str(tmp_path / "scr")))
+    assert counts["kept"] == 1
+    assert 0 < len(jobs) <= 43, len(jobs)
+
+
+def test_run_curation_counts_equal_the_barrier_tables(spark, tmp_path):
+    """The observed counts are the rows each stage's barrier wrote."""
+    scr = tmp_path / "scr"
+    kept, counts = _full_cascade(spark, str(scr))
+
+    def rows(name):
+        return spark.read.parquet(str(scr / name))
+
+    assert counts["boiler_lines_dropped"] == \
+        rows("stage0_boilerplate").agg(F.sum("dropped_lines")).first()[0]
+    for name, key in (("stage1_verdict", "after_verdict"),
+                      ("stage2_near_dup", "after_near_dup"),
+                      ("stage3_decontam", "after_decontam"),
+                      ("stage4_mixing", "after_mixing")):
+        assert counts[key] == rows(name).count(), name
+    assert counts["kept"] == kept.count() == 1

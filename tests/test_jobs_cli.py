@@ -5,6 +5,7 @@ from __future__ import annotations
 import json
 import subprocess
 import sys
+from pathlib import Path
 
 
 def test_jobs_cli_synthetic(tmp_path):
@@ -22,6 +23,35 @@ def test_jobs_cli_synthetic(tmp_path):
     assert totals["docs"] == 120
     assert totals["extracted"] > 0
     assert (out / "_SUCCESS").exists() or any(out.iterdir())
+
+
+def test_jobs_cli_webgraph_counts_written_hosts(tmp_path):
+    """--webgraph reports ``hosts`` from an observation on the output
+    write: the number of rows the rank table was written with."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    # three registrable domains whose absolute links form a ring
+    urls, html = [], []
+    for i in range(9):
+        urls.append(f"https://sub.dom{i % 3}.org/p{i}.html")
+        html.append(f'<a href="https://dom{(i + 1) % 3}.org/x">x</a>'
+                    .encode("utf-8"))
+    (tmp_path / "pages").mkdir()
+    pq.write_table(pa.table({"url": urls, "html": html}),
+                   str(tmp_path / "pages" / "part-0.parquet"))
+    out = tmp_path / "ranks"
+    proc = subprocess.run(
+        [sys.executable, "-m", "pdf_ocr_batch_ndrocr_lite_spark.jobs",
+         "--webgraph", "--input", str(tmp_path / "pages"),
+         "--output", str(out), "--master", "local[2]"],
+        capture_output=True, text=True, timeout=300,
+        cwd=Path(__file__).resolve().parents[1],
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    counts = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert counts["host_edges"] == 3
+    assert counts["hosts"] == pq.read_table(str(out)).num_rows == 3
 
 
 def test_jobs_cli_bad_args():

@@ -253,6 +253,10 @@ def test_run_webgraph_end_to_end(spark, tmp_path):
     # rel links are intra-domain (dropped); abs links ring dom0->dom1->
     # dom2->dom0 at eTLD+1 granularity
     assert counts["host_edges"] == 3
+    # the counts are observed on the barrier writes: they are those tables
+    for name, key in (("links", "links"), ("edges", "host_edges")):
+        assert spark.read.parquet(str(tmp_path / name)).count() == \
+            counts[key]
     # direct composition (localCheckpoint barriers) must agree exactly
     from pdf_ocr_batch_ndrocr_lite_spark.operators import linkgraph as lgo
     src = pages.select("url", F.col("html").cast("string").alias("html"))

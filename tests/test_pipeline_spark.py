@@ -279,17 +279,23 @@ def test_run_meta_written_and_continuity_enforced(spark, tmp_path):
     assert spark.read.parquet(ck.meta_path(ckpt)).count() == 2
 
 
-def test_checkpoint_without_output_rejected_before_any_write(spark, tmp_path):
-    """Lineage is committed only after the sink write, so a checkpoint
-    with no output would never record progress: every rerun would redo
-    every document and append another run_meta row.  run_pipeline must
-    refuse up front, writing nothing."""
-    import os
-
+def test_run_pipeline_job_budget(spark, tmp_path, spark_jobs):
+    """The run counters are an observation on the sink write, not an
+    aggregation of their own: a fresh checkpointed run takes 6 Spark jobs
+    and a resume with nothing pending 12 (8 and 14 while a separate
+    totals collect ran, 2 jobs each), and no job is a driver collect in
+    pipeline.py."""
+    out = str(tmp_path / "extractions")
     ckpt = str(tmp_path / "checkpoint")
-    df = corpus_df(spark, 20, seed=SEED, partitions=2)
-    with pytest.raises(ValueError, match="output_path"):
-        run_pipeline(spark, df, checkpoint_path=ckpt,
-                     storage=StorageAdapter(), num_buckets=8)
-    assert not os.path.exists(ck.meta_path(ckpt))
-    assert not os.path.exists(ckpt)
+    df = corpus_df(spark, 120, seed=SEED, partitions=4)
+
+    def run():
+        return run_pipeline(spark, df, output_path=out, checkpoint_path=ckpt,
+                            storage=StorageAdapter(), num_buckets=16)
+
+    for budget, docs in ((6, 120), (12, 0)):
+        totals, jobs = spark_jobs(run)
+        assert totals["docs"] == docs
+        assert 0 < len(jobs) <= budget, jobs
+        assert not [n for stages in jobs for n in stages
+                    if n.startswith("collect at") and "pipeline.py" in n]

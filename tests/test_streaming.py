@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from pdf_ocr_batch_ndrocr_lite_spark.sources.corpus import corpus_df
 from pdf_ocr_batch_ndrocr_lite_spark.streaming.extract_stream import (
+    extract_stream,
     start_extraction_stream,
 )
 
@@ -31,6 +32,12 @@ def test_incremental_stream(spark, tmp_path):
 
     # wave 1: 60 docs land
     _land_files(spark, inp, 0, 60)
+    # the stream's plan: the shared projection feeds the one python stage
+    # directly — micro-batches are size-bounded, so no bucket exchange
+    plan = extract_stream(spark.read.parquet(inp)) \
+        ._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("Exchange") == 0, plan
     q = start_extraction_stream(spark, inp, out, ckpt, lineage_path=lineage,
                                 trigger_once=True)
     q.awaitTermination(120)
