@@ -775,51 +775,40 @@ def _q78_media_image_meta(spark, sf_dir):
     corrupt image class come back all-NULL (metadata absence is data;
     the stage never raises).  The oracle replays the generation rule
     with the same IEEE density arithmetic."""
-    import pandas as _pd
-
     from pdf_ocr_batch_ndrocr_lite_spark.functions import image_meta as _im
 
     docs = _read(spark, sf_dir, "documents").select("doc_id", "text") \
         .repartition(spark.sparkContext.defaultParallelism)
 
-    def build(batches):
-        cols = ["media_id", "kind", "payload"]
-        kinds = ["image", "audio", "video"]
-        for pdf in batches:
-            out = {c: [] for c in cols}
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                kind = kinds[did % 3]
-                if kind != "image":
-                    payload = (text or "").encode("utf-8")
-                else:
-                    w = 200 + did % 800
-                    h = 150 + did % 600
-                    v = (did // 3) % 6
-                    if v == 0:
-                        payload = _im.make_fake_jpeg(w, h, dpi=96)
-                    elif v == 1:
-                        payload = _im.make_fake_png(w, h, dpi=300.0)
-                    elif v == 2:
-                        payload = _im.make_fake_bmp(w, h, dpi=96)
-                    elif v == 3:
-                        payload = _im.make_fake_tiff(w, h, dpi=200, unit=2)
-                    elif v == 4:
-                        # webp rows are did = 18m+12, so did % 9 == 3
-                        # ALWAYS (r7 review finding: only vp8l was ever
-                        # exercised); (did // 18) % 3 cycles the class
-                        payload = _im.make_fake_webp(
-                            w, h,
-                            variant=["vp8", "vp8l", "vp8x"][did // 18 % 3])
-                    else:   # sniffs as JPEG, no SOF -> unparseable
-                        payload = b"\xff\xd8truncated"
-                out["media_id"].append(did)
-                out["kind"].append(kind)
-                out["payload"].append(payload)
-            yield _pd.DataFrame(out, columns=cols)
+    def media_row(did, text):
+        did = int(did)
+        kind = ["image", "audio", "video"][did % 3]
+        if kind != "image":
+            payload = (text or "").encode("utf-8")
+        else:
+            w = 200 + did % 800
+            h = 150 + did % 600
+            v = (did // 3) % 6
+            if v == 0:
+                payload = _im.make_fake_jpeg(w, h, dpi=96)
+            elif v == 1:
+                payload = _im.make_fake_png(w, h, dpi=300.0)
+            elif v == 2:
+                payload = _im.make_fake_bmp(w, h, dpi=96)
+            elif v == 3:
+                payload = _im.make_fake_tiff(w, h, dpi=200, unit=2)
+            elif v == 4:
+                # webp rows are did = 18m+12, so did % 9 == 3 ALWAYS (r7
+                # review finding: only vp8l was ever exercised);
+                # (did // 18) % 3 cycles the class
+                payload = _im.make_fake_webp(
+                    w, h, variant=["vp8", "vp8l", "vp8x"][did // 18 % 3])
+            else:   # sniffs as JPEG, no SOF -> unparseable
+                payload = b"\xff\xd8truncated"
+        return {"media_id": did, "kind": kind, "payload": payload}
 
-    media = docs.mapInPandas(
-        build, "media_id bigint, kind string, payload binary")
+    media = ex.map_rows(docs, media_row, ("doc_id", "text"),
+                        "media_id bigint, kind string, payload binary")
     return mm.media_features(media) \
         .select("media_id", "kind", "fmt", "width", "height", "dpi") \
         .orderBy("media_id")
@@ -1872,66 +1861,61 @@ def _rawpdf_corpus(spark, sf_dir):
     AESV2 and V5/R6 AESV3, each with an empty user password (readable —
     the reference reads these via pypdf decrypt(''), app.py:1180-1189)
     and a real password (parse_failure)."""
-    import pandas as _pd
-
     from pdf_ocr_batch_ndrocr_lite_spark.functions import pdf_make as _pm
 
     docs = _read(spark, sf_dir, "documents").select("doc_id") \
         .repartition(spark.sparkContext.defaultParallelism)
 
-    def build(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                v = did % 16
-                if v == 0:     # scanned-image profile
-                    data = _pm.build_pdf([None, None])
-                elif v == 1:   # searchable text layer
-                    data = _pm.build_pdf([f"text layer {did}"])
-                elif v == 2:   # text only beyond the 20-page check window
-                    data = _pm.build_pdf([None] * 22 + [f"late text {did}"])
-                elif v == 3:   # RC4-encrypted, empty user password
-                    data = _pm.build_pdf([f"enc text layer {did}"],
-                                         compress=True, user_pw="")
-                elif v == 4:   # RC4-encrypted, real password
-                    data = _pm.build_pdf(["locked"], user_pw="pw")
-                elif v == 5:   # truncated fetch
-                    data = _pm.build_pdf(["x"], corrupt=True)
-                elif v == 6:   # compressed image-only
-                    data = _pm.build_pdf([None], compress=True)
-                elif v == 7:   # LZW-compressed text layer
-                    data = _pm.build_pdf([f"lzw text {did}"],
-                                         stream_filter="lzw")
-                elif v == 8:   # ASCII85-encoded text layer
-                    data = _pm.build_pdf([f"a85 text {did}"],
-                                         stream_filter="a85")
-                elif v == 9:   # RunLength-encoded text layer
-                    data = _pm.build_pdf([f"rl text {did}"],
-                                         stream_filter="rl")
-                elif v == 10:  # undecodable filter → warning, not silence
-                    data = _pm.build_pdf([f"jpx text {did}"],
-                                         stream_filter="jpx")
-                elif v == 11:  # page tree inside a compressed /ObjStm
-                    data = _pm.build_objstm_pdf(
-                        [f"objstm text {did}", None, None])
-                elif v == 12:  # AES-128 (V4/R4 AESV2), empty user password
-                    data = _pm.build_pdf([f"aesv2 text {did}"],
-                                         user_pw="", encrypt="aesv2")
-                elif v == 13:  # AES-128, real password
-                    data = _pm.build_pdf(["locked"], user_pw="pw",
-                                         encrypt="aesv2")
-                elif v == 14:  # AES-256 (V5/R6 AESV3), empty user password
-                    data = _pm.build_pdf([f"aesv3 text {did}"],
-                                         user_pw="", encrypt="aesv3")
-                else:          # AES-256, real password
-                    data = _pm.build_pdf(["locked"], user_pw="pw",
-                                         encrypt="aesv3")
-                rows.append({"url": f"https://example.org/raw/{did:06d}",
-                             "lang": "en", "html": data})
-            yield _pd.DataFrame(rows, columns=["url", "lang", "html"])
+    def rawpdf_row(did):
+        did = int(did)
+        v = did % 16
+        if v == 0:     # scanned-image profile
+            data = _pm.build_pdf([None, None])
+        elif v == 1:   # searchable text layer
+            data = _pm.build_pdf([f"text layer {did}"])
+        elif v == 2:   # text only beyond the 20-page check window
+            data = _pm.build_pdf([None] * 22 + [f"late text {did}"])
+        elif v == 3:   # RC4-encrypted, empty user password
+            data = _pm.build_pdf([f"enc text layer {did}"],
+                                 compress=True, user_pw="")
+        elif v == 4:   # RC4-encrypted, real password
+            data = _pm.build_pdf(["locked"], user_pw="pw")
+        elif v == 5:   # truncated fetch
+            data = _pm.build_pdf(["x"], corrupt=True)
+        elif v == 6:   # compressed image-only
+            data = _pm.build_pdf([None], compress=True)
+        elif v == 7:   # LZW-compressed text layer
+            data = _pm.build_pdf([f"lzw text {did}"],
+                                 stream_filter="lzw")
+        elif v == 8:   # ASCII85-encoded text layer
+            data = _pm.build_pdf([f"a85 text {did}"],
+                                 stream_filter="a85")
+        elif v == 9:   # RunLength-encoded text layer
+            data = _pm.build_pdf([f"rl text {did}"],
+                                 stream_filter="rl")
+        elif v == 10:  # undecodable filter → warning, not silence
+            data = _pm.build_pdf([f"jpx text {did}"],
+                                 stream_filter="jpx")
+        elif v == 11:  # page tree inside a compressed /ObjStm
+            data = _pm.build_objstm_pdf(
+                [f"objstm text {did}", None, None])
+        elif v == 12:  # AES-128 (V4/R4 AESV2), empty user password
+            data = _pm.build_pdf([f"aesv2 text {did}"],
+                                 user_pw="", encrypt="aesv2")
+        elif v == 13:  # AES-128, real password
+            data = _pm.build_pdf(["locked"], user_pw="pw",
+                                 encrypt="aesv2")
+        elif v == 14:  # AES-256 (V5/R6 AESV3), empty user password
+            data = _pm.build_pdf([f"aesv3 text {did}"],
+                                 user_pw="", encrypt="aesv3")
+        else:          # AES-256, real password
+            data = _pm.build_pdf(["locked"], user_pw="pw",
+                                 encrypt="aesv3")
+        return {"url": f"https://example.org/raw/{did:06d}", "lang": "en",
+                "html": data}
 
-    return docs.mapInPandas(build, "url string, lang string, html binary")
+    return ex.map_rows(docs, rawpdf_row, ("doc_id",),
+                       "url string, lang string, html binary")
 
 
 def _q40_rawpdf_route(spark, sf_dir):
@@ -1999,8 +1983,6 @@ def _q48_glyph_decode(spark, sf_dir):
     Adobe's CMap chain produces (U+301C wave dash...), not cp932's
     fullwidth-compat forms.  The oracle reconstructs the exact decoded
     text, count and warning with DuckDB chr()."""
-    import pandas as _pd
-
     from pdf_ocr_batch_ndrocr_lite_spark.functions import (
         pdf_make as _pm,
         pdf_scan as _ps,
@@ -2009,60 +1991,53 @@ def _q48_glyph_decode(spark, sf_dir):
     docs = _read(spark, sf_dir, "documents").select("doc_id") \
         .repartition(spark.sparkContext.defaultParallelism)
 
-    def build(batches):
-        cols = ["doc_id", "n_chars", "text_layer", "parse_warnings"]
-        for pdf in batches:
-            out = {c: [] for c in cols}
-            for did in pdf["doc_id"]:
-                did = int(did)
-                v = did % 9
-                n = did % 5 + 3
-                if v == 0:
-                    codes = [97 + ((did + j) % 26) for j in range(n)]
-                    data = _pm.build_glyph_pdf("differences", codes)
-                elif v == 1:
-                    codes = [((did + j) % 80) + 1 for j in range(n)]
-                    data = _pm.build_glyph_pdf("cid", codes)
-                elif v == 2:
-                    codes = [0x91 + ((did + j) % 4) for j in range(n)]
-                    data = _pm.build_glyph_pdf("winansi", codes)
-                elif v == 3:
-                    data = _pm.build_pdf([f"plain {did}"])
-                elif v == 4:
-                    codes = [0x4E00 + ((did + j) % 80) for j in range(n)]
-                    data = _pm.build_glyph_pdf("cid_raw", codes)
-                elif v == 5:
-                    codes = [0x3042 + ((did + j) % 50) for j in range(n)]
-                    data = _pm.build_glyph_pdf("cid_ucs2", codes)
-                elif v == 6:
-                    codes = [0x30A2 + ((did + j) % 40) for j in range(n)]
-                    data = _pm.build_glyph_pdf("cid_rksj", codes)
-                elif v == 7:
-                    codes = [((did + j) % 80) + 1 for j in range(n)]
-                    data = _pm.build_glyph_pdf("cid_unknown", codes)
-                else:
-                    # the six cp932-vs-Adobe-Japan1 divergent punctuation
-                    # codes: the writer (a cp932 emitter) shows the
-                    # Microsoft-side code points, the scanner must decode
-                    # the Shift-JIS bytes the ADOBE way (JIS-standard
-                    # values, matching pypdf's CMap chain)
-                    ms = [0xFF5E, 0x2225, 0xFF0D, 0xFFE0, 0xFFE1, 0xFFE2]
-                    codes = [ms[(did + j) % 6] for j in range(n)]
-                    data = _pm.build_glyph_pdf("cid_rksj", codes)
-                doc = _ps.scan_document(data)
-                scan = doc.pages[0]
-                out["doc_id"].append(did)
-                out["n_chars"].append(
-                    _ps.count_text_chars(scan.content, scan.fonts))
-                out["text_layer"].append(
-                    _ps.extract_text_layer(scan.content, scan.fonts))
-                out["parse_warnings"].append(
-                    doc.doc_warnings + scan.warnings)
-            yield _pd.DataFrame(out, columns=cols)
+    def glyph_row(did):
+        did = int(did)
+        v = did % 9
+        n = did % 5 + 3
+        if v == 0:
+            codes = [97 + ((did + j) % 26) for j in range(n)]
+            data = _pm.build_glyph_pdf("differences", codes)
+        elif v == 1:
+            codes = [((did + j) % 80) + 1 for j in range(n)]
+            data = _pm.build_glyph_pdf("cid", codes)
+        elif v == 2:
+            codes = [0x91 + ((did + j) % 4) for j in range(n)]
+            data = _pm.build_glyph_pdf("winansi", codes)
+        elif v == 3:
+            data = _pm.build_pdf([f"plain {did}"])
+        elif v == 4:
+            codes = [0x4E00 + ((did + j) % 80) for j in range(n)]
+            data = _pm.build_glyph_pdf("cid_raw", codes)
+        elif v == 5:
+            codes = [0x3042 + ((did + j) % 50) for j in range(n)]
+            data = _pm.build_glyph_pdf("cid_ucs2", codes)
+        elif v == 6:
+            codes = [0x30A2 + ((did + j) % 40) for j in range(n)]
+            data = _pm.build_glyph_pdf("cid_rksj", codes)
+        elif v == 7:
+            codes = [((did + j) % 80) + 1 for j in range(n)]
+            data = _pm.build_glyph_pdf("cid_unknown", codes)
+        else:
+            # the six cp932-vs-Adobe-Japan1 divergent punctuation
+            # codes: the writer (a cp932 emitter) shows the
+            # Microsoft-side code points, the scanner must decode
+            # the Shift-JIS bytes the ADOBE way (JIS-standard
+            # values, matching pypdf's CMap chain)
+            ms = [0xFF5E, 0x2225, 0xFF0D, 0xFFE0, 0xFFE1, 0xFFE2]
+            codes = [ms[(did + j) % 6] for j in range(n)]
+            data = _pm.build_glyph_pdf("cid_rksj", codes)
+        doc = _ps.scan_document(data)
+        scan = doc.pages[0]
+        return {"doc_id": did,
+                "n_chars": _ps.count_text_chars(scan.content, scan.fonts),
+                "text_layer": _ps.extract_text_layer(scan.content,
+                                                     scan.fonts),
+                "parse_warnings": doc.doc_warnings + scan.warnings}
 
-    return docs.mapInPandas(
-        build, "doc_id int, n_chars int, text_layer string, "
-               "parse_warnings int") \
+    return ex.map_rows(docs, glyph_row, ("doc_id",),
+                       "doc_id int, n_chars int, text_layer string, "
+                       "parse_warnings int") \
         .orderBy("doc_id")
 
 
@@ -2154,8 +2129,6 @@ def _q45_searchable_pdf_sink(spark, sf_dir):
     alone, so writer → overlay → scanner must all agree."""
     import re as _re
 
-    import pandas as _pd
-
     from pdf_ocr_batch_ndrocr_lite_spark.functions import (
         pdf_make as _pm,
         pdf_overlay as _po,
@@ -2165,29 +2138,22 @@ def _q45_searchable_pdf_sink(spark, sf_dir):
     docs = _read(spark, sf_dir, "documents").select("doc_id", "text") \
         .repartition(spark.sparkContext.defaultParallelism)
 
-    def build(batches):
-        cols = ["doc_id", "page_count", "n_text_ops", "n_chars"]
-        for pdf in batches:
-            out = {c: [] for c in cols}
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                clean = _re.sub(r" +", " ",
-                                _re.sub(r"[^a-z ]", "",
-                                        (text or "").lower())).strip()
-                ops = _po.page_draw_ops([], [clean] if clean else [],
-                                        1000, 1400, 612.0, 792.0)
-                data = _pm.build_searchable_pdf(
-                    [{"width_pt": 612.0, "height_pt": 792.0, "ops": ops}])
-                streams = _ps.page_content_streams(data)
-                out["doc_id"].append(int(did))
-                out["page_count"].append(len(streams))
-                out["n_text_ops"].append(
-                    sum(_ps.count_text_show_ops(s) for s in streams))
-                out["n_chars"].append(
-                    sum(_ps.count_text_chars(s) for s in streams))
-            yield _pd.DataFrame(out, columns=cols)
+    def sink_row(did, text):
+        clean = _re.sub(r" +", " ",
+                        _re.sub(r"[^a-z ]", "", (text or "").lower())).strip()
+        ops = _po.page_draw_ops([], [clean] if clean else [],
+                                1000, 1400, 612.0, 792.0)
+        data = _pm.build_searchable_pdf(
+            [{"width_pt": 612.0, "height_pt": 792.0, "ops": ops}])
+        streams = _ps.page_content_streams(data)
+        return {"doc_id": int(did), "page_count": len(streams),
+                "n_text_ops": sum(_ps.count_text_show_ops(s)
+                                  for s in streams),
+                "n_chars": sum(_ps.count_text_chars(s) for s in streams)}
 
-    return docs.mapInPandas(
-        build, "doc_id int, page_count int, n_text_ops int, n_chars int") \
+    return ex.map_rows(docs, sink_row, ("doc_id", "text"),
+                       "doc_id int, page_count int, n_text_ops int, "
+                       "n_chars int") \
         .orderBy("doc_id")
 
 
@@ -2199,59 +2165,50 @@ def _q46_image_normalization(spark, sf_dir):
     rationals + unit, VP8/VP8L/VP8X), normalize DPI through the
     reference's accepted range, and project to points.  The oracle
     recomputes all of it from the rule with the same IEEE ops."""
-    import pandas as _pd
-
     from pdf_ocr_batch_ndrocr_lite_spark.functions import image_meta as _im
 
     docs = _read(spark, sf_dir, "documents").select("doc_id") \
         .repartition(spark.sparkContext.defaultParallelism)
 
-    def build(batches):
-        cols = ["doc_id", "fmt", "width_px", "dpi_x", "width_pt"]
-        for pdf in batches:
-            out = {c: [] for c in cols}
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w = 200 + did % 800
-                h = 150 + did % 600
-                v = did % 12
-                if v == 0:
-                    data = _im.make_fake_jpeg(w, h, dpi=96)
-                elif v == 1:
-                    data = _im.make_fake_jpeg(w, h)            # no density
-                elif v == 2:
-                    data = _im.make_fake_jpeg(w, h, dpi=10)    # below range
-                elif v == 3:
-                    data = _im.make_fake_jpeg(w, h, dpi=100, units=2)
-                elif v == 4:
-                    data = _im.make_fake_png(w, h, dpi=300.0)
-                elif v == 5:
-                    data = _im.make_fake_png(w, h)             # no pHYs
-                elif v == 6:
-                    data = _im.make_fake_bmp(w, h, dpi=96)     # ppm round trip
-                elif v == 7:
-                    data = _im.make_fake_bmp(w, h)             # ppm 0 → 150
-                elif v == 8:
-                    data = _im.make_fake_tiff(w, h, dpi=200, unit=2)
-                elif v == 9:
-                    data = _im.make_fake_tiff(w, h, dpi=127.0, unit=3,
-                                              big_endian=True)
-                elif v == 10:
-                    data = _im.make_fake_tiff(w, h, dpi=200, unit=1)
-                else:
-                    data = _im.make_fake_webp(
-                        w, h, variant=["vp8", "vp8l", "vp8x"][did % 3])
-                meta = _im.prepare_image(data)
-                out["doc_id"].append(did)
-                out["fmt"].append(meta["format"])
-                out["width_px"].append(meta["width_px"])
-                out["dpi_x"].append(meta["dpi_x"])
-                out["width_pt"].append(meta["width_pt"])
-            yield _pd.DataFrame(out, columns=cols)
+    def image_row(did):
+        did = int(did)
+        w = 200 + did % 800
+        h = 150 + did % 600
+        v = did % 12
+        if v == 0:
+            data = _im.make_fake_jpeg(w, h, dpi=96)
+        elif v == 1:
+            data = _im.make_fake_jpeg(w, h)            # no density
+        elif v == 2:
+            data = _im.make_fake_jpeg(w, h, dpi=10)    # below range
+        elif v == 3:
+            data = _im.make_fake_jpeg(w, h, dpi=100, units=2)
+        elif v == 4:
+            data = _im.make_fake_png(w, h, dpi=300.0)
+        elif v == 5:
+            data = _im.make_fake_png(w, h)             # no pHYs
+        elif v == 6:
+            data = _im.make_fake_bmp(w, h, dpi=96)     # ppm round trip
+        elif v == 7:
+            data = _im.make_fake_bmp(w, h)             # ppm 0 → 150
+        elif v == 8:
+            data = _im.make_fake_tiff(w, h, dpi=200, unit=2)
+        elif v == 9:
+            data = _im.make_fake_tiff(w, h, dpi=127.0, unit=3,
+                                      big_endian=True)
+        elif v == 10:
+            data = _im.make_fake_tiff(w, h, dpi=200, unit=1)
+        else:
+            data = _im.make_fake_webp(
+                w, h, variant=["vp8", "vp8l", "vp8x"][did % 3])
+        meta = _im.prepare_image(data)
+        return {"doc_id": did, "fmt": meta["format"],
+                "width_px": meta["width_px"], "dpi_x": meta["dpi_x"],
+                "width_pt": meta["width_pt"]}
 
-    return docs.mapInPandas(
-        build, "doc_id int, fmt string, width_px int, dpi_x double, "
-               "width_pt double").orderBy("doc_id")
+    return ex.map_rows(docs, image_row, ("doc_id",),
+                       "doc_id int, fmt string, width_px int, dpi_x double, "
+                       "width_pt double").orderBy("doc_id")
 
 
 def _q47_text_layer_extraction(spark, sf_dir):
@@ -2264,8 +2221,6 @@ def _q47_text_layer_extraction(spark, sf_dir):
     extractor must agree byte-for-byte on full document text."""
     import re as _re
 
-    import pandas as _pd
-
     from pdf_ocr_batch_ndrocr_lite_spark.functions import (
         pdf_make as _pm,
         pdf_overlay as _po,
@@ -2275,25 +2230,19 @@ def _q47_text_layer_extraction(spark, sf_dir):
     docs = _read(spark, sf_dir, "documents").select("doc_id", "text") \
         .repartition(spark.sparkContext.defaultParallelism)
 
-    def build(batches):
-        cols = ["doc_id", "text_layer"]
-        for pdf in batches:
-            out = {c: [] for c in cols}
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                clean = _re.sub(r" +", " ",
-                                _re.sub(r"[^a-z ]", "",
-                                        (text or "").lower())).strip()
-                ops = _po.page_draw_ops([], [clean] if clean else [],
-                                        1000, 1400, 612.0, 792.0)
-                data = _pm.build_searchable_pdf(
-                    [{"width_pt": 612.0, "height_pt": 792.0, "ops": ops}])
-                content = _ps.page_content_streams(data)[0]
-                out["doc_id"].append(int(did))
-                out["text_layer"].append(_ps.extract_text_layer(content))
-            yield _pd.DataFrame(out, columns=cols)
+    def text_layer_row(did, text):
+        clean = _re.sub(r" +", " ",
+                        _re.sub(r"[^a-z ]", "", (text or "").lower())).strip()
+        ops = _po.page_draw_ops([], [clean] if clean else [],
+                                1000, 1400, 612.0, 792.0)
+        data = _pm.build_searchable_pdf(
+            [{"width_pt": 612.0, "height_pt": 792.0, "ops": ops}])
+        content = _ps.page_content_streams(data)[0]
+        return {"doc_id": int(did),
+                "text_layer": _ps.extract_text_layer(content)}
 
-    return docs.mapInPandas(build, "doc_id int, text_layer string") \
-        .orderBy("doc_id")
+    return ex.map_rows(docs, text_layer_row, ("doc_id", "text"),
+                       "doc_id int, text_layer string").orderBy("doc_id")
 
 
 def _q49_repetition_stats(spark, sf_dir):
@@ -2310,7 +2259,7 @@ def _q49_repetition_stats(spark, sf_dir):
     # explicit spread (a lake-scale input has thousands of splits)
     docs = _read(spark, sf_dir, "documents") \
         .repartition(spark.sparkContext.defaultParallelism)
-    return ts.repetition_stats(docs, "doc_id", "text", k=2) \
+    return ts.repetition_stats(docs, k=2) \
         .orderBy("doc_id")
 
 

@@ -34,7 +34,10 @@ def parse_args(argv):
                                      "table name (with --iceberg)")
     src.add_argument("--synthetic-docs", type=int,
                      help="generate N deterministic synthetic docs instead "
-                          "of reading an input table")
+                          "of reading an input table (all on one host "
+                          "with relative links, so --webgraph on them "
+                          "reports host_edges 0 and never reaches "
+                          "PageRank)")
     p.add_argument("--output", required=True,
                    help="extractions sink (parquet path / Iceberg table)")
     p.add_argument("--checkpoint", default=None,

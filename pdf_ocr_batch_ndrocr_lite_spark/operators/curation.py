@@ -295,7 +295,7 @@ def curation_verdict(docs: DataFrame, min_quality: float = 0.45,
         F.coalesce(F.md5(F.col("text")), F.lit("")).alias("_md5"),
         ts.lang_pred_col().alias("lang_pred"),
         ts.quality_col().alias("quality"),
-        ts.sorted_grams_col("text", 2).alias("_g"),
+        ts.sorted_grams_col(2).alias("_g"),
     )
     # coalesce: a doc with no grams (NULL text → NULL fraction) must fall
     # through to 'kept' DETERMINISTICALLY, not via three-valued-logic

@@ -39,13 +39,14 @@ def exact_duplicates(docs: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _words(text_col: str):
-    return F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
+def _words():
+    return F.filter(F.split(F.col("text"), r"\s+"), lambda w: w != "")
 
 
-def shingles_col(text_col: str, k: int = 3):
-    """array<string> of k-word shingles (space-joined), JVM-side only."""
-    words = _words(text_col)
+def shingles_col(k: int = 3):
+    """array<string> of the ``text`` column's k-word shingles
+    (space-joined), JVM-side only."""
+    words = _words()
     n = F.size(words)
     idx = F.sequence(F.lit(0), F.greatest(n - F.lit(k), F.lit(0)))
     return F.when(n < k, F.array(F.array_join(words, " "))).otherwise(
@@ -54,18 +55,19 @@ def shingles_col(text_col: str, k: int = 3):
 
 
 # ---------------------------------------------------------------------------
-# Shared hot-bucket guard for bucketed self-joins.  A same-bucket self-join
-# is O(n²) in bucket size; with a skewed bucket distribution (template-spam
+# Shared hot-bucket guard for bucketed joins.  A same-bucket join is
+# O(n·m) in bucket size; with a skewed bucket distribution (template-spam
 # LSH bands, a degenerate quantizer cell) ONE bucket can own the stage as a
-# single straggler task.  `salted_self_join` splits buckets larger than
-# `bucket_cap` into s = min(max_salts, ceil(n / bucket_cap)) cells by id
-# hash: the left side is replicated into every cell, the right side lands
-# in its own cell, and the join key becomes (bucket, cell).  Total
-# comparison work is unchanged (it is the operator's output contract) but
-# the largest task shrinks ~s-fold and the hot bucket runs on s cores
-# instead of one.  Each qualifying pair matches exactly once (a replicated
-# into b's cell; the caller's a_id < b_id filter kills the mirror
-# orientation), so results are identical for ANY cap.
+# single straggler task.  `salted_two_sided_join` splits buckets whose
+# b-side holds more than `bucket_cap` rows into s = min(max_salts,
+# ceil(n / bucket_cap)) cells by id hash: the a side is replicated into
+# every cell, the b side lands in its own cell, and the join key becomes
+# (bucket, cell).  Total comparison work is unchanged (it is the
+# operator's output contract) but the largest task shrinks ~s-fold and the
+# hot bucket runs on s cores instead of one.  Each qualifying pair matches
+# exactly once (a replicated into b's cell; a self-join's a_id < b_id
+# filter kills the mirror orientation), so results are identical for ANY
+# cap.
 #
 # Only OVER-cap buckets enter the broadcast salt dimension (everything
 # else coalesces to s = 1): at corpus scale the (band, key) LSH bucket
@@ -75,52 +77,15 @@ def shingles_col(text_col: str, k: int = 3):
 # ---------------------------------------------------------------------------
 
 
-def salted_self_join(df: DataFrame, key_cols: list, id_col: str,
-                     bucket_cap: int, max_salts: int) -> DataFrame:
-    """Self-join `df` on `key_cols` with hot buckets salt-split.
-
-    Returns the joined frame aliased ``a``/``b`` with the
-    ``a.id < b.id`` orientation filter already applied; callers project
-    their payload columns via ``F.col("a.<col>")`` / ``F.col("b.<col>")``.
-    """
-    # lineage cut on the INPUT: `df` feeds the hot-bucket profile and,
-    # via `cells`, both join legs — without the cut the caller's whole
-    # upstream subtree (signature aggregation, vector norms) executes
-    # three times per self-join.  The cut sits ABOVE the salt scaffold
-    # so the pmod cell assignment and cell explode stay visible in the
-    # optimized plan (plan-guard test); the materialized frame is the
-    # same volume the join shuffles anyway.
-    df = materialize(df, "salted_join_input")
-    hot = (df.groupBy(*key_cols)
-           .agg(F.count(F.lit(1)).alias("_bn"))
-           .filter(F.col("_bn") > bucket_cap)
-           .select(*key_cols,
-                   F.least(
-                       F.lit(max_salts).cast("int"),
-                       F.ceil(F.col("_bn") / F.lit(bucket_cap)).cast("int"),
-                   ).alias("_s")))
-    cells = (df.join(F.broadcast(hot), list(key_cols), "left")
-             .withColumn("_s", F.coalesce(F.col("_s"), F.lit(1)))
-             .withColumn("_cell", F.pmod(F.xxhash64(F.col(id_col), F.lit(7)),
-                                         F.col("_s"))))
-    a = (cells.withColumn(
-            "_jcell", F.explode(F.sequence(F.lit(0), F.col("_s") - 1)))
-         .drop("_cell", "_s").alias("a"))
-    b = cells.withColumnRenamed("_cell", "_jcell").drop("_s").alias("b")
-    return (a.join(b, list(key_cols) + ["_jcell"])
-            .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-
-
 def salted_two_sided_join(a: DataFrame, b: DataFrame, key_cols: list,
                           b_id_col: str, bucket_cap: int,
                           max_salts: int) -> DataFrame:
-    """Join `a` × `b` on `key_cols` with hot buckets salt-split — the
-    two-sided sibling of :func:`salted_self_join` for new-batch ×
-    existing-corpus joins.  Cells are sized from the B (corpus) side:
-    each b row lands in one cell by id hash, each a row is replicated
-    into every cell, so every qualifying (a, b) pair matches exactly
-    once and results are invariant to the cap.  Frames are returned
-    aliased ``a``/``b``."""
+    """Join `a` × `b` on `key_cols` with hot buckets salt-split.  Cells
+    are sized from the b side: each b row lands in one cell by id hash,
+    each a row is replicated into every cell, so every qualifying (a, b)
+    pair matches exactly once and results are invariant to the cap.
+    Frames are returned aliased ``a``/``b``; callers project their payload
+    columns via ``F.col("a.<col>")`` / ``F.col("b.<col>")``."""
     # NOTE: `b` feeds both the hot-bucket profile and the cell
     # assignment, but a localCheckpoint cut here was A/B'd (r9) and
     # kept OFF: wall-clock parity locally, and the streaming path
@@ -148,6 +113,23 @@ def salted_two_sided_join(a: DataFrame, b: DataFrame, key_cols: list,
     return a_rep.join(b_cells, list(key_cols) + ["_jcell"])
 
 
+def salted_self_join(df: DataFrame, key_cols: list, id_col: str,
+                     bucket_cap: int, max_salts: int) -> DataFrame:
+    """Self-join `df` on `key_cols` through `salted_two_sided_join`, with
+    the ``a.id < b.id`` orientation filter applied."""
+    # lineage cut on the INPUT: `df` feeds the hot-bucket profile and both
+    # join legs — without the cut the caller's whole upstream subtree
+    # (signature aggregation, vector norms) executes three times per
+    # self-join.  The cut comes before the salt scaffold, so the pmod cell
+    # assignment and cell explode stay visible in the optimized plan
+    # (plan-guard test); the materialized frame is the same volume the
+    # join shuffles anyway.
+    m = materialize(df, "salted_join_input")
+    return (salted_two_sided_join(m, m, key_cols, id_col, bucket_cap,
+                                  max_salts)
+            .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
+
+
 # ---------------------------------------------------------------------------
 # MinHash + LSH near-dup (Broder, "On the resemblance and containment of
 # documents", 1997; banding analysis as in Leskovec/Rajaraman/Ullman,
@@ -169,7 +151,7 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = 8,
     """(doc_id, h0..h{n-1}) min-hash signature columns."""
     sh = docs.select(
         F.col("doc_id"),
-        F.explode(shingles_col("text", k)).alias("shingle"),
+        F.explode(shingles_col(k)).alias("shingle"),
     ).dropDuplicates(["doc_id", "shingle"])
     aggs = [
         F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("shingle"))))
@@ -179,10 +161,16 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = 8,
     return sh.groupBy("doc_id").agg(*aggs)
 
 
-def _band_buckets(docs: DataFrame, num_hashes: int, bands: int,
-                  k: int) -> DataFrame:
-    """(doc_id, band, key): one row per (doc, band) with the band's
-    concatenated signature slice as the bucket key."""
+def band_buckets(docs: DataFrame, num_hashes: int = 8,
+                 bands: int = 4, k: int = 3) -> DataFrame:
+    """(doc_id, band, key) LSH bucket index: one row per (doc, band) with
+    the band's concatenated signature slice as the bucket key — the
+    PERSISTABLE half of the minhash pipeline.  A continuous-ingest
+    corpus stores this index incrementally (each admitted batch appends
+    its survivors' buckets) so later batches join against stored keys
+    instead of re-hashing the whole corpus per micro-batch — the
+    signature recompute was measured to dominate streaming-dedup cost
+    and GROW with corpus size (see streaming/dedup_stream.py)."""
     rows_per_band = num_hashes // bands
     sigs = minhash_signatures(docs, num_hashes, k)
     band_cols = [
@@ -211,7 +199,7 @@ def minhash_lsh_candidates(docs: DataFrame, num_hashes: int = 8,
     signature — 100k docs in one bucket = 10^10 pairs in one task without
     the guard) is salt-split into bounded cells.  Results are invariant to
     the cap (the trailing ``distinct`` already dedups across bands)."""
-    buckets = _band_buckets(docs, num_hashes, bands, k)
+    buckets = band_buckets(docs, num_hashes, bands, k)
     return (
         salted_self_join(buckets, ["band", "key"], "doc_id",
                          bucket_cap, max_salts)
@@ -282,18 +270,6 @@ def minhash_dedup(docs: DataFrame, num_hashes: int = 8,
 # ---------------------------------------------------------------------------
 
 
-def band_buckets(docs: DataFrame, num_hashes: int = 8,
-                 bands: int = 4, k: int = 3) -> DataFrame:
-    """Public (doc_id, band, key) LSH bucket index for a document frame —
-    the PERSISTABLE half of the minhash pipeline.  A continuous-ingest
-    corpus stores this index incrementally (each admitted batch appends
-    its survivors' buckets) so later batches join against stored keys
-    instead of re-hashing the whole corpus per micro-batch — the
-    signature recompute was measured to dominate streaming-dedup cost
-    and GROW with corpus size (see streaming/dedup_stream.py)."""
-    return _band_buckets(docs, num_hashes, bands, k)
-
-
 def incremental_minhash_dedup(new: DataFrame, corpus: DataFrame,
                               num_hashes: int = 8, bands: int = 4,
                               k: int = 3,
@@ -328,9 +304,9 @@ def incremental_minhash_dedup(new: DataFrame, corpus: DataFrame,
     full-corpus signature recompute (measured to dominate and grow
     linearly with corpus size).  Only candidate docs' TEXT is ever read
     from the corpus either way (the Jaccard verify's semi-join)."""
-    nb = _band_buckets(new, num_hashes, bands, k)
+    nb = band_buckets(new, num_hashes, bands, k)
     cb = (corpus_buckets if corpus_buckets is not None
-          else _band_buckets(corpus, num_hashes, bands, k))
+          else band_buckets(corpus, num_hashes, bands, k))
     # lineage cut, same reason as minhash_dedup's candidates: `cand` is
     # referenced three times below (both semi-joins + norm), each of
     # which would re-execute the two-sided bucket join subtree
@@ -377,7 +353,7 @@ def shingle_document_frequency(docs: DataFrame, k: int = 3,
     one explode + one combining groupBy; `min_df` prunes the singleton
     long tail before it is ever shuffled to the driver/sink."""
     sh = docs.select(
-        F.explode(F.array_distinct(shingles_col("text", k)))
+        F.explode(F.array_distinct(shingles_col(k)))
         .alias("shingle"))
     return (sh.groupBy("shingle")
             .agg(F.count(F.lit(1)).alias("df"))
@@ -704,7 +680,7 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id", k: int = 3,
     runs with it on.
     """
     sh = docs.select(
-        F.col(id_col), F.explode(shingles_col("text", k)).alias("shingle")
+        F.col(id_col), F.explode(shingles_col(k)).alias("shingle")
     ).dropDuplicates([id_col, "shingle"])
     if max_df is not None:
         keep = (sh.groupBy("shingle")
@@ -769,7 +745,7 @@ def simhash(docs: DataFrame, bits: int = 60) -> DataFrame:
             f"bits must be in [1, 60] (md5-derived word hash is 60 bits "
             f"wide; higher positions would always be zero): got {bits}")
     words = docs.select(
-        F.col("doc_id"), F.explode(_words("text")).alias("word")
+        F.col("doc_id"), F.explode(_words()).alias("word")
     ).withColumn(
         "wh",
         F.conv(F.substring(F.md5("word"), 1, 15), 16, 10).cast("bigint"))

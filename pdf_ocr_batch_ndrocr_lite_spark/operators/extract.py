@@ -13,6 +13,12 @@ over the JSON envelope; the HTML path applies the readability-style
 boilerplate stripper (north-star extension).  Given an OCR engine, documents
 that route ``needs_ocr`` continue through it (`run_engine`) in the same row
 step, so route → engine → parse → serialize is one pass per document.
+
+`map_rows` is the one body of every Python stage in the package and the
+query surface (this dispatcher, the OCR operator, the page explode, the
+media features, the query fixtures): a ``row_fn`` returns one dict per
+input row, and the output columns are the stage schema's.  Only
+``sources.corpus_df``'s generator keeps its own ``mapInPandas``.
 """
 
 from __future__ import annotations
@@ -25,6 +31,7 @@ from typing import (TYPE_CHECKING, Any, Callable, Dict, Iterator, List,
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..functions import html_extract, image_meta, ocr_parse, pdf_scan, textops
 
@@ -232,41 +239,38 @@ def extract_one(url: str, payload: bytes, lang: str,
     return out
 
 
-_OUT_COLS = ["url", "lang", "doc_kind", "action", "extracted_text",
-             "page_count", "token_count", "block_count", "parse_warnings",
-             "low_coverage", "bytes_in", "seconds"]
-
-
-# a mapInPandas body
-BatchFn = Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]
-
-
-def map_rows(row_fn: Callable[..., Dict[str, Any]],
-             in_cols: Sequence[str]) -> BatchFn:
-    """The one ``mapInPandas`` body that builds ``EXTRACT_SCHEMA`` frames:
-    one output row ``row_fn(*values)`` per input row, the values taken
-    from ``in_cols`` in order.
+def map_rows(df: DataFrame, row_fn: Callable[..., Dict[str, Any]],
+             in_cols: Sequence[str], schema: str) -> DataFrame:
+    """The one Python stage of the package (``sources.corpus_df``'s
+    generator aside), a ``mapInPandas`` over ``df``: one output row
+    ``row_fn(*values)`` per input row of ``df``, the values read from
+    ``in_cols`` by name, the row dict's keys laid out in the column order
+    of ``schema`` (a DDL string).  ``df`` already holds ``in_cols``: a
+    ``select`` here would put a Project above the caller's exchange.
 
     Columnar access (`.tolist()` once per batch, dict-of-lists output)
     rather than per-cell `.iat` — measurably cheaper at Arrow batch sizes.
     """
+    out_cols = StructType.fromDDL(schema).names
+
     def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            out: Dict[str, list] = {c: [] for c in _OUT_COLS}
+            out: Dict[str, list] = {c: [] for c in out_cols}
             for values in zip(*(pdf[c].tolist() for c in in_cols)):
                 row = row_fn(*values)
-                for c in _OUT_COLS:
+                for c in out_cols:
                     out[c].append(row[c])
-            yield pd.DataFrame(out, columns=_OUT_COLS)
+            yield pd.DataFrame(out, columns=out_cols)
     body.__name__ = row_fn.__name__     # the stage's name in query plans
-    return body
+    return df.mapInPandas(body, schema)
 
 
-def extract_batches(engine: Optional["EngineFn"] = None) -> BatchFn:
-    """Dispatcher body over `flag_pages` output: one `extract_one` row per
-    document.
+def extract_batches(flagged: DataFrame,
+                    engine: Optional["EngineFn"] = None) -> DataFrame:
+    """The dispatcher stage over `flag_pages` output: one `extract_one`
+    row per document, ``EXTRACT_SCHEMA``.
 
     Rows pre-flagged ``skip_name`` (the Catalyst RLike predicate evaluated
     them during the single input scan) pass through without touching the
@@ -278,8 +282,9 @@ def extract_batches(engine: Optional["EngineFn"] = None) -> BatchFn:
                         doc_kind="unknown", bytes_in=int(bytes_len or 0),
                         seconds=0.0)
         return extract_one(url, html, lang, engine)
-    return map_rows(extract_row,
-                    ("url", "html", "lang", "skip_name", "bytes_len"))
+    return map_rows(flagged, extract_row,
+                    ("url", "html", "lang", "skip_name", "bytes_len"),
+                    EXTRACT_SCHEMA)
 
 
 def url_bucket(n: int) -> Column:
@@ -340,7 +345,7 @@ def run_extraction(pages_df: DataFrame, num_partitions: int = 0,
     """
     flagged = salted_repartition(flag_pages(pages_df), num_partitions,
                                  num_buckets)
-    return flagged.mapInPandas(extract_batches(engine), schema=EXTRACT_SCHEMA)
+    return extract_batches(flagged, engine)
 
 
 def flag_pages(pages_df: DataFrame) -> DataFrame:

@@ -35,11 +35,11 @@ def contamination_hits(docs: DataFrame, bench: DataFrame, k: int = 3,
     explode — same shape as `shingle_document_frequency`); the benchmark
     shingle set is distinct-ed once and broadcast."""
     bsh = (bench.select(
-        F.explode(F.array_distinct(shingles_col("text", k)))
+        F.explode(F.array_distinct(shingles_col(k)))
         .alias("shingle")).distinct())
     dsh = docs.select(
         F.col("doc_id"),
-        F.explode(F.array_distinct(shingles_col("text", k)))
+        F.explode(F.array_distinct(shingles_col(k)))
         .alias("shingle"))
     return (dsh.join(F.broadcast(bsh), "shingle", "left_semi")
             .groupBy("doc_id")
@@ -93,7 +93,7 @@ def bench_shingle_index(bench: DataFrame, k: int = 5,
     the ubiquity cap applied."""
     bsh = bench.select(
         F.col("doc_id").alias("bench_id"),
-        F.explode(F.array_distinct(shingles_col("text", k)))
+        F.explode(F.array_distinct(shingles_col(k)))
         .alias("shingle")).distinct()
     if max_bench_df is not None:
         keep = (bsh.groupBy("shingle")
@@ -116,7 +116,7 @@ def fuzzy_contamination_pairs(docs: DataFrame, bench: DataFrame,
     bsh = bench_shingle_index(bench, k, max_bench_df)
     dsh = docs.select(
         F.col("doc_id"),
-        F.explode(F.array_distinct(shingles_col("text", k)))
+        F.explode(F.array_distinct(shingles_col(k)))
         .alias("shingle"))
     bsizes = bsh.groupBy("bench_id").agg(F.count(F.lit(1)).alias("_bn"))
     inter = (dsh.join(F.broadcast(bsh), "shingle")
@@ -462,11 +462,11 @@ def contaminated_spans(docs: DataFrame, bench: DataFrame, k: int = 5,
 
     bsh = bench_shingle_index(bench, k, max_bench_df) \
         .select("shingle").distinct()
-    n_words = F.size(_words("text"))
+    n_words = F.size(_words())
     # positional shingles: pos p covers words [p, p+k-1]; the shingle
     # array is staged in its own projection before the posexplode
     psh = (docs.select(F.col("doc_id"), n_words.alias("_nw"),
-                       shingles_col("text", k).alias("_sh"))
+                       shingles_col(k).alias("_sh"))
            .select(F.col("doc_id"), F.col("_nw"),
                    F.posexplode("_sh").alias("_p", "shingle")))
     hits = psh.join(F.broadcast(bsh), "shingle", "left_semi")

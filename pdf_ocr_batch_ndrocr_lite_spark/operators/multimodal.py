@@ -16,13 +16,14 @@ decode changes no Spark plumbing.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
+from typing import Any, Dict
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pdf_ocr_batch_ndrocr_lite_spark.functions import image_meta as _im
+
+from .extract import map_rows
 
 MEDIA_SCHEMA = (
     "media_id bigint, kind string, payload binary, "
@@ -95,7 +96,7 @@ def demo_encoder(payload: bytes, kind: str):
 
 
 def media_features(media: DataFrame, encoder=None) -> DataFrame:
-    """Vectorized feature extraction over binary media: one mapInPandas
+    """Vectorized feature extraction over binary media: one `map_rows`
     stage, Arrow-batched; batch size bounded by
     spark.sql.execution.arrow.maxRecordsPerBatch so giant payloads never
     blow executor memory.
@@ -111,34 +112,22 @@ def media_features(media: DataFrame, encoder=None) -> DataFrame:
     ocr_engine.py).  Default None keeps the deterministic md5 stub
     (oracle-twinned in DuckDB); the digest column is always the
     stage-computed payload md5 regardless of encoder.  The stage stays
-    ONE mapInPandas either way (plan-tested)."""
+    ONE Python stage either way (plan-tested)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_id", "kind", "n_bytes", "digest", "feature",
-                "n_frames", "fmt", "width", "height", "dpi"]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = []
-            for mid, kind, payload in zip(pdf["media_id"], pdf["kind"],
-                                          pdf["payload"]):
-                raw = bytes(payload or b"")
-                if encoder is None:
-                    digest, feats, n_frames = _fake_decode_features(
-                        raw, kind)
-                else:
-                    digest = hashlib.md5(raw).hexdigest()
-                    feats, n_frames = encoder(raw, kind)
-                fmt, w, h, dpi = _image_header_meta(raw, kind)
-                out.append({
-                    "media_id": mid, "kind": kind, "n_bytes": len(raw),
-                    "digest": digest, "feature": feats, "n_frames": n_frames,
-                    "fmt": fmt, "width": w, "height": h, "dpi": dpi,
-                })
-            yield pd.DataFrame(out, columns=cols)
+    def media_row(mid, kind, payload) -> Dict[str, Any]:
+        raw = bytes(payload or b"")
+        if encoder is None:
+            digest, feats, n_frames = _fake_decode_features(raw, kind)
+        else:
+            digest = hashlib.md5(raw).hexdigest()
+            feats, n_frames = encoder(raw, kind)
+        fmt, w, h, dpi = _image_header_meta(raw, kind)
+        return {"media_id": mid, "kind": kind, "n_bytes": len(raw),
+                "digest": digest, "feature": feats, "n_frames": n_frames,
+                "fmt": fmt, "width": w, "height": h, "dpi": dpi}
 
-    return media.select("media_id", "kind", "payload") \
-        .mapInPandas(run, schema=FEATURE_SCHEMA)
+    return map_rows(media.select("media_id", "kind", "payload"), media_row,
+                    ("media_id", "kind", "payload"), FEATURE_SCHEMA)
 
 
 def media_summary(media: DataFrame) -> DataFrame:

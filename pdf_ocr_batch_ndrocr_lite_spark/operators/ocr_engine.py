@@ -120,6 +120,5 @@ def run_ocr(docs: DataFrame, engine: Optional[EngineFn] = None,
 
     sel = docs.select("url", "payload", "page_count")
     sel = ex.salted_repartition(sel, num_partitions)
-    return sel.mapInPandas(
-        ex.map_rows(ocr_row, ("url", "payload", "page_count")),
-        schema=ex.EXTRACT_SCHEMA)
+    return ex.map_rows(sel, ocr_row, ("url", "payload", "page_count"),
+                       ex.EXTRACT_SCHEMA)

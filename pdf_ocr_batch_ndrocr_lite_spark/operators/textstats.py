@@ -176,14 +176,15 @@ def fingerprint(docs: DataFrame, window: int = 5) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def sorted_grams_col(text_col: str = "text", k: int = 2):
-    """Sorted k-gram array — STAGE this in its own projection before the
-    count folds reference it: Spark never common-subexpression-eliminates
-    lambda-bearing expressions (SPARK-35410), so inlining it into several
-    count columns recomputes the split+sort per reference."""
+def sorted_grams_col(k: int = 2):
+    """Sorted k-gram array of the ``text`` column — STAGE this in its own
+    projection before the count folds reference it: Spark never
+    common-subexpression-eliminates lambda-bearing expressions
+    (SPARK-35410), so inlining it into several count columns recomputes
+    the split+sort per reference."""
     from .dedup import shingles_col
 
-    return F.array_sort(shingles_col(text_col, k))
+    return F.array_sort(shingles_col(k))
 
 
 def _top_run_col(grams):
@@ -212,8 +213,7 @@ def top_gram_frac_col(grams_col):
     return _top_run_col(grams_col) / F.size(grams_col).cast("double")
 
 
-def repetition_stats(docs: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text", k: int = 2) -> DataFrame:
+def repetition_stats(docs: DataFrame, k: int = 2) -> DataFrame:
     """Per-document n-gram repetition signals: total/most-frequent/distinct
     k-gram counts plus the two standard fractions (single IEEE division
     each, so the DuckDB oracle reproduces them bit-exactly).
@@ -231,16 +231,16 @@ def repetition_stats(docs: DataFrame, id_col: str = "doc_id",
     select, re-evaluating the whole HOF gram chain per row (lambdas are
     never CSE'd, SPARK-35410 — measured 4x on the q49 bench).
     """
-    staged = docs.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col), sorted_grams_col(text_col, k).alias("_g"))
+    staged = docs.filter(F.col("text").isNotNull()).select(
+        F.col("doc_id"), sorted_grams_col(k).alias("_g"))
     g = F.col("_g")
     return staged.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(g).cast("bigint").alias("n_grams"),
         _top_run_col(g).alias("top_gram_count"),
         F.size(F.array_distinct(g)).cast("bigint").alias("distinct_grams"),
     ).select(
-        F.col(id_col), "n_grams", "top_gram_count", "distinct_grams",
+        F.col("doc_id"), "n_grams", "top_gram_count", "distinct_grams",
         (F.col("top_gram_count") / F.col("n_grams").cast("double"))
         .alias("top_gram_frac"),
         ((F.col("n_grams") - F.col("distinct_grams"))

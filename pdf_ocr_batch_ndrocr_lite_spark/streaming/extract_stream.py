@@ -51,8 +51,7 @@ def extract_stream(pages: DataFrame) -> DataFrame:
     """Streaming extraction: single-pass name-rule routing + the batch
     dispatcher (same plan shape as batch `run_extraction`, minus the salted
     shuffle — micro-batches are already size-bounded by the trigger)."""
-    return ex.flag_pages(pages).mapInPandas(ex.extract_batches(),
-                                            schema=ex.EXTRACT_SCHEMA)
+    return ex.extract_batches(ex.flag_pages(pages))
 
 
 def make_batch_sink(output_path: str, lineage_path: Optional[str] = None):

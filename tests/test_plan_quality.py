@@ -180,7 +180,8 @@ def test_exact_quantiles_single_exchange(spark):
 
 
 def test_pdf_page_stats_single_python_stage(spark):
-    """Raw-PDF page explode is one scan + one python stage, no shuffle."""
+    """Raw-PDF page explode is one scan + one python stage (the per-doc
+    page array) + one JVM-side posexplode, no shuffle."""
     import pandas as pd
 
     from pdf_ocr_batch_ndrocr_lite_spark.functions import pdf_make as pm
@@ -192,6 +193,7 @@ def test_pdf_page_stats_single_python_stage(spark):
         .executedPlan().toString()
     assert plan.count("Exchange") == 0
     assert plan.count("MapInPandas") == 1
+    assert plan.count("Generate") == 1
 
 
 def test_ivf_assign_is_pure_map_stage(spark):

@@ -227,3 +227,68 @@ def test_every_keyword_parameter_is_set_by_a_product_caller():
         f"value and delete the parameter): {sorted(unset)}")
     stale = sorted(KNOB_ALLOWLIST - params)
     assert not stale, f"allowlisted parameters that no longer exist: {stale}"
+
+
+# ---------------------------------------------------------------------------
+# One Python-stage body: every ``mapInPandas`` stage of the product code
+# (the package, ``__spark_entry__.py``, ``bench.py``) goes through
+# ``extract.map_rows``, and pandas is imported only where a stage body is
+# written.  ``corpus.corpus_df`` is the one other site: its generator
+# yields 64-row slices of each input batch to bound the Arrow direct
+# memory of giant synthesized envelopes, a rule ``map_rows`` must not
+# impose on the extraction stage.
+# ---------------------------------------------------------------------------
+
+PRODUCT_CODE = sorted(list((REPO / PKG).rglob("*.py"))
+                      + [REPO / "__spark_entry__.py", REPO / "bench.py"])
+STAGE_BODIES = {
+    f"{PKG}/operators/extract.py": "map_rows",
+    f"{PKG}/sources/corpus.py": "corpus_df",
+}
+
+
+def _stage_sites(tree: ast.AST, rel: str) -> tuple:
+    """([site of each ``.mapInPandas(`` call], [site of each pandas
+    import]); a site is ``path:line in outer.inner`` (``<module>`` at top
+    level)."""
+    calls, imports = [], []
+
+    def walk(node, scope):
+        for child in ast.iter_child_nodes(node):
+            inner = scope
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                inner = scope + [child.name]
+            where = f"{rel}:{getattr(child, 'lineno', 0)} in " + (
+                ".".join(inner) or "<module>")
+            if (isinstance(child, ast.Call)
+                    and isinstance(child.func, ast.Attribute)
+                    and child.func.attr == "mapInPandas"):
+                calls.append((inner, where))
+            elif isinstance(child, ast.Import) and any(
+                    a.name.split(".")[0] == "pandas" for a in child.names):
+                imports.append(where)
+            elif (isinstance(child, ast.ImportFrom) and not child.level
+                    and (child.module or "").split(".")[0] == "pandas"):
+                imports.append(where)
+            walk(child, inner)
+
+    walk(tree, [])
+    return calls, imports
+
+
+def test_every_python_stage_goes_through_map_rows():
+    stray_calls, stray_imports = [], []
+    for path in PRODUCT_CODE:
+        rel = path.relative_to(REPO).as_posix()
+        calls, imports = _stage_sites(ast.parse(path.read_text(), str(path)),
+                                      rel)
+        allowed = STAGE_BODIES.get(rel)
+        stray_calls += [where for scope, where in calls
+                        if scope != [allowed]]
+        if allowed is None:
+            stray_imports += imports
+    assert not stray_calls and not stray_imports, (
+        f"{len(stray_calls)} mapInPandas calls outside extract.map_rows "
+        f"and corpus.corpus_df: {stray_calls}; {len(stray_imports)} pandas "
+        f"imports outside extract.py and corpus.py: {stray_imports} (write "
+        "the stage as a row_fn through extract.map_rows)")
