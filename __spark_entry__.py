@@ -3961,7 +3961,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         # Vocabulary top-k: exact integer counts; the rank-20 boundary
         # cut resolves ties by word on both engines.
-        "q74_vocab_topk": """
+        "q74_vocab_topk": r"""
             WITH w AS (
                 SELECT doc_id,
                        unnest(list_filter(

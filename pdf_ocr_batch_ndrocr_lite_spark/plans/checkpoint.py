@@ -143,20 +143,27 @@ def run_meta_row(spark: SparkSession, app_name: str, num_buckets: int,
     correctness-critical continuity fields (currently num_buckets);
     everything else is recorded for reproducibility but free to vary
     between a run and its resume (a resume on a bigger cluster is
-    normal; a resume in a different key universe is corruption)."""
+    normal; a resume in a different key universe is corruption).
+
+    Literals over a one-partition ``range``: the append runs as one JVM
+    task, where a frame from a driver-side list would scan a Python RDD
+    in ``defaultParallelism`` tasks."""
     import hashlib
 
     conf = spark.sparkContext.getConf()
     config_hash = hashlib.md5(
         f"num_buckets={num_buckets}".encode()).hexdigest()[:12]
-    row = [(config_hash, app_name, int(num_buckets), int(num_partitions),
-            int(spark.conf.get("spark.sql.shuffle.partitions", "0")),
-            conf.get("spark.master", ""), _code_version())]
-    return spark.createDataFrame(
-        row, ("config_hash string, app_name string, num_buckets int, "
-              "num_partitions int, shuffle_partitions int, master string, "
-              "code_version string")
-    ).withColumn("created_at", F.current_timestamp())
+    shuffle_partitions = spark.conf.get("spark.sql.shuffle.partitions", "0")
+    return spark.range(0, 1, 1, 1).select(
+        F.lit(config_hash).alias("config_hash"),
+        F.lit(app_name).alias("app_name"),
+        F.lit(int(num_buckets)).cast("int").alias("num_buckets"),
+        F.lit(int(num_partitions)).cast("int").alias("num_partitions"),
+        F.lit(int(shuffle_partitions)).cast("int")
+        .alias("shuffle_partitions"),
+        F.lit(conf.get("spark.master", "")).alias("master"),
+        F.lit(_code_version()).alias("code_version"),
+        F.current_timestamp().alias("created_at"))
 
 
 def commit_run_meta(spark: SparkSession, checkpoint_path: str,

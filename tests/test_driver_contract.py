@@ -24,3 +24,20 @@ def test_entry_rows_and_schema(spark):
     assert df.count() > 0
     actions = {r["action"] for r in df.select("action").distinct().collect()}
     assert "extracted" in actions
+
+
+def test_driver_source_compiles_without_warnings():
+    """No string literal in the driver carries an invalid escape (q74's
+    oracle once held ``'\\s+'`` in a non-raw string); its bytes stay the
+    ones the oracle gate checked."""
+    import hashlib
+    import warnings
+
+    with open(em.__file__, encoding="utf-8") as fh:
+        source = fh.read()
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        compile(source, em.__file__, "exec")
+    assert hashlib.sha256(
+        em.oracle_sql()["q74_vocab_topk"].encode()).hexdigest() == (
+        "2147280a04db7d991e023eb9f3fcabf9677c404b2620444435b13e85a5641bf0")

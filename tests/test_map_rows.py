@@ -1,8 +1,14 @@
 """`extract.map_rows`, the one body of every Python stage: the row dict's
 keys are laid out in the stage schema's order, empty batches yield no
-frame, and the stage carries its row function's name in the plan."""
+frame, the stage carries its row function's name in the plan, and the
+body drops the worker's cached zip finders."""
 
 from __future__ import annotations
+
+import importlib.machinery
+import sys
+import zipfile
+import zipimport
 
 import pandas as pd
 
@@ -50,3 +56,44 @@ def test_map_rows_body_skips_empty_batches(spark):
     assert len(frames) == 1
     assert list(frames[0].columns) == ["id", "s", "n"]
     assert frames[0].values.tolist() == [[7, "XY", 2], [8, "Z", 1]]
+
+
+def test_map_rows_body_drops_cached_zip_finders(spark, tmp_path):
+    archive = str(tmp_path / "lib.zip")
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr("mod.py", "X = 1\n")
+    folder = str(tmp_path)
+    cache = sys.path_importer_cache
+    cache[archive] = zipimport.zipimporter(archive)
+    cache[folder] = finder = importlib.machinery.FileFinder(folder)
+    try:
+        stage = ex.map_rows(_Stage(), swapped_row, ("id", "s"), SCHEMA)
+        list(stage.body(iter([pd.DataFrame({"id": [1], "s": ["a"]})])))
+        assert archive not in cache
+        assert cache[folder] is finder
+    finally:
+        cache.pop(archive, None)
+        cache.pop(folder, None)
+
+
+def zip_finders_row(i):
+    return {"id": i, "n": sum(isinstance(f, zipimport.zipimporter)
+                              for f in sys.path_importer_cache.values())}
+
+
+def test_map_rows_leaves_no_zip_finder_to_the_next_task(spark):
+    """PySpark's worker calls ``importlib.invalidate_caches()`` at the
+    start of every task, which re-reads every cached zip finder's archive
+    on CPython < 3.13.  The first run may import pyspark modules lazily
+    after the body's prune; a second run in the reused workers finds none
+    left."""
+    df = spark.range(0, 32, 1, 8)
+
+    def run():
+        return [r["n"] for r in ex.map_rows(
+            df, zip_finders_row, ("id",), "id bigint, n int").collect()]
+
+    run()
+    second = run()
+    assert len(second) == 32
+    assert set(second) == {0}

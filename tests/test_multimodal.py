@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from pdf_ocr_batch_ndrocr_lite_spark.operators import multimodal as mm
 
@@ -13,6 +14,15 @@ def _media(spark, n=100):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet") \
         .filter(F.col("doc_id") < n)
     return mm.attach_media(docs)
+
+
+def test_attach_media_matches_media_schema(spark):
+    """``MEDIA_SCHEMA`` documents `attach_media`'s output: names and types
+    in order (literal columns are non-nullable, so nullability differs)."""
+    expected = StructType.fromDDL(mm.MEDIA_SCHEMA)
+    got = _media(spark, 5).schema
+    assert [(f.name, f.dataType) for f in got] == \
+        [(f.name, f.dataType) for f in expected]
 
 
 def test_media_features_shapes(spark):

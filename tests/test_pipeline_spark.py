@@ -279,19 +279,53 @@ def test_run_meta_written_and_continuity_enforced(spark, tmp_path):
     assert spark.read.parquet(ck.meta_path(ckpt)).count() == 2
 
 
+def test_run_meta_row_is_one_jvm_task(spark):
+    """The run-meta row is literals over a one-partition range: no Python
+    RDD scan, one partition, and today's columns and types."""
+    row = ck.run_meta_row(spark, "app", 16, 0)
+    plan = row._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan and "Python" not in plan, plan
+    assert row._jdf.rdd().getNumPartitions() == 1
+    assert row.columns == ck.RUN_META_COLS
+    assert [f.dataType.simpleString() for f in row.schema] == [
+        "string", "string", "int", "int", "int", "string", "string",
+        "timestamp"]
+
+
+class _AppendJobs(StorageAdapter):
+    """Records, per `append`, the task count of each Spark job it ran in
+    the caller's job group."""
+
+    def __init__(self, spark):
+        super().__init__()
+        self.sc, self.tasks = spark.sparkContext, []
+
+    def append(self, df, path):
+        st = self.sc.statusTracker()
+        group = self.sc.getLocalProperty("spark.jobGroup.id")
+        before = set(st.getJobIdsForGroup(group))
+        super().append(df, path)
+        self.tasks.append([
+            sum(st.getStageInfo(s).numTasks for s in st.getJobInfo(j).stageIds)
+            for j in sorted(set(st.getJobIdsForGroup(group)) - before)])
+
+
 def test_run_pipeline_job_budget(spark, tmp_path, spark_jobs):
     """The run counters are an observation on the sink write, not an
     aggregation of their own: a fresh checkpointed run takes 6 Spark jobs
     and a resume with nothing pending 12 (8 and 14 while a separate
     totals collect ran, 2 jobs each), and no job is a driver collect in
-    pipeline.py."""
+    pipeline.py.  The run-meta append is one job of exactly 1 task (a
+    frame built from a driver-side list scanned a Python RDD in
+    ``defaultParallelism`` tasks)."""
     out = str(tmp_path / "extractions")
     ckpt = str(tmp_path / "checkpoint")
     df = corpus_df(spark, 120, seed=SEED, partitions=4)
+    storage = _AppendJobs(spark)
 
     def run():
         return run_pipeline(spark, df, output_path=out, checkpoint_path=ckpt,
-                            storage=StorageAdapter(), num_buckets=16)
+                            storage=storage, num_buckets=16)
 
     for budget, docs in ((6, 120), (12, 0)):
         totals, jobs = spark_jobs(run)
@@ -299,3 +333,4 @@ def test_run_pipeline_job_budget(spark, tmp_path, spark_jobs):
         assert 0 < len(jobs) <= budget, jobs
         assert not [n for stages in jobs for n in stages
                     if n.startswith("collect at") and "pipeline.py" in n]
+        assert storage.tasks.pop() == [1]
