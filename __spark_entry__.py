@@ -194,7 +194,7 @@ def _q08_regex_extract(spark, sf_dir):
 def _q09_split_stats(spark, sf_dir):
     """A8 whitespace split stats: word count, first/last word."""
     docs = _read(spark, sf_dir, "documents")
-    words = F.filter(F.split(F.col("text"), r"\s+"), lambda w: w != "")
+    words = dd.word_array()
     return docs.select(
         "doc_id",
         F.size(words).alias("n_words"),
@@ -366,7 +366,7 @@ def _q26_posexplode(spark, sf_dir):
     """A8 TXT page-splitting shape: split + posexplode with positions
     (app.py:1790-1823)."""
     docs = _read(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
-    words = F.filter(F.split(F.col("text"), r"\s+"), lambda w: w != "")
+    words = dd.word_array()
     return (
         docs.select("doc_id", F.posexplode(words).alias("pos", "word"))
         .filter(F.col("pos") < 5)

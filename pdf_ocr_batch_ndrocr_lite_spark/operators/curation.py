@@ -283,20 +283,21 @@ def curation_verdict(docs: DataFrame, min_quality: float = 0.45,
     without language filtering — e.g. code or multilingual crawls the
     marker-word heuristic cannot cover); the other gates are unchanged."""
     from . import textstats as ts
+    from .dedup import shingle_frame
 
     # the sorted-gram array is staged in its own projection: HOF
     # expressions are never CSE'd (SPARK-35410), and the fraction
     # references it twice (run fold + size)
-    staged = docs.select(
-        F.col("doc_id"),
+    staged = shingle_frame(
+        docs, 2, F.col("doc_id"),
         # sentinel for NULL texts (md5 output is hex, '' unreachable):
         # the winner agg below joins back on the digest, and an equality
         # join on a NULL key would drop NULL-text rows from the verdict
         F.coalesce(F.md5(F.col("text")), F.lit("")).alias("_md5"),
         ts.lang_pred_col().alias("lang_pred"),
         ts.quality_col().alias("quality"),
-        ts.sorted_grams_col(2).alias("_g"),
-    )
+    ).select("doc_id", "_md5", "lang_pred", "quality",
+             F.array_sort("shingles").alias("_g"))
     # coalesce: a doc with no grams (NULL text → NULL fraction) must fall
     # through to 'kept' DETERMINISTICALLY, not via three-valued-logic
     # accident (NULL > threshold is NULL, which WHEN treats as false — the

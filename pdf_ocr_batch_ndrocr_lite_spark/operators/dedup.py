@@ -34,24 +34,40 @@ def exact_duplicates(docs: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Word-shingle helpers.  shingles(text, k): array of k-word shingles.
-# Declarative: split → filter empties → sequence+transform (no UDF).
+# The one tokenizer and the one shingler (space-joined k-word windows; a
+# text of fewer than k words is one joined shingle).  Spark never CSEs
+# inside a lambda body (SPARK-35410): a shingle lambda over an INLINE word
+# expression re-splits the text per shingle, O(words²) per document, so
+# a shingle array exists only as `shingle_frame`'s column over staged words.
 # ---------------------------------------------------------------------------
 
 
-def _words():
-    return F.filter(F.split(F.col("text"), r"\s+"), lambda w: w != "")
+def word_array(text=None):
+    """array<string> of the whitespace words of `text` (default the
+    ``text`` column).  Stage it in its own projection before a lambda
+    reads it."""
+    text = F.col("text") if text is None else text
+    return F.filter(F.split(text, r"\s+"), lambda w: w != "")
 
 
-def shingles_col(k: int = 3):
-    """array<string> of the ``text`` column's k-word shingles
-    (space-joined), JVM-side only."""
-    words = _words()
+def shingle_frame(df: DataFrame, k: int, *keep) -> DataFrame:
+    """`keep` + ``words`` + ``shingles``: the ``text`` column's word
+    array, then the array<string> of its k-word shingles built from the
+    staged words (O(words·k) per document).  NULL text gives
+    ``[NULL]``; the array is never NULL or empty.
+
+    Explode ``shingles`` through an expression (``array_distinct``) or
+    the ``_outer`` form: for an inner explode of the bare column Spark
+    infers ``size(shingles) > 0`` and pushes it below this frame, which
+    re-inlines the words into the lambda."""
+    words = F.col("words")
     n = F.size(words)
     idx = F.sequence(F.lit(0), F.greatest(n - F.lit(k), F.lit(0)))
-    return F.when(n < k, F.array(F.array_join(words, " "))).otherwise(
-        F.transform(idx, lambda i: F.array_join(F.slice(words, i + 1, k), " "))
-    )
+    shingles = F.when(n < k, F.array(F.array_join(words, " "))).otherwise(
+        F.transform(idx,
+                    lambda i: F.array_join(F.slice(words, i + 1, k), " ")))
+    return (df.select(*keep, word_array().alias("words"))
+            .withColumn("shingles", shingles))
 
 
 # ---------------------------------------------------------------------------
@@ -148,11 +164,12 @@ def salted_self_join(df: DataFrame, key_cols: list, id_col: str,
 
 def minhash_signatures(docs: DataFrame, num_hashes: int = 8,
                        k: int = 3) -> DataFrame:
-    """(doc_id, h0..h{n-1}) min-hash signature columns."""
-    sh = docs.select(
+    """(doc_id, h0..h{n-1}) min-hash signature columns.  ``min``
+    ignores duplicate shingles, so a row-local array_distinct is the
+    only dedup, even when ids repeat."""
+    sh = shingle_frame(docs, k, "doc_id").select(
         F.col("doc_id"),
-        F.explode(shingles_col(k)).alias("shingle"),
-    ).dropDuplicates(["doc_id", "shingle"])
+        F.explode(F.array_distinct("shingles")).alias("shingle"))
     aggs = [
         F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("shingle"))))
         .alias(f"h{i}")
@@ -352,9 +369,8 @@ def shingle_document_frequency(docs: DataFrame, k: int = 3,
     here would be a second full shuffle of the shingle stream), leaving
     one explode + one combining groupBy; `min_df` prunes the singleton
     long tail before it is ever shuffled to the driver/sink."""
-    sh = docs.select(
-        F.explode(F.array_distinct(shingles_col(k)))
-        .alias("shingle"))
+    sh = shingle_frame(docs, k).select(
+        F.explode(F.array_distinct("shingles")).alias("shingle"))
     return (sh.groupBy("shingle")
             .agg(F.count(F.lit(1)).alias("df"))
             .filter(F.col("df") >= min_df))
@@ -679,8 +695,11 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id", k: int = 3,
     scale this filter is mandatory, which is why the standalone q13 query
     runs with it on.
     """
-    sh = docs.select(
-        F.col(id_col), F.explode(shingles_col(k)).alias("shingle")
+    # the counts need DISTINCT (id, shingle) pairs across rows: the
+    # row-local array_distinct misses an id that repeats
+    sh = shingle_frame(docs, k, id_col).select(
+        F.col(id_col),
+        F.explode(F.array_distinct("shingles")).alias("shingle"),
     ).dropDuplicates([id_col, "shingle"])
     if max_df is not None:
         keep = (sh.groupBy("shingle")
@@ -745,7 +764,7 @@ def simhash(docs: DataFrame, bits: int = 60) -> DataFrame:
             f"bits must be in [1, 60] (md5-derived word hash is 60 bits "
             f"wide; higher positions would always be zero): got {bits}")
     words = docs.select(
-        F.col("doc_id"), F.explode(_words()).alias("word")
+        F.col("doc_id"), F.explode(word_array()).alias("word")
     ).withColumn(
         "wh",
         F.conv(F.substring(F.md5("word"), 1, 15), 16, 10).cast("bigint"))

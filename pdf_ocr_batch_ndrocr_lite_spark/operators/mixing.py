@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import shingles_col
+from .dedup import shingle_frame, word_array
 
 # ---------------------------------------------------------------------------
 # Benchmark decontamination.  The benchmark side (eval suites) is SMALL —
@@ -34,13 +34,12 @@ def contamination_hits(docs: DataFrame, bench: DataFrame, k: int = 3,
     Per-doc shingle dedup is ROW-LOCAL (array_distinct before the
     explode — same shape as `shingle_document_frequency`); the benchmark
     shingle set is distinct-ed once and broadcast."""
-    bsh = (bench.select(
-        F.explode(F.array_distinct(shingles_col(k)))
-        .alias("shingle")).distinct())
-    dsh = docs.select(
+    bsh = (shingle_frame(bench, k).select(
+        F.explode(F.array_distinct("shingles")).alias("shingle"))
+        .distinct())
+    dsh = shingle_frame(docs, k, "doc_id").select(
         F.col("doc_id"),
-        F.explode(F.array_distinct(shingles_col(k)))
-        .alias("shingle"))
+        F.explode(F.array_distinct("shingles")).alias("shingle"))
     return (dsh.join(F.broadcast(bsh), "shingle", "left_semi")
             .groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("matched_shingles"))
@@ -91,10 +90,9 @@ def bench_shingle_index(bench: DataFrame, k: int = 5,
                         max_bench_df: int | None = None) -> DataFrame:
     """Distinct (bench_id, shingle) index for a benchmark suite, with
     the ubiquity cap applied."""
-    bsh = bench.select(
-        F.col("doc_id").alias("bench_id"),
-        F.explode(F.array_distinct(shingles_col(k)))
-        .alias("shingle")).distinct()
+    bsh = shingle_frame(bench, k, F.col("doc_id").alias("bench_id")).select(
+        F.col("bench_id"),
+        F.explode(F.array_distinct("shingles")).alias("shingle")).distinct()
     if max_bench_df is not None:
         keep = (bsh.groupBy("shingle")
                 .agg(F.count(F.lit(1)).alias("_df"))
@@ -114,10 +112,9 @@ def fuzzy_contamination_pairs(docs: DataFrame, bench: DataFrame,
     shingles.  The containment division is a single IEEE op (oracle
     contract)."""
     bsh = bench_shingle_index(bench, k, max_bench_df)
-    dsh = docs.select(
+    dsh = shingle_frame(docs, k, "doc_id").select(
         F.col("doc_id"),
-        F.explode(F.array_distinct(shingles_col(k)))
-        .alias("shingle"))
+        F.explode(F.array_distinct("shingles")).alias("shingle"))
     bsizes = bsh.groupBy("bench_id").agg(F.count(F.lit(1)).alias("_bn"))
     inter = (dsh.join(F.broadcast(bsh), "shingle")
              .groupBy("doc_id", "bench_id")
@@ -168,8 +165,7 @@ def pack_sequences(docs: DataFrame, capacity: int,
     shard semantics must pin ``shard_buckets=None`` explicitly."""
     if capacity <= 0:
         raise ValueError(f"capacity must be positive: got {capacity}")
-    tokens = F.size(F.filter(F.split(F.col("text"), r"\s+"),
-                             lambda w: w != "")).cast("bigint")
+    tokens = F.size(word_array()).cast("bigint")
     if shard_buckets is None:
         shard = F.col(shard_col).cast("string")
     else:
@@ -386,8 +382,7 @@ def chunk_documents(docs: DataFrame, chunk_tokens: int = 512,
     stride = chunk_tokens - overlap_tokens
     staged = docs.select(
         F.col("doc_id"),
-        F.filter(F.split(F.coalesce(F.col("text"), F.lit("")), r"\s+"),
-                 lambda w: w != "").alias("_ws"))
+        word_array(F.coalesce(F.col("text"), F.lit(""))).alias("_ws"))
     n = F.size("_ws")
     # ceil((n - chunk) / stride) + 1 via integer floor-div; 1 when n <= chunk
     n_chunks = F.when(
@@ -458,17 +453,12 @@ def contaminated_spans(docs: DataFrame, bench: DataFrame, k: int = 5,
     """(doc_id, span_start, span_end, span_words): maximal 0-based word
     ranges (inclusive) covered by benchmark-colliding k-gram shingles,
     each expanded by ``pad`` context words and clamped to the document."""
-    from .dedup import _words
-
     bsh = bench_shingle_index(bench, k, max_bench_df) \
         .select("shingle").distinct()
-    n_words = F.size(_words())
-    # positional shingles: pos p covers words [p, p+k-1]; the shingle
-    # array is staged in its own projection before the posexplode
-    psh = (docs.select(F.col("doc_id"), n_words.alias("_nw"),
-                       shingles_col(k).alias("_sh"))
-           .select(F.col("doc_id"), F.col("_nw"),
-                   F.posexplode("_sh").alias("_p", "shingle")))
+    # positional shingles: pos p covers words [p, p+k-1]
+    psh = shingle_frame(docs, k, "doc_id").select(
+        F.col("doc_id"), F.size("words").alias("_nw"),
+        F.posexplode_outer("shingles").alias("_p", "shingle"))
     hits = psh.join(F.broadcast(bsh), "shingle", "left_semi")
     # clamp-then-guard: on a zero-word document (whitespace-only text
     # yields _nw=0 with one degenerate '' shingle) the clamped end is

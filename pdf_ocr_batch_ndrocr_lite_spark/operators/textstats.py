@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import shingle_frame, word_array
+
 # Marker-word lists for the n-gram/stopword language heuristic.  Tiny by
 # design: they broadcast as literals inside the regex, no dimension table.
 _LANG_MARKERS = {
@@ -61,7 +63,7 @@ def quality_col():
     """Composite quality score as a pure COLUMN expression."""
     t = F.col("text")
     n_chars = F.length(t)
-    n_words = F.size(F.filter(F.split(t, r"\s+"), lambda w: w != ""))
+    n_words = F.size(word_array())
     n_stop = _marker_count(_LANG_MARKERS["en"])
     stop_ratio = F.when(n_words > 0, n_stop / n_words).otherwise(F.lit(0.0))
     mean_word_len = F.when(n_words > 0, n_chars / n_words).otherwise(F.lit(0.0))
@@ -78,7 +80,7 @@ def quality_score(docs: DataFrame) -> DataFrame:
     score in [0,1].  Pure column arithmetic."""
     t = F.col("text")
     n_chars = F.length(t)
-    n_words = F.size(F.filter(F.split(t, r"\s+"), lambda w: w != ""))
+    n_words = F.size(word_array())
     n_punct = F.size(F.expr("regexp_extract_all(text, '[.,;:!?]', 0)"))
     n_stop = _marker_count(_LANG_MARKERS["en"])
     punct_ratio = F.when(n_chars > 0, n_punct / n_chars).otherwise(F.lit(0.0))
@@ -101,8 +103,7 @@ def token_counts(docs: DataFrame) -> DataFrame:
     """Whitespace token count plus a BPE-ish subword count (runs of letters,
     digits, or single non-space symbols — an upper-bound proxy for tokenizer
     load, computable engine-side at full scan speed)."""
-    t = F.col("text")
-    ws = F.size(F.filter(F.split(t, r"\s+"), lambda w: w != ""))
+    ws = F.size(word_array())
     bpe = F.size(F.expr(
         "regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\\\s]', 0)"))
     return docs.select(F.col("doc_id"), ws.alias("ws_tokens"),
@@ -143,19 +144,16 @@ def fingerprint(docs: DataFrame, window: int = 5) -> DataFrame:
     and usable as a near-dup blocking key.
 
     The md5 hash is the engine-portable form with an exact DuckDB oracle
-    twin.  The cost is dominated by shingle STRING CONSTRUCTION, not
-    hashing — the scale lever is scan parallelism
+    twin.  Shingles come from `dedup.shingle_frame`'s staged word
+    array, so building them is linear in the document's words; per
+    shingle the cost is one join of `window` words plus one md5.  The
+    scale lever is scan parallelism
     (at 100 TB the parquet scan has thousands of splits; a single-rowgroup
     local fixture must be repartitioned to see the same parallelism, see
     q20 in __spark_entry__)."""
-    words = F.filter(F.split(F.col("text"), r"\s+"), lambda w: w != "")
-    n = F.size(words)
-    idx = F.sequence(F.lit(0), F.greatest(n - F.lit(window), F.lit(0)))
-    sh = F.when(n < window, F.array(F.array_join(words, " "))).otherwise(
-        F.transform(idx,
-                    lambda i: F.array_join(F.slice(words, i + 1, window), " ")))
-    fp = F.array_min(F.transform(sh, lambda s: F.md5(s)))
-    return docs.select(F.col("doc_id"), fp.alias("fingerprint"))
+    fp = F.array_min(F.transform("shingles", lambda s: F.md5(s)))
+    return shingle_frame(docs, window, "doc_id").select(
+        F.col("doc_id"), fp.alias("fingerprint"))
 
 
 # ---------------------------------------------------------------------------
@@ -174,17 +172,6 @@ def fingerprint(docs: DataFrame, window: int = 5) -> DataFrame:
 # and a full-corpus shuffle at 100 TB, for values that never leave their
 # row.
 # ---------------------------------------------------------------------------
-
-
-def sorted_grams_col(k: int = 2):
-    """Sorted k-gram array of the ``text`` column — STAGE this in its own
-    projection before the count folds reference it: Spark never
-    common-subexpression-eliminates lambda-bearing expressions
-    (SPARK-35410), so inlining it into several count columns recomputes
-    the split+sort per reference."""
-    from .dedup import shingles_col
-
-    return F.array_sort(shingles_col(k))
 
 
 def _top_run_col(grams):
@@ -231,8 +218,9 @@ def repetition_stats(docs: DataFrame, k: int = 2) -> DataFrame:
     select, re-evaluating the whole HOF gram chain per row (lambdas are
     never CSE'd, SPARK-35410 — measured 4x on the q49 bench).
     """
-    staged = docs.filter(F.col("text").isNotNull()).select(
-        F.col("doc_id"), sorted_grams_col(k).alias("_g"))
+    staged = shingle_frame(docs.filter(F.col("text").isNotNull()), k,
+                           "doc_id").select(
+        F.col("doc_id"), F.array_sort("shingles").alias("_g"))
     g = F.col("_g")
     return staged.select(
         F.col("doc_id"),
@@ -295,8 +283,7 @@ def hashed_bow_logit(docs: DataFrame, weights_tenths, bias_tenths: int = 0,
     # COALESCE)
     staged = docs.select(
         F.col("doc_id"),
-        F.filter(F.split(F.coalesce(F.col("text"), F.lit("")), r"\s+"),
-                 lambda w: w != "").alias("_ws"),
+        word_array(F.coalesce(F.col("text"), F.lit(""))).alias("_ws"),
         w_lit.alias("_w"))
     bucket = lambda w: F.pmod(_hash60(w), F.lit(D))  # noqa: E731
     logit = (F.lit(int(bias_tenths)).cast("bigint")
@@ -330,9 +317,8 @@ def top_k_words(docs: DataFrame, k: int = 100) -> DataFrame:
         raise ValueError(f"k must be positive: got {k}")
     words = docs.select(
         F.col("doc_id"),
-        F.explode(F.filter(
-            F.split(F.coalesce(F.col("text"), F.lit("")), r"\s+"),
-            lambda w: w != "")).alias("word"))
+        F.explode(word_array(F.coalesce(F.col("text"), F.lit(""))))
+        .alias("word"))
     counts = words.groupBy("word").agg(
         F.count(F.lit(1)).alias("count"),
         F.countDistinct(F.col("doc_id")).alias("doc_freq"))

@@ -252,3 +252,41 @@ def test_sink_backfills_index_for_preexisting_corpus(spark, tmp_path):
     idx = spark.read.parquet(ds.buckets_path_for(corpus))
     assert sorted(r["batch_id"] for r in
                   idx.select("batch_id").distinct().collect()) == [0, 1]
+
+
+def test_dedup_job_budgets(spark, tmp_path, spark_jobs):
+    """Pinned Spark job counts on wave A / wave B (3 and 2 docs).
+
+    ``minhash_dedup`` over wave A: 20 jobs.  By kind:
+
+    - ``materialize`` cuts: 10 jobs run while the three cuts are taken,
+      because AQE executes a cut's input stages when the cut is made:
+      ``salted_join_input`` 1 (the signature aggregation),
+      ``candidates`` 6, ``shingles`` 3.  The other 10 are the collect.
+    - AQE broadcast jobs: the final adaptive plans hold 6 broadcast
+      query stages (1 under ``candidates``, 1 under ``shingles``, 4 in
+      the collect, which also reuses 2 stages): the hot-bucket salt
+      dimension and the small semi/anti-join sides.  No subquery jobs.
+    - ``distinct`` stages: 4 distinct aggregations, each behind a
+      shuffle: the candidate pairs, the candidate ids, the Jaccard
+      verify's ``dropDuplicates`` and the losers.
+
+    One warm ``dedup_stream`` micro-batch (wave B after wave A): 35
+    jobs.  The within-batch ``minhash_dedup`` cuts take 8 and the
+    ``within_batch`` cut 1; the incremental pass's cuts take 9
+    (``candidates`` 4, ``shingles`` 5); the remaining 17 are the corpus
+    and index reads, the survivors' write, and the admitted batch's
+    re-read and bucket-index write."""
+    a, b, _ = _waves(spark)
+    kept, jobs = spark_jobs(lambda: sorted(
+        r["doc_id"] for r in dd.minhash_dedup(a, **KW).collect()))
+    assert kept == [1, 3]
+    assert 0 < len(jobs) <= 20, len(jobs)
+
+    corpus = str(tmp_path / "corpus")
+    sink = ds.make_incremental_dedup_sink(corpus, **KW)
+    sink(a, 0)
+    _, jobs = spark_jobs(lambda: sink(b, 1))
+    assert sorted(r["doc_id"] for r in spark.read.parquet(corpus)
+                  .select("doc_id").collect()) == [1, 3, 11]
+    assert 0 < len(jobs) <= 35, len(jobs)

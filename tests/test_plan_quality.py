@@ -458,3 +458,53 @@ def test_connected_components_round_reuses_hop_exchanges(spark, monkeypatch):
         "labels_1": {"Exchange": 2, "BroadcastExchange": 6,
                      "ReusedExchange": 7},
     }, counts
+
+
+def _lambda_calls(plan: str) -> list:
+    """Every ``lambdafunction(…)`` call in a plan string, cut at its
+    balanced closing parenthesis."""
+    calls, start = [], plan.find("lambdafunction(")
+    while start >= 0:
+        depth = 0
+        for end in range(start + len("lambdafunction"), len(plan)):
+            depth += {"(": 1, ")": -1}.get(plan[end], 0)
+            if depth == 0:
+                break
+        calls.append(plan[start:end + 1])
+        start = plan.find("lambdafunction(", start + 1)
+    return calls
+
+
+def test_no_lambda_splits_text(spark, monkeypatch):
+    """Every shingle consumer slices a STAGED word column: no lambda body
+    in its optimized plan (after CollapseProject, where a regression
+    would re-inline the words) contains a ``split(``.  Spark never
+    eliminates common subexpressions inside a lambda (SPARK-35410), so a
+    split there runs once per shingle — O(words²) per document.  The
+    lineage cut is bypassed so the plan shows the shingling under it."""
+    from pdf_ocr_batch_ndrocr_lite_spark.operators import curation as cu
+    from pdf_ocr_batch_ndrocr_lite_spark.operators import dedup as dd
+    from pdf_ocr_batch_ndrocr_lite_spark.operators import mixing as mx
+    from pdf_ocr_batch_ndrocr_lite_spark.operators import textstats as ts
+
+    monkeypatch.setattr(dd, "materialize", lambda df, name, scratch=None: df)
+    docs = spark.createDataFrame(
+        [(1, "a b c d e f g"), (2, "a b c d e f h"), (3, None)],
+        "doc_id bigint, text string")
+    consumers = {
+        "minhash_signatures": dd.minhash_signatures(docs),
+        "band_buckets": dd.band_buckets(docs),
+        "ngram_jaccard_pairs": dd.ngram_jaccard_pairs(docs, max_df=5),
+        "shingle_document_frequency": dd.shingle_document_frequency(docs),
+        "contamination_hits": mx.contamination_hits(docs, docs),
+        "bench_shingle_index": mx.bench_shingle_index(docs),
+        "fuzzy_contamination_pairs": mx.fuzzy_contamination_pairs(docs, docs),
+        "contaminated_spans": mx.contaminated_spans(docs, docs),
+        "repetition_stats": ts.repetition_stats(docs),
+        "curation_verdict": cu.curation_verdict(docs),
+        "fingerprint": ts.fingerprint(docs),
+    }
+    for name, df in consumers.items():
+        lambdas = _lambda_calls(_optimized(df))
+        assert any("slice(" in f for f in lambdas), name
+        assert not [f for f in lambdas if "split(" in f], name

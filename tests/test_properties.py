@@ -160,3 +160,55 @@ def test_pdf_scanner_total_on_pdf_headed_bytes(data):
         assert isinstance(has_text, bool) and pages >= 1
     except (ps.PdfParseError, ps.EncryptedPdfError):
         pass
+
+
+# ---------------------------------------------------------------------------
+# The staged shingler against the inline formula it replaced: the word
+# expression inside the slicing lambda (O(words²), since Spark never
+# eliminates common subexpressions inside a lambda).  Same arrays row by
+# row — order, duplicates and the edge rows included.
+# ---------------------------------------------------------------------------
+
+_WS_TEXT = st.text(alphabet=["a", "b", " ", "\t", "\n", "\u00a0"],
+                   max_size=40)
+_EDGE_TEXTS = [None, "", "   ", " \t\n"]
+_KS = (1, 2, 3, 5)
+
+
+def _inline_shingles(k):
+    from pyspark.sql import functions as F
+
+    words = F.filter(F.split(F.col("text"), r"\s+"), lambda w: w != "")
+    n = F.size(words)
+    idx = F.sequence(F.lit(0), F.greatest(n - F.lit(k), F.lit(0)))
+    return F.when(n < k, F.array(F.array_join(words, " "))).otherwise(
+        F.transform(idx,
+                    lambda i: F.array_join(F.slice(words, i + 1, k), " ")))
+
+
+@given(texts=st.lists(_WS_TEXT, max_size=12))
+@settings(max_examples=25, deadline=None, derandomize=True)
+def test_shingle_frame_matches_inline_formula(spark, texts):
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+
+    from pdf_ocr_batch_ndrocr_lite_spark.operators.dedup import shingle_frame
+
+    docs = spark.createDataFrame(list(enumerate(_EDGE_TEXTS + texts)),
+                                 "doc_id int, text string")
+
+    def rows(frames):
+        return {(r["k"], r["doc_id"]): r["sh"] for r in
+                reduce(lambda a, b: a.unionByName(b), frames).collect()}
+
+    got = rows([shingle_frame(docs, k, "doc_id").select(
+        F.lit(k).alias("k"), "doc_id", F.col("shingles").alias("sh"))
+        for k in _KS])
+    want = rows([docs.select(F.lit(k).alias("k"), "doc_id",
+                             _inline_shingles(k).alias("sh"))
+                 for k in _KS])
+    assert got == want
+    for k in _KS:
+        assert got[(k, 0)] == [None]  # NULL text
+        assert got[(k, 1)] == got[(k, 2)] == got[(k, 3)] == [""]

@@ -292,3 +292,36 @@ def test_every_python_stage_goes_through_map_rows():
         f"and corpus.corpus_df: {stray_calls}; {len(stray_imports)} pandas "
         f"imports outside extract.py and corpus.py: {stray_imports} (write "
         "the stage as a row_fn through extract.map_rows)")
+
+
+# ---------------------------------------------------------------------------
+# One tokenizer: the word-split pattern is written once, in
+# ``dedup.word_array``; every other word split in the package and the
+# query surface calls it.
+# ---------------------------------------------------------------------------
+
+
+def test_one_tokenizer_literal():
+    sites = []
+
+    def walk(node, scope, rel):
+        for child in ast.iter_child_nodes(node):
+            inner = scope
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                inner = scope + [child.name]
+            if isinstance(child, ast.Call):
+                name = (getattr(child.func, "id", None)
+                        or getattr(child.func, "attr", None))
+                if name == "split" and any(
+                        isinstance(a, ast.Constant) and a.value == r"\s+"
+                        for a in child.args):
+                    sites.append(f"{rel} in {'.'.join(inner) or '<module>'}")
+            walk(child, inner, rel)
+
+    for path in sorted(list((REPO / PKG).rglob("*.py"))
+                       + [REPO / "__spark_entry__.py"]):
+        walk(ast.parse(path.read_text(), str(path)), [],
+             path.relative_to(REPO).as_posix())
+    assert sites == [f"{PKG}/operators/dedup.py in word_array"], (
+        f"{len(sites)} word splits on the tokenizer pattern; call "
+        f"dedup.word_array instead: {sites}")
