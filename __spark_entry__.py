@@ -308,7 +308,7 @@ def _q21_media_summary(spark, sf_dir):
 
 def _q22_media_features(spark, sf_dir):
     """Multimodal decode plumbing: the stub derives everything from md5 of
-    the payload, so the whole mapInPandas stage has an exact DuckDB twin."""
+    the payload, so the whole Python stage has an exact DuckDB twin."""
     docs = _read(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     feats = mm.media_features(mm.attach_media(docs))
     return feats.select("media_id", "kind", "n_bytes", "digest", "n_frames") \

@@ -6,7 +6,7 @@ text-density / link-density / tag-depth scoring over a parsed node array.
 Semantics are defined HERE and frozen into the golden fixtures — this file is
 the specification.
 
-Pure per-document function; runs inside vectorized pandas UDFs only.
+Pure per-document function; runs inside ``extract.map_rows`` batches only.
 Uses stdlib ``html.parser`` — no external dependencies, deterministic.
 """
 

@@ -115,41 +115,6 @@ def _png_meta(data: bytes) -> Dict[str, float]:
             "dpi_x": dpi_x, "dpi_y": dpi_y}
 
 
-def png_pixel_info(data: bytes) -> Dict[str, object]:
-    """IHDR pixel layout + concatenated IDAT bytes for the codec-free PDF
-    embed: PNG IDAT is already zlib data with per-row predictor bytes, i.e.
-    exactly a PDF FlateDecode image stream with /DecodeParms PNG predictors
-    — no re-encode needed.  Supported: non-interlaced 8-bit grayscale
-    (color type 0) and RGB (type 2); palette/alpha types need a real pixel
-    transform, which is decode-stub territory."""
-    if data[:8] != b"\x89PNG\r\n\x1a\n" or data[12:16] != b"IHDR":
-        raise ImageParseError("png: missing IHDR")
-    w, h = struct.unpack(">II", data[16:24])
-    bit_depth, color_type, _comp, _filt, interlace = data[24:29]
-    if interlace:
-        raise ImageParseError("png: interlaced (Adam7) not embeddable")
-    if color_type not in (0, 2) or bit_depth != 8:
-        raise ImageParseError(
-            f"png: color type {color_type}/depth {bit_depth} needs a pixel "
-            "transform (palette/alpha) — decode stub territory")
-    idat = bytearray()
-    i = 8
-    while i + 8 <= len(data):
-        length = int.from_bytes(data[i:i + 4], "big")
-        ctype = data[i + 4:i + 8]
-        if ctype == b"IDAT":
-            idat += data[i + 8:i + 8 + length]
-        elif ctype == b"IEND":
-            break
-        i += 12 + length
-    if not idat:
-        raise ImageParseError("png: no IDAT pixel data")
-    return {"width_px": int(w), "height_px": int(h),
-            "bit_depth": int(bit_depth),
-            "colors": 3 if color_type == 2 else 1,
-            "idat": bytes(idat)}
-
-
 # DIB header sizes a real BMP can open with (BITMAPCOREHEADER through
 # BITMAPV5HEADER).  The `BM` magic alone is two ASCII letters — requiring
 # a known header size keeps text that happens to start with "BM" from
@@ -365,40 +330,17 @@ def make_fake_jpeg(width: int, height: int, dpi: Optional[int] = None,
 
 
 def make_fake_png(width: int, height: int,
-                  dpi: Optional[float] = None,
-                  with_pixels: bool = False,
-                  color_type: int = 2) -> bytes:
-    """Signature + IHDR (+pHYs) (+IDAT) + IEND; CRCs are zeroed (the
-    metadata parser doesn't verify them, matching crawl tolerance).
-    ``with_pixels`` writes a REAL zlib IDAT of deterministic scanlines
-    (filter types 0 and 2 alternating) so the codec-free PDF embed has
-    actual pixel data to carry."""
-    import zlib as _z
-
+                  dpi: Optional[float] = None) -> bytes:
+    """Signature + IHDR (+pHYs) + IEND; CRCs are zeroed (the metadata
+    parser doesn't verify them, matching crawl tolerance)."""
     def chunk(ctype: bytes, body: bytes) -> bytes:
         return (len(body).to_bytes(4, "big") + ctype + body
                 + b"\x00\x00\x00\x00")
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, color_type, 0, 0, 0)
+    ihdr = struct.pack(">IIBBBBB", width, height, 8, 2, 0, 0, 0)
     out = b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
     if dpi is not None:
         ppm = round(dpi / 0.0254)
         out += chunk(b"pHYs", struct.pack(">IIB", ppm, ppm, 1))
-    if with_pixels:
-        channels = 3 if color_type == 2 else 1
-        raw = bytearray()
-        prev = bytes(width * channels)
-        for r in range(height):
-            row = bytes((r * 31 + c * 7) % 251
-                        for c in range(width * channels))
-            if r % 2 == 0:
-                raw.append(0)          # filter: None
-                raw += row
-            else:
-                raw.append(2)          # filter: Up
-                raw += bytes((row[j] - prev[j]) & 0xFF
-                             for j in range(len(row)))
-            prev = row
-        out += chunk(b"IDAT", _z.compress(bytes(raw)))
     return out + chunk(b"IEND", b"")
 
 

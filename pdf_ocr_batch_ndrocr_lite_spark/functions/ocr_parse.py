@@ -10,7 +10,8 @@ each document row carries an envelope
                       "name": "<filename>", "payload": "<text>"}]}
 
 which stands in for the engine's output directory.  All functions are pure
-per-document and run inside vectorized pandas UDFs on executors.
+per-document and run inside the Arrow-batch body of ``extract.map_rows`` on
+executors.
 """
 
 from __future__ import annotations

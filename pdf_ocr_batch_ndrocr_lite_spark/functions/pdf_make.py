@@ -619,7 +619,6 @@ def build_searchable_pdf(pages) -> bytes:
                    b"/BaseFont /Helvetica >>")
     for spec in pages:
         jpeg = spec.get("jpeg")
-        png = spec.get("png")  # png_pixel_info dict: codec-free Flate embed
         img_num = None
         if jpeg is not None:
             w, h = jpeg_size(jpeg)
@@ -629,23 +628,6 @@ def build_searchable_pdf(pages) -> bytes:
                           b"/Filter /DCTDecode /Length "
                           + str(len(jpeg)).encode() + b" >>\nstream\n"
                           + jpeg + b"\nendstream")
-        elif png is not None:
-            # PNG IDAT == zlib(scanlines with per-row predictor bytes) ==
-            # a PDF FlateDecode image stream with /DecodeParms PNG
-            # predictors (/Predictor 15 = "per-row tags").  No re-encode.
-            idat = png["idat"]
-            cs = b"/DeviceRGB" if png["colors"] == 3 else b"/DeviceGray"
-            img_num = add(
-                b"<< /Type /XObject /Subtype /Image /Width "
-                + str(png["width_px"]).encode() + b" /Height "
-                + str(png["height_px"]).encode() + b" /ColorSpace " + cs
-                + b" /BitsPerComponent " + str(png["bit_depth"]).encode()
-                + b" /Filter /FlateDecode /DecodeParms << /Predictor 15"
-                b" /Colors " + str(png["colors"]).encode()
-                + b" /BitsPerComponent " + str(png["bit_depth"]).encode()
-                + b" /Columns " + str(png["width_px"]).encode()
-                + b" >> /Length " + str(len(idat)).encode()
-                + b" >>\nstream\n" + idat + b"\nendstream")
         content = overlay_content(spec.get("ops", []),
                                   spec["width_pt"], spec["height_pt"],
                                   has_image=img_num is not None)
@@ -682,22 +664,3 @@ def build_searchable_pdf(pages) -> bytes:
     out += (b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n%%%%EOF\n"
             % (len(objs), xref_at))
     return bytes(out)
-
-
-def image_pdf(data: bytes) -> bytes:
-    """The reference's prepared-document for an image input (app.py:
-    1470-1520): ONE page sized px * 72 / dpi carrying the image.  Both
-    embeds are codec-free passthroughs: JPEG bytes ride in as a DCTDecode
-    stream, PNG IDAT rides in as a FlateDecode stream with /DecodeParms
-    PNG predictors (IDAT is already exactly that encoding).  Palette/
-    alpha/interlaced PNGs still need a real pixel transform and raise
-    (ImageParseError) — the one remaining decode-stub case."""
-    from . import image_meta
-    meta = image_meta.prepare_image(data)
-    spec = {"width_pt": meta["width_pt"], "height_pt": meta["height_pt"],
-            "ops": []}
-    if meta["format"] == "jpeg":
-        spec["jpeg"] = bytes(data)
-    else:
-        spec["png"] = image_meta.png_pixel_info(bytes(data))
-    return build_searchable_pdf([spec])

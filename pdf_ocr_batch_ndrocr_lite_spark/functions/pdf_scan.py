@@ -1456,16 +1456,3 @@ def scan_text_layer(
         if total_chars >= min_chars or total_ops >= min_text_ops:
             return True, total_pages, warnings
     return False, total_pages, warnings
-
-
-def has_text_layer_raw(
-    data: bytes,
-    pages_to_check: int = DEFAULT_TEXT_LAYER_CHECK_PAGES,
-    min_chars: int = MIN_TEXT_LAYER_CHARS,
-    min_text_ops: int = MIN_TEXT_SHOW_OPS,
-) -> Tuple[bool, int]:
-    """Back-compat view of :func:`scan_text_layer` without the warning
-    count."""
-    has_text, total_pages, _ = scan_text_layer(
-        data, pages_to_check, min_chars, min_text_ops)
-    return has_text, total_pages

@@ -70,18 +70,13 @@ def _ascii_form(rule: str) -> Optional[str]:
         return None
 
 
-def parse_rules(text: str, icann_only: bool = False) -> PslRules:
+def parse_rules(text: str) -> PslRules:
     normals: Dict[int, set] = {}
     wildcards: Dict[int, set] = {}
     exceptions: Dict[int, set] = {}
-    in_private = False
     for raw in text.splitlines():
         line = raw.strip()
-        if "===BEGIN PRIVATE DOMAINS===" in line:
-            in_private = True
         if not line or line.startswith("//"):
-            continue
-        if in_private and icann_only:
             continue
         # per spec, only the part up to the first whitespace is the rule
         rule = line.split()[0].lower()
@@ -101,10 +96,8 @@ def parse_rules(text: str, icann_only: bool = False) -> PslRules:
 
 
 @lru_cache(maxsize=4)
-def load_rules(path: Optional[str] = None,
-               icann_only: bool = False) -> PslRules:
+def load_rules(path: Optional[str] = None) -> PslRules:
     """Load and cache the packaged dataset (or a caller-supplied dat
     snapshot — deployments refresh the registry by swapping the file)."""
     dat = Path(path) if path else BUNDLED_DAT
-    return parse_rules(dat.read_text(encoding="utf-8"),
-                       icann_only=icann_only)
+    return parse_rules(dat.read_text(encoding="utf-8"))

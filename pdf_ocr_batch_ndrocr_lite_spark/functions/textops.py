@@ -15,7 +15,8 @@ reference's OCR-text normalization and token→line→text serialization chain:
 
 Every function here is deterministic and stateless per document, so results
 are invariant to Arrow batch boundaries and executor count.  These run inside
-vectorized pandas UDFs on executors — never per-row at the Spark level.
+the Arrow-batch body of ``extract.map_rows`` on executors — never per-row at
+the Spark level.
 """
 
 from __future__ import annotations

@@ -287,16 +287,17 @@ def curation_verdict(docs: DataFrame, min_quality: float = 0.45,
 
     # the sorted-gram array is staged in its own projection: HOF
     # expressions are never CSE'd (SPARK-35410), and the fraction
-    # references it twice (run fold + size)
+    # references it twice (run fold + size); the quality score reads the
+    # staged words for the same reason
     staged = shingle_frame(
-        docs, 2, F.col("doc_id"),
+        docs, 2, F.col("doc_id"), F.col("text"),
         # sentinel for NULL texts (md5 output is hex, '' unreachable):
         # the winner agg below joins back on the digest, and an equality
         # join on a NULL key would drop NULL-text rows from the verdict
         F.coalesce(F.md5(F.col("text")), F.lit("")).alias("_md5"),
         ts.lang_pred_col().alias("lang_pred"),
-        ts.quality_col().alias("quality"),
-    ).select("doc_id", "_md5", "lang_pred", "quality",
+    ).select("doc_id", "_md5", "lang_pred",
+             ts.quality_col(F.col("words")).alias("quality"),
              F.array_sort("shingles").alias("_g"))
     # coalesce: a doc with no grams (NULL text → NULL fraction) must fall
     # through to 'kept' DETERMINISTICALLY, not via three-valued-logic
@@ -346,9 +347,11 @@ def quality_percentile_cut(docs: DataFrame, q: float = 0.1) -> DataFrame:
     second time."""
     from . import textstats as ts
     from . import quantiles as qt
+    from .dedup import word_array
 
-    scored = docs.select(F.col("doc_id"), F.col("lang"),
-                         ts.quality_col().alias("quality"))
+    scored = docs.select("doc_id", "lang", "text",
+                         word_array().alias("words")).select(
+        "doc_id", "lang", ts.quality_col(F.col("words")).alias("quality"))
     cut = (qt.exact_quantiles(scored, "lang", "quality", [q], "doc_id")
            .select(F.col("lang"), F.col("value").alias("_cut")))
     return (scored.join(F.broadcast(cut), "lang")

@@ -5,7 +5,7 @@ document (app.py:1540-1611 ``build_cmd``/``run_subprocess_with_polling``,
 launcher resolution app.py:2532-2637), collects the engine's output
 FILES from a scratch directory, and feeds them to the tolerant
 format-priority parser.  Here the engine is a plain Python callable
-called from the dispatcher's vectorized ``mapInPandas`` stage
+called from the dispatcher's ``mapInArrow`` stage
 (`extract.run_engine`) — the envelope it returns is exactly the parser's
 input (a list of named/typed payloads, the in-memory twin of the
 reference's output directory listing), so route → engine → parse →

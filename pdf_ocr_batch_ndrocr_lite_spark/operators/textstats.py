@@ -59,12 +59,7 @@ def lang_id(docs: DataFrame) -> DataFrame:
     return docs.select(F.col("doc_id"), lang_pred_col().alias("lang_pred"))
 
 
-def quality_col():
-    """Composite quality score as a pure COLUMN expression."""
-    t = F.col("text")
-    n_chars = F.length(t)
-    n_words = F.size(word_array())
-    n_stop = _marker_count(_LANG_MARKERS["en"])
+def _quality(n_chars, n_words, n_stop):
     stop_ratio = F.when(n_words > 0, n_stop / n_words).otherwise(F.lit(0.0))
     mean_word_len = F.when(n_words > 0, n_chars / n_words).otherwise(F.lit(0.0))
     return (
@@ -75,18 +70,27 @@ def quality_col():
     )
 
 
+def quality_col(words):
+    """Composite quality score as a pure COLUMN expression over the
+    ``text`` column and ``words``, its word array staged in an earlier
+    projection: every word-count reference is then ``size`` of a column,
+    where an inline `word_array` would re-split the text per reference
+    (an expression holding a lambda is never CSE'd)."""
+    return _quality(F.length(F.col("text")), F.size(words),
+                    _marker_count(_LANG_MARKERS["en"]))
+
+
 def quality_score(docs: DataFrame) -> DataFrame:
     """Length / punctuation / stopword-ratio quality features + composite
-    score in [0,1].  Pure column arithmetic."""
+    score in [0,1].  Pure column arithmetic over a staged word array."""
     t = F.col("text")
     n_chars = F.length(t)
-    n_words = F.size(word_array())
+    n_words = F.size("words")
     n_punct = F.size(F.expr("regexp_extract_all(text, '[.,;:!?]', 0)"))
     n_stop = _marker_count(_LANG_MARKERS["en"])
     punct_ratio = F.when(n_chars > 0, n_punct / n_chars).otherwise(F.lit(0.0))
     stop_ratio = F.when(n_words > 0, n_stop / n_words).otherwise(F.lit(0.0))
-    score = quality_col()
-    return docs.select(
+    return docs.select("doc_id", "text", word_array().alias("words")).select(
         F.col("doc_id"),
         n_chars.alias("n_chars_obs"),
         n_words.alias("n_words"),
@@ -95,7 +99,7 @@ def quality_score(docs: DataFrame) -> DataFrame:
         # raw double, no round(): every term is the same IEEE op sequence in
         # the SQL oracle, so the unrounded value is bitwise-identical across
         # engines — round(double) is not (HALF_UP BigDecimal vs libm)
-        score.alias("quality"),
+        _quality(n_chars, n_words, n_stop).alias("quality"),
     )
 
 

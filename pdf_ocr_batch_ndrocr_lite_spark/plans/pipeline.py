@@ -10,7 +10,7 @@ Logical plan (all declarative until the single vectorized UDF stage):
                                                     spreads the giant-doc
                                                     tail — range co-locates
                                                     it, measured 5x worse)
-      → ONE mapInPandas extraction stage           (Arrow, no per-row Python)
+      → ONE mapInArrow extraction stage            (Arrow, no per-row Python)
       → overwrite-by-partition-key extractions sink (idempotent replay;
                                                     observes the run counters)
       → per-partition-key lineage rollup → MERGE   (idempotent metrics)

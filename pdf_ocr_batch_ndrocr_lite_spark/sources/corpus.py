@@ -5,9 +5,9 @@ Input table schema (BASELINE input_hint):
 
 Every row is a pure function of ``(seed, index)`` so goldens are stable
 across runs, partitionings, and parallelism levels.  Generation itself is
-distributed: ``corpus_df`` maps a ``spark.range`` through a vectorized
-``mapInPandas`` generator, so a 10^12-row corpus would generate in parallel
-without driver involvement.
+distributed: ``corpus_df`` maps a ``spark.range`` through the one Python
+stage body, ``extract.map_rows``, so a 10^12-row corpus would generate in
+parallel without driver involvement.
 
 PDF rows carry a JSON envelope in the ``html`` binary standing in for a
 parsed PDF: page geometry + OCR-engine outputs in every shape the tolerant
@@ -20,11 +20,10 @@ from __future__ import annotations
 import datetime as _dt
 import json
 import random
-from typing import Any, Dict, Iterator, List
-
-import pandas as pd
+from typing import Any, Dict, List
 
 from ..functions import image_meta, pdf_make
+from ..operators.extract import map_rows
 
 EPOCH = _dt.datetime(2024, 1, 1, 0, 0, 0)
 LANGS = ["ja", "en", "de", "es", "zh"]
@@ -450,7 +449,8 @@ def make_row(seed: int, index: int) -> Dict[str, Any]:
 
 
 def corpus_df(spark, n_docs: int, seed: int = 42, partitions: int = 0):
-    """Distributed generation: spark.range → mapInPandas.
+    """Distributed generation: ``make_row`` over a ``spark.range``
+    through ``extract.map_rows``.
 
     Partition count defaults to default parallelism; each task generates its
     own index range independently (no shuffle, no driver materialization), so
@@ -458,20 +458,9 @@ def corpus_df(spark, n_docs: int, seed: int = 42, partitions: int = 0):
     """
     if partitions <= 0:
         partitions = spark.sparkContext.defaultParallelism
-    rng_free = spark.range(0, n_docs, 1, partitions)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["url", "warc_ts", "html", "text", "lang"]
-        for pdf in batches:
-            # yield in small slices so no single Arrow IPC batch carries
-            # tens of MB of giant-doc envelopes (bounds direct memory per
-            # concurrent task regardless of the input batch size)
-            ids = pdf["id"].tolist()
-            for lo in range(0, len(ids), 64):
-                chunk = ids[lo:lo + 64]
-                if chunk:
-                    yield pd.DataFrame(
-                        [make_row(seed, int(i)) for i in chunk],
-                        columns=cols)
+    def corpus_row(i):
+        return make_row(seed, i)
 
-    return rng_free.mapInPandas(gen, schema=PAGES_SCHEMA)
+    return map_rows(spark.range(0, n_docs, 1, partitions), corpus_row,
+                    ("id",), PAGES_SCHEMA)

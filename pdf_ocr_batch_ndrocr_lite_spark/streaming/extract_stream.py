@@ -8,7 +8,7 @@ pipeline needs: new page files land in a directory / Iceberg table and are
 extracted incrementally with exactly-once sink semantics.
 
 Design notes for scale:
-- The dispatcher is the SAME pure mapInPandas stage as batch — stateless per
+- The dispatcher is the SAME pure mapInArrow stage as batch — stateless per
   row, so it needs no watermark or state store.
 - foreachBatch is inherently at-least-once: after a failure Spark replays
   the last uncommitted micro-batch.  Effective exactly-once comes from

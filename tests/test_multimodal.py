@@ -113,7 +113,7 @@ def test_media_features_encoder_seam(spark):
         assert r["digest"] == hashlib.md5(payload).hexdigest()
     phys = mm.media_features(media, encoder=mm.demo_encoder) \
         ._jdf.queryExecution().executedPlan().toString()
-    assert phys.count("MapInPandas") == 1
+    assert phys.count("MapInArrow") == 1
 
 
 def test_demo_encoder_features_dyadic_exact(spark):

@@ -99,7 +99,7 @@ def test_extract_with_ocr_single_python_stage(spark, tmp_path):
     plan = E.run_extraction(pages, num_partitions=4,
                             engine=oe.deterministic_fake_engine) \
         ._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
     assert plan.count("Exchange ") == 1, plan
     assert plan.count("Scan parquet") == 1, plan
 
@@ -145,9 +145,8 @@ def test_run_pipeline_with_engine(spark, tmp_path):
 
 
 def test_run_ocr_null_page_count_degrades_to_one(spark):
-    """Arrow->pandas turns a NULL page_count into float NaN; the stage
-    must treat it as 1 page, not abort the task on int(NaN)
-    (r7 review finding #2)."""
+    """A NULL page_count reaches the row function as None; the stage
+    must treat it as 1 page, not abort the task on int(None)."""
     rows = [("ok", b"payload", 2), ("nullpc", b"payload2", None)]
     got = {r["url"]: r for r in
            oe.run_ocr(_docs(spark, rows)).collect()}

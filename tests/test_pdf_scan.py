@@ -44,64 +44,64 @@ def test_text_layer_found_plain_and_flate():
     for compress in (False, True):
         pdf = pm.build_pdf(["a searchable text layer", None],
                            compress=compress)
-        assert ps.has_text_layer_raw(pdf) == (True, 2)
+        assert ps.scan_text_layer(pdf)[:2] == (True, 2)
 
 
 def test_image_only_pdf_has_no_text_layer():
     pdf = pm.build_pdf([None, None, None], compress=True)
-    assert ps.has_text_layer_raw(pdf) == (False, 3)
+    assert ps.scan_text_layer(pdf)[:2] == (False, 3)
 
 
 def test_single_text_op_trips_ops_threshold():
     # chars below MIN_TEXT_LAYER_CHARS but one Tj op ≥ MIN_TEXT_SHOW_OPS=1
     pdf = pm.build_pdf(["abc"])
-    assert ps.has_text_layer_raw(pdf)[0] is True
+    assert ps.scan_text_layer(pdf)[0] is True
 
 
 def test_cumulative_chars_across_pages():
     # 4 + 4 + 4 stripped chars cross the 10-char threshold only on page 3 —
     # the walk is CUMULATIVE (app.py:1225-1232), with ops threshold disabled
     pdf = pm.build_pdf(["ab c d", "ef g h", "ij k l"])
-    assert ps.has_text_layer_raw(pdf, min_text_ops=10**9) == (True, 3)
+    assert ps.scan_text_layer(pdf, min_text_ops=10**9)[:2] == (True, 3)
     pdf2 = pm.build_pdf(["ab c d", "ef g h"])
-    assert ps.has_text_layer_raw(pdf2, min_text_ops=10**9) == (False, 2)
+    assert ps.scan_text_layer(pdf2, min_text_ops=10**9)[:2] == (False, 2)
 
 
 def test_twenty_page_check_window():
     # text only on page 23 → outside min(total, 20) window → False
     pdf = pm.build_pdf([None] * 22 + ["late text page here"])
-    assert ps.has_text_layer_raw(pdf) == (False, 23)
+    assert ps.scan_text_layer(pdf)[:2] == (False, 23)
     # window clamp: pages_to_check=0 falls back to the default, ≥1 page
     pdf2 = pm.build_pdf(["early text page here"])
-    assert ps.has_text_layer_raw(pdf2, pages_to_check=0) == (True, 1)
+    assert ps.scan_text_layer(pdf2, pages_to_check=0)[:2] == (True, 1)
 
 
 def test_early_exit_ignores_later_garbage():
     # page 1 trips the threshold; page 2's stream has an unsupported filter
     # and would degrade to 0 ops if reached — early exit returns first
     good = pm.build_pdf(["plenty of text right here", None])
-    assert ps.has_text_layer_raw(good)[0] is True
+    assert ps.scan_text_layer(good)[0] is True
 
 
 def test_encrypted_empty_password_decrypts_and_scans():
     pdf = pm.build_pdf(["encrypted searchable text"], compress=True,
                        user_pw="")
-    assert ps.has_text_layer_raw(pdf) == (True, 1)
+    assert ps.scan_text_layer(pdf)[:2] == (True, 1)
     img = pm.build_pdf([None, None], user_pw="")
-    assert ps.has_text_layer_raw(img) == (False, 2)
+    assert ps.scan_text_layer(img)[:2] == (False, 2)
 
 
 def test_encrypted_real_password_rejected():
     pdf = pm.build_pdf(["locked"], user_pw="secret")
     with pytest.raises(ps.EncryptedPdfError):
-        ps.has_text_layer_raw(pdf)
+        ps.scan_text_layer(pdf)
 
 
 def test_corrupt_pdf_raises_parse_error():
     with pytest.raises(ps.PdfParseError):
-        ps.has_text_layer_raw(pm.build_pdf(["x"], corrupt=True))
+        ps.scan_text_layer(pm.build_pdf(["x"], corrupt=True))
     with pytest.raises(ps.PdfParseError):
-        ps.has_text_layer_raw(b"not a pdf at all")
+        ps.scan_text_layer(b"not a pdf at all")
 
 
 def test_literal_string_escapes_counted_once():
@@ -201,7 +201,7 @@ def test_contents_array_concatenated_across_streams():
     streams = ps.page_content_streams(pdf)
     assert len(streams) == 1
     assert ps.count_text_show_ops(streams[0]) == 1
-    assert ps.has_text_layer_raw(pdf)[0] is True
+    assert ps.scan_text_layer(pdf)[0] is True
 
 
 def test_crlf_stream_eol():
@@ -211,7 +211,7 @@ def test_crlf_stream_eol():
         _obj(3, b"<< /Type /Page /Parent 2 0 R /Contents 4 0 R >>"),
         _stream_obj(4, b"BT (crlf stream body text) Tj ET", eol=b"\r\n"),
     )
-    assert ps.has_text_layer_raw(pdf) == (True, 1)
+    assert ps.scan_text_layer(pdf)[:2] == (True, 1)
 
 
 def test_no_trailer_object_scan_fallback():
@@ -224,7 +224,7 @@ def test_no_trailer_object_scan_fallback():
         _stream_obj(4, b"BT (found without trailer!) Tj ET"),
         trailer=b"",
     )
-    assert ps.has_text_layer_raw(pdf) == (True, 1)
+    assert ps.scan_text_layer(pdf)[:2] == (True, 1)
 
 
 def test_pages_vs_page_type_disambiguation():
@@ -237,7 +237,7 @@ def test_pages_vs_page_type_disambiguation():
         _obj(4, b"<< /Type /Page /Parent 2 0 R >>"),  # page w/o contents
         _stream_obj(5, b"0 0 1 1 re f"),
     )
-    assert ps.has_text_layer_raw(pdf) == (False, 2)
+    assert ps.scan_text_layer(pdf)[:2] == (False, 2)
 
 
 def test_nested_pages_tree_order():
@@ -268,7 +268,7 @@ def test_bad_flate_degrades_to_zero_ops():
         _stream_obj(4, b"\x00not-really-deflate\x00",
                     filt=b"/Filter /FlateDecode "),
     )
-    assert ps.has_text_layer_raw(pdf) == (False, 1)
+    assert ps.scan_text_layer(pdf)[:2] == (False, 1)
 
 
 # --- text-layer extraction ---------------------------------------------------

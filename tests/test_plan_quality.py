@@ -73,7 +73,7 @@ def test_extraction_single_python_stage(spark, tmp_path):
     pages = spark.read.parquet(str(tmp_path / "pages"))
     res = ex.run_extraction(pages, num_partitions=4)
     plan = _plan(res)
-    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
     assert plan.count("Exchange ") == 1, plan
     assert plan.count("Scan parquet") == 1, plan
 
@@ -192,7 +192,7 @@ def test_pdf_page_stats_single_python_stage(spark):
     plan = pp.pdf_page_stats(df)._jdf.queryExecution() \
         .executedPlan().toString()
     assert plan.count("Exchange") == 0
-    assert plan.count("MapInPandas") == 1
+    assert plan.count("MapInArrow") == 1
     assert plan.count("Generate") == 1
 
 
@@ -508,3 +508,25 @@ def test_no_lambda_splits_text(spark, monkeypatch):
         lambdas = _lambda_calls(_optimized(df))
         assert any("slice(" in f for f in lambdas), name
         assert not [f for f in lambdas if "split(" in f], name
+
+
+def test_quality_score_splits_text_once(spark):
+    """The quality score reads a STAGED word array: each quality plan's
+    optimized form splits the text once per branch that scores it (two
+    for ``quality_percentile_cut``, whose scored frame feeds both the
+    quantile and the join).  An inline word count re-splits the text at
+    every reference (an expression holding a lambda is never CSE'd): 8,
+    10 and 14 splits."""
+    from pdf_ocr_batch_ndrocr_lite_spark.operators import curation as cu
+    from pdf_ocr_batch_ndrocr_lite_spark.operators import textstats as ts
+
+    docs = spark.createDataFrame(
+        [(1, "the cat and the hat", "en"), (2, None, "de")],
+        "doc_id bigint, text string, lang string")
+    plans = {
+        "curation_verdict": (cu.curation_verdict(docs), 1),
+        "quality_score": (ts.quality_score(docs), 1),
+        "quality_percentile_cut": (cu.quality_percentile_cut(docs), 2),
+    }
+    for name, (df, splits) in plans.items():
+        assert _optimized(df).count("split(") == splits, name

@@ -156,7 +156,7 @@ def test_pdf_scanner_total_on_pdf_headed_bytes(data):
     else escapes — for any %PDF-headed byte string."""
     from pdf_ocr_batch_ndrocr_lite_spark.functions import pdf_scan as ps
     try:
-        has_text, pages = ps.has_text_layer_raw(b"%PDF-1.4\n" + data)
+        has_text, pages, _ = ps.scan_text_layer(b"%PDF-1.4\n" + data)
         assert isinstance(has_text, bool) and pages >= 1
     except (ps.PdfParseError, ps.EncryptedPdfError):
         pass

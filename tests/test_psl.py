@@ -43,14 +43,6 @@ def test_punycode_forms_added():
     assert any(s.startswith("xn--") for s in r.normals[1])
 
 
-def test_icann_only_excludes_private_section():
-    full = psl.load_rules()
-    icann = psl.load_rules(icann_only=True)
-    assert "github.io" not in icann.normals[2]
-    assert "co.jp" in icann.normals[2]
-    assert len(icann.normals[2]) < len(full.normals[2])
-
-
 def test_parse_custom_snapshot(tmp_path):
     dat = tmp_path / "psl.dat"
     dat.write_text(

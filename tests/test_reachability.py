@@ -76,17 +76,18 @@ def test_every_package_module_is_reached_from_a_product_path():
 
 
 # ---------------------------------------------------------------------------
-# The operator surface: every public function in operators/, plans/ and
-# streaming/ is reached by a product caller, and every defaulted keyword
-# parameter on it is set by one.  A product caller is the CLI job, the
-# query surface, the bench, the perfbench harness, or the package's own
-# operator/plan/stream code; tests do not count.  Calls match by function
+# The operator surface: every public function in operators/, plans/,
+# streaming/, functions/ and sources/ is reached by a product caller, and
+# every defaulted keyword parameter on it is set by one.  A product caller
+# is the CLI job, the query surface, the bench, the perfbench harness, or
+# the package's own surface code; tests do not count.  Calls match by function
 # name (``f(...)`` or ``mod.f(...)``); a parameter counts as set when a
 # call passes it by keyword, by position, or through ``**NAME`` where NAME
 # is a module-level dict literal.
 # ---------------------------------------------------------------------------
 
-SURFACE = [REPO / PKG / d for d in ("operators", "plans", "streaming")]
+SURFACE = [REPO / PKG / d for d in ("operators", "plans", "streaming",
+                                    "functions", "sources")]
 PRODUCT_CALLERS = sorted(
     [REPO / PKG / "jobs.py", REPO / "__spark_entry__.py", REPO / "bench.py"]
     + [p for d in SURFACE + [REPO / "perfbench"] for p in d.glob("*.py")])
@@ -123,7 +124,9 @@ KNOB_ALLOWLIST = {
     "linkgraph.pagerank.damping_num",
     "linkgraph.pagerank.damping_den",
     "linkgraph.pagerank.scale",
-    # deployment settings
+    # deployment settings (the PSL snapshot is refreshed by swapping the
+    # file)
+    "psl.load_rules.path",
     "pipeline.build_session.driver_memory",
     "extract_stream.start_extraction_stream.lineage_path",
     "extract_stream.start_extraction_stream.trigger_once",
@@ -205,9 +208,10 @@ def test_every_public_operator_is_reached_from_a_product_caller():
     unreached = sorted(qual for name, (qual, _) in funcs.items()
                        if name not in refs and name not in ROOT_FUNCTIONS)
     assert not unreached, (
-        "public functions in operators/, plans/ and streaming/ that no "
-        "product caller (jobs.py, __spark_entry__.py, bench.py, "
-        f"perfbench/, the package itself) references: {unreached}")
+        "public functions in operators/, plans/, streaming/, functions/ "
+        "and sources/ that no product caller (jobs.py, __spark_entry__.py, "
+        f"bench.py, perfbench/, the package itself) references: "
+        f"{unreached}")
 
 
 def test_every_keyword_parameter_is_set_by_a_product_caller():
@@ -230,27 +234,22 @@ def test_every_keyword_parameter_is_set_by_a_product_caller():
 
 
 # ---------------------------------------------------------------------------
-# One Python-stage body: every ``mapInPandas`` stage of the product code
-# (the package, ``__spark_entry__.py``, ``bench.py``) goes through
-# ``extract.map_rows``, and pandas is imported only where a stage body is
-# written.  ``corpus.corpus_df`` is the one other site: its generator
-# yields 64-row slices of each input batch to bound the Arrow direct
-# memory of giant synthesized envelopes, a rule ``map_rows`` must not
-# impose on the extraction stage.
+# One Python-stage body: the product code (the package,
+# ``__spark_entry__.py``, ``bench.py``) writes every Python stage as a row
+# function through ``extract.map_rows``, whose body is the one
+# ``.mapInArrow(`` call; no ``.mapInPandas(`` call and no pandas import
+# anywhere in it.
 # ---------------------------------------------------------------------------
 
 PRODUCT_CODE = sorted(list((REPO / PKG).rglob("*.py"))
                       + [REPO / "__spark_entry__.py", REPO / "bench.py"])
-STAGE_BODIES = {
-    f"{PKG}/operators/extract.py": "map_rows",
-    f"{PKG}/sources/corpus.py": "corpus_df",
-}
+STAGE_BODIES = {f"{PKG}/operators/extract.py": "map_rows"}
 
 
 def _stage_sites(tree: ast.AST, rel: str) -> tuple:
-    """([site of each ``.mapInPandas(`` call], [site of each pandas
-    import]); a site is ``path:line in outer.inner`` (``<module>`` at top
-    level)."""
+    """([(method, scope, site) of each ``.mapInArrow(`` / ``.mapInPandas(``
+    call], [site of each pandas import]); a site is ``path:line in
+    outer.inner`` (``<module>`` at top level)."""
     calls, imports = [], []
 
     def walk(node, scope):
@@ -262,8 +261,8 @@ def _stage_sites(tree: ast.AST, rel: str) -> tuple:
                 ".".join(inner) or "<module>")
             if (isinstance(child, ast.Call)
                     and isinstance(child.func, ast.Attribute)
-                    and child.func.attr == "mapInPandas"):
-                calls.append((inner, where))
+                    and child.func.attr in ("mapInArrow", "mapInPandas")):
+                calls.append((child.func.attr, inner, where))
             elif isinstance(child, ast.Import) and any(
                     a.name.split(".")[0] == "pandas" for a in child.names):
                 imports.append(where)
@@ -277,21 +276,26 @@ def _stage_sites(tree: ast.AST, rel: str) -> tuple:
 
 
 def test_every_python_stage_goes_through_map_rows():
-    stray_calls, stray_imports = [], []
+    arrow, stray_arrow, pandas_calls, pandas_imports = [], [], [], []
     for path in PRODUCT_CODE:
         rel = path.relative_to(REPO).as_posix()
         calls, imports = _stage_sites(ast.parse(path.read_text(), str(path)),
                                       rel)
-        allowed = STAGE_BODIES.get(rel)
-        stray_calls += [where for scope, where in calls
-                        if scope != [allowed]]
-        if allowed is None:
-            stray_imports += imports
-    assert not stray_calls and not stray_imports, (
-        f"{len(stray_calls)} mapInPandas calls outside extract.map_rows "
-        f"and corpus.corpus_df: {stray_calls}; {len(stray_imports)} pandas "
-        f"imports outside extract.py and corpus.py: {stray_imports} (write "
-        "the stage as a row_fn through extract.map_rows)")
+        pandas_imports += imports
+        for method, scope, where in calls:
+            if method == "mapInPandas":
+                pandas_calls.append(where)
+            elif scope == [STAGE_BODIES.get(rel)]:
+                arrow.append(where)
+            else:
+                stray_arrow.append(where)
+    assert not (stray_arrow or pandas_calls or pandas_imports), (
+        f"{len(stray_arrow)} mapInArrow calls outside extract.map_rows: "
+        f"{stray_arrow}; {len(pandas_calls)} mapInPandas calls: "
+        f"{pandas_calls}; {len(pandas_imports)} pandas imports: "
+        f"{pandas_imports} (write the stage as a row_fn through "
+        "extract.map_rows)")
+    assert len(arrow) == 1, arrow
 
 
 # ---------------------------------------------------------------------------

@@ -146,51 +146,3 @@ def test_line_overlay_baseline_clamped_at_page_top():
     assert raw_baseline > height_pt - font_size  # the case that clamps
     assert op["y"] == max(0.0, min(height_pt - font_size, raw_baseline))
     assert op["y"] <= height_pt - font_size
-
-
-def test_png_pixel_embed_round_trip():
-    """PNG pages embed codec-free: IDAT rides into the PDF as a
-    FlateDecode image XObject with PNG predictors; parsing the produced
-    PDF and decoding that stream recovers the exact scanlines."""
-    from pdf_ocr_batch_ndrocr_lite_spark.functions import image_meta
-
-    w, h = 7, 5
-    png = image_meta.make_fake_png(w, h, dpi=150.0, with_pixels=True)
-    pdf = pdf_make.image_pdf(png)
-    objs = pdf_scan._parse_objects(pdf)
-    img = next(o for o in objs.values()
-               if b"/Subtype /Image" in o.dict_src)
-    assert b"/Width 7" in img.dict_src and b"/Height 5" in img.dict_src
-    assert b"/FlateDecode" in img.dict_src
-    assert b"/Predictor 15" in img.dict_src
-    # the scanner's Flate+predictor decoder recovers the raw scanlines
-    raw = pdf_scan._decode_stream(img, None)
-    expected = bytes((r * 31 + c * 7) % 251
-                     for r in range(h) for c in range(w * 3))
-    assert raw == expected
-    # page geometry follows the reference px->pt projection (150 dpi)
-    page = next(o for o in objs.values()
-                if b"/Type /Page " in o.dict_src or
-                b"/Type /Page\n" in o.dict_src or
-                (b"/Type /Page" in o.dict_src and
-                 b"/Pages" not in o.dict_src))
-    assert b"/MediaBox [0 0 3.36 2.4]" in page.dict_src
-
-
-def test_png_grayscale_embed_and_unsupported_types_raise():
-    from pdf_ocr_batch_ndrocr_lite_spark.functions import image_meta
-    import pytest as _pt
-
-    gray = image_meta.make_fake_png(4, 3, with_pixels=True, color_type=0)
-    pdf = pdf_make.image_pdf(gray)
-    objs = pdf_scan._parse_objects(pdf)
-    img = next(o for o in objs.values() if b"/Subtype /Image" in o.dict_src)
-    assert b"/DeviceGray" in img.dict_src
-    # palette PNG (color type 3): needs a pixel transform -> error
-    pal = image_meta.make_fake_png(4, 3, with_pixels=True, color_type=3)
-    with _pt.raises(image_meta.ImageParseError):
-        pdf_make.image_pdf(pal)
-    # metadata-only PNG (no IDAT): error rather than an empty image
-    hollow = image_meta.make_fake_png(4, 3)
-    with _pt.raises(image_meta.ImageParseError):
-        pdf_make.image_pdf(hollow)

@@ -36,7 +36,7 @@ def test_incremental_stream(spark, tmp_path):
     # directly — micro-batches are size-bounded, so no bucket exchange
     plan = extract_stream(spark.read.parquet(inp)) \
         ._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
     assert plan.count("Exchange") == 0, plan
     q = start_extraction_stream(spark, inp, out, ckpt, lineage_path=lineage,
                                 trigger_once=True)
