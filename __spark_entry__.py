@@ -2085,8 +2085,7 @@ def _q43_exact_quantiles(spark, sf_dir):
     from pdf_ocr_batch_ndrocr_lite_spark.operators import quantiles as qt
 
     docs = _read(spark, sf_dir, "documents")
-    return qt.exact_quantiles(docs, "lang", "n_chars",
-                              [0.5, 0.9, 0.99], tiebreak_col="doc_id") \
+    return qt.exact_quantiles(docs, "lang", "n_chars", [0.5, 0.9, 0.99]) \
         .orderBy("lang", "q")
 
 
@@ -2525,7 +2524,8 @@ def _q50_curation_pipeline(spark, sf_dir):
     # projections (grams/lang/quality) parallelize; see q49 note
     docs = _read(spark, sf_dir, "documents") \
         .repartition(spark.sparkContext.defaultParallelism)
-    return cu.curation_verdict(docs).orderBy("doc_id")
+    return cu.curation_verdict(docs).select("doc_id", "keep", "reason") \
+        .orderBy("doc_id")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

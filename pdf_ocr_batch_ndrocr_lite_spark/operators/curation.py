@@ -271,13 +271,21 @@ def per_domain_cap(docs: DataFrame, cap: int = 3, order_col: str = "url",
 # ---------------------------------------------------------------------------
 
 
+#: `curation_verdict`'s reasons other than 'kept', in priority order
+DROP_REASONS = ("exact_dup", "lang", "quality", "repetition")
+
+
 def curation_verdict(docs: DataFrame, min_quality: float = 0.45,
                      require_lang: bool = True) -> DataFrame:
-    """(id, keep, reason) per document.  Reason priority mirrors pipeline
-    order: 'exact_dup' (not the first-seen copy of its text digest) >
-    'lang' (language ID failed) > 'quality' (composite score below
-    threshold) > 'repetition' (most-frequent word-bigram share above
-    0.10) > 'kept'.
+    """Every column of ``docs`` plus ``keep`` and ``reason``, one row per
+    document.  Reason priority mirrors pipeline order: 'exact_dup' (not
+    the first-seen copy of its text digest) > 'lang' (language ID
+    failed) > 'quality' (composite score below threshold) > 'repetition'
+    (most-frequent word-bigram share above 0.10) > 'kept'.
+
+    The document columns ride through the signal projection, so a
+    curation stage is ``filter(keep)`` over this frame: the corpus is
+    not scanned again to fetch the survivors' rows.
 
     ``require_lang=False`` disables the lang kill (corpora curated
     without language filtering — e.g. code or multilingual crawls the
@@ -285,18 +293,19 @@ def curation_verdict(docs: DataFrame, min_quality: float = 0.45,
     from . import textstats as ts
     from .dedup import shingle_frame
 
+    cols = docs.columns
     # the sorted-gram array is staged in its own projection: HOF
     # expressions are never CSE'd (SPARK-35410), and the fraction
     # references it twice (run fold + size); the quality score reads the
     # staged words for the same reason
     staged = shingle_frame(
-        docs, 2, F.col("doc_id"), F.col("text"),
+        docs, 2, *[F.col(c) for c in cols],
         # sentinel for NULL texts (md5 output is hex, '' unreachable):
         # the winner agg below joins back on the digest, and an equality
         # join on a NULL key would drop NULL-text rows from the verdict
         F.coalesce(F.md5(F.col("text")), F.lit("")).alias("_md5"),
         ts.lang_pred_col().alias("lang_pred"),
-    ).select("doc_id", "_md5", "lang_pred",
+    ).select(*cols, "_md5", "lang_pred",
              ts.quality_col(F.col("words")).alias("quality"),
              F.array_sort("shingles").alias("_g"))
     # coalesce: a doc with no grams (NULL text → NULL fraction) must fall
@@ -305,7 +314,7 @@ def curation_verdict(docs: DataFrame, min_quality: float = 0.45,
     # coalesce makes the intent explicit and keeps the SQL oracle's
     # LEFT JOIN + COALESCE formulation bitwise-aligned)
     sig = staged.select(
-        F.col("doc_id"), F.col("_md5"), F.col("lang_pred"), F.col("quality"),
+        *cols, F.col("_md5"), F.col("lang_pred"), F.col("quality"),
         F.coalesce(ts.top_gram_frac_col(F.col("_g")), F.lit(0.0))
         .alias("top_gram_frac"),
     )
@@ -327,7 +336,7 @@ def curation_verdict(docs: DataFrame, min_quality: float = 0.45,
         .otherwise(F.lit("kept"))
     )
     return v.select(
-        F.col("doc_id"),
+        *cols,
         (reason == F.lit("kept")).alias("keep"),
         reason.alias("reason"),
     )
@@ -352,7 +361,7 @@ def quality_percentile_cut(docs: DataFrame, q: float = 0.1) -> DataFrame:
     scored = docs.select("doc_id", "lang", "text",
                          word_array().alias("words")).select(
         "doc_id", "lang", ts.quality_col(F.col("words")).alias("quality"))
-    cut = (qt.exact_quantiles(scored, "lang", "quality", [q], "doc_id")
+    cut = (qt.exact_quantiles(scored, "lang", "quality", [q])
            .select(F.col("lang"), F.col("value").alias("_cut")))
     return (scored.join(F.broadcast(cut), "lang")
             .filter(F.col("quality") >= F.col("_cut"))
@@ -410,10 +419,10 @@ def canonical_dedup(pages: DataFrame) -> DataFrame:
     identity is the page's declared rel=canonical target when present,
     else its own canonicalized url — so a mirror farm declaring one
     canonical collapses to a single survivor even when every mirror url
-    canonicalizes differently.  Winner is the combining min-agg +
-    semi-join (the `curation_verdict` winner shape): a viral page
-    canonicalized by millions of mirrors is exactly the hot key a window
-    would sort in one task.  Adds ``canon_key`` to the output."""
+    canonicalizes differently.  Winner is a combining min-agg per key
+    and a null-safe semi-join on (key, id): a viral page canonicalized by
+    millions of mirrors is exactly the hot key a window would sort in one
+    task.  Adds ``canon_key`` to the output."""
     # the canonical extraction is staged INLINE on the pages frame: a
     # separate (url, canonical) frame joined back on url would scan the
     # corpus twice

@@ -4,7 +4,7 @@ Approximate quantile sketches (GK, t-digest, Spark's approxQuantile) are
 implementation-defined and can't be oracle-checked across engines.  This
 operator computes EXACT discrete quantiles with one shuffle:
 
-    rank rows per group by (value, tiebreak)      [window, one exchange]
+    rank rows per group by value                   [window, one exchange]
     per-group row count                            [same window, no extra
                                                     shuffle: count() over
                                                     the unordered frame]
@@ -21,9 +21,9 @@ same un-splittable-window class as the r7 digest-dedup finding) to
 repeat heavily; a stratum of 10^10 docs has ~10^4 distinct rounded
 scores).  The worst case (all-distinct continuous values) degrades to
 the old shape's sort with one extra combining exchange — never worse
-than quadratic-free, and the common case is bounded.  `tiebreak_col`
-is kept for API stability: it never influenced the picked value
-(ties share the value by definition) and is now unused.
+than quadratic-free, and the common case is bounded.  No tiebreak
+column is needed: tied rows share their value, so the picked value is
+the same whichever of them ranks first.
 """
 
 from __future__ import annotations
@@ -35,13 +35,13 @@ from pyspark.sql import functions as F
 
 
 def exact_quantiles(df: DataFrame, group_col: str, value_col: str,
-                    qs: Sequence[float], tiebreak_col: str) -> DataFrame:
+                    qs: Sequence[float]) -> DataFrame:
     """(group, q, value) for each q in `qs` — discrete quantiles: the
     value whose rank is max(1, ceil(q * n)) within the group's value
     order.  Computed over (value, count) pairs — see the module
     docstring for why this is the 100 TB shape; the picked value is
     identical to the per-row row_number formulation (ties share their
-    value).  `tiebreak_col` is accepted for API stability but unused."""
+    value)."""
     counts = (df.groupBy(F.col(group_col), F.col(value_col))
               .agg(F.count(F.lit(1)).alias("_c")))
     w = (Window.partitionBy(group_col).orderBy(value_col)

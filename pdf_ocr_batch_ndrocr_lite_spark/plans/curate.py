@@ -5,8 +5,9 @@ Stage order follows cost (cheapest kill first) — the CCNet/Gopher/
 FineWeb-style cascade assembled from the standalone operators, so every
 stage's semantics stay individually oracle-checked (q50, q34, q54, q56):
 
-1. verdict   — per-row signals fused in ONE projection + one dedup
-               window exchange (`curation.curation_verdict`)
+1. verdict   — per-row signals fused in ONE projection over the
+               document rows, a combining first-seen winner per text
+               digest, then ``filter(keep)`` (`curation.curation_verdict`)
 2. near-dup  — MinHash-LSH candidates → Jaccard verify → drop losers
                (`dedup.minhash_dedup`, salt-split hot buckets)
 3. decontam  — drop docs sharing shingles with an eval/benchmark table
@@ -16,10 +17,10 @@ stage's semantics stay individually oracle-checked (q50, q34, q54, q56):
 
 Each stage is optional; the plan returns (kept_docs, stage_counts) where
 stage_counts is the lineage row a metrics sink records per run.  At
-corpus scale the pass is: one scan → fused projection → dedup window
-exchange → LSH exchanges over digests → broadcast semi-join → map-side
-sample — document text is never shuffled after the verdict stage
-restricts to survivors.
+corpus scale the pass is: one scan → fused projection → digest-winner
+agg + join-back (the one exchange the text crosses) → LSH exchanges over
+digests → anti-joins on id sets → map-side sample — document text is
+never shuffled after the verdict stage restricts to survivors.
 
 EXECUTE-ONCE CONTRACT (`scratch_dir`): every stage boundary is a
 `barrier.materialize` parquet write under ``scratch_dir``, the same round
@@ -27,9 +28,11 @@ trip `connected_components` uses for its iteration loop, so each stage's
 lineage executes exactly once and the final frame is a plain parquet scan
 — without the barriers the final write would re-execute the whole cascade.
 Each stage count (and the boilerplate pre-pass's dropped-line sum) is an
-observation on the frame that stage's barrier writes, so counting costs no
-job of its own; only the input count is a separate action.  Pass shared
-storage (HDFS/S3) on a real cluster.
+observation on the frame that stage's barrier writes; the input count and
+the per-reason drops are observed on the verdict rows that stage 1's
+barrier writes, ahead of its keep filter.  So no counter is a job of its
+own: the barrier writes are the only Spark actions.  Pass shared storage
+(HDFS/S3) on a real cluster.
 """
 
 from __future__ import annotations
@@ -61,7 +64,8 @@ def run_curation(docs: DataFrame, scratch_dir: str,
 
     Every stage executes exactly once, through its barrier under
     ``scratch_dir`` (see module comment), and its count is observed on
-    that barrier's write.
+    that barrier's write.  ``counts`` also holds ``input`` and one
+    ``dropped_<reason>`` per verdict reason, observed on stage 1's write.
 
     ``boilerplate_max_df`` enables the CCNet-style LINE-level pre-pass:
     lines of 10+ chars present in more than that many documents are
@@ -72,7 +76,7 @@ def run_curation(docs: DataFrame, scratch_dir: str,
     NULL-text documents pass through the pre-pass untouched (rebuilt text
     left-joins back onto the corpus), so they still receive an explicit
     verdict instead of silently vanishing before the first stage."""
-    counts = {"input": docs.count()}
+    counts = {}
 
     if boilerplate_max_df is not None:
         dropped = Observation()
@@ -91,12 +95,19 @@ def run_curation(docs: DataFrame, scratch_dir: str,
                 .drop("_rw_text"))
         counts["boiler_lines_dropped"] = int(dropped.get["lines"] or 0)
 
-    verdict = cu.curation_verdict(docs, min_quality=min_quality,
-                                  require_lang=require_lang)
+    # the verdict has one row per input row (an inner join on a
+    # per-digest winner), so an observation ahead of the keep filter, with
+    # no exchange before the barrier write, counts the input
+    verdict = Observation()
+    observed = [F.count(F.lit(1)).alias("input")] + [
+        F.count_if(F.col("reason") == r).alias(f"dropped_{r}")
+        for r in cu.DROP_REASONS]
     # (barrier name, counts key, stage) in cascade order
     stages = [("stage1_verdict", "after_verdict",
-               lambda d: d.join(verdict.filter(F.col("keep"))
-                                .select("doc_id"), "doc_id", "left_semi"))]
+               lambda d: cu.curation_verdict(
+                   d, min_quality=min_quality, require_lang=require_lang)
+               .observe(verdict, *observed)
+               .filter(F.col("keep")).drop("keep", "reason"))]
     if near_dup:
         stages.append(("stage2_near_dup", "after_near_dup",
                        lambda d: dd.minhash_dedup(
@@ -120,5 +131,6 @@ def run_curation(docs: DataFrame, scratch_dir: str,
             name, scratch_dir)
         counts[key] = rows.get["rows"]
 
-    counts["kept"] = list(counts.values())[-1]
+    counts.update(verdict.get)
+    counts["kept"] = rows.get["rows"]
     return kept, counts

@@ -36,6 +36,8 @@ def test_run_curation_cascade_counts(spark, tmp_path):
     # near-dups of 0 (higher ids lose); 0 and 5 survive
     assert ids == [0, 5]
     assert counts["input"] == 6
+    assert counts["dropped_exact_dup"] == 1   # 1
+    assert counts["dropped_lang"] == 1        # 3
     assert counts["after_verdict"] == 4       # 0, 2, 4, 5
     assert counts["after_near_dup"] == 2      # 0, 5
     assert counts["kept"] == 2
@@ -75,6 +77,9 @@ def test_curate_cli_smoke(tmp_path):
     counts = json.loads(line)
     assert counts["input"] == 300
     assert 0 < counts["kept"] <= counts["after_verdict"] <= 300
+    assert counts["after_verdict"] + sum(
+        counts[f"dropped_{r}"]
+        for r in ("exact_dup", "lang", "quality", "repetition")) == 300
 
 
 def test_run_curation_stage_barrier_executes_stages_once(spark, tmp_path):
@@ -134,6 +139,46 @@ def test_run_curation_boilerplate_prepass(spark, tmp_path):
         assert nav not in r["text"]
 
 
+def test_run_curation_stage1_reads_docs_once_for_its_rows(spark, tmp_path,
+                                                          monkeypatch):
+    """Stage 1 is a keep filter over the verdict, which carries the
+    document columns: over a parquet ``docs`` its executed plan scans the
+    table twice (the signal projection and the digest-winner branch) and
+    has 2 Exchanges.  A semi-join of ``docs`` against the verdict would
+    add a third scan and an exchange of the document rows."""
+    from pdf_ocr_batch_ndrocr_lite_spark.plans import curate
+
+    _corpus(spark).write.parquet(str(tmp_path / "docs"))
+    docs = spark.read.parquet(str(tmp_path / "docs"))
+    plans = {}
+    barrier = curate.materialize
+
+    def spy(df, name, scratch=None):
+        plans[name] = df._jdf.queryExecution().executedPlan().toString()
+        return barrier(df, name, scratch)
+
+    monkeypatch.setattr(curate, "materialize", spy)
+    kept, counts = curate.run_curation(
+        docs, scratch_dir=str(tmp_path / "scr"), near_dup=False)
+    plan = plans["stage1_verdict"]
+    assert 0 < plan.count("FileScan parquet") <= 2, plan
+    assert plan.count("Exchange") <= 2, plan
+    assert counts["input"] == 6 and counts["kept"] == 4
+    assert kept.columns == docs.columns
+
+
+def test_run_curation_empty_input_counts_zero(spark, tmp_path):
+    """Every counter of an empty run is 0, never None."""
+    docs = spark.createDataFrame([], "doc_id int, lang string, text string")
+    kept, counts = run_curation(docs, scratch_dir=str(tmp_path / "scr"),
+                                boilerplate_max_df=2, max_df=None,
+                                bench=docs, mix_rates={"en": 1.0})
+    assert counts == dict.fromkeys(counts, 0)
+    assert {"input", "dropped_exact_dup", "dropped_lang", "dropped_quality",
+            "dropped_repetition", "kept"} <= set(counts)
+    assert kept.count() == 0
+
+
 def _full_cascade(spark, scratch):
     """Every stage on: boilerplate pre-pass, verdict, near-dup, decontam
     (doc 5 is the benchmark) and mixing."""
@@ -145,21 +190,27 @@ def _full_cascade(spark, scratch):
 
 
 def test_run_curation_job_budget(spark, tmp_path, spark_jobs):
-    """Each stage count, and the boilerplate pre-pass's dropped-line sum,
-    is an observation on that stage's barrier write, not a job of its
-    own.  With all four stages and the pre-pass on, a run takes at most
-    43 Spark jobs; with a count per stage and a collect for the pre-pass
-    (2 jobs each) it took 52-53 (AQE broadcast timing moves one job)."""
+    """Each stage count, the boilerplate pre-pass's dropped-line sum and
+    the input and per-reason counts are observations on barrier writes,
+    not jobs of their own.  With all four stages and the pre-pass on, a
+    run takes at most 38 Spark jobs; with an input count and a stage-1
+    semi-join it took 43, and with a count per stage and a collect for
+    the pre-pass (2 jobs each) 52-53 (AQE broadcast timing moves one
+    job)."""
     (kept, counts), jobs = spark_jobs(
         lambda: _full_cascade(spark, str(tmp_path / "scr")))
     assert counts["kept"] == 1
-    assert 0 < len(jobs) <= 43, len(jobs)
+    assert 0 < len(jobs) <= 38, len(jobs)
 
 
 def test_run_curation_counts_equal_the_barrier_tables(spark, tmp_path):
-    """The observed counts are the rows each stage's barrier wrote."""
+    """The observed counts are the rows each stage's barrier wrote, the
+    input rows, and the verdict's rows per drop reason."""
+    from pdf_ocr_batch_ndrocr_lite_spark.operators import curation as cu
+
     scr = tmp_path / "scr"
     kept, counts = _full_cascade(spark, str(scr))
+    docs = _corpus(spark)
 
     def rows(name):
         return spark.read.parquet(str(scr / name))
@@ -172,3 +223,11 @@ def test_run_curation_counts_equal_the_barrier_tables(spark, tmp_path):
                       ("stage4_mixing", "after_mixing")):
         assert counts[key] == rows(name).count(), name
     assert counts["kept"] == kept.count() == 1
+    assert counts["input"] == docs.count()
+    # the pre-pass drops no line of this corpus, so the verdict's input
+    # is ``docs`` itself
+    assert counts["boiler_lines_dropped"] == 0
+    by_reason = {r["reason"]: r["count"] for r in
+                 cu.curation_verdict(docs).groupBy("reason").count().collect()}
+    for reason in ("exact_dup", "lang", "quality", "repetition"):
+        assert counts[f"dropped_{reason}"] == by_reason.get(reason, 0), reason

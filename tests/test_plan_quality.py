@@ -174,7 +174,7 @@ def test_exact_quantiles_single_exchange(spark):
     df = spark.range(0, 1000).select(
         (F.col("id") % 5).alias("g"), F.col("id").alias("v"),
         F.col("id").alias("id2"))
-    plan = qt.exact_quantiles(df, "g", "v", [0.5, 0.9], "id2") \
+    plan = qt.exact_quantiles(df, "g", "v", [0.5, 0.9]) \
         ._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1
 

@@ -132,8 +132,8 @@ def test_exact_quantiles_matches_sorted_ranks(spark):
         + [("b", v, 100 + i) for i, v in enumerate([10, 20])]
     df = spark.createDataFrame(rows, "g string, v int, id int")
     got = {(r["g"], r["q"]): r["value"]
-           for r in qt.exact_quantiles(df, "g", "v", [0.5, 0.9, 1.0],
-                                       tiebreak_col="id").collect()}
+           for r in qt.exact_quantiles(df, "g", "v", [0.5, 0.9, 1.0])
+           .collect()}
     # group a sorted: [1,3,3,3,5,7,9], n=7 → p50=rank ceil(3.5)=4 → 3;
     # p90=rank ceil(6.3)=7 → 9; p100=rank 7 → 9
     assert got[("a", 0.5)] == 3
@@ -148,8 +148,8 @@ def test_exact_quantiles_single_row_and_low_q(spark):
     from pdf_ocr_batch_ndrocr_lite_spark.operators import quantiles as qt
     df = spark.createDataFrame([("g", 42, 0)], "g string, v int, id int")
     got = {r["q"]: r["value"]
-           for r in qt.exact_quantiles(df, "g", "v", [0.01, 0.99],
-                                       tiebreak_col="id").collect()}
+           for r in qt.exact_quantiles(df, "g", "v", [0.01, 0.99])
+           .collect()}
     # rank max(1, ceil(q*1)) = 1 for every q
     assert got == {0.01: 42, 0.99: 42}
 
@@ -859,7 +859,7 @@ def test_exact_quantiles_ranks_over_value_counts(spark):
     from pdf_ocr_batch_ndrocr_lite_spark.operators import quantiles as qt
     df = spark.createDataFrame([("g", 1, i) for i in range(5)]
                                + [("g", 2, 5)], "g string, v int, id int")
-    out = qt.exact_quantiles(df, "g", "v", [0.5], tiebreak_col="id")
+    out = qt.exact_quantiles(df, "g", "v", [0.5])
     phys = out._jdf.queryExecution().executedPlan().toString()
     assert "partial_count" in phys          # combining agg below the window
     assert phys.index("Window") < phys.index("partial_count")
