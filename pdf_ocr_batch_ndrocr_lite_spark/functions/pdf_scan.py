@@ -673,6 +673,28 @@ def _decode_parms(dict_src: bytes,
     return out
 
 
+# Output cap of one FlateDecode step.  Deflate inflates at most ~1032:1,
+# so a stream is bounded by its own size only until filters stack: two
+# FlateDecode filters turn 1 KB into ~1 GB.  A step over the cap makes
+# the stream undecodable (a parse warning), never a worker OOM.
+MAX_INFLATE_BYTES = 64 << 20
+
+
+def _inflate(raw: bytes) -> bytes:
+    """``zlib.decompress(raw)`` with its output capped at
+    ``MAX_INFLATE_BYTES``: a stream that inflates past the cap raises
+    UnsupportedFilterError; a truncated or corrupt one raises
+    ``zlib.error``, as ``zlib.decompress`` does."""
+    d = zlib.decompressobj()
+    out = d.decompress(raw, MAX_INFLATE_BYTES)
+    if d.eof:
+        return out
+    if len(out) >= MAX_INFLATE_BYTES:
+        raise UnsupportedFilterError(
+            f"FlateDecode output over {MAX_INFLATE_BYTES} bytes")
+    raise zlib.error("incomplete or truncated stream")
+
+
 _KNOWN_UNSUPPORTED = {b"DCTDecode", b"JPXDecode", b"CCITTFaxDecode",
                       b"JBIG2Decode", b"Crypt"}
 
@@ -697,7 +719,7 @@ def _decode_stream(obj: _Obj, dec: Optional[_Decryptor],
                     f"{filt.decode('ascii', 'replace')}")
             parms = {}
         if filt == b"FlateDecode" or filt == b"Fl":
-            raw = zlib.decompress(raw)
+            raw = _inflate(raw)
         elif filt == b"LZWDecode" or filt == b"LZW":
             raw = _lzw_decode(raw, parms.get(b"EarlyChange", 1))
         elif filt == b"ASCIIHexDecode" or filt == b"AHx":

@@ -14,11 +14,12 @@ boilerplate stripper (north-star extension).  Given an OCR engine, documents
 that route ``needs_ocr`` continue through it (`run_engine`) in the same row
 step, so route → engine → parse → serialize is one pass per document.
 
-`map_rows` is the one body of every Python stage in the package and the
-query surface (this dispatcher, the OCR operator, the page explode, the
-media features, the synthetic corpus, the query fixtures): a ``row_fn``
-returns one dict per input row, and the output columns are the stage
-schema's.
+`map_partitions` is the one body of every Python stage in the package
+and the query surface.  Its row form `map_rows` serves this dispatcher,
+the OCR operator, the page explode, the media features, the synthetic
+corpus and the query fixtures: a ``row_fn`` returns one dict per input
+row, and the output columns are the stage schema's.  The keyed sink's
+parquet writer (`sources.storage`) is a partition-level function over it.
 """
 
 from __future__ import annotations
@@ -244,14 +245,48 @@ def extract_one(url: str, payload: bytes, lang: str,
     return out
 
 
+def map_partitions(df: DataFrame,
+                   fn: Callable[[Iterator[pa.RecordBatch]],
+                                Iterator[pa.RecordBatch]],
+                   schema: str) -> DataFrame:
+    """The one Python stage of the package, a ``mapInArrow`` over ``df``:
+    ``fn`` maps one task's non-empty input batches to output batches of
+    ``schema`` (a DDL string), and the stage carries ``fn``'s name in
+    query plans.  `map_rows` is its row form; the keyed sink's parquet
+    writer (`sources.storage`) is a partition-level ``fn``.
+
+    Each call of the body first deletes every ``zipimporter`` from the
+    worker's ``sys.path_importer_cache``.  PySpark's worker runs
+    ``importlib.invalidate_caches()`` at the start of every task, and on
+    CPython < 3.13 that makes every cached ``zipimporter`` re-read its
+    archive's whole central directory: with pyspark imported from
+    ``pyspark.zip`` (1,328 entries, 12-16 cached finders per worker) that
+    is ~0.2 s per task before its first batch, most of a small task's
+    time.  With the finders gone, the next task's invalidation has no
+    archive to re-read (3.13 makes the invalidation lazy).  The import
+    system is unaffected: imported modules keep their loaders, and the
+    next import from an archive path builds a fresh finder from
+    ``zipimport``'s own directory cache.
+    """
+    def body(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        # spare the next task's invalidate_caches() the zip re-reads
+        # (see the docstring)
+        cache = sys.path_importer_cache
+        for path in [p for p, f in cache.items()
+                     if isinstance(f, zipimport.zipimporter)]:
+            del cache[path]
+        return fn(b for b in batches if b.num_rows)
+    body.__name__ = fn.__name__     # the stage's name in query plans
+    return df.mapInArrow(body, schema)
+
+
 def map_rows(df: DataFrame, row_fn: Callable[..., Dict[str, Any]],
              in_cols: Sequence[str], schema: str) -> DataFrame:
-    """The one Python stage of the package, a ``mapInArrow`` over ``df``:
-    one output row ``row_fn(*values)`` per input row of ``df``, the values
-    read from ``in_cols`` by name, the row dict's keys laid out in the
-    column order of ``schema`` (a DDL string).  ``df`` already holds
-    ``in_cols``: a ``select`` here would put a Project above the caller's
-    exchange.
+    """The row form of `map_partitions`: one output row
+    ``row_fn(*values)`` per input row of ``df``, the values read from
+    ``in_cols`` by name, the row dict's keys laid out in the column order
+    of ``schema`` (a DDL string).  ``df`` already holds ``in_cols``: a
+    ``select`` here would put a Project above the caller's exchange.
 
     The values are each column's ``to_pylist()`` values: NULL is
     ``None``, a bigint an ``int``, binary ``bytes``, an array a ``list``.
@@ -270,19 +305,6 @@ def map_rows(df: DataFrame, row_fn: Callable[..., Dict[str, Any]],
     the largest aligned 256-row batch 6.5 MB (4.6 MB for the largest
     64-row slice), far under the 8 GB of direct memory ``build_session``
     sets.
-
-    Each call of the body first deletes every ``zipimporter`` from the
-    worker's ``sys.path_importer_cache``.  PySpark's worker runs
-    ``importlib.invalidate_caches()`` at the start of every task, and on
-    CPython < 3.13 that makes every cached ``zipimporter`` re-read its
-    archive's whole central directory: with pyspark imported from
-    ``pyspark.zip`` (1,328 entries, 12-16 cached finders per worker) that
-    is ~0.2 s per task before its first batch, most of a small task's
-    time.  With the finders gone, the next task's invalidation has no
-    archive to re-read (3.13 makes the invalidation lazy).  The import
-    system is unaffected: imported modules keep their loaders, and the
-    next import from an archive path builds a fresh finder from
-    ``zipimport``'s own directory cache.
     """
     struct = StructType.fromDDL(schema)
     out_cols = struct.names
@@ -301,16 +323,8 @@ def map_rows(df: DataFrame, row_fn: Callable[..., Dict[str, Any]],
             v = v.replace(tzinfo=zone, fold=1)
         return v.astimezone(timezone.utc)
 
-    def body(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # spare the next task's invalidate_caches() the zip re-reads
-        # (see the docstring)
-        cache = sys.path_importer_cache
-        for path in [p for p, f in cache.items()
-                     if isinstance(f, zipimport.zipimporter)]:
-            del cache[path]
+    def rows(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            if batch.num_rows == 0:
-                continue
             out: Dict[str, list] = {c: [] for c in out_cols}
             for values in zip(*(batch.column(c).to_pylist()
                                 for c in in_cols)):
@@ -320,8 +334,8 @@ def map_rows(df: DataFrame, row_fn: Callable[..., Dict[str, Any]],
             for c in ts_cols:
                 out[c] = [utc(v) for v in out[c]]
             yield pa.RecordBatch.from_pydict(out, schema=arrow_schema)
-    body.__name__ = row_fn.__name__     # the stage's name in query plans
-    return df.mapInArrow(body, schema)
+    rows.__name__ = row_fn.__name__
+    return map_partitions(df, rows, schema)
 
 
 def extract_batches(flagged: DataFrame,

@@ -15,6 +15,9 @@ of cluster size, and a restart can anti-join finished keys.
 
 from __future__ import annotations
 
+import functools
+import hashlib
+import sys
 from typing import List
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -122,16 +125,21 @@ def meta_path(checkpoint_path: str) -> str:
     return checkpoint_path.rstrip("/") + "_meta"
 
 
+@functools.cache
 def _code_version() -> str:
-    """Short fingerprint of the extraction-defining sources: any change
-    to the dispatcher or the plan layer yields a new version string, so
-    a lineage reader can tell which code produced which run."""
-    import hashlib
-
-    from . import pipeline as _pl
+    """Short fingerprint of the sources that define a run's output: the
+    dispatcher, the kernels it calls, the plan layer, this checkpoint
+    module and the sink writer.  Any change to one of them yields a new
+    version string, so a lineage reader can tell which code produced
+    which run.  Hashed once per process."""
+    from ..functions import (html_extract, image_meta, ocr_parse, pdf_scan,
+                             textops)
+    from ..sources import storage
+    from . import pipeline
 
     h = hashlib.md5()
-    for mod in (ex, _pl):
+    for mod in (ex, pipeline, sys.modules[__name__], storage, textops,
+                ocr_parse, html_extract, pdf_scan, image_meta):
         with open(mod.__file__, "rb") as fh:
             h.update(fh.read())
     return h.hexdigest()[:12]
@@ -148,8 +156,6 @@ def run_meta_row(spark: SparkSession, app_name: str, num_buckets: int,
     Literals over a one-partition ``range``: the append runs as one JVM
     task, where a frame from a driver-side list would scan a Python RDD
     in ``defaultParallelism`` tasks."""
-    import hashlib
-
     conf = spark.sparkContext.getConf()
     config_hash = hashlib.md5(
         f"num_buckets={num_buckets}".encode()).hexdigest()[:12]

@@ -1,6 +1,6 @@
 """End-to-end extraction job plan.
 
-Logical plan (all declarative until the single vectorized UDF stage):
+Logical plan (all declarative until the vectorized extraction stage):
 
     read pages table
       → anti-join finished checkpoint partitions   (resume, broadcast)
@@ -11,8 +11,10 @@ Logical plan (all declarative until the single vectorized UDF stage):
                                                     tail — range co-locates
                                                     it, measured 5x worse)
       → ONE mapInArrow extraction stage            (Arrow, no per-row Python)
-      → overwrite-by-partition-key extractions sink (idempotent replay;
-                                                    observes the run counters)
+      → keyed extractions sink: pyarrow            (idempotent replay;
+        writer stage, one file per bucket,         observes the run
+        then the driver swaps the bucket           counters)
+        directories (parquet fallback)
       → per-partition-key lineage rollup → MERGE   (idempotent metrics)
 
 Replaces the reference's sequential per-file loop + CSV log

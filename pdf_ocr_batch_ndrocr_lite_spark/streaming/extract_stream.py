@@ -13,8 +13,9 @@ Design notes for scale:
 - foreachBatch is inherently at-least-once: after a failure Spark replays
   the last uncommitted micro-batch.  Effective exactly-once comes from
   making the replay IDEMPOTENT: both sinks are partitioned by batch_id and
-  written with dynamic partition overwrite, so a replayed batch replaces
-  its own output instead of appending a second copy.  (Round 1 used a blind
+  written with the keyed overwrite (`StorageAdapter.overwrite_partitions`),
+  so a replayed batch replaces its own output instead of appending a
+  second copy.  (Round 1 used a blind
   append here — duplicated rows on replay.)
 - `maxFilesPerTrigger` bounds micro-batch size the way the Arrow page
   budget bounds batch memory.
@@ -55,8 +56,8 @@ def extract_stream(pages: DataFrame) -> DataFrame:
 
 
 def make_batch_sink(output_path: str, lineage_path: Optional[str] = None):
-    """foreachBatch sink with idempotent replay: batch_id-partitioned
-    dynamic overwrite means a micro-batch replayed after a failure REPLACES
+    """foreachBatch sink with idempotent replay: a batch_id-keyed
+    overwrite means a micro-batch replayed after a failure REPLACES
     its previous (possibly partial) output — effective exactly-once for
     both the extractions sink and the lineage rollup."""
     storage = StorageAdapter()

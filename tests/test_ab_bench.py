@@ -31,17 +31,42 @@ def test_summary_medians_iqr_wins_and_failures():
         (_line(160, 26), _line(170, 21)),   # change wins both
         (_line(180, 28), None),             # change crashed: pair dropped
     ]
-    docs, setup, base, change = ab_bench.summarize(pairs, END_TO_END)
+    docs, docs_gain, setup, setup_gain, base, change = ab_bench.summarize(
+        pairs, END_TO_END)
     # base docs over the 4 complete pairs: 100 120 140 160 → median 130,
     # inclusive quartiles 115 / 145 → IQR 30
-    assert docs == ("docs_per_s: base median 130  change median 125  "
+    assert docs == ("docs_per_s: base q1 115 median 130 q3 145  "
+                    "change q1 117.5 median 125 q3 140  "
                     "base IQR 30  change wins 2/4")
+    # 9/10 of the 5 pairs run is 5 wins (the crashed pair counts for none)
+    assert docs_gain == ("docs_per_s: gain no (wins 2 of 5 pairs run, "
+                         "need 5; median better by -5, need more than 30)")
     # lower is better: 19 < 20 and 21 < 26 win, 22 = 22 ties, 25 > 24 loses
     assert setup.endswith("change wins 2/4")
-    assert setup.startswith("setup_s: base median 23  change median 21.5")
+    assert setup.startswith("setup_s: base q1 21.5 median 23 q3 24.5  "
+                            "change q1 20.5 median 21.5")
+    assert setup_gain.startswith("setup_s: gain no (wins 2 of 5")
     assert base == "base: 0 crashed invocations, 0 of 20 timed runs failed"
     assert change == ("change: 1 crashed invocations, 1 of 16 timed runs "
                       "failed")
+
+
+def test_gain_rule_needs_nine_tenths_of_the_pairs_and_the_base_iqr():
+    # change wins 9 of 10 pairs by 40; base 100..190 has IQR 45
+    pairs = [(_line(100 + 10 * i, 20), _line(140 + 10 * i, 20))
+             for i in range(9)] + [(_line(190, 20), _line(180, 20))]
+    lines = ab_bench.summarize(pairs, END_TO_END[:1])
+    assert lines[1] == ("docs_per_s: gain no (wins 9 of 10 pairs run, "
+                        "need 9; median better by 35, need more than 45)")
+    # the same wins by 60 clear the IQR
+    pairs = [(b, _line(_value(b) + 60, 20)) for b, _ in pairs[:9]] + [
+        pairs[9]]
+    assert ab_bench.summarize(pairs, END_TO_END[:1])[1].startswith(
+        "docs_per_s: gain yes (wins 9 of 10")
+
+
+def _value(line):
+    return line["metrics"]["docs_per_s"]["value"]
 
 
 def test_summary_without_complete_pairs():

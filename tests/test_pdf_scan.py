@@ -6,6 +6,9 @@ FlateDecode, RC4 encryption)."""
 from __future__ import annotations
 
 import re
+import time
+import tracemalloc
+import zlib
 
 import pytest
 
@@ -269,6 +272,58 @@ def test_bad_flate_degrades_to_zero_ops():
                     filt=b"/Filter /FlateDecode "),
     )
     assert ps.scan_text_layer(pdf)[:2] == (False, 1)
+
+
+def _flate_bomb(inflated: int) -> bytes:
+    """Two stacked FlateDecode layers over ``inflated`` zero bytes."""
+    c = zlib.compressobj(9)
+    chunk = bytes(1 << 20)
+    inner = b"".join([c.compress(chunk) for _ in range(inflated >> 20)]
+                     + [c.flush()])
+    return zlib.compress(inner, 9)
+
+
+def test_flate_bomb_is_an_undecodable_stream(spark):
+    """A ~1 KB [/FlateDecode /FlateDecode] stream inflating to 4x the
+    per-step cap: `extract_one` returns its row (a parse warning, like
+    any undecodable stream) in bounded time and memory, and the other
+    rows of its batch extract as they do alone."""
+    from pdf_ocr_batch_ndrocr_lite_spark.sources.corpus import make_row
+
+    bomb = _flate_bomb(4 * ps.MAX_INFLATE_BYTES)
+    assert len(bomb) < 1024
+    pdf = _doc(
+        _obj(1, b"<< /Type /Catalog /Pages 2 0 R >>"),
+        _obj(2, b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>"),
+        _obj(3, b"<< /Type /Page /Parent 2 0 R /Contents 4 0 R >>"),
+        _stream_obj(4, bomb, filt=b"/Filter [/FlateDecode /FlateDecode] "),
+    )
+    tracemalloc.start()
+    t0 = time.perf_counter()
+    try:
+        row = E.extract_one("https://x.test/bomb.pdf", pdf, "en")
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    # uncapped, the scan allocated ~560 MB and took ~20 s
+    assert time.perf_counter() - t0 < 10
+    assert peak < 3 * ps.MAX_INFLATE_BYTES, peak
+    assert (row["action"], row["parse_warnings"]) == (E.ACTION_NEEDS_OCR, 1)
+
+    rows = [make_row(42, i) for i in range(40)]
+    pages = spark.createDataFrame(
+        [(r["url"], r["html"], r["lang"]) for r in rows]
+        + [("https://x.test/bomb.pdf", pdf, "en")],
+        "url string, html binary, lang string")
+    got = {r["url"]: r.asDict() for r in
+           E.run_extraction(pages, num_partitions=1).collect()}
+    assert got["https://x.test/bomb.pdf"]["parse_warnings"] == 1
+    for r in rows:
+        if got[r["url"]]["action"] == E.ACTION_SKIP_NAME:
+            continue
+        alone = E.extract_one(r["url"], r["html"], r["lang"])
+        del alone["seconds"]
+        assert {k: got[r["url"]][k] for k in alone} == alone, r["url"]
 
 
 # --- text-layer extraction ---------------------------------------------------

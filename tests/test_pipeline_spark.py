@@ -213,6 +213,72 @@ def test_sink_bucket_spreads_over_at_most_k_tasks(spark, tmp_path):
     assert spark.read.parquet(out).count() == totals["extracted"]
 
 
+def _tree_bytes(root: str) -> dict:
+    """{path relative to root: file bytes} of every file under root."""
+    import os
+    return {os.path.relpath(os.path.join(d, f), root):
+            open(os.path.join(d, f), "rb").read()
+            for d, _, fs in os.walk(root) for f in fs}
+
+
+def test_failed_keyed_write_leaves_every_previous_bucket(spark, tmp_path):
+    """A keyed write whose task raises fails the job and leaves the sink
+    as it was: every previous bucket file byte-identical, no bucket the
+    failed write would have added, no staging directory."""
+    import os
+    out = str(tmp_path / "extractions")
+    storage = StorageAdapter()
+
+    def keyed(n, k):
+        return spark.range(0, n, 1, 4).select(
+            (F.col("id") % k).cast("int").alias("partition_key"),
+            F.col("id").cast("string").alias("url"))
+
+    storage.overwrite_partitions(keyed(40, 4), out, ["partition_key"])
+    before = _tree_bytes(out)
+    # spark.range's tasks each hold every bucket: one file per task in each
+    assert sorted(before) == [f"partition_key={k}/part-{t:05d}.parquet"
+                              for k in range(4) for t in range(4)]
+    bad = keyed(60, 6).withColumn("url", F.when(
+        F.col("partition_key") == 2, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("url")))
+    with pytest.raises(Exception, match="boom"):
+        storage.overwrite_partitions(bad, out, ["partition_key"])
+    assert _tree_bytes(out) == before
+    assert sorted(os.listdir(out)) == [f"partition_key={k}" for k in range(4)]
+
+
+def test_keyed_sink_rejects_non_local_uris(spark):
+    with pytest.raises(ValueError, match="overwrite_partitions"):
+        StorageAdapter().overwrite_partitions(
+            spark.range(1).select(F.lit(0).alias("partition_key")),
+            "s3://bucket/out", ["partition_key"])
+
+
+def test_sink_reads_back_with_the_extraction_types(spark, tmp_path):
+    """Spark and pyarrow read the keyed sink back as Spark's partitioned
+    writer left it: the ``SINK_COLS`` with their ``EXTRACT_SCHEMA``
+    types, then ``partition_key int`` from the directory names."""
+    import pyarrow as pa
+    import pyarrow.dataset as pads
+    from pyspark.sql.types import (IntegerType, StructField, StructType)
+
+    out = "file://" + str(tmp_path / "extractions")
+    df = corpus_df(spark, 60, seed=SEED, partitions=4)
+    run_pipeline(spark, df, output_path=out, num_buckets=8)
+    types = {f.name: f.dataType
+             for f in StructType.fromDDL(E.EXTRACT_SCHEMA).fields}
+    assert spark.read.parquet(out).schema == StructType(
+        [StructField(c, types[c]) for c in E.SINK_COLS]
+        + [StructField("partition_key", IntegerType())])
+    arrow = pads.dataset(str(tmp_path / "extractions"),
+                         partitioning="hive").schema
+    assert [(f.name, f.type) for f in arrow] == [
+        (c, pa.string() if types[c].simpleString() == "string"
+         else pa.int32()) for c in E.SINK_COLS] + [
+        ("partition_key", pa.int32())]
+
+
 def test_image_rows_in_corpus(results):
     kinds = {r["doc_kind"] for r in results.values()}
     assert "image" in kinds
@@ -277,6 +343,34 @@ def test_run_meta_written_and_continuity_enforced(spark, tmp_path):
                      storage=storage, num_buckets=32)
     # nothing extra was appended by the failed attempt
     assert spark.read.parquet(ck.meta_path(ckpt)).count() == 2
+
+
+@pytest.mark.parametrize("module", [
+    "functions.textops", "functions.ocr_parse", "functions.html_extract",
+    "functions.pdf_scan", "functions.image_meta", "sources.storage",
+    "plans.checkpoint", "plans.pipeline", "operators.extract"])
+def test_code_version_covers_the_output_defining_modules(
+        module, tmp_path, monkeypatch):
+    """``run_meta.code_version`` changes when the bytes of any module that
+    defines the extracted output change, and is computed once per
+    process."""
+    import importlib
+    from pathlib import Path
+
+    mod = importlib.import_module(f"pdf_ocr_batch_ndrocr_lite_spark.{module}")
+    ck._code_version.cache_clear()
+    before = ck._code_version()
+    copy = tmp_path / Path(mod.__file__).name
+    copy.write_bytes(Path(mod.__file__).read_bytes() + b"\n# edited\n")
+    monkeypatch.setattr(mod, "__file__", str(copy))
+    assert ck._code_version() == before        # hashed once per process
+    ck._code_version.cache_clear()
+    try:
+        assert ck._code_version() != before
+    finally:
+        monkeypatch.undo()
+        ck._code_version.cache_clear()
+    assert ck._code_version() == before
 
 
 def test_run_meta_row_is_one_jvm_task(spark):

@@ -235,15 +235,16 @@ def test_every_keyword_parameter_is_set_by_a_product_caller():
 
 # ---------------------------------------------------------------------------
 # One Python-stage body: the product code (the package,
-# ``__spark_entry__.py``, ``bench.py``) writes every Python stage as a row
-# function through ``extract.map_rows``, whose body is the one
-# ``.mapInArrow(`` call; no ``.mapInPandas(`` call and no pandas import
-# anywhere in it.
+# ``__spark_entry__.py``, ``bench.py``) writes every Python stage through
+# ``extract.map_partitions`` (a row function through its row form
+# ``extract.map_rows``, or a partition function such as the keyed sink's
+# writer), whose body is the one ``.mapInArrow(`` call; no
+# ``.mapInPandas(`` call and no pandas import anywhere in it.
 # ---------------------------------------------------------------------------
 
 PRODUCT_CODE = sorted(list((REPO / PKG).rglob("*.py"))
                       + [REPO / "__spark_entry__.py", REPO / "bench.py"])
-STAGE_BODIES = {f"{PKG}/operators/extract.py": "map_rows"}
+STAGE_BODIES = {f"{PKG}/operators/extract.py": "map_partitions"}
 
 
 def _stage_sites(tree: ast.AST, rel: str) -> tuple:
@@ -275,7 +276,7 @@ def _stage_sites(tree: ast.AST, rel: str) -> tuple:
     return calls, imports
 
 
-def test_every_python_stage_goes_through_map_rows():
+def test_every_python_stage_goes_through_map_partitions():
     arrow, stray_arrow, pandas_calls, pandas_imports = [], [], [], []
     for path in PRODUCT_CODE:
         rel = path.relative_to(REPO).as_posix()
@@ -290,11 +291,12 @@ def test_every_python_stage_goes_through_map_rows():
             else:
                 stray_arrow.append(where)
     assert not (stray_arrow or pandas_calls or pandas_imports), (
-        f"{len(stray_arrow)} mapInArrow calls outside extract.map_rows: "
-        f"{stray_arrow}; {len(pandas_calls)} mapInPandas calls: "
-        f"{pandas_calls}; {len(pandas_imports)} pandas imports: "
-        f"{pandas_imports} (write the stage as a row_fn through "
-        "extract.map_rows)")
+        f"{len(stray_arrow)} mapInArrow calls outside "
+        f"extract.map_partitions: {stray_arrow}; {len(pandas_calls)} "
+        f"mapInPandas calls: {pandas_calls}; {len(pandas_imports)} pandas "
+        f"imports: {pandas_imports} (write the stage as a row_fn through "
+        "extract.map_rows or a batch function through "
+        "extract.map_partitions)")
     assert len(arrow) == 1, arrow
 
 

@@ -71,7 +71,7 @@ def test_incremental_stream(spark, tmp_path):
 def test_batch_sink_replay_idempotent(spark, tmp_path):
     """foreachBatch is at-least-once: Spark replays an uncommitted batch
     after a failure.  Calling the sink twice with the same batch_id must
-    leave exactly one copy of the rows (dynamic overwrite, not append)."""
+    leave exactly one copy of the rows (keyed overwrite, not append)."""
     from pdf_ocr_batch_ndrocr_lite_spark.operators import extract as E
     from pdf_ocr_batch_ndrocr_lite_spark.streaming.extract_stream import (
         make_batch_sink,
@@ -96,3 +96,39 @@ def test_batch_sink_replay_idempotent(spark, tmp_path):
     # a different batch appends alongside, untouched by the replay
     sink(results.limit(0), 8)
     assert spark.read.parquet(out).count() == n_once
+
+
+def test_stream_lineage_reads_back_its_types_and_values(spark, tmp_path):
+    """The stream sink's lineage table reads back with the rollup's types
+    (``updated_at`` a timestamp, then ``batch_id int``) and its values:
+    the counters of the rollup and, in a session zone other than UTC, an
+    ``updated_at`` instant inside the sink call."""
+    import time
+
+    from pdf_ocr_batch_ndrocr_lite_spark.operators import extract as E
+    from pdf_ocr_batch_ndrocr_lite_spark.plans import checkpoint as ck
+    from pdf_ocr_batch_ndrocr_lite_spark.streaming.extract_stream import (
+        make_batch_sink,
+    )
+    lineage = str(tmp_path / "lineage")
+    results = E.run_extraction(corpus_df(spark, 50, seed=42, partitions=2))
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        t0 = time.time()
+        make_batch_sink(str(tmp_path / "out"), lineage)(results, 7)
+        t1 = time.time()
+        rollup = ck.lineage_from_results(results).withColumn(
+            "batch_id", F.lit(7))
+        lin = spark.read.parquet(lineage)
+        assert [(f.name, f.dataType) for f in lin.schema] == [
+            (f.name, f.dataType) for f in rollup.schema]
+        counters = [c for c in rollup.columns
+                    if c not in ("seconds", "updated_at")]
+        assert sorted(lin.select(*counters).collect()) == sorted(
+            rollup.select(*counters).collect())
+        micros = [r[0] for r in
+                  lin.select(F.unix_micros("updated_at")).collect()]
+        assert all(t0 * 1e6 - 1e6 <= m <= t1 * 1e6 + 1e6 for m in micros)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)

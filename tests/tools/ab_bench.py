@@ -2,7 +2,7 @@
 """Interleaved A/B of the benchmark: this tree against a base revision.
 
     python3 tests/tools/ab_bench.py --base HEAD~1 --workload crawl_mixed \
-        --pairs 8
+        --pairs 10
 
 Exports the committed files of ``--base`` (``git archive``) into a temp
 dir, removed on exit; the export is a plain tree, so nothing is registered
@@ -10,9 +10,11 @@ in the repository's ``.git`` and a killed run leaves no stale worktree.
 Pair ``i`` runs ``perfbench/run.py --workload W --seed i --seconds 15
 --trace 0`` once in each tree: the same seed, one run after the other,
 never concurrently, the side that goes first alternating pair by pair.
-Then, per end-to-end metric of ``BENCHMARK.json``, it prints the base and
-change medians, the base IQR, the change's wins out of the pairs (a tie
-counts for neither side) and the failed runs.  Standard library only.
+Then, per end-to-end metric of ``BENCHMARK.json``, it prints each side's
+quartiles, the base IQR, the change's wins out of the pairs (a tie counts
+for neither side) and whether the gain rule holds (wins in at least 9/10
+of the pairs run, medians apart by more than the base IQR), then the
+failed runs.  Standard library only.
 """
 
 from __future__ import annotations
@@ -20,6 +22,7 @@ from __future__ import annotations
 import argparse
 import io
 import json
+import math
 import statistics
 import subprocess
 import sys
@@ -48,12 +51,27 @@ def _value(result, name):
     return (result or {}).get("metrics", {}).get(name, {}).get("value")
 
 
+def _quartiles(xs):
+    """[q1, median, q3] (inclusive method)."""
+    return (statistics.quantiles(xs, n=4, method="inclusive")
+            if len(xs) > 1 else [xs[0]] * 3)
+
+
+def _q(q) -> str:
+    return f"q1 {q[0]:.4g} median {q[1]:.4g} q3 {q[2]:.4g}"
+
+
 def summarize(pairs, end_to_end) -> list:
-    """One summary line per end-to-end metric, plus the failed runs.
-    ``pairs``: [(base result, change result)], a result being a parsed
-    perfbench line or None; ``end_to_end``: BENCHMARK.json's list of
-    ``{"name", "better", ...}``."""
+    """Two lines per end-to-end metric, then the failed runs.  The first
+    gives each side's quartiles, the base IQR and the change's wins over
+    the pairs with both values; the second applies the gain rule: the
+    change wins at least 9/10 of all pairs run (a crashed or tied pair
+    counts for neither side), and its median beats the base median by
+    more than the base IQR.  ``pairs``: [(base result, change result)], a
+    result being a parsed perfbench line or None; ``end_to_end``:
+    BENCHMARK.json's list of ``{"name", "better", ...}``."""
     out = []
+    need = math.ceil(0.9 * len(pairs))
     for m in end_to_end:
         name, sign = m["name"], 1 if m["better"] == "higher" else -1
         both = [(_value(b, name), _value(c, name)) for b, c in pairs]
@@ -61,14 +79,17 @@ def summarize(pairs, end_to_end) -> list:
         if not both:
             out.append(f"{name}: no pair with both values")
             continue
-        base, change = [b for b, _ in both], [c for _, c in both]
-        q = (statistics.quantiles(base, n=4, method="inclusive")
-             if len(base) > 1 else [base[0]] * 3)
+        qb = _quartiles([b for b, _ in both])
+        qc = _quartiles([c for _, c in both])
+        iqr = qb[2] - qb[0]
         wins = sum(sign * (c - b) > 0 for b, c in both)
-        out.append(f"{name}: base median {statistics.median(base):.4g}  "
-                   f"change median {statistics.median(change):.4g}  "
-                   f"base IQR {q[2] - q[0]:.4g}  change wins "
-                   f"{wins}/{len(both)}")
+        gap = sign * (qc[1] - qb[1])
+        gain = wins >= need and gap > iqr
+        out.append(f"{name}: base {_q(qb)}  change {_q(qc)}  "
+                   f"base IQR {iqr:.4g}  change wins {wins}/{len(both)}")
+        out.append(f"{name}: gain {'yes' if gain else 'no'} (wins {wins} "
+                   f"of {len(pairs)} pairs run, need {need}; median better "
+                   f"by {gap:.4g}, need more than {iqr:.4g})")
     for side, results in (("base", [b for b, _ in pairs]),
                           ("change", [c for _, c in pairs])):
         crashed = sum(r is None for r in results)
@@ -83,7 +104,7 @@ def main(argv=None) -> int:
     p = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     p.add_argument("--base", required=True, help="git revision to compare")
     p.add_argument("--workload", required=True)
-    p.add_argument("--pairs", type=int, default=8)
+    p.add_argument("--pairs", type=int, default=10)
     args = p.parse_args(argv)
     bench = json.loads((REPO / "BENCHMARK.json").read_text())
     with tempfile.TemporaryDirectory(prefix="ab_bench_") as tmp:
